@@ -304,32 +304,6 @@ object HyperplaneSig {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Banded buckets with a global band OFFSET — [[computeBuckets]]
-    * whose band j is global band (offset+j): plane index
-    * i = (offset+j)·bandBits + r (Java-static for codegen). offset=0
-    * is bit-identical to [[computeBuckets]]. */
-  def computeBucketsOff(a: ArrayData, bands: Int, bandBits: Int, dim: Int,
-      offset: Int): ArrayData = {
-    val n = math.min(dim, a.numElements())
-    val out = new Array[Long](bands)
-    var j = 0
-    while (j < bands) {
-      var bucket = 0L
-      var r = 0
-      while (r < bandBits) {
-        val i = (offset + j) * bandBits + r
-        var s = 0.0
-        var d = 0
-        while (d < n) { s += a.getDouble(d) * coeff(i, d, dim); d += 1 }
-        if (s > 0) bucket |= (1L << r)
-        r += 1
-      }
-      out(j) = bucket
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
   /** Per-band (bucket, 1-flip probe bucket) pairs, flattened to
     * 2·bands longs (Java-static for codegen): same plane sums and
     * d-order as [[computeBuckets]]; the probe flips the bit whose

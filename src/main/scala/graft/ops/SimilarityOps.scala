@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale path: cosine-LSH bucketing (random hyperplane signatures,
   * seeded/deterministic) cuts candidates per query from |corpus| to a
-  * bucket; see [[hyperplaneSignature]].
+  * bucket. Every LSH kNN shape — query/corpus top-k, full-corpus kNN
+  * graph, capped, multi-probe, two-phase, staged — is ONE kernel,
+  * [[lshKnn]], driven by one validated [[LshConfig]];
+  * [[lshNearDupPairs]] shares its bucket builder and occupancy cap.
   */
 object SimilarityOps {
 
@@ -742,129 +745,231 @@ object SimilarityOps {
       .select(col("id"), expr(s"hyperplane_sig(vd, $bits, $dim)").as("sig"))
   }
 
-  /** Shared banding projection for the hyperplane-LSH family:
-    * (id, band, bucket) rows, band j's bucket computed directly from
-    * the vector by the codegen'd [[graft.functions.HyperplaneBuckets]]
-    * kernel — no intermediate packed signature, so the total bit
-    * budget `bands · bandBits` is UNBOUNDED (the round-10 64-bit
-    * ceiling, ProbeKnn law #1). For bands·bandBits ≤ 64 the buckets
-    * are bit-identical to the retired `(sig >> j·bandBits) & mask`
-    * extraction (spec-pinned), so every certified ≤64-bit oracle is
-    * unchanged.
+  /** Validated configuration of the hyperplane-LSH kNN kernel
+    * ([[lshKnn]], [[lshKnnStaged]]) and of [[lshNearDupPairs]]:
+    *
+    *  - `bands` × `bandBits`: OR-amplified banding. Band j's bucket is
+    *    the sign pattern of global planes i = (bandOffset+j)·bandBits + r
+    *    ([[graft.functions.MultiProbeBucketsN]]); every band is its own
+    *    long, so the total bit budget is not bounded by one 64-bit word.
+    *  - `probes`: buckets the QUERY side checks per band — its true
+    *    bucket plus the buckets with its 1st … (probes−1)-th
+    *    least-confident bits flipped (Lv et al. 2007). The corpus keeps
+    *    one bucket per band, so probes buy recall without growing the
+    *    stored index.
+    *  - `bucketCap`: > 0 bounds corpus-side occupancy per (band, bucket)
+    *    via [[capBandBuckets]]; 0 leaves buckets uncapped.
+    *  - `bandOffset`: global band id of local band 0 — the hook that
+    *    makes a band-group run of [[lshKnnStaged]] bit-identical to the
+    *    same bands inside one full-width pass.
+    *  - `twoPhase`: where the vectors join. false: candidate id pairs
+    *    are deduplicated first, then both vectors join by id and score.
+    *    true: (vector, norm) ride the bucket join — a vector crosses the
+    *    wire once per band, linear in the corpus and independent of
+    *    candidate volume — cosine is scored inside the join output and
+    *    only (id, id, cos) = 24 B reaches the dedup and rank shuffles.
+    *    A pair colliding in several bands scores the same doubles in
+    *    the same order each time, so the max() dedup is value-exact and
+    *    both placements return bit-identical results (spec-asserted).
     */
-  private def bandBuckets(
-      df: DataFrame, idCol: String, vecCol: String, outId: String,
-      bands: Int, bandBits: Int, dim: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as(outId), VectorOps.asDouble(col(vecCol)).as("vd"))
-      .select(col(outId),
-        posexplode(expr(s"hyperplane_buckets(vd, $bands, $bandBits, $dim)"))
-          .as(Seq("band", "bucket")))
+  final case class LshConfig(
+      bands: Int, bandBits: Int, dim: Int,
+      probes: Int = 1, bucketCap: Int = 0, bandOffset: Int = 0,
+      twoPhase: Boolean = false) {
+    require(bands >= 1 && bands <= 1024 && bandBits >= 1 && bandBits <= 62,
+      s"need bands in [1, 1024] and bandBits in [1, 62], got $bands x $bandBits")
+    require(probes >= 1 && probes <= bandBits + 1,
+      s"need probes in [1, bandBits + 1], got $probes at $bandBits bits")
+    require(bucketCap == 0 || bucketCap >= 2,
+      s"bucket-occupancy cap must be 0 (uncapped) or allow pairs (>= 2), got $bucketCap")
+    require(bandOffset >= 0, s"band offset must be >= 0, got $bandOffset")
   }
 
-  /** [[bandBuckets]] keeping the vector and its norm alongside each
-    * (band, bucket) row — the substrate of the two-phase rerank, where
-    * vectors ride the bucket join once per band instead of once per
-    * candidate. Zero-norm rows are KEPT (they occupy bucket slots in
-    * the capped oracle's survivor selection) and filtered at scoring,
-    * exactly as the id-only path does.
+  /** One side of the band join: (id, [vd, nrm,] band, bucket) with
+    * `probes` rows per band; `band` is the global band id. The vector
+    * and its norm ride along only when the caller scores inside the
+    * join (`withVec`). Zero-norm rows are kept — they occupy bucket
+    * slots in the capped survivor selection — and dropped at scoring.
     */
-  private def bandBucketsWithVec(
-      df: DataFrame, idCol: String, vecCol: String,
-      bands: Int, bandBits: Int, dim: Int): DataFrame = {
+  private def bucketSide(df: DataFrame, idCol: String, vecCol: String,
+      cfg: LshConfig, probes: Int, withVec: Boolean): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
+    val payload = if (withVec) Seq(col("vd"), col("nrm")) else Nil
+    val kernel = s"multiprobe_buckets_n(vd, ${cfg.bands}, ${cfg.bandBits}, " +
+      s"${cfg.dim}, $probes, ${cfg.bandOffset})"
     df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
       .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-      .select(col("id"), col("vd"), col("nrm"),
-        posexplode(expr(s"hyperplane_buckets(vd, $bands, $bandBits, $dim)"))
-          .as(Seq("band", "bucket")))
+      .select((col("id") +: payload) :+
+        posexplode(expr(kernel)).as(Seq("pos", "bucket")): _*)
+      .select((col("id") +: payload) ++ Seq(
+        ((col("pos") / lit(probes)).cast("int") + lit(cfg.bandOffset)).as("band"),
+        col("bucket")): _*)
   }
 
-  private def requireBandConfig(bands: Int, bandBits: Int): Unit =
-    require(bands >= 1 && bandBits >= 1 && bandBits <= 62 && bands <= 1024,
-      s"need bands in [1, 1024] and bandBits in [1, 62], got $bands x $bandBits")
+  /** The stored-index side: one bucket per band, occupancy-capped when
+    * `cfg.bucketCap` > 0. Only this side is capped: every query node
+    * keeps its buckets and therefore its shot at edges. */
+  private def corpusSide(df: DataFrame, idCol: String, vecCol: String,
+      cfg: LshConfig, withVec: Boolean): DataFrame = {
+    val side = bucketSide(df, idCol, vecCol, cfg, probes = 1, withVec)
+    if (cfg.bucketCap > 0) capBandBuckets(side, cfg.bucketCap) else side
+  }
 
-  /** LSH-bucketed approximate top-k — the third ANN path next to IVF
-    * (compute-bound) and PQ (memory-bound): candidates for each query
-    * are the corpus vectors sharing ANY of the `bands` hyperplane
-    * band-buckets with it (OR-amplification, as [[lshNearDupPairs]]),
-    * then exact cosine ranks the candidates. No centroid learning, no
-    * codebooks — the cheapest build of the three — at the price of
-    * recall that depends on the corpus's angular spread rather than a
-    * tunable probe count. Candidate generation is an equi-join on
-    * (band, bucket); the corpus never cross-joins the query side.
-    */
-  def lshTopK(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    def bucketed(df: DataFrame, outId: String): DataFrame =
-      bandBuckets(df, idCol, vecCol, outId, bands, bandBits, dim)
-    val cand = bucketed(queries, "query_id")
-      .join(bucketed(corpus, "neighbor_id"), Seq("band", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-    val v = (df: DataFrame, id: String, vec: String, nrm: String) =>
+  /** Exact cosine of candidate (query_id, neighbor_id) pairs: both
+    * vectors join by id; zero-norm vectors have no cosine (0/0 = NaN
+    * would sort first under desc) and drop. */
+  private def scorePairs(cand: DataFrame, queries: DataFrame,
+      corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    def v(df: DataFrame, id: String, vec: String, nrm: String): DataFrame =
       df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as(vec))
         .withColumn(nrm, sqrt(expr(s"dot_product($vec, $vec)")))
-    val scored = cand
-      .join(broadcast(v(queries, "query_id", "qv", "qn")), "query_id")
+    cand
+      .join(v(queries, "query_id", "qv", "qn"), "query_id")
       .join(v(corpus, "neighbor_id", "cv", "cn"), "neighbor_id")
       .filter(col("qn") > 0 && col("cn") > 0)
       .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
+  }
+
+  /** Per-query top-k of scored pairs: rank by (cos desc, neighbor_id),
+    * keep k. Returns (query_id, rank, neighbor_id, cos). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+        col("neighbor_id"), col("cos"))
   }
 
-  /** Full-corpus kNN GRAPH by LSH-band blocking — the 100 TB recipe
-    * behind q_knn_graph certified over the WHOLE vector table instead
-    * of a query-broadcast slice: every node's candidates are the
-    * corpus vectors sharing ANY hyperplane band-bucket with it
-    * (OR-amplification, the [[lshNearDupPairs]] banding algebra but
-    * keeping BOTH directions — a kNN edge list is per-node, not
-    * per-pair), exact cosine reranks the candidates, and a per-node
-    * window keeps the top-k. Every join is a shuffled EQUI-join on
-    * (band, bucket) or on the id — no crossJoin, no corpus broadcast
-    * hint anywhere (plan-asserted in PlanSpec), so the shape survives
-    * when both sides are the full 100 TB corpus: candidate volume is
-    * Σ_buckets |bucket|² per band (controlled by bandBits), never
-    * |corpus|². Nodes whose buckets hold no other vector produce no
-    * edges — the honest LSH recall contract, same as near-dup.
-    */
-  def lshKnnGraph(
-      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int, bucketCap: Int = 0): DataFrame =
-    lshKnnGraphBetween(vectors, vectors, idCol, vecCol, k,
-      bands, bandBits, dim, bucketCap)
+  /** The certified output form of a kNN edge list: cosine rounded to
+    * 6 dp as `cos_sim`. Rank and merge on the raw `cos` and round only
+    * here — re-ranking rounded scores could order near-ties differently
+    * from a full rebuild. */
+  def roundCos(edges: DataFrame): DataFrame =
+    edges.select(col("query_id"), col("rank"), col("neighbor_id"),
+      round(col("cos"), 6).as("cos_sim"))
 
-  /** Asymmetric form of [[lshKnnGraph]] — edges from `queries` nodes
-    * into `corpus` (self-pairs excluded by id). This is the O(Δ)
-    * MAINTENANCE path for a kNN graph under ingest: a delta batch's
-    * edges are `lshKnnGraphBetween(delta, base ∪ delta)` — the delta's
-    * band buckets equi-join the corpus buckets, so work scales with
-    * |delta|·bucket-occupancy, never |corpus|²; no side is broadcast
-    * by hint (stats may still elect a broadcast at toy sizes).
+  /** LSH-bucketed approximate kNN: edges from each `queries` node to
+    * its top-k `corpus` neighbors among the corpus vectors sharing ANY
+    * probed band-bucket with it (self-pairs excluded by id), ranked by
+    * exact cosine. Pass the same frame as both sides for a full-corpus
+    * kNN GRAPH; a delta batch against the corpus is the O(Δ)
+    * maintenance path. Every join is a shuffled EQUI-join on
+    * (band, bucket) or on the id — no crossJoin and no broadcast hint
+    * (plan-asserted in PlanSpec) — so candidate volume is
+    * Σ_buckets |bucket|² per band (Σ|bucket|·min(|bucket|, cap) when
+    * capped), never |queries|·|corpus|. Nodes whose buckets hold no
+    * other vector produce no edges: the result is the top-k OF THE
+    * CANDIDATE SET, the LSH recall contract every oracle certifies.
+    * Returns (query_id, rank, neighbor_id, cos) with raw cosine; see
+    * [[roundCos]] for the output form.
     */
-  def lshKnnGraphBetween(
+  def lshKnn(
       queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int, bucketCap: Int = 0): DataFrame =
-    lshKnnGraphRaw(queries, corpus, idCol, vecCol, k, bands, bandBits, dim,
-      bucketCap)
-      .select(col("query_id"), col("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+      idCol: String, vecCol: String, k: Int, cfg: LshConfig): DataFrame = {
+    val pairs = bucketSide(queries, idCol, vecCol, cfg, cfg.probes, cfg.twoPhase).as("x")
+      .join(corpusSide(corpus, idCol, vecCol, cfg, cfg.twoPhase).as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+          col("x.id") =!= col("y.id"))
+    val scored =
+      if (cfg.twoPhase)
+        pairs.filter(col("x.nrm") > 0 && col("y.nrm") > 0)
+          .select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"),
+            (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
+          .groupBy(col("query_id"), col("neighbor_id"))
+          .agg(max(col("cos")).as("cos"))
+      else
+        scorePairs(
+          pairs.select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"))
+            .distinct(),
+          queries, corpus, idCol, vecCol)
+    topK(scored, k)
+  }
+
+  /** Inter-group GC nudge threshold of [[lshKnnStaged]]: groups whose
+    * estimated in-flight shuffle is smaller skip the nudge. */
+  private val GcNudgeMinBytes = 8L << 30
+
+  /** STAGED band-group self-graph build of [[lshKnn]] — the peak-disk
+    * dial for builds whose single-pass volume exceeds executor-local
+    * disk: bands are processed `groupBands` at a time, each group runs
+    * the kernel over bands [g·G, (g+1)·G) via `bandOffset` and
+    * CHECKPOINTS its top-k partial graph to parquet (≤ |nodes|·k·24 B
+    * per group — graph-sized, not candidate-sized), then one merge
+    * dedups by max(cos) and re-ranks. EXACT, not approximate: any edge
+    * in the full build's top-k is in its own group's top-k (a group's
+    * candidate set is a subset, so per-query rank can only improve),
+    * and cos values are bit-identical across groups — certified against
+    * the unstaged oracle (q_knn_graph_staged). Peak in-flight shuffle
+    * divides by the number of groups; total compute is unchanged.
+    */
+  def lshKnnStaged(
+      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
+      cfg: LshConfig, groupBands: Int, workDir: String): DataFrame = {
+    require(groupBands >= 1 && groupBands <= cfg.bands,
+      s"need groupBands in [1, ${cfg.bands}], got $groupBands")
+    val spark = vectors.sparkSession
+    // the inter-group GC nudge is gated on the planner's in-flight
+    // volume law: an unconditional System.gc() + 2 s sleep per group
+    // dominates a small build, and is a no-op under
+    // -XX:+DisableExplicitGC anyway. One count() prices N.
+    val n = vectors.count()
+    val groupShuffleBytes =
+      (groupBands.toLong * (1 + cfg.probes) * n * (8L * cfg.dim + 24)) +
+        lshCandidateEstimate(n, groupBands, cfg.bandBits, cfg.probes, cfg.bucketCap) * 24
+    val nudge = groupShuffleBytes >= GcNudgeMinBytes
+    val offsets = 0 until cfg.bands by groupBands
+    offsets.foreach { off =>
+      lshKnn(vectors, vectors, idCol, vecCol, k,
+        cfg.copy(bands = math.min(groupBands, cfg.bands - off),
+          bandOffset = cfg.bandOffset + off))
+        .write.mode("overwrite").parquet(s"$workDir/bands_$off")
+      // staging bounds PEAK disk only if a finished group's shuffle
+      // files go before the next group writes — they linger until the
+      // ContextCleaner's weak references die (measured: a 3-config 5M
+      // probe run filled 78 GB with orphaned shuffle files). The
+      // group's plan just went out of scope; one GC cycle lets the
+      // cleaner delete its shuffle dirs.
+      if (nudge) {
+        System.gc()
+        Thread.sleep(2000)
+      }
+    }
+    val all = offsets.map(off => spark.read.parquet(s"$workDir/bands_$off"))
+      .reduce(_.unionByName(_))
+    topK(all.groupBy(col("query_id"), col("neighbor_id"))
+      .agg(max(col("cos")).as("cos")), k)
+  }
+
+  /** One NN-DESCENT refinement round over a kNN edge list (Dong et al.
+    * 2011's core move): candidates = current edges ∪
+    * neighbors-of-neighbors (q→n1→n2 ⇒ try q→n2), exact cosine
+    * reranks, per-node top-k keeps the best. Composes with ANY
+    * candidate generator — a cheap recall lift (one graph-sized
+    * self-join, ≤ |V|·k² new candidates, vs another LSH band's full
+    * corpus re-scan) that compounds per round because good neighbors
+    * CLUSTER. The 24 B edge payload rides both joins; vectors attach
+    * once for the rerank. Certified against an unrolled one-round
+    * oracle (q_knn_graph_refine). Returns raw `cos`, like [[lshKnn]].
+    */
+  def knnGraphRefine(
+      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
+      graph: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(vectors.sparkSession)
+    val edges = graph.select(col("query_id"), col("neighbor_id"))
+    val hops = edges.as("e1").join(edges.as("e2"),
+        col("e1.neighbor_id") === col("e2.query_id") &&
+          col("e1.query_id") =!= col("e2.neighbor_id"))
+      .select(col("e1.query_id").as("query_id"),
+        col("e2.neighbor_id").as("neighbor_id"))
+    topK(scorePairs(edges.unionByName(hops).distinct(),
+      vectors, vectors, idCol, vecCol), k)
+  }
 
   /** Deterministic per-(band,bucket) occupancy cap — the vector-side
     * analog of the text kernels' df-capped shingles
-    * ([[DedupOps.discriminativeShingles]], round-9 verdict item 1):
+    * ([[DedupOps.discriminativeShingles]]):
     * candidate volume in every banded-LSH join is Σ_buckets |bucket|²
     * per band, so ONE mega-bucket (a dedup-heavy or degenerate corpus
     * concentrating near-identical vectors — exactly what the hubness
@@ -884,10 +989,11 @@ object SimilarityOps {
     * shingles, bounded by OR-amplification across bands and measured in
     * ProbeKnn's planted-mega-bucket run. Ids are assumed nonnegative
     * (every id column in the engine is), keeping `%` = pmod in both
-    * engines.
+    * engines. `cap` >= 2 is checked by [[LshConfig]]; the vector payload
+    * of a two-phase side rides the occupancy window untouched, so its
+    * survivor set is the id-only side's exactly.
     */
-  def capBandBuckets(buckets: DataFrame, cap: Int): DataFrame = {
-    require(cap >= 2, s"bucket-occupancy cap must allow pairs, got $cap")
+  private[graft] def capBandBuckets(buckets: DataFrame, cap: Int): DataFrame = {
     val M = 2147483647L
     // bucket reduced mod M BEFORE its multiply: a 32-bit bucket id
     // (bandBits > 31) times the mixing constant overflows Long —
@@ -915,355 +1021,6 @@ object SimilarityOps {
        |      + (bucket % 2147483647) * 3266489917) % 2147483647
        |      * 2654435761) % 2147483647, id) AS occ_rank
        |  FROM $src) t WHERE occ_rank <= $cap""".stripMargin
-
-  /** [[lshKnnGraphBetween]] with the UNROUNDED cosine kept — the form
-    * incremental top-k merges need: re-ranking a merged edge list on
-    * the 6-dp rounded score could reorder near-ties differently from a
-    * full rebuild (which ranks on raw cos), so merge on raw, round at
-    * the output boundary only.
-    *
-    * `bucketCap` > 0 bounds CORPUS-side bucket occupancy via
-    * [[capBandBuckets]] — candidate volume per band drops from
-    * Σ|bucket|² to Σ|bucket|·min(|bucket|, cap), linear in the corpus
-    * for any fixed cap. Only the corpus (neighbor) side is capped:
-    * every query node keeps its buckets and therefore its shot at
-    * edges — a capped QUERY side would instead delete dropped nodes
-    * from the output graph entirely. 0 (the default) preserves the
-    * uncapped round-9 behavior bit-for-bit.
-    */
-  def lshKnnGraphRaw(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int,
-      bucketCap: Int = 0): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    def bucketed(df: DataFrame): DataFrame =
-      bandBuckets(df, idCol, vecCol, "id", bands, bandBits, dim)
-    val corpusBuckets =
-      if (bucketCap > 0) capBandBuckets(bucketed(corpus), bucketCap)
-      else bucketed(corpus)
-    val cand = bucketed(queries).as("x").join(corpusBuckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"))
-      .distinct()
-    def v(df: DataFrame) = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-    val scored = cand
-      .join(v(queries).select(col("id").as("query_id"), col("vd").as("qv"),
-        col("nrm").as("qn")), "query_id")
-      .join(v(corpus).select(col("id").as("neighbor_id"), col("vd").as("cv"),
-        col("nrm").as("cn")), "neighbor_id")
-      .filter(col("qn") > 0 && col("cn") > 0)
-      .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-  }
-
-  /** TWO-PHASE rerank form of [[lshKnnGraphRaw]] — the deploy-scale
-    * answer to the round-10 "~1 KB/candidate" wall (PERF.md: at 5M
-    * vectors the capped graph fan-out is 150.4M candidates and the
-    * single-phase rerank ships BOTH dim-64 vectors down the candidate
-    * shuffle — ≈150 GB of spill). Here the vectors ride the BUCKET
-    * join instead: each side's (band, bucket) rows carry (vd, nrm), so
-    * a vector crosses the wire once per band (bands · |corpus| · ~520 B
-    * — linear in the corpus, independent of candidate volume), the
-    * exact cosine is computed INSIDE the bucket-join output, and only
-    * (query_id, neighbor_id, cos) — 24 B — survives into the dedup and
-    * rank shuffles. A pair colliding in several bands scores its dot
-    * product once per band (same doubles, same order → identical cos;
-    * the `max` dedup is therefore value-preserving), trading bounded
-    * recompute for the candidate-payload collapse: at 5M that is
-    * ~10 GB of vector traffic vs 150 GB of spill.
-    *
-    * Bit-identical to [[lshKnnGraphRaw]] at every config (same
-    * candidate set, same double arithmetic, same tie-breaks) —
-    * certified against the SAME oracle (q_knn_graph_twophase) and
-    * spec-asserted equal to the single-phase kernel.
-    */
-  def lshKnnGraphRawTwoPhase(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int,
-      bucketCap: Int = 0): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    val qb = bandBucketsWithVec(queries, idCol, vecCol, bands, bandBits, dim)
-    val cbRaw = bandBucketsWithVec(corpus, idCol, vecCol, bands, bandBits, dim)
-    // the cap ranks on (id, band, bucket) only — the vector payload
-    // rides the occupancy window untouched, so the survivor set is the
-    // id-path's survivor set exactly
-    val cb = if (bucketCap > 0) capBandBuckets(cbRaw, bucketCap) else cbRaw
-    val scoredPerBand = qb.as("x").join(cb.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") =!= col("y.id"))
-      .filter(col("x.nrm") > 0 && col("y.nrm") > 0)
-      .select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"),
-        (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
-    // per-band duplicates carry the identical cos value; max() is the
-    // order-free dedup that never mixes doubles
-    val scored = scoredPerBand
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-  }
-
-  /** Rounded-output wrapper of [[lshKnnGraphRawTwoPhase]] (the
-    * [[lshKnnGraphBetween]] output contract). */
-  def lshKnnGraphTwoPhase(
-      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int, bucketCap: Int = 0): DataFrame =
-    lshKnnGraphRawTwoPhase(vectors, vectors, idCol, vecCol, k,
-      bands, bandBits, dim, bucketCap)
-      .select(col("query_id"), col("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
-
-  /** Multi-probe LSH kNN graph (Lv et al. 2007, the 1-flip probe):
-    * the CORPUS keeps one bucket per band (the stored index is
-    * unchanged), while each QUERY node additionally probes the bucket
-    * with its least-confident bit flipped
-    * ([[graft.functions.MultiProbeBuckets]]) — 2 probes per band buys
-    * roughly another band's worth of recall WITHOUT growing the index:
-    * at 100 TB, half the bands at 2 probes ≈ the recall of the full
-    * band count at HALF the stored index and half the index-build
-    * scan. Scoring is the two-phase discipline (vectors ride the
-    * bucket join, 24 B candidates); the DuckDB oracle replays bucket
-    * AND flip choice from the literal hyperplane table — margins are
-    * the identical plane sums the bucket bits sign. Recall uplift vs
-    * the same config un-probed is measured in DedupOpsSpec.
-    */
-  def lshKnnGraphMultiProbe(
-      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
-    val qb = vectors
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-      .select(col("id"), col("vd"), col("nrm"),
-        posexplode(expr(s"multiprobe_buckets(vd, $bands, $bandBits, $dim)"))
-          .as(Seq("pos", "bucket")))
-      .select(col("id"), col("vd"), col("nrm"),
-        (col("pos") / lit(2)).cast("int").as("band"), col("bucket"))
-    val cb = bandBucketsWithVec(vectors, idCol, vecCol, bands, bandBits, dim)
-    val scored = qb.as("x").join(cb.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") =!= col("y.id"))
-      .filter(col("x.nrm") > 0 && col("y.nrm") > 0)
-      .select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"),
-        (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
-  }
-
-  /** Multi-probe × occupancy-cap × two-phase composition (round-11
-    * verdict item 1) — the full-strength graph kernel the 5M frontier
-    * needs, generalizing [[lshKnnGraphMultiProbe]] (2-probe, uncapped,
-    * self-join only) along all three axes:
-    *
-    *  - `probes` per band: the QUERY side checks its true bucket plus
-    *    the buckets with its 1st…(probes−1)-th least-confident bits
-    *    flipped ([[graft.functions.MultiProbeBucketsN]]); the CORPUS
-    *    keeps ONE bucket per band, so at 100 TB each probe buys ~0.8
-    *    of a band's recall (measured, DedupOpsSpec) at ZERO index
-    *    growth — probes are the recall dial that does not touch the
-    *    stored index or the build scan.
-    *  - `bucketCap` bounds corpus-side bucket occupancy exactly as
-    *    [[capBandBuckets]] (global band id in the survivor hash, so
-    *    staged and unstaged builds pick identical survivors).
-    *  - two-phase payload: vectors ride the bucket join once per band
-    *    per side; only (query_id, neighbor_id, cos) = 24 B crosses the
-    *    dedup/rank shuffles.
-    *
-    * `bandOffset` names the global band of local band 0 — the STAGED
-    * build hook ([[lshKnnGraphStagedRaw]]): plane index
-    * i = (bandOffset+j)·bandBits + r, so a band-group run is
-    * bit-identical to the same bands inside one full-width pass.
-    * probes=1, bandOffset=0 reduces exactly to
-    * [[lshKnnGraphRawTwoPhase]] (spec-pinned).
-    */
-  def lshKnnGraphRawMultiProbe(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int,
-      probes: Int, bucketCap: Int = 0, bandOffset: Int = 0): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    require(probes >= 1 && probes <= bandBits + 1,
-      s"need probes in [1, bandBits + 1], got $probes at $bandBits bits")
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    def side(df: DataFrame, nProbes: Int): DataFrame =
-      df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
-        .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-        .select(col("id"), col("vd"), col("nrm"),
-          posexplode(expr(
-            s"multiprobe_buckets_n(vd, $bands, $bandBits, $dim, $nProbes, $bandOffset)"))
-            .as(Seq("pos", "bucket")))
-        .select(col("id"), col("vd"), col("nrm"),
-          ((col("pos") / lit(nProbes)).cast("int") + lit(bandOffset)).as("band"),
-          col("bucket"))
-    val qb = side(queries, probes)
-    val cbRaw = side(corpus, 1)
-    val cb = if (bucketCap > 0) capBandBuckets(cbRaw, bucketCap) else cbRaw
-    val scored = qb.as("x").join(cb.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") =!= col("y.id"))
-      .filter(col("x.nrm") > 0 && col("y.nrm") > 0)
-      .select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"),
-        (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-  }
-
-  /** Rounded-output wrapper of [[lshKnnGraphRawMultiProbe]] (the
-    * [[lshKnnGraphBetween]] output contract). */
-  def lshKnnGraphMultiProbeCapped(
-      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int,
-      probes: Int, bucketCap: Int = 0): DataFrame =
-    lshKnnGraphRawMultiProbe(vectors, vectors, idCol, vecCol, k,
-      bands, bandBits, dim, probes, bucketCap)
-      .select(col("query_id"), col("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
-
-  /** STAGED band-group build of [[lshKnnGraphRawMultiProbe]] — the
-    * peak-disk dial for builds whose single-pass two-phase volume
-    * exceeds executor-local disk (the 5M 8×20 attempt: ~43 GB of
-    * in-flight shuffle vs 60 GB free — round-11's one `weak`): bands
-    * are processed `groupBands` at a time, each group builds its own
-    * top-k partial graph (a complete run of the kernel over bands
-    * [g·G, (g+1)·G) via `bandOffset`) and CHECKPOINTS it to parquet
-    * (≤ |nodes|·k·24 B per group — graph-sized, not candidate-sized),
-    * then one merge dedups by max(cos) (bit-equal duplicates) and
-    * re-ranks. EXACT, not approximate: any edge in the full build's
-    * top-k is in its own group's top-k (a group's candidate set is a
-    * subset, so per-query rank can only improve), and cos values are
-    * bit-identical across groups — certified against the UNSTAGED
-    * oracle (q_knn_graph_staged). Peak in-flight shuffle divides by
-    * the number of groups; total compute is unchanged (each vector
-    * re-signs its own group's planes only).
-    */
-  def lshKnnGraphStagedRaw(
-      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-      bands: Int, bandBits: Int, dim: Int,
-      probes: Int, bucketCap: Int, groupBands: Int, workDir: String,
-      gcNudgeMinBytes: Long = 8L << 30): DataFrame = {
-    require(groupBands >= 1 && groupBands <= bands,
-      s"need groupBands in [1, $bands], got $groupBands")
-    val spark = vectors.sparkSession
-    // gate the inter-group GC nudge on the planner's own in-flight
-    // volume law (round-12 advice: an unconditional System.gc() +
-    // 2 s sleep per group put ~4 s of pure sleep into a 7.4 s
-    // cert-scale bench row, and is a no-op under -XX:+DisableExplicitGC
-    // anyway). One count() prices N — trivial next to the build itself
-    // (each group re-scans vectors groupBands·(1+probes) times).
-    val n = vectors.count()
-    val groupShuffleBytes =
-      (groupBands.toLong * (1 + probes) * n * (8L * dim + 24)) +
-        lshCandidateEstimate(n, groupBands, bandBits, probes, bucketCap) * 24
-    val nudge = groupShuffleBytes >= gcNudgeMinBytes
-    val offsets = 0 until bands by groupBands
-    offsets.foreach { off =>
-      lshKnnGraphRawMultiProbe(vectors, vectors, idCol, vecCol, k,
-        math.min(groupBands, bands - off), bandBits, dim, probes,
-        bucketCap, bandOffset = off)
-        .write.mode("overwrite").parquet(s"$workDir/bands_$off")
-      // the whole point of staging is bounding PEAK disk — but a
-      // finished group's shuffle files linger until the ContextCleaner's
-      // weak references die, so without a nudge the groups' spill
-      // ACCUMULATES and staging saves nothing (measured: a 3-config 5M
-      // probe run filled 78 GB with orphaned shuffle files). The group's
-      // plan just went out of scope; one GC cycle lets the cleaner
-      // delete its shuffle dirs before the next group writes. Skipped
-      // when the group's estimated in-flight volume is under the
-      // threshold — cert-scale builds spill ~nothing and only paid the
-      // sleep.
-      if (nudge) {
-        System.gc()
-        Thread.sleep(2000)
-      }
-    }
-    val all = offsets.map(off => spark.read.parquet(s"$workDir/bands_$off"))
-      .reduce(_.unionByName(_))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    all.groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-  }
-
-  /** One NN-DESCENT refinement round over a kNN edge list (round-11
-    * verdict item 6; Dong et al. 2011's core move): candidates =
-    * current edges ∪ neighbors-of-neighbors (q→n1→n2 ⇒ try q→n2),
-    * exact cosine reranks, per-node top-k keeps the best. Composes
-    * with ANY candidate generator — a cheap recall lift (one
-    * graph-sized self-join, ≤ |V|·k² new candidates, vs another LSH
-    * band's full corpus re-scan) that compounds per round because
-    * good neighbors CLUSTER: if n1 is near q, n1's neighbors are the
-    * best place to look for q's missing ones. The 24 B edge payload
-    * rides both joins; vectors attach once for the rerank (two-phase
-    * discipline). Certified against an unrolled one-round oracle
-    * (q_knn_graph_refine); the measured recall delta at 1M lands in
-    * ProbeKnn/PERF.md.
-    */
-  def knnGraphRefineRaw(
-      vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-      graphRaw: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
-    val edges = graphRaw.select(col("query_id"), col("neighbor_id"))
-    val hops = edges.as("e1").join(edges.as("e2"),
-        col("e1.neighbor_id") === col("e2.query_id") &&
-          col("e1.query_id") =!= col("e2.neighbor_id"))
-      .select(col("e1.query_id").as("query_id"),
-        col("e2.neighbor_id").as("neighbor_id"))
-    val cand = edges.unionByName(hops).distinct()
-    val v = vectors.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-    val scored = cand
-      .join(v.select(col("id").as("query_id"), col("vd").as("qv"),
-        col("nrm").as("qn")), "query_id")
-      .join(v.select(col("id").as("neighbor_id"), col("vd").as("cv"),
-        col("nrm").as("cn")), "neighbor_id")
-      .filter(col("qn") > 0 && col("cn") > 0)
-      .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-  }
 
   /** Planned LSH-graph configuration — (bands, bandBits, cap, probes)
     * derived from corpus size, target recall, and the disk budget
@@ -1300,7 +1057,7 @@ object SimilarityOps {
     *  5. DISK: two-phase in-flight volume ≈ bands·(1+probes)/2·N·
     *     (8·dim+24) vector-ride bytes + candidates·24; groups =
     *     ceil(volume / diskBudget) stages the build under the budget
-    *     ([[lshKnnGraphStagedRaw]]).
+    *     ([[lshKnnStaged]]).
     *
     * The spec pins the planner against the MEASURED rows: recall
     * predictions within the probe tolerance at (1M, 4×16) and
@@ -1387,75 +1144,52 @@ object SimilarityOps {
     LshPlan(bands, bandBits, cap, probes, groupBands, candidates, shuffleBytes)
   }
 
-  /** TWO-PHASE form of [[lshNearDupPairs]] — same discipline as
-    * [[lshKnnGraphRawTwoPhase]]: vectors ride the bucket self-join
-    * once per band, exact cosine computes inside the join output, and
-    * only (vec_a, vec_b, cos) survives into the dedup shuffle — the
-    * verify stage's ~0.5 KB/pair payload (one dim-64 vector riding the
-    * second id-join) collapses to 24 B/pair. Per-band duplicate pairs
-    * score identical doubles; max() dedups value-exactly. Bit-identical
-    * to the single-phase kernel (spec + certified on
-    * q_embed_neardup_lsh's VERBATIM oracle as q_embed_neardup_2p).
-    */
-  def lshNearDupPairsTwoPhase(
-      vectors: DataFrame, idCol: String, vecCol: String,
-      bands: Int, bandBits: Int, dim: Int, threshold: Double,
-      bucketCap: Int = 0): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    val bv = bandBucketsWithVec(vectors, idCol, vecCol, bands, bandBits, dim)
-    val buckets = if (bucketCap > 0) capBandBuckets(bv, bucketCap) else bv
-    // no norm guard — exact parity with the single-phase kernel, which
-    // scores every candidate pair (the certified corpora hold no
-    // zero-norm vectors; both kernels treat them identically)
-    buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("vec_a"), col("y.id").as("vec_b"),
-        (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(max(col("cos")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
-  }
 
-  /** LSH-bucketed near-duplicate candidates with OR-amplification:
-    * the `bands * bandBits` hyperplane bits are split into `bands`
-    * independent tables; a pair becomes a candidate if it collides in
-    * ANY band (recall 1-(1-p^bandBits)^bands for per-bit agreement p),
-    * then exact cosine >= threshold verifies. Same banding algebra as
-    * MinHash-LSH: candidate generation is an equi-join on (band,
-    * bucket), never all-pairs. A single monolithic signature would need
-    * all bits to agree at once — recall collapses for any threshold
-    * far from 1. Tune bandBits up to cut random collisions at scale
-    * (each extra bit halves them), bands up for recall.
+  /** LSH-bucketed near-duplicate pairs with OR-amplification: a pair
+    * (vec_a < vec_b) becomes a candidate if it collides in ANY of the
+    * `bands` band-buckets (recall 1-(1-p^bandBits)^bands for per-bit
+    * agreement p), then exact cosine >= `threshold` verifies. Same
+    * banding algebra as MinHash-LSH: candidate generation is an
+    * equi-join on (band, bucket), never all-pairs. Tune bandBits up to
+    * cut random collisions at scale (each extra bit halves them), bands
+    * up for recall.
+    *
+    * Pairs enumerate ONE shared bucket table, so `cfg.probes` must be 1.
+    * A `cfg.bucketCap` bounds per-bucket pairs at C(cap, 2); members
+    * dropped from a band's mega-bucket lose that band's pairs, not their
+    * membership in other bands. `cfg.twoPhase` places the scoring as in
+    * [[lshKnn]] with bit-identical results. No norm guard: every
+    * candidate pair is scored (the certified corpora hold no zero-norm
+    * vectors; both placements treat them identically).
     */
   def lshNearDupPairs(
       vectors: DataFrame, idCol: String, vecCol: String,
-      bands: Int, bandBits: Int, dim: Int, threshold: Double,
-      bucketCap: Int = 0): DataFrame = {
-    requireBandConfig(bands, bandBits)
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
-    val rawBuckets = bandBuckets(vectors, idCol, vecCol, "id", bands, bandBits, dim)
-    // pair enumeration is symmetric — capping the ONE shared bucket
-    // table bounds per-bucket pairs at C(cap, 2); members dropped from
-    // a band's mega-bucket lose that band's pairs (the df-cap trade),
-    // not their membership in other bands
-    val buckets =
-      if (bucketCap > 0) capBandBuckets(rawBuckets, bucketCap) else rawBuckets
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("ida"), col("y.id").as("idb"))
-      .distinct()
-    val v = vectors.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-    cand
-      .join(v.select(col("id").as("ida"), col("vd").as("va"), col("nrm").as("na")), "ida")
-      .join(v.select(col("id").as("idb"), col("vd").as("vb"), col("nrm").as("nb")), "idb")
-      .withColumn("cos", expr("dot_product(va, vb)") / (col("na") * col("nb")))
+      cfg: LshConfig, threshold: Double): DataFrame = {
+    require(cfg.probes == 1,
+      s"near-dup pairs enumerate one shared bucket table; need probes = 1, got ${cfg.probes}")
+    val buckets = corpusSide(vectors, idCol, vecCol, cfg, cfg.twoPhase)
+    val pairs = buckets.as("x").join(buckets.as("y"),
+      col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+        col("x.id") < col("y.id"))
+    val scored =
+      if (cfg.twoPhase)
+        pairs
+          .select(col("x.id").as("vec_a"), col("y.id").as("vec_b"),
+            (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
+          .groupBy(col("vec_a"), col("vec_b"))
+          .agg(max(col("cos")).as("cos"))
+      else {
+        val v = vectors.select(col(idCol).as("id"),
+            col(vecCol).cast("array<double>").as("vd"))
+          .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+        pairs.select(col("x.id").as("ida"), col("y.id").as("idb")).distinct()
+          .join(v.select(col("id").as("ida"), col("vd").as("va"), col("nrm").as("na")), "ida")
+          .join(v.select(col("id").as("idb"), col("vd").as("vb"), col("nrm").as("nb")), "idb")
+          .select(col("ida").as("vec_a"), col("idb").as("vec_b"),
+            (expr("dot_product(va, vb)") / (col("na") * col("nb"))).as("cos"))
+      }
+    scored
       .filter(col("cos") >= threshold)
-      .select(col("ida").as("vec_a"), col("idb").as("vec_b"),
-        round(col("cos"), 6).as("cos_sim"))
+      .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
   }
 }

@@ -730,7 +730,7 @@ object StreamQueries {
     * item 8) — the online path matched to the batch frontier: where
     * [[q_stream_ann]] probes the 256-bit Hamming-sketch index, this
     * serves each query micro-batch through the full-strength wide
-    * kernel ([[graft.ops.SimilarityOps.lshKnnGraphRawMultiProbe]]:
+    * kernel ([[graft.ops.SimilarityOps.lshKnn]] at `VectorQueries.MpwLsh`:
     * 10×8 wide banding, 2 probes/band query-side, occupancy-capped
     * corpus buckets — the capped bucket table IS the stored index and
     * never grows with probes). Per-query results depend only on the
@@ -755,15 +755,8 @@ object StreamQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           StreamingOps.writeBatchDir(
-            SimilarityOps.lshKnnGraphRawMultiProbe(
-              batch, corpus, "vec_id", "embedding", 10,
-              bands = graft.queries.VectorQueries.MpwBands,
-              bandBits = graft.queries.VectorQueries.MpwBandBits,
-              dim = 64,
-              probes = graft.queries.VectorQueries.MpwProbes,
-              bucketCap = graft.queries.VectorQueries.MpwCap)
-              .select(col("query_id"), col("rank"), col("neighbor_id"),
-                round(col("cos"), 6).as("cos_sim")),
+            SimilarityOps.roundCos(SimilarityOps.lshKnn(
+              batch, corpus, "vec_id", "embedding", 10, VectorQueries.MpwLsh)),
             s"$work/out", id)
           ()
         }
@@ -903,8 +896,8 @@ object StreamQueries {
     * in three genuine micro-batches (`maxFilesPerTrigger=1` over a
     * 3-file split), and per batch foreachBatch does the O(Δ) upkeep:
     *
-    *   out = lshKnnGraphRaw(Δ, corpus-so-far)        — Δ's new edges
-    *   in  = lshKnnGraphRaw(corpus-so-far ∪ Δ, Δ)    — everyone absorbs Δ
+    *   out = lshKnn(Δ, corpus-so-far)        — Δ's new edges
+    *   in  = lshKnn(corpus-so-far ∪ Δ, Δ)    — everyone absorbs Δ
     *   state' = per-node top-k of (state ∪ out ∪ in) — RAW-cosine merge
     *
     * Both kernels equi-join band buckets, so per-trigger work is
@@ -928,9 +921,6 @@ object StreamQueries {
     graft.queries.VectorQueries.q_knn_graph_wide.oracle.get) { (spark, dir) =>
     import graft.ops.SimilarityOps
     val k = 5
-    val bands = VectorQueries.WideBands
-    val bandBits = VectorQueries.WideBandBits
-    val dim = VectorQueries.LshDim
     val emb = Tables.embeddings(spark, dir)
     val base = emb.filter(pmod(col("vec_id"), lit(10)) =!= 0)
     val delta = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
@@ -940,8 +930,8 @@ object StreamQueries {
     // candidate-payload collapse too
     def graph(q: org.apache.spark.sql.DataFrame,
         c: org.apache.spark.sql.DataFrame) =
-      SimilarityOps.lshKnnGraphRawTwoPhase(q, c, "vec_id", "embedding", k,
-        bands, bandBits, dim)
+      SimilarityOps.lshKnn(q, c, "vec_id", "embedding", k,
+        VectorQueries.WideLsh.copy(twoPhase = true))
     // seed: the certified full graph over the base corpus, raw cosines
     graph(base, base).write.parquet(s"$work/state/seed")
     base.write.parquet(s"$work/corpus/seed")

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.SimilarityOps
+import graft.ops.SimilarityOps.LshConfig
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity-search query surface over the `embeddings` table —
@@ -95,14 +97,19 @@ object VectorQueries {
   private[queries] val LshBands = NearDupPlan.bands
   private[queries] val LshBandBits = NearDupPlan.bandBits
   private[queries] val LshDim = 64
+  /** The certified 6×6 grid as a kernel config (single-phase, uncapped). */
+  private val NarrowLsh = LshConfig(LshBands, LshBandBits, LshDim)
 
-  /** LSH-bucketed near-dup variant — the 100 TB path (deterministic
-    * hyperplane signatures with banded OR-amplification). Oracle: the
-    * ±1 hyperplane table is materialized at SQL-generation time from
-    * the same mix function, so DuckDB reproduces signatures → banding
-    * → candidate pairs → exact-cosine verify end to end; the recall
-    * tradeoff vs brute force is additionally asserted in DedupOpsSpec.
-    */
+  /** Full-corpus LSH kNN graph over `embeddings` in the certified
+    * output form: (node_id, rank, neighbor_id, cos_sim), top-5. */
+  private def lshGraph(spark: SparkSession, dir: String, cfg: LshConfig): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    SimilarityOps.roundCos(
+      SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5, cfg))
+      .withColumnRenamed("query_id", "node_id")
+      .orderBy(col("node_id"), col("rank"))
+  }
+
   /** Shared oracle CTE block for the hyperplane-LSH family: the ±1
     * hyperplane table materialized at SQL-generation time from the
     * same mix function as the engine's codegen signature, then
@@ -111,19 +118,13 @@ object VectorQueries {
     * join.
     */
   private def lshOracleCtes(bands: Int, bandBits: Int): String = {
-    val bits = bands * bandBits
-    val hpRows = (0 until bits).map { i =>
-      val cs = (0 until LshDim).map(d =>
-        graft.functions.HyperplaneSig.coeff(i, d, LshDim)).mkString("[", ", ", "]")
-      s"($i, $cs)"
-    }.mkString(",\n    ")
     val bandRows = (0 until bands).map { j =>
       s"SELECT id, $j AS band, (sig >> ${j * bandBits}) & ${(1L << bandBits) - 1} AS bucket FROM sig"
     }.mkString("\n  UNION ALL ")
     s"""v AS (
        |  SELECT vec_id AS id, $vd AS vd FROM embeddings),
        |hp(i, hv) AS (VALUES
-       |    $hpRows),
+       |    ${hpValues(bands * bandBits)}),
        |sig AS (
        |  SELECT id, CAST(SUM(CASE WHEN list_dot_product(vd, hv) > 0
        |    THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT) AS sig
@@ -157,34 +158,35 @@ object VectorQueries {
     s"planLshConfig drifted off the certified wide grid: $WidePlan")
   private[queries] val WideBands = WidePlan.bands
   private[queries] val WideBandBits = WidePlan.bandBits
+  private[queries] val WideLsh = LshConfig(WideBands, WideBandBits, LshDim)
 
   /** [[lshOracleCtes]] for configs past one 64-bit word: no packed
     * signature anywhere — band j's bucket is summed DIRECTLY from that
     * band's planes (global plane i = j·bandBits + r contributes bit
     * r = i % bandBits), mirroring the engine's
-    * [[graft.functions.HyperplaneBuckets]] kernel. Same hyperplane
+    * [[graft.functions.MultiProbeBucketsN]] bucket kernel. Same hyperplane
     * VALUES table, same `v`/`buckets`/`n` CTE names, so every caller
     * of the narrow block composes on this one unchanged.
     */
-  private[queries] def lshOracleCtesWide(bands: Int, bandBits: Int): String = {
-    val bits = bands * bandBits
-    val hpRows = (0 until bits).map { i =>
-      val cs = (0 until LshDim).map(d =>
-        graft.functions.HyperplaneSig.coeff(i, d, LshDim)).mkString("[", ", ", "]")
-      s"($i, $cs)"
-    }.mkString(",\n    ")
+  private[queries] def lshOracleCtesWide(bands: Int, bandBits: Int): String =
     s"""v AS (
        |  SELECT vec_id AS id, $vd AS vd FROM embeddings),
        |hp(i, hv) AS (VALUES
-       |    $hpRows),
+       |    ${hpValues(bands * bandBits)}),
        |buckets AS (
        |  SELECT id, i // $bandBits AS band,
        |    CAST(SUM(CASE WHEN list_dot_product(vd, hv) > 0
        |      THEN CAST(1 AS BIGINT) << (i % $bandBits) ELSE 0 END) AS BIGINT) AS bucket
        |  FROM v CROSS JOIN hp GROUP BY id, i // $bandBits),
        |n AS (SELECT id, vd, sqrt(list_dot_product(vd, vd)) AS nrm FROM v)""".stripMargin
-  }
 
+  /** LSH-bucketed near-dup variant — the 100 TB path (deterministic
+    * hyperplane signatures with banded OR-amplification). Oracle: the
+    * ±1 hyperplane table is materialized at SQL-generation time from
+    * the same mix function, so DuckDB reproduces signatures → banding
+    * → candidate pairs → exact-cosine verify end to end; the recall
+    * tradeoff vs brute force is additionally asserted in DedupOpsSpec.
+    */
   val q_embed_neardup_lsh = QueryDef(
     "q_embed_neardup_lsh", {
       s"""WITH ${lshOracleCtes(LshBands, LshBandBits)},
@@ -200,27 +202,27 @@ object VectorQueries {
          |ORDER BY vec_a, vec_b""".stripMargin
     }) { (spark, dir) =>
     SimilarityOps.lshNearDupPairs(
-      Tables.embeddings(spark, dir), "vec_id", "embedding",
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim, threshold = 0.4)
+      Tables.embeddings(spark, dir), "vec_id", "embedding", NarrowLsh,
+      threshold = 0.4)
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** [[q_embed_neardup_lsh]] served by the two-phase near-dup kernel
-    * ([[SimilarityOps.lshNearDupPairsTwoPhase]]): the verify stage's
-    * ~0.5 KB/pair vector payload collapses to 24 B/pair (vectors ride
+    * ([[SimilarityOps.lshNearDupPairs]] with `twoPhase`): the verify
+    * stage's ~0.5 KB/pair vector payload collapses to 24 B/pair (vectors ride
     * the bucket self-join once per band). Oracle VERBATIM — the
     * result-invariance certificate, plus the spec equality assertion.
     */
   val q_embed_neardup_2p = QueryDef(
     "q_embed_neardup_2p", q_embed_neardup_lsh.oracle.get) { (spark, dir) =>
-    SimilarityOps.lshNearDupPairsTwoPhase(
+    SimilarityOps.lshNearDupPairs(
       Tables.embeddings(spark, dir), "vec_id", "embedding",
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim, threshold = 0.4)
+      NarrowLsh.copy(twoPhase = true), threshold = 0.4)
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** Full-corpus kNN graph by LSH-band blocking
-    * ([[SimilarityOps.lshKnnGraph]]) — the round-8 verdict's top ask:
+  /** Full-corpus kNN graph by LSH-band blocking ([[SimilarityOps.lshKnn]]
+    * over corpus × corpus) — the round-8 verdict's top ask:
     * the 100 TB kNN-graph story run as ONE certified query over the
     * WHOLE embeddings table instead of the 300-node query-broadcast
     * slice [[q_knn_graph]] rides. Candidates are banded hyperplane
@@ -254,19 +256,14 @@ object VectorQueries {
          |    ORDER BY cos DESC, neighbor_id) AS rank
          |  FROM scored) t WHERE rank <= 5
          |ORDER BY node_id, rank""".stripMargin
-    }) { (spark, dir) =>
-    SimilarityOps.lshKnnGraph(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim)
-      .withColumnRenamed("query_id", "node_id")
-      .orderBy(col("node_id"), col("rank"))
-  }
+    }) { (spark, dir) => lshGraph(spark, dir, NarrowLsh) }
 
   /** Occupancy cap on the certification grid. With 2⁶ buckets per band
     * the sf corpora concentrate well past 16 per bucket, so the cap
     * BINDS here — the certificate covers the capped path's survivor
     * selection, not just a no-op passthrough. */
   private val LshBucketCap = 16
+  private val CappedLsh = NarrowLsh.copy(bucketCap = LshBucketCap)
 
   /** [[q_knn_graph_lsh]] under the per-(band,bucket) occupancy cap
     * ([[SimilarityOps.capBandBuckets]], round-9 verdict item 1): the
@@ -302,14 +299,7 @@ object VectorQueries {
          |    ORDER BY cos DESC, neighbor_id) AS rank
          |  FROM scored) t WHERE rank <= 5
          |ORDER BY node_id, rank""".stripMargin
-    }) { (spark, dir) =>
-    SimilarityOps.lshKnnGraph(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim,
-      bucketCap = LshBucketCap)
-      .withColumnRenamed("query_id", "node_id")
-      .orderBy(col("node_id"), col("rank"))
-  }
+    }) { (spark, dir) => lshGraph(spark, dir, CappedLsh) }
 
   /** [[q_knn_graph_lsh]] at the WIDE 128-plane config (16 bands × 8
     * bits) — the certificate that the banding kernel is no longer
@@ -342,16 +332,10 @@ object VectorQueries {
          |    ORDER BY cos DESC, neighbor_id) AS rank
          |  FROM scored) t WHERE rank <= 5
          |ORDER BY node_id, rank""".stripMargin
-    }) { (spark, dir) =>
-    SimilarityOps.lshKnnGraph(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = WideBands, bandBits = WideBandBits, dim = LshDim)
-      .withColumnRenamed("query_id", "node_id")
-      .orderBy(col("node_id"), col("rank"))
-  }
+    }) { (spark, dir) => lshGraph(spark, dir, WideLsh) }
 
   /** [[q_knn_graph_capped]] served by the TWO-PHASE rerank kernel
-    * ([[SimilarityOps.lshKnnGraphRawTwoPhase]], round-10 verdict item
+    * ([[SimilarityOps.LshConfig]] `twoPhase`, round-10 verdict item
     * 2): vectors ride the bucket join once per band — bands·|corpus|
     * vector copies, independent of candidate volume — instead of once
     * per candidate (~1 KB × 150M candidates ≈ 150 GB projected spill
@@ -362,16 +346,11 @@ object VectorQueries {
     */
   val q_knn_graph_twophase = QueryDef(
     "q_knn_graph_twophase", q_knn_graph_capped.oracle.get) { (spark, dir) =>
-    SimilarityOps.lshKnnGraphTwoPhase(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim,
-      bucketCap = LshBucketCap)
-      .withColumnRenamed("query_id", "node_id")
-      .orderBy(col("node_id"), col("rank"))
+    lshGraph(spark, dir, CappedLsh.copy(twoPhase = true))
   }
 
   /** Multi-probe LSH graph at HALF the band count
-    * ([[SimilarityOps.lshKnnGraphMultiProbe]]): 3 bands × 6 bits, each
+    * ([[SimilarityOps.lshKnn]] at probes = 2): 3 bands × 6 bits, each
     * query node probing its bucket AND the least-confident-bit flip
     * per band — index stays one bucket per band, so at 100 TB this is
     * ~q_knn_graph_lsh recall at half the stored index and half the
@@ -382,15 +361,10 @@ object VectorQueries {
   val q_knn_graph_multiprobe = QueryDef(
     "q_knn_graph_multiprobe", {
       val bands = 3; val bandBits = 6
-      val hpRows = (0 until bands * bandBits).map { i =>
-        val cs = (0 until LshDim).map(d =>
-          graft.functions.HyperplaneSig.coeff(i, d, LshDim)).mkString("[", ", ", "]")
-        s"($i, $cs)"
-      }.mkString(",\n    ")
       s"""WITH v AS (
          |  SELECT vec_id AS id, $vd AS vd FROM embeddings),
          |hp(i, hv) AS (VALUES
-         |    $hpRows),
+         |    ${hpValues(bands * bandBits)}),
          |sums AS (
          |  SELECT id, i // $bandBits AS band, i % $bandBits AS r,
          |    list_dot_product(vd, hv) AS s
@@ -428,22 +402,23 @@ object VectorQueries {
          |  FROM scored) t WHERE rank <= 5
          |ORDER BY node_id, rank""".stripMargin
     }) { (spark, dir) =>
-    SimilarityOps.lshKnnGraphMultiProbe(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = 3, bandBits = 6, dim = LshDim)
-      .withColumnRenamed("query_id", "node_id")
-      .orderBy(col("node_id"), col("rank"))
+    lshGraph(spark, dir,
+      LshConfig(3, 6, LshDim, probes = 2, twoPhase = true))
   }
 
   /** Multi-probe × wide × cap certification grid: 10 bands × 8 bits =
     * 80 planes (past one 64-bit word), 2 probes per band, occupancy
     * cap 16 — every axis of the full-strength 5M-frontier kernel
-    * ([[SimilarityOps.lshKnnGraphRawMultiProbe]]) binding in one
-    * config. */
-  private[graft] val MpwBands = 10
-  private[graft] val MpwBandBits = 8
-  private[graft] val MpwProbes = 2
-  private[graft] val MpwCap = 16
+    * ([[SimilarityOps.lshKnn]]) binding in one config. */
+  private val MpwBands = 10
+  private val MpwBandBits = 8
+  private val MpwProbes = 2
+  private val MpwCap = 16
+  /** The Mpw grid as a kernel config: two-phase, query-side probes,
+    * capped corpus — shared by the batch graph, the staged build, the
+    * split serve and the streaming serve. */
+  private[graft] val MpwLsh = LshConfig(MpwBands, MpwBandBits, LshDim,
+    probes = MpwProbes, bucketCap = MpwCap, twoPhase = true)
 
   /** Oracle CTE block for the N-PROBE wide banding family: per-plane
     * sums from the literal hyperplane table → per-band buckets (bmain)
@@ -455,16 +430,11 @@ object VectorQueries {
     * probes, the whole point).
     */
   private def multiProbeOracleCtes(bands: Int, bandBits: Int,
-      probes: Int): String = {
-    val hpRows = (0 until bands * bandBits).map { i =>
-      val cs = (0 until LshDim).map(d =>
-        graft.functions.HyperplaneSig.coeff(i, d, LshDim)).mkString("[", ", ", "]")
-      s"($i, $cs)"
-    }.mkString(",\n    ")
+      probes: Int): String =
     s"""v AS (
        |  SELECT vec_id AS id, $vd AS vd FROM embeddings),
        |hp(i, hv) AS (VALUES
-       |    $hpRows),
+       |    ${hpValues(bands * bandBits)}),
        |sums AS (
        |  SELECT id, i // $bandBits AS band, i % $bandBits AS r,
        |    list_dot_product(vd, hv) AS s
@@ -484,7 +454,6 @@ object VectorQueries {
        |  SELECT m.id, m.band, xor(m.bucket, CAST(1 AS BIGINT) << f.r)
        |  FROM bmain m JOIN bflip f ON f.id = m.id AND f.band = m.band),
        |n AS (SELECT id, vd, sqrt(list_dot_product(vd, vd)) AS nrm FROM v)""".stripMargin
-  }
 
   /** Shared oracle tail for the multi-probe wide capped graph family —
     * capped corpus buckets, probe-set candidate join, exact rerank —
@@ -527,16 +496,11 @@ object VectorQueries {
     */
   val q_knn_graph_mpw = QueryDef(
     "q_knn_graph_mpw", mpwOracleSql("", "", k = 5)) { (spark, dir) =>
-    SimilarityOps.lshKnnGraphMultiProbeCapped(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = MpwBands, bandBits = MpwBandBits, dim = LshDim,
-      probes = MpwProbes, bucketCap = MpwCap)
-      .withColumnRenamed("query_id", "node_id")
-      .orderBy(col("node_id"), col("rank"))
+    lshGraph(spark, dir, MpwLsh)
   }
 
   /** [[q_knn_graph_mpw]] built STAGED — bands processed 5 at a time
-    * ([[SimilarityOps.lshKnnGraphStagedRaw]]), each band-group's
+    * ([[SimilarityOps.lshKnnStaged]]), each band-group's
     * partial top-k checkpointed to parquet and merged by max(cos) +
     * re-rank. The oracle is VERBATIM q_knn_graph_mpw's: staged ≡
     * unstaged is the certificate (exactness argument in the op's
@@ -548,13 +512,10 @@ object VectorQueries {
   val q_knn_graph_staged = QueryDef(
     "q_knn_graph_staged", q_knn_graph_mpw.oracle.get) { (spark, dir) =>
     val work = graft.streaming.StreamingOps.tempSinkDir("graft_staged_knn_")
-    SimilarityOps.lshKnnGraphStagedRaw(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = MpwBands, bandBits = MpwBandBits, dim = LshDim,
-      probes = MpwProbes, bucketCap = MpwCap, groupBands = 5,
-      workDir = work)
-      .select(col("query_id").as("node_id"), col("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    SimilarityOps.roundCos(SimilarityOps.lshKnnStaged(
+        Tables.embeddings(spark, dir), "vec_id", "embedding", 5, MpwLsh,
+        groupBands = 5, workDir = work))
+      .withColumnRenamed("query_id", "node_id")
       .orderBy(col("node_id"), col("rank"))
   }
 
@@ -573,18 +534,14 @@ object VectorQueries {
       .replace("query_id AS node_id", "query_id")
       .replace("ORDER BY node_id, rank", "ORDER BY query_id, rank")) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    SimilarityOps.lshKnnGraphRawMultiProbe(
-      emb.filter(col("vec_id") < 50), emb.filter(col("vec_id") >= 50),
-      "vec_id", "embedding", 10,
-      bands = MpwBands, bandBits = MpwBandBits, dim = LshDim,
-      probes = MpwProbes, bucketCap = MpwCap)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos_sim"))
+    SimilarityOps.roundCos(SimilarityOps.lshKnn(
+        emb.filter(col("vec_id") < 50), emb.filter(col("vec_id") >= 50),
+        "vec_id", "embedding", 10, MpwLsh))
       .orderBy(col("query_id"), col("rank"))
   }
 
   /** One NN-DESCENT refinement round over the certified capped graph
-    * ([[SimilarityOps.knnGraphRefineRaw]], round-11 verdict item 6):
+    * ([[SimilarityOps.knnGraphRefine]], round-11 verdict item 6):
     * candidates = the graph's edges ∪ neighbors-of-neighbors, exact
     * cosine reranks, top-5 kept. The oracle UNROLLS the round — the
     * full capped-graph chain, the 2-hop expansion, the set-union, the
@@ -636,13 +593,10 @@ object VectorQueries {
          |ORDER BY node_id, rank""".stripMargin
     }) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    val base = SimilarityOps.lshKnnGraphRaw(emb, emb,
-      "vec_id", "embedding", 5,
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim,
-      bucketCap = LshBucketCap)
-    SimilarityOps.knnGraphRefineRaw(emb, "vec_id", "embedding", 5, base)
-      .select(col("query_id").as("node_id"), col("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    val base = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5, CappedLsh)
+    SimilarityOps.roundCos(
+        SimilarityOps.knnGraphRefine(emb, "vec_id", "embedding", 5, base))
+      .withColumnRenamed("query_id", "node_id")
       .orderBy(col("node_id"), col("rank"))
   }
 
@@ -1168,16 +1122,6 @@ object VectorQueries {
 
   private val JlDim = 16
 
-  /** Literal ±1 hyperplane rows for the JL-projection oracles — the
-    * same coefficient mix the codegen'd kernels use, rendered at
-    * SQL-generation time. */
-  private def jlHpRows(rows: Int): String =
-    (0 until rows).map { i =>
-      val cs = (0 until LshDim).map(d =>
-        graft.functions.HyperplaneSig.coeff(i, d, LshDim)).mkString("[", ", ", "]")
-      s"($i, $cs)"
-    }.mkString(",\n    ")
-
   /** Johnson–Lindenstrauss distortion readout
     * ([[graft.functions.RandomProject]]): for every consecutive-id
     * vector pair, the ratio of projected to original squared distance,
@@ -1194,7 +1138,7 @@ object VectorQueries {
     "q_jl_distortion",
     s"""WITH v AS (SELECT vec_id, $vd AS vd FROM embeddings),
        |hp(i, hv) AS (VALUES
-       |    ${jlHpRows(JlDim)}),
+       |    ${hpValues(JlDim)}),
        |pr AS (
        |  SELECT id, list(list_dot_product(vd, hv) ORDER BY i) AS pv FROM (
        |    SELECT vec_id AS id, vd FROM v) s CROSS JOIN hp GROUP BY id),
@@ -1246,7 +1190,7 @@ object VectorQueries {
     "q_ann_jl",
     s"""WITH v AS (SELECT vec_id AS id, $vd AS vd FROM embeddings),
        |hp(i, hv) AS (VALUES
-       |    ${jlHpRows(JlDim)}),
+       |    ${hpValues(JlDim)}),
        |pr AS (
        |  SELECT id, list(list_dot_product(vd, hv) ORDER BY i) AS pv
        |  FROM v CROSS JOIN hp GROUP BY id),
@@ -1425,7 +1369,7 @@ object VectorQueries {
 
   /** ±1 hyperplane table rendered as SQL literal rows from the same
     * coefficient mix the codegen'd expressions use — the oracle's
-    * replay substrate for every sketch-based query. */
+    * replay substrate for every LSH, sketch and JL-projection query. */
   private def hpValues(bits: Int): String = (0 until bits).map { i =>
     val cs = (0 until LshDim).map(d =>
       graft.functions.HyperplaneSig.coeff(i, d, LshDim)).mkString("[", ", ", "]")
@@ -2215,7 +2159,7 @@ object VectorQueries {
     * [[q_knn_graph_lsh]], mirroring what q_ann_index_delta certifies
     * for the stored search index: a delta batch (every 10th vector)
     * arrives and ONLY its outgoing edges are computed
-    * ([[SimilarityOps.lshKnnGraphBetween]]: the delta's band buckets
+    * ([[SimilarityOps.lshKnn]] of the delta against the corpus: the delta's band buckets
     * equi-join the full corpus's buckets — work is |Δ|·bucket-occupancy,
     * never a graph rebuild). Certified invariant: the delta edges are
     * INDISTINGUISHABLE from the full-rebuild graph restricted to delta
@@ -2248,10 +2192,9 @@ object VectorQueries {
          |ORDER BY node_id, rank""".stripMargin
     }) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    SimilarityOps.lshKnnGraphBetween(
-      emb.filter(pmod(col("vec_id"), lit(10)) === 0), emb,
-      "vec_id", "embedding", 5,
-      bands = WideBands, bandBits = WideBandBits, dim = LshDim)
+    SimilarityOps.roundCos(SimilarityOps.lshKnn(
+        emb.filter(pmod(col("vec_id"), lit(10)) === 0), emb,
+        "vec_id", "embedding", 5, WideLsh))
       .withColumnRenamed("query_id", "node_id")
       .orderBy(col("node_id"), col("rank"))
   }
@@ -2298,13 +2241,9 @@ object VectorQueries {
     // RAW scores through the merge: re-ranking on the rounded score
     // could reorder near-ties differently from the full rebuild (which
     // ranks on raw cos); round only at the output boundary
-    val old = SimilarityOps.lshKnnGraphRaw(base, base,
-      "vec_id", "embedding", 5,
-      bands = WideBands, bandBits = WideBandBits, dim = LshDim)
+    val old = SimilarityOps.lshKnn(base, base, "vec_id", "embedding", 5, WideLsh)
       .drop("rank")
-    val fresh = SimilarityOps.lshKnnGraphRaw(base, delta,
-      "vec_id", "embedding", 5,
-      bands = WideBands, bandBits = WideBandBits, dim = LshDim)
+    val fresh = SimilarityOps.lshKnn(base, delta, "vec_id", "embedding", 5, WideLsh)
       .drop("rank")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -2362,9 +2301,9 @@ object VectorQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_nodes
          |FROM lbl GROUP BY 1 ORDER BY 1""".stripMargin
     }) { (spark, dir) =>
-    val e = SimilarityOps.lshKnnGraph(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 5,
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim)
+    val emb = Tables.embeddings(spark, dir)
+    val e = SimilarityOps.roundCos(
+        SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5, NarrowLsh))
       .filter(col("cos_sim") >= 0.4)
     val a = e.select(col("query_id").cast("long").as("src"),
       col("neighbor_id").cast("long").as("dst"))
@@ -2423,8 +2362,7 @@ object VectorQueries {
          |FROM alldeg GROUP BY in_degree ORDER BY in_degree""".stripMargin
     }) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    val e = SimilarityOps.lshKnnGraph(emb, "vec_id", "embedding", 5,
-      bands = LshBands, bandBits = LshBandBits, dim = LshDim)
+    val e = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5, NarrowLsh)
     val indeg = e.groupBy(col("neighbor_id")).agg(count(lit(1)).as("d"))
     emb.select(col("vec_id").as("id"))
       .join(indeg, col("id") === col("neighbor_id"), "left")

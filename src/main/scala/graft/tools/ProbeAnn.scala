@@ -153,8 +153,8 @@ object ProbeAnn {
             (got & truth).size.toDouble / (nQ * k))
         }) ++ Seq((4, 4), (8, 4), (8, 6)).map { case (bands, bits) =>
           val (_, t, got) = run(s"lsh $bands x$bits", () =>
-            SimilarityOps.lshTopK(queries, corpus, "vec_id", "embedding", k,
-              bands = bands, bandBits = bits, dim = 64))
+            SimilarityOps.lshKnn(queries, corpus, "vec_id", "embedding", k,
+              SimilarityOps.LshConfig(bands, bits, dim = 64)))
           (s"LSH $bands bands x $bits bits", t,
             (got & truth).size.toDouble / (nQ * k))
         } ++ Seq((256, 110), (256, 115), (256, 120)).map { case (bits, r) =>

@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   *
   * Round-11: configs may exceed 64 total bits (the wide
   * [[graft.functions.HyperplaneBuckets]] banding), and every graph
-  * build runs the TWO-PHASE rerank ([[SimilarityOps
-  * .lshKnnGraphRawTwoPhase]]) — the ~1 KB/candidate payload that
+  * build runs the TWO-PHASE rerank ([[SimilarityOps.LshConfig]]
+  * `twoPhase`) — the ~1 KB/candidate payload that
   * walled the round-10 5M build at 150 GB of projected spill is now a
   * 24 B/candidate shuffle plus bands·N vector copies.
   *
@@ -80,6 +80,9 @@ object ProbeKnn {
     * 12 bands × 20 bits, 2 probes per band, corpus occupancy cap 16.
     */
   private[tools] case class Config(bands: Int, bits: Int, probes: Int, cap: Int) {
+    /** The two-phase kernel config; constructing it range-checks the token. */
+    val lsh: SimilarityOps.LshConfig = SimilarityOps.LshConfig(bands, bits, Dim,
+      probes = probes, bucketCap = cap, twoPhase = true)
     override def toString: String =
       s"${bands}x$bits" + (if (probes > 1) s"p$probes" else "") +
         (if (cap > 0) s"c$cap" else "")
@@ -183,9 +186,8 @@ object ProbeKnn {
       val cand = if (doCount) candidateCount(vecs, bands, bits, cap) else -1L
       val candWall = (System.nanoTime() - tc) / 1e9
       // query-slice recall: cheap at any config (100 queries vs corpus)
-      val rec = recallOf(SimilarityOps.lshKnnGraphRawMultiProbe(
-        queries, vecs, "vec_id", "embedding", 5, bands, bits, Dim,
-        probes = probes, bucketCap = cap))
+      val rec = recallOf(SimilarityOps.lshKnn(
+        queries, vecs, "vec_id", "embedding", 5, cfg.lsh))
       println(f"  $cfg: candidates=$cand%,d (count wall $candWall%.1fs) slice recall@5=$rec%.3f")
       val buildable = doBuild &&
         (stageBands > 0 || cand < 0 || cand * probes <= feasible)
@@ -195,11 +197,10 @@ object ProbeKnn {
         val tg = System.nanoTime()
         val graph =
           if (stageBands > 0)
-            SimilarityOps.lshKnnGraphStagedRaw(vecs, "vec_id", "embedding", 5,
-              bands, bits, Dim, probes, cap, stageBands, s"$work/stages")
+            SimilarityOps.lshKnnStaged(vecs, "vec_id", "embedding", 5,
+              cfg.lsh, stageBands, s"$work/stages")
           else
-            SimilarityOps.lshKnnGraphRawMultiProbe(vecs, vecs,
-              "vec_id", "embedding", 5, bands, bits, Dim, probes, cap)
+            SimilarityOps.lshKnn(vecs, vecs, "vec_id", "embedding", 5, cfg.lsh)
         graph.write.mode("overwrite").parquet(s"$work/graph")
         val built = spark.read.parquet(s"$work/graph")
         val edges = built.count()
@@ -211,7 +212,7 @@ object ProbeKnn {
         println(f"    $cfg BUILT$staged: graph=$edges%,d edges in $wall%.1fs built recall@5=$builtRec%.3f")
         if (doRefine) {
           val tr = System.nanoTime()
-          SimilarityOps.knnGraphRefineRaw(vecs, "vec_id", "embedding", 5, built)
+          SimilarityOps.knnGraphRefine(vecs, "vec_id", "embedding", 5, built)
             .write.mode("overwrite").parquet(s"$work/refined")
           val refined = spark.read.parquet(s"$work/refined")
           val redges = refined.count()

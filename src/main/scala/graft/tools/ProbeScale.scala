@@ -56,7 +56,8 @@ object ProbeScale {
     reset()
     t(s"embed neardup LSH ${k}x")(
       SimilarityOps.lshNearDupPairs(emb, "vec_id", "embedding",
-        bands = 6, bandBits = 6, dim = 64, threshold = 0.95).count())
+        SimilarityOps.LshConfig(bands = 6, bandBits = 6, dim = 64),
+        threshold = 0.95).count())
     spark.stop()
   }
 }

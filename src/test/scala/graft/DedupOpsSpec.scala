@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{DedupOps, SimilarityOps, TextOps}
+import graft.ops.SimilarityOps.LshConfig
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -218,7 +219,7 @@ class DedupOpsSpec extends AnyFunSuite {
     val brute = SimilarityOps.cosineNearDupPairs(emb, "vec_id", "embedding", 0.3)
       .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = SimilarityOps.lshNearDupPairs(
-      emb, "vec_id", "embedding", bands = 6, bandBits = 6, dim = 64, threshold = 0.3)
+      emb, "vec_id", "embedding", LshConfig(6, 6, 64), threshold = 0.3)
       .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh.subsetOf(brute))
     assert(brute.isEmpty || lsh.size.toDouble / brute.size > 0.2)
@@ -232,37 +233,34 @@ class DedupOpsSpec extends AnyFunSuite {
     val mega = spark.range(200).select(col("id").as("vec_id"),
       array((0 until 64).map(i => lit((i % 7 + 1).toFloat)): _*).as("embedding"))
     val uncapped = SimilarityOps.lshNearDupPairs(
-      mega, "vec_id", "embedding", bands = 6, bandBits = 6, dim = 64,
-      threshold = 0.9).count()
+      mega, "vec_id", "embedding", LshConfig(6, 6, 64), threshold = 0.9).count()
     assert(uncapped === 200L * 199 / 2,
       s"identical vectors must all pair uncapped, got $uncapped")
+    val capped8 = LshConfig(6, 6, 64, bucketCap = 8)
     val capped = SimilarityOps.lshNearDupPairs(
-      mega, "vec_id", "embedding", bands = 6, bandBits = 6, dim = 64,
-      threshold = 0.9, bucketCap = 8)
+      mega, "vec_id", "embedding", capped8, threshold = 0.9)
     val cappedRows = capped.collect()
     assert(cappedRows.nonEmpty, "cap must keep survivor pairs, not drop the bucket")
     assert(cappedRows.length <= 6 * 8 * 7 / 2,
       s"capped pair volume must be <= bands * C(cap,2), got ${cappedRows.length}")
     // deterministic: the stateless hash-rank sample reproduces exactly
     val again = SimilarityOps.lshNearDupPairs(
-      mega, "vec_id", "embedding", bands = 6, bandBits = 6, dim = 64,
-      threshold = 0.9, bucketCap = 8).collect()
+      mega, "vec_id", "embedding", capped8, threshold = 0.9).collect()
     assert(cappedRows.map(_.toString).sorted.toSeq ===
       again.map(_.toString).sorted.toSeq)
     // graph form: only the CORPUS side is capped, so every query node
     // keeps edges (dropped members lose candidacy, not their output row)
-    val g = SimilarityOps.lshKnnGraph(mega, "vec_id", "embedding", 3,
-      bands = 6, bandBits = 6, dim = 64, bucketCap = 8)
+    val g = SimilarityOps.lshKnn(mega, mega, "vec_id", "embedding", 3, capped8)
     assert(g.select("query_id").distinct().count() === 200,
       "capping the corpus side must not delete query nodes from the graph")
   }
 
   test("occupancy cap above max occupancy is bit-identical to uncapped") {
-    val plain = SimilarityOps.lshKnnGraph(emb, "vec_id", "embedding", 5,
-      bands = 6, bandBits = 6, dim = 64)
+    val plain = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5,
+      LshConfig(6, 6, 64))
       .collect().map(_.toString).sorted.toSeq
-    val wide = SimilarityOps.lshKnnGraph(emb, "vec_id", "embedding", 5,
-      bands = 6, bandBits = 6, dim = 64, bucketCap = 1000000)
+    val wide = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5,
+      LshConfig(6, 6, 64, bucketCap = 1000000))
       .collect().map(_.toString).sorted.toSeq
     assert(wide === plain,
       "a non-binding cap must preserve the round-9 graph bit-for-bit")
@@ -322,10 +320,10 @@ class DedupOpsSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(2)))
         .filter { case (q, _) => q % 7 == 0 }.toSet
         .intersect(brute).size.toDouble / brute.size
-    val plain = recall(SimilarityOps.lshKnnGraph(emb, "vec_id", "embedding", 5,
-      bands = 3, bandBits = 6, dim = 64))
-    val probed = recall(SimilarityOps.lshKnnGraphMultiProbe(emb, "vec_id",
-      "embedding", 5, bands = 3, bandBits = 6, dim = 64))
+    val plain = recall(SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5,
+      LshConfig(3, 6, 64)))
+    val probed = recall(SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5,
+      LshConfig(3, 6, 64, probes = 2, twoPhase = true)))
     info(f"3x6 graph recall@5: plain $plain%.3f multi-probe $probed%.3f")
     // the probe only ADDS candidate buckets per query node — recall
     // can never drop, and on this corpus it must measurably rise
@@ -373,28 +371,45 @@ class DedupOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-probe capped graph reduces to two-phase at probes=1 and staged build is exact") {
-    for ((bands, bandBits, cap) <- Seq((6, 6, 16), (10, 8, 16))) {
-      val base = SimilarityOps.lshKnnGraphRawTwoPhase(emb, emb,
-        "vec_id", "embedding", 5, bands, bandBits, 64, cap)
-        .collect().map(_.toString).sorted.toSeq
-      val p1 = SimilarityOps.lshKnnGraphRawMultiProbe(emb, emb,
-        "vec_id", "embedding", 5, bands, bandBits, 64, probes = 1,
-        bucketCap = cap)
-        .collect().map(_.toString).sorted.toSeq
-      assert(p1 === base, s"probes=1 diverged from two-phase at $bands x $bandBits")
-    }
+  test("staged band-group build merges to the unstaged graph exactly") {
     // staged band groups merge to the unstaged result bit-for-bit
+    val cfg = LshConfig(10, 8, 64, probes = 2, bucketCap = 16, twoPhase = true)
     val work = graft.streaming.StreamingOps.tempSinkDir("graft_spec_staged_")
-    val unstaged = SimilarityOps.lshKnnGraphRawMultiProbe(emb, emb,
-      "vec_id", "embedding", 5, 10, 8, 64, probes = 2, bucketCap = 16)
+    val unstaged = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5, cfg)
       .collect().map(_.toString).sorted.toSeq
     for (groupBands <- Seq(3, 5)) {
-      val staged = SimilarityOps.lshKnnGraphStagedRaw(emb,
-        "vec_id", "embedding", 5, 10, 8, 64, probes = 2, bucketCap = 16,
-        groupBands = groupBands, workDir = s"$work/g$groupBands")
+      val staged = SimilarityOps.lshKnnStaged(emb, "vec_id", "embedding", 5,
+        cfg, groupBands = groupBands, workDir = s"$work/g$groupBands")
         .collect().map(_.toString).sorted.toSeq
       assert(staged === unstaged, s"staged build diverged at groupBands=$groupBands")
+    }
+  }
+
+  test("LSH config validation: LshConfig and lshKnnStaged reject every out-of-range field") {
+    val ok = LshConfig(4, 6, 64)
+    // the edges of every range construct
+    Seq(ok.copy(bands = 1), ok.copy(bands = 1024), ok.copy(bandBits = 1),
+      ok.copy(bandBits = 62), ok.copy(probes = ok.bandBits + 1),
+      ok.copy(bucketCap = 2), ok.copy(bandOffset = 0))
+    val invalid: Seq[(String, () => LshConfig)] = Seq(
+      "bands 0" -> (() => ok.copy(bands = 0)),
+      "bands 1025" -> (() => ok.copy(bands = 1025)),
+      "bandBits 0" -> (() => ok.copy(bandBits = 0)),
+      "bandBits 63" -> (() => ok.copy(bandBits = 63)),
+      "probes 0" -> (() => ok.copy(probes = 0)),
+      "probes bandBits+2" -> (() => ok.copy(probes = ok.bandBits + 2)),
+      "bucketCap 1" -> (() => ok.copy(bucketCap = 1)),
+      "bandOffset -1" -> (() => ok.copy(bandOffset = -1)))
+    val work = graft.streaming.StreamingOps.tempSinkDir("graft_spec_cfg_")
+    def staged(cfg: LshConfig, groupBands: Int) =
+      SimilarityOps.lshKnnStaged(emb, "vec_id", "embedding", 5, cfg,
+        groupBands = groupBands, workDir = work)
+    for ((what, cfg) <- invalid) withClue(what) {
+      intercept[IllegalArgumentException](cfg())
+      intercept[IllegalArgumentException](staged(cfg(), groupBands = 1))
+    }
+    for (groupBands <- Seq(0, ok.bands + 1)) withClue(s"groupBands $groupBands") {
+      intercept[IllegalArgumentException](staged(ok, groupBands))
     }
   }
 
@@ -407,11 +422,10 @@ class DedupOpsSpec extends AnyFunSuite {
         .filter { case (q, _) => q % 7 == 0 }.toSet
         .intersect(brute).size.toDouble / brute.size
     // weak base config so the refine round has recall headroom
-    val base = SimilarityOps.lshKnnGraphRaw(emb, emb,
-      "vec_id", "embedding", 5, bands = 2, bandBits = 6, dim = 64,
-      bucketCap = 16)
+    val base = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5,
+      LshConfig(2, 6, 64, bucketCap = 16))
     val r0 = recall(base)
-    val refined = SimilarityOps.knnGraphRefineRaw(emb, "vec_id", "embedding", 5, base)
+    val refined = SimilarityOps.knnGraphRefine(emb, "vec_id", "embedding", 5, base)
     val r1 = recall(refined)
     info(f"refine recall@5: base $r0%.3f -> one round $r1%.3f")
     // the INVARIANT is monotonicity (candidates are a superset, exact
@@ -484,11 +498,12 @@ class DedupOpsSpec extends AnyFunSuite {
 
   test("two-phase near-dup is bit-identical to the single-phase kernel") {
     for ((bands, bandBits, cap) <- Seq((6, 6, 0), (6, 6, 8), (16, 8, 0))) {
+      val cfg = LshConfig(bands, bandBits, 64, bucketCap = cap)
       val one = SimilarityOps.lshNearDupPairs(emb, "vec_id", "embedding",
-        bands, bandBits, 64, threshold = 0.3, bucketCap = cap)
+        cfg, threshold = 0.3)
         .collect().map(_.toString).sorted.toSeq
-      val two = SimilarityOps.lshNearDupPairsTwoPhase(emb, "vec_id", "embedding",
-        bands, bandBits, 64, threshold = 0.3, bucketCap = cap)
+      val two = SimilarityOps.lshNearDupPairs(emb, "vec_id", "embedding",
+        cfg.copy(twoPhase = true), threshold = 0.3)
         .collect().map(_.toString).sorted.toSeq
       assert(two === one, s"two-phase near-dup diverged at $bands x $bandBits cap=$cap")
     }
@@ -499,11 +514,11 @@ class DedupOpsSpec extends AnyFunSuite {
     // same double arithmetic, same tie-breaks — the invariance the
     // shared q_knn_graph_twophase oracle certifies cross-engine
     for ((bands, bandBits, cap) <- Seq((6, 6, 0), (6, 6, 16), (16, 8, 0))) {
-      val one = SimilarityOps.lshKnnGraphRaw(emb, emb,
-        "vec_id", "embedding", 5, bands, bandBits, 64, cap)
+      val cfg = LshConfig(bands, bandBits, 64, bucketCap = cap)
+      val one = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5, cfg)
         .collect().map(_.toString).sorted.toSeq
-      val two = SimilarityOps.lshKnnGraphRawTwoPhase(emb, emb,
-        "vec_id", "embedding", 5, bands, bandBits, 64, cap)
+      val two = SimilarityOps.lshKnn(emb, emb, "vec_id", "embedding", 5,
+        cfg.copy(twoPhase = true))
         .collect().map(_.toString).sorted.toSeq
       assert(two === one, s"two-phase diverged at $bands x $bandBits cap=$cap")
     }
@@ -545,8 +560,8 @@ class DedupOpsSpec extends AnyFunSuite {
     val c = emb.filter(col("vec_id") >= 10)
     val brute = SimilarityOps.bruteForceTopK(q, c, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val lsh = SimilarityOps.lshTopK(q, c, "vec_id", "embedding", 5,
-      bands = 8, bandBits = 4, dim = 64)
+    val lsh = SimilarityOps.lshKnn(q, c, "vec_id", "embedding", 5,
+      LshConfig(8, 4, 64))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // per-query ranks are dense 1..n (n <= k — LSH may find fewer
     // candidates than k, unlike IVF/PQ which scan whole cells)

@@ -297,9 +297,9 @@ class PlanSpec extends AnyFunSuite {
       s"LSH kNN graph went cartesian:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"LSH kNN graph broadcasts a side through a non-equi join:\n${p.take(1500)}")
-    // round-11: banding rides the wide-capable hyperplane_buckets
-    // kernel (one codegen'd per-band bucket array, no packed signature)
-    assert(p.toLowerCase.contains("hyperplanebuckets"),
+    // banding rides the codegen'd N-probe bucket kernel (one per-band
+    // bucket array, no packed signature) that every LSH kNN side builds on
+    assert(p.toLowerCase.contains("multiprobebucketsn"),
       s"candidate generation should ride the codegen bucket kernel:\n${p.take(1200)}")
   }
 
@@ -562,21 +562,16 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_stream_ann_wide batch kernel keeps q_ann_mpw's invariant shape") {
     // the streaming serve's foreachBatch body IS q_ann_mpw's kernel
-    // (same lshKnnGraphRawMultiProbe call, same Mpw config) — pin the
+    // (same lshKnn call, same MpwLsh config) — pin the
     // per-batch plan by building the kernel on the batch-equivalent
     // static frame; the streaming query itself can't be fingerprinted
     // (its returned frame is the sink read-back, and per-batch plans
     // are planned inside the stream runner)
     val emb = graft.Tables.embeddings(spark, sf)
-    val kernel = graft.ops.SimilarityOps.lshKnnGraphRawMultiProbe(
+    val kernel = graft.ops.SimilarityOps.lshKnn(
       emb.filter(org.apache.spark.sql.functions.col("vec_id") < 50),
       emb.filter(org.apache.spark.sql.functions.col("vec_id") >= 50),
-      "vec_id", "embedding", 10,
-      bands = graft.queries.VectorQueries.MpwBands,
-      bandBits = graft.queries.VectorQueries.MpwBandBits,
-      dim = 64,
-      probes = graft.queries.VectorQueries.MpwProbes,
-      bucketCap = graft.queries.VectorQueries.MpwCap)
+      "vec_id", "embedding", 10, graft.queries.VectorQueries.MpwLsh)
     assert(fingerprintInvariantOf(kernel) ===
       goldenInvariantShapes("q_ann_mpw"),
       "the streaming ANN serve's batch kernel drifted off q_ann_mpw's shape")
