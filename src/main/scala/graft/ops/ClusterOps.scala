@@ -194,7 +194,7 @@ object ClusterOps {
   def dbscan(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
       eps: Double, minPts: Int,
-      localCcMaxEdges: Long = 2000000L): DataFrame = {
+      localCcMaxEdges: Long = GraphOps.LocalMaxEdges): DataFrame = {
     val pts = points.select(
       col(idCol).cast("long").as("pid"),
       col(xCol).cast("double").as("x"),

@@ -436,7 +436,7 @@ object DedupOps {
   def dedupGroups(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double,
-      localCcMaxEdges: Long = 2000000L): DataFrame = {
+      localCcMaxEdges: Long = GraphOps.LocalMaxEdges): DataFrame = {
     // materialize once: the symmetric edge union consumes `pairs`
     // twice, which would re-run the whole MinHash pipeline per branch
     val pairs = Reuse.materialized(

@@ -18,6 +18,8 @@ object GraphQueries {
     * MinHash near-dup graph (threshold 0.8) over ALL documents —
     * dangling (unduplicated) docs keep the teleport+dangling-share
     * mass; hub docs of chained duplicate clusters rank highest. The
+    * certified SFs' graphs are far under [[GraphOps.LocalMaxEdges]], so
+    * the rounds run on the driver after one collect of edges and ids. The
     * oracle replays all `Iterations` rounds as unrolled CTEs in exact
     * integer micro-unit arithmetic on top of the certified MinHash
     * pair CTEs — bit-equality across engines, no float in sight.
@@ -223,9 +225,11 @@ object GraphQueries {
     * unreached within 6 hops. The contamination-blast-radius read on a
     * dedup graph: how many hops of near-duplication separate the
     * corpus from a flagged seed set. Level-synchronous frontier
-    * relaxation, one edge join + min-merge per round; the oracle
-    * unrolls all 6 rounds as MATERIALIZED CTEs over the same certified
-    * MinHash pair pipeline — exact integer hops, engine-identical.
+    * relaxation: on the driver while the graph is under
+    * [[GraphOps.LocalMaxEdges]], else one edge join + min-merge per
+    * distributed round; the oracle unrolls all 6 rounds as
+    * MATERIALIZED CTEs over the same certified MinHash pair pipeline —
+    * exact integer hops, engine-identical.
     */
   val q_bfs_hops = QueryDef(
     "q_bfs_hops", {
@@ -274,7 +278,8 @@ object GraphQueries {
     * Where BFS answers "how many dup links away", this answers "how
     * much cumulative dissimilarity away" — chained borderline matches
     * now cost more than chains of exact copies, which is the right
-    * triage metric for contamination spread. Distributed Bellman-Ford,
+    * triage metric for contamination spread. Bounded-round
+    * Bellman-Ford (driver-local under the gate, like q_bfs_hops),
     * ≤-R-edge paths optimal after R rounds; unrolled-CTE oracle.
     */
   val q_weighted_hops = QueryDef(

@@ -37,22 +37,22 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(pairs.nonEmpty)
     val e = edgesDf(pairs)
     val local = labelsOf(GraphOps.minLabelComponents(e, Long.MaxValue))
-    val dist = labelsOf(GraphOps.minLabelComponents(e, 0L))
+    val (distLabels, rounds) = GraphOps.distributedComponents(e)
+    val dist = labelsOf(distLabels)
     assert(dist === local)
     val n = local.size.toLong
-    assert(GraphOps.lastRounds.get() <= log2(n) + 2,
-      s"rounds=${GraphOps.lastRounds.get()} for n=$n nodes")
+    assert(rounds <= log2(n) + 2, s"rounds=$rounds for n=$n nodes")
   }
 
   test("path graph (max diameter) converges in <= log2(n)+2 rounds") {
     // 257-node path 0-1-2-...-256: neighbor-min alone needs 256 rounds
     val n = 257L
     val e = edgesDf((0L until n - 1).map(i => (i, i + 1)))
-    val dist = labelsOf(GraphOps.minLabelComponents(e, 0L))
+    val (distLabels, rounds) = GraphOps.distributedComponents(e)
+    val dist = labelsOf(distLabels)
     assert(dist.size === n.toInt)
     assert(dist.values.forall(_ == 0L)) // one component, min id 0
-    assert(GraphOps.lastRounds.get() <= log2(n) + 2,
-      s"rounds=${GraphOps.lastRounds.get()} for a $n-node path")
+    assert(rounds <= log2(n) + 2, s"rounds=$rounds for a $n-node path")
   }
 
   test("kernel matches GraphX connectedComponents (scale drop-in)") {

@@ -60,9 +60,16 @@ class PageRankSpec extends AnyFunSuite {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val nodes = docs.select(col("doc_id").as("id"))
+    // the public kernel takes the driver-local path at this size; the
+    // distributed kernel must agree under both partitionings too
     val a = GraphOps.pageRank(nodes, edges, 5).orderBy("id").collect().toSeq
     val b = GraphOps.pageRank(
       nodes.repartition(7), edges.repartition(3), 5).orderBy("id").collect().toSeq
+    val c = GraphOps.distributedPageRank(nodes, edges, 5).orderBy("id").collect().toSeq
+    val d = GraphOps.distributedPageRank(
+      nodes.repartition(7), edges.repartition(3), 5).orderBy("id").collect().toSeq
     assert(a === b)
+    assert(c === a)
+    assert(d === a)
   }
 }
