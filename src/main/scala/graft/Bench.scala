@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
   * of stdout, so the line carries the slowest queries (full names,
   * 2-decimal seconds) up to a hard char budget; EVERY query's timing
   * is written at full precision to `BENCH_DETAIL.json` in the working
-  * directory (committed per round) so the complete per-query diff
+  * directory so the complete per-query diff
   * survives regardless of the stdout budget.
   */
 object Bench {
@@ -16,16 +16,16 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
     // JIT/codegen warm-up outside the timed region (steady-state
-    // numbers). Hand-picked warms proved to be whack-a-mole: each round
+    // numbers). Hand-picked warms proved to be whack-a-mole: each time
     // a DIFFERENT query family paid its first-touch JIT/init bill in the
-    // timed region (r02 shingle codegen: q_minhash_lsh 7.3 s vs 2.5 s
-    // warm; r03 first-streaming-query state-store init: q_stream_join
-    // 4.17 s vs 2.69 s steady; r04 JSON-parser + Lloyd's paths:
+    // timed region (shingle codegen: q_minhash_lsh 7.3 s vs 2.5 s
+    // warm; first-streaming-query state-store init: q_stream_join
+    // 4.17 s vs 2.69 s steady; JSON-parser + Lloyd's paths:
     // q_json_props 3.61 s vs 0.67 s, q_kmeans_sizes 4.17 s vs 1.57 s).
     // The robust fix is a full pass over EVERY registered query at
     // sf0.001 (~85 s, measured): every code path the timed region will
     // execute is JIT'd/initialized first, so the timed numbers are
-    // steady-state by construction rather than by per-round patching.
+    // steady-state by construction rather than by per-query patching.
     val warmDir = {
       val d = "/root/testdata/sf0.001"
       if (new java.io.File(d).isDirectory) d else sfDir
@@ -42,24 +42,23 @@ object Bench {
     // (judge-measured 5-10x swings on a bare groupBy within minutes),
     // so a single rep measures the machine, not the plan. min is the
     // contention-robust statistic for "what the plan costs".
-    // PASS-SPREAD SCHEDULE (round-9): reps are whole suite passes —
-    // pass 1 times every query, then pass 2, then pass 3; the min per
-    // query is taken ACROSS passes. Back-to-back reps put all 3 samples
-    // of a query inside one ~2 s window, so machine-level drift that
-    // moves the WHOLE window (round-8 post-mortem: the same code
-    // measured 86.0 s mid-round vs 118.4 s in the driver's final window
-    // on the identical query set) inflates all reps at once and min()
-    // cannot reject it. With passes ~1 suite-length apart, a slow
+    // PASS-SPREAD SCHEDULE: reps are whole suite passes —
+    // pass 1 times every query, then pass 2, then pass 3; the min per query
+    // is taken ACROSS passes. Back-to-back reps put all 3 samples of a
+    // query inside one ~2 s window, so machine-level drift that moves the
+    // WHOLE window (the same code once measured 86.0 s vs 118.4 s in two
+    // windows on the identical query set) inflates all reps at once and
+    // min() cannot reject it. With passes ~1 suite-length apart, a slow
     // window inflates at most one of a query's three samples.
     // A query that THROWS is recorded as a failure, never as a timing —
     // an instant analysis error published as 0.1 s reads as a 20x
-    // speedup to any round-over-round diff.
+    // speedup to any run-over-run diff.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // CPU-steal telemetry (round-10 verdict item 7): the sandbox window
-    // is contended by neighbors, and round-over-round totals have had to
+    // CPU-steal telemetry: the sandbox window is contended by
+    // neighbors, and totals from different windows otherwise have to
     // be hand-annotated with "the machine was slow". /proc/stat's
     // aggregate cpu line carries a steal counter (hypervisor-withheld
     // ticks); the per-pass steal fraction published in BENCH_SUMMARY
@@ -71,28 +70,27 @@ object Bench {
         // denominator = first 8 fields (user..steal) ONLY: guest and
         // guest_nice are already counted inside user/nice, so summing
         // them double-counts guest time and understates the steal
-        // fraction (round-11 advice)
+        // fraction
         Some((if (parts.length > 7) parts(7) else 0L, parts.take(8).sum))
       } catch { case _: Throwable => None }
     val stealPct = scala.collection.mutable.ArrayBuffer[Double]()
-    // CONSTANT-WORK CANARY (round-11 verdict item 3): steal telemetry
-    // proved insufficient — the same HEAD measured 241.4 s vs 276.04 s
-    // same-day with BOTH windows near-zero steal, so whatever slows the
-    // box (noisy neighbors on shared cache/memory bandwidth, thermal
-    // caps) is invisible to /proc/stat. The canary is fixed synthetic
-    // CPU work (no IO, no shuffle: a parallel range + integer-mix sum —
-    // the same arithmetic shape codegen'd query stages run), timed once
-    // per pass; its quiet-window cost on this box is pinned below, so a
-    // diff can normalize a published total by the measured slowdown
-    // factor instead of guessing.
+    // CONSTANT-WORK CANARY: steal telemetry alone is insufficient — the
+    // same HEAD measured 241.4 s vs 276.04 s same-day with BOTH windows
+    // near-zero steal, so whatever slows the box (noisy neighbors on shared
+    // cache/memory bandwidth, thermal caps) is invisible to /proc/stat. The
+    // canary is fixed synthetic CPU work (no IO, no shuffle: a parallel
+    // range + integer-mix sum — the same arithmetic shape codegen'd query
+    // stages run), timed once per pass; its quiet-window cost on this box
+    // is pinned below, so a diff can normalize a published total by the
+    // measured slowdown factor instead of guessing.
     // The canary reference is BOX-PINNED: it comes from a persisted
     // calibration artifact (bench/canary_ref.json, written from quiet-
     // window passes on the box of record), NOT a code constant — a
-    // hard-coded ref is systematically wrong on any other host (round-12
-    // advice). When the artifact is absent the run's own min canary
-    // serves as the ref, making the fastest pass's factor exactly 1.0
-    // (normalized == raw under quiet conditions) and the normalized
-    // value self-relative rather than silently mis-scaled.
+    // hard-coded ref is systematically wrong on any other host. When the
+    // artifact is absent the run's own min canary serves as the ref, making
+    // the fastest pass's factor exactly 1.0 (normalized == raw under quiet
+    // conditions) and the normalized value self-relative rather than
+    // silently mis-scaled.
     val canaryRefFromFile: Option[Double] =
       try {
         val p = Paths.get("bench/canary_ref.json")
@@ -102,12 +100,12 @@ object Bench {
             .findFirstMatchIn(txt).map(_.group(1).toDouble).filter(_ > 0)
         } else None
       } catch { case _: Throwable => None }
-    // min-of-3 per reading (round-13): a SINGLE canary sample proved
-    // far noisier than the slowdown it measures — one run read
-    // 0.126/0.352/0.420 across passes on a 0.2–0.5%-steal box, and
-    // dividing by that noise published a normalized total HALF the raw
-    // (104.68 vs 209.40). min over 3 back-to-back runs is the same
-    // contention-robust statistic the suite timing uses.
+    // min-of-3 per reading: a SINGLE canary sample is far noisier than the
+    // slowdown it measures — one run read 0.126/0.352/0.420 across passes
+    // on a 0.2–0.5%-steal box, and dividing by that noise published a
+    // normalized total HALF the raw (104.68 vs 209.40). min over 3
+    // back-to-back runs is the same contention-robust statistic the suite
+    // timing uses.
     def canary(): Double = {
       def one(): Double = {
         val t0 = System.nanoTime()
@@ -121,20 +119,20 @@ object Bench {
     val canarySec = scala.collection.mutable.ArrayBuffer[Double]()
     // per-pass raw suite totals (Σ of that pass's samples) — published
     // so a reader can check the canary's slowdown claim against what
-    // the suite actually did in that pass (round-13)
+    // the suite actually did in that pass
     val passTotal = scala.collection.mutable.ArrayBuffer[Double]()
     // per-query per-pass raw samples, kept so normalization can divide
     // each sample by ITS OWN pass's canary before taking the min —
     // one window-level factor applied to cross-pass mins mixes passes
-    // and misstates the correction (round-12 verdict: a slow window
-    // published normalized 411.5 for raw 355.5)
+    // and misstates the correction (a slow window once published
+    // normalized 411.5 for raw 355.5)
     val samples = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[(Int, Double)]]()
     for (pass <- 1 to reps) {
       val ticks0 = cpuTicks()
       canarySec += canary()
       passTotal += 0.0
-      // HONEST MEMO ACCOUNTING (round-9 verdict item 3): process-wide
+      // HONEST MEMO ACCOUNTING: process-wide
       // memos (fitted PCA bases, streaming drains) are cleared at the
       // start of EVERY pass, so each pass re-pays each memo's fill cost
       // exactly once — at its first consumer, deterministic under the
@@ -189,16 +187,16 @@ object Bench {
         } catch { case e: Throwable =>
           // a COLD-ONLY failure (induced by the memo clear itself,
           // after the query passed the timed passes) must not vanish:
-          // record the exception class as a string value (round-10
-          // advice); timed-pass failures are already in BENCH_ERRORS
+          // record the exception class as a string value; timed-pass
+          // failures are already in BENCH_ERRORS
           coldFailed(name) = e.getClass.getSimpleName
         }
         graft.ops.Reuse.releaseAllCaches(spark)
       }
     }
     // failures live under a separate "failed" object so the top-level
-    // numeric map stays homogeneous name->double (round-11 advice: a
-    // consumer parsing doubles must not hit a string value)
+    // numeric map stays homogeneous name->double (a consumer parsing
+    // doubles must not hit a string value)
     Files.writeString(Paths.get("BENCH_COLD.json"),
       (cold.map { case (k, v) => s"""  "$k": $v""" }.toSeq :+
         s"""  "failed": {${coldFailed.map { case (k, v) => s""""$k": "$v"""" }.mkString(", ")}}""")
@@ -225,12 +223,12 @@ object Bench {
       else s
     }
     // The driver keeps only the LAST 2000 chars of stdout (incl. the
-    // trailing sbt [success] line), and a 95-query map is ~3 KB — both
-    // prior rounds' lines were truncated to unparseable. So the line
+    // trailing sbt [success] line), and a full query map is far larger
+    // — an untrimmed line is truncated to unparseable. So the line
     // carries the slowest queries up to a hard char budget (the ones
     // that matter for perf grading; everything under ~0.5 s is run
     // noise at this SF), stays parseable, and points at
-    // BENCH_DETAIL.json (committed per round) for all queries at full
+    // BENCH_DETAIL.json for all queries at full
     // precision.
     val byCost = results.sortBy(-_._2)
     val sb = new StringBuilder
@@ -246,11 +244,11 @@ object Bench {
       else s""","failed":[${failed.keys.map(jstr).mkString(",")}]"""
     // "memo-cleared", not "cold": JIT warm-up, OS page cache and Spark
     // file-index caches persist across passes — the min is a warm-JVM
-    // number with memo fills re-paid per pass (round-10 advice)
+    // number with memo fills re-paid per pass
     val stealStr =
       if (stealPct.isEmpty) ""
       else s""","cpu_steal_pct_per_pass":[${stealPct.map(v => f"$v%.2f").mkString(",")}]"""
-    // canary-normalized total (round-12 fix): each query's PER-PASS
+    // canary-normalized total: each query's PER-PASS
     // time is divided by that pass's slowdown factor (that pass's
     // canary / reference) BEFORE taking the min — the canary is timed
     // once per pass, so a slow pass 2 deflates only pass-2 samples and
@@ -264,7 +262,7 @@ object Bench {
       else {
         val ref = canaryRefFromFile.getOrElse(canarySec.min)
         val refSource = if (canaryRefFromFile.isDefined) "calibration_artifact" else "run_min"
-        // slowdown factor CLAMPED at 1 (round-13): a pass can be slower
+        // slowdown factor CLAMPED at 1: a pass can be slower
         // than the quiet calibration window, never faster — a sub-ref
         // canary reading is sampling noise, and dividing by it INFLATED
         // pass-1 samples while slow-pass divisions deflated the rest,
@@ -273,7 +271,7 @@ object Bench {
         // same run). With the clamp, quiet passes contribute their raw
         // samples and only genuinely slow passes are scaled down toward
         // their quiet-equivalent cost.
-        // SUITE-TOTAL CROSS-CHECK (round-14, ADVICE item 3): the clamped
+        // SUITE-TOTAL CROSS-CHECK: the clamped
         // factor can only DEFLATE samples, so a canary spike measured at
         // a different moment than a pass's queries actually ran would
         // scale that pass below its true quiet cost, and min-across-

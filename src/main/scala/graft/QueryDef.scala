@@ -2,21 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One named engine query: a Spark implementation plus (when the
-  * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle SQL
-  * over the same parquet tables. `oracle = None` → the driver records a
-  * weaker rows-only check.
+/** One named engine query: a Spark implementation plus an equivalent
+  * DuckDB oracle SQL over the same parquet tables. Every registered
+  * query carries its oracle, so every one is oracle-checked.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
-
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    new QueryDef(name, fn, oracle)
 }

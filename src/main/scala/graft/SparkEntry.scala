@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Queries are contributed by the per-domain modules under
   * `graft.queries`; each [[QueryDef]] pairs the Spark implementation
-  * with its DuckDB oracle SQL (when SQL-expressible).
+  * with its DuckDB oracle SQL.
   */
 object SparkEntry {
 
@@ -22,10 +22,10 @@ object SparkEntry {
     modules.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    modules.collect { case QueryDef(n, _, Some(sql)) => n -> sql }.toMap
+    modules.map(q => q.name -> q.oracle).toMap
 }
 
 package queries_ {

@@ -21,8 +21,8 @@ object Tables {
   /** Per-process memo of the ANALYZED base relations — metadata, not
     * results: `spark.read.parquet` re-lists the path and re-reads the
     * footer schema on every call, and with ~300 queries × passes that
-    * driver-side setup cost alone was ~0.02-0.05 s per query (round-14
-    * ProbePlanTime: "build" dominated the sub-1s tail). A deployed
+    * driver-side setup cost alone was ~0.02-0.05 s per query (measured
+    * with ProbePlanTime: "build" dominated the sub-1s tail). A deployed
     * engine resolves tables through a catalog once — this memo is that
     * catalog. Keyed on the session identity + the fixture's CONTENT
     * fingerprint (a rewrite is a miss, never a stale hit), registered

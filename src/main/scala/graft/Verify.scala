@@ -12,8 +12,8 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // single source of truth for the headline counts (round-8 verdict
-    // item 7: README/PERF.md drifted by one) — docs paste from here
+    // single source of truth for the headline counts (hand-copied
+    // README/PERF.md counts drift) — docs paste from here
     println(s"[counts] registry_queries=${SparkEntry.queries.size} " +
       s"oracle_queries=${SparkEntry.oracleSql.size}")
     // A failing query must leave a machine-readable trace, not just a

@@ -71,9 +71,10 @@ case class HyperplaneSketch(child: Expression, bits: Int, dim: Int)
   * bands·bandBits ≤ 64 the buckets are bit-identical to extracting
   * `(sig >> j·bandBits) & mask` from `HyperplaneSig(v, bands·bandBits,
   * dim)` (spec-pinned), so the certified ≤64-bit queries are unchanged
-  * — but the TOTAL bit budget is now unbounded (ProbeKnn law #1: past
-  * ~2M vectors at dim 64, per-band bucket count must keep scaling and
-  * one 64-bit word is structurally exhausted). Each band's bucket is
+  * — but the TOTAL bit budget is now unbounded (LSH law #1 in PERF.md's
+  * hyperplane-LSH wall section: past ~2M vectors at dim 64, per-band
+  * bucket count must keep scaling and one 64-bit word is structurally
+  * exhausted). Each band's bucket is
   * its own long, so `bandBits` may go to 62 without word-spanning
   * arithmetic anywhere.
   */
@@ -129,7 +130,7 @@ case class MultiProbeBuckets(child: Expression, bands: Int, bandBits: Int,
 }
 
 /** [[MultiProbeBuckets]] generalized to `probes` buckets per band and a
-  * global band OFFSET (round-12): element j·probes+t is band
+  * global band OFFSET: element j·probes+t is band
   * (offset+j)'s probe t — t = 0 the true bucket, probe t ≥ 1 the
   * bucket with its t-th LEAST-CONFIDENT bit flipped (t-th smallest
   * |pre-sign sum|, ties to the lowest bit index; single-bit flips, so

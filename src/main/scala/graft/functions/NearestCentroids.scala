@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * corpus×centroids crossJoin + per-row window top-k it replaces
   * shuffles the whole corpus twice for the same answer.
   *
-  * Two assignment metrics (round-12 verdict item 4 — the OPQ follow-up
-  * from the measured rotation negative under spherical cells):
+  * Two assignment metrics (the second is the OPQ follow-up to the
+  * measured rotation negative under spherical cells):
   *
   *  - `"cosine"` (default): full cosine (dot/(|v|·|c|)) DESC. Zero
   *    INPUT vectors (all cosines NaN) return an empty assignment —

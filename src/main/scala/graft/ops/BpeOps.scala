@@ -38,7 +38,7 @@ object BpeOps {
   /** The `[a-z]+`-word frequency table a BPE fit consumes. Input rows
     * are spread across cores first ([[Reuse.spreadToCores]]): the
     * tokenize + explode + regex filter + partial count otherwise run
-    * on the single-row-group scan's one task (round-13). */
+    * on the single-row-group scan's one task. */
   def wordFreqs(docs: DataFrame, textCol: String): DataFrame =
     Reuse.spreadToCores(docs.select(col(textCol).as("t")))
       .select(explode(TextOps.words(col("t"))).as("word"))

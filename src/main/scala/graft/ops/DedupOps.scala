@@ -81,7 +81,7 @@ object DedupOps {
     // hash values are identical (TextOps.polyHash algebra), only the
     // evaluation strategy changes
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    // round-13 (guide §2.5 input skew): cert-scale documents arrive as
+    // input skew: cert-scale documents arrive as
     // ONE unsplittable row group, so the rolling-hash + explode + the
     // df-count partial aggregate fused above them all ran on a single
     // task. Fan the compact (id, text) rows across the cores first — a
@@ -213,7 +213,7 @@ object DedupOps {
       n: Int = SpanN): String = {
     // 31^(n-1) exceeds BIGINT for n=20, so the hash goes through the
     // wrap-exact HUGEINT path: exact sum, mod-2^64 residue staged once
-    // in pw0, signed mapping in pw (TextOps.polyHashWrapSql rationale)
+    // in pw0, signed mapping in pw (TextOps.polyHashRawHugeSql rationale)
     val raw = TextOps.polyHashRawHugeSql(
       s"substr($textCol, CAST(g AS INT), $n)", n)
     s"""WITH pw0 AS (
@@ -257,12 +257,6 @@ object DedupOps {
   }
 
   // -------------------------------------------------------------- minhash
-
-  /** Per-doc minhash signature columns m0..m{K-1} over the
-    * discriminative shingle set.
-    */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    sigFromShingles(discriminativeShingles(docs, idCol, textCol))
 
   /** Per-id K-column signature of an exploded (id, h) shingle table. */
   private def sigFromShingles(sh: DataFrame): DataFrame = {
@@ -464,7 +458,7 @@ object DedupOps {
     import org.apache.spark.sql.GraftColumnBridge
     val fp = GraftColumnBridge.column(graft.functions.SimHashFp(
       GraftColumnBridge.expression(col("t")), SimBits))
-    // spread first (round-13): the per-doc fingerprint vote loop
+    // spread first: the per-doc fingerprint vote loop
     // otherwise runs on the single-row-group scan's one task
     Reuse.spreadToCores(docs
       // token-less docs are outside the fingerprint domain (the
@@ -845,7 +839,7 @@ object DedupOps {
     */
   def segmentDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val w = SegWords
-    // spread first (round-13): tokenize + segment explode otherwise
+    // spread first: tokenize + segment explode otherwise
     // run on the single-row-group scan's one task
     val segs = Reuse.spreadToCores(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("t")))
@@ -934,7 +928,7 @@ object DedupOps {
       threshold: Double): DataFrame = {
     val sh = Reuse.materialized(discriminativeShingles(docs, idCol, textCol))
     val cand = lshCandidatePairs(sigFromShingles(sh))
-    // spread first (round-13): the word-hash explode + partial tf
+    // spread first: the word-hash explode + partial tf
     // count otherwise run on the single-row-group scan's one task
     val tf = Reuse.materialized(Reuse.spreadToCores(
         docs.select(col(idCol).as("id"), col(textCol).as("t")))

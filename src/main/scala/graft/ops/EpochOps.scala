@@ -72,7 +72,7 @@ object EpochOps {
     // exclusive prefix sums in ONE linear scan per epoch (sort by
     // (epoch, pid), then running sum) — the naive per-key rescan is
     // O((partitions·epochs)²) driver time, minutes at the scaladoc's
-    // 10k-partition cluster scale (round-10 advice)
+    // 10k-partition cluster scale
     val offsets: Map[(Int, Long), Long] = counts.toSeq
       .sortBy { case ((pid, ep), _) => (ep, pid) }
       .foldLeft((Map.empty[(Int, Long), Long], Long.MinValue, 0L)) {

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 /** Registry over the engine's process-wide memos (the fitted-PCA basis
   * cache and the streaming drain caches) so harness code can make
-  * memoized timings HONEST (round-9 verdict item 3 / ADVICE): each memo
+  * memoized timings HONEST: each memo
   * registers a clearer plus the query names that read it, and Bench
   * clears ALL memos at the start of every timed pass. Within a pass the
   * first consumer pays the full fit/drain cost and later consumers
@@ -49,8 +49,8 @@ object Memos {
     * listing. Recursion catches rewrites inside partition
     * subdirectories (a child file's change does not bump the parent
     * dir's mtime), and the 128-bit digest removes the 32-bit
-    * `String.hashCode` collision surface — both silent-stale-hit holes
-    * (round-10 advice). Parquet fixture rewrites always touch file
+    * `String.hashCode` collision surface — both silent-stale-hit
+    * holes. Parquet fixture rewrites always touch file
     * metadata, so this catches the rewrite without reading a byte of
     * data. Missing paths fingerprint as "absent" rather than throwing —
     * the memo's own read path reports the real error.
@@ -62,7 +62,7 @@ object Memos {
       // listFiles() is null for unreadable/concurrently-deleted dirs
       // (walk the rest rather than NPE), and symlinks are skipped: a
       // cyclic link would recurse unboundedly, and a link's target
-      // mutating is the target path's business (round-11 advice)
+      // mutating is the target path's business
       def walk(f: java.io.File, rel: String): Seq[String] =
         if (java.nio.file.Files.isSymbolicLink(f.toPath)) Seq(s"$rel:symlink")
         else if (f.isDirectory)

@@ -144,7 +144,7 @@ object PcaOps {
     * iterate PARALLEL-orthogonalized against every already-found
     * component each round — classical Gram–Schmidt on the O(dim)
     * driver state, applied TWICE per round with per-component axis
-    * starts (round-13: a single pass against the 1e-6-quantized basis
+    * starts (a single pass against the 1e-6-quantized basis
     * plus the shared uniform start collapsed all late components at
     * m=64 — see the in-loop comments; subtractions fold left-to-right
     * so the oracle's `w - d0*v0 - d1*v1 - …` expression replays the
@@ -173,15 +173,15 @@ object PcaOps {
 
       val comps = scala.collection.mutable.ArrayBuffer[Array[Double]]()
       for (t <- 0 until m) {
-        // Per-component start (round-13): component 0 keeps the uniform
+        // Per-component start: component 0 keeps the uniform
         // start (preserving every single-component trajectory); later
         // components start from the axis vector e_{t mod dim}. The
         // shared uniform start's mass inside the residual subspace
         // VANISHES as t grows — measured at m=64: the true residual of
         // the iterate fell below the ~t·1e-6 Gram–Schmidt leakage floor
         // (from the quantized basis) and all late components collapsed
-        // onto span(earlier) with |<vi,vj>| ≈ 1 (tmp/probeann_r13b.log's
-        // 0.064 rotation-sanity row; ProbeRot). Axis starts keep the
+        // onto span(earlier) with |<vi,vj>| ≈ 1 (a 0.064 rotation-sanity
+        // recall row at m=64). Axis starts keep the
         // residual mass O(1) at every t.
         var v =
           if (t == 0) Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
@@ -195,7 +195,7 @@ object PcaOps {
             .head()
           val w = Array.tabulate(dim)(wRow.getDouble)
           // Gram–Schmidt, applied TWICE (Kahan/Parlett "twice is
-          // enough" — round-13): within a pass all projections are
+          // enough"): within a pass all projections are
           // taken against the pass's incoming iterate, then subtracted
           // left-to-right in component order (the oracle's
           // `w - d0*v0 - d1*v1 - …` replays the exact arithmetic). One
@@ -272,7 +272,7 @@ object PcaOps {
     val v0 = java.lang.Double.toString(quant(1.0 / math.sqrt(dim.toDouble)))
     val chains = (0 until m).map { t =>
       val rounds = (1 to iters).map { k =>
-        // Gram–Schmidt TWICE (mirrors topComponents' round-13 fix):
+        // Gram–Schmidt TWICE (mirrors topComponents):
         // pass a takes all projections against the raw iterate w and
         // subtracts left-to-right; pass b repeats against pass a's
         // output. Both passes read the same `- (Σ src·vfp)·vfp` shape
@@ -394,7 +394,7 @@ object PcaOps {
        |  z2_micro + e2m - spent AS score_micro
        |FROM z JOIN e2 ON e2.id = z.id ORDER BY vec_id""".stripMargin
 
-  /** SUBSPACE Mahalanobis outlier scoring (round-8 verdict item 3):
+  /** SUBSPACE Mahalanobis outlier scoring:
     * T185's diagonal z-scores are blind to CORRELATED corruption — a
     * degenerate embedding that moves along a principal direction looks
     * normal per-dim. Here each vector is projected onto the certified
@@ -444,7 +444,7 @@ object PcaOps {
     // two consumers (eigenvalue aggregate + scoring pass) — materialize
     // once; released by the engine's between-queries cache sweep
     val pcmC = Reuse.materialized(pcm)
-    // Σpcm² accumulates as DECIMAL(38,0), not LongType (round-9 advice):
+    // Σpcm² accumulates as DECIMAL(38,0), not LongType:
     // a long sum wraps SILENTLY under non-ANSI mode once n·pcm² passes
     // 2⁶³ (pcm is ~1e6–1e8 per component on unit-norm embeddings, so a
     // ~1e9-row corpus is enough), while the DuckDB oracle raises —
@@ -514,7 +514,7 @@ object PcaOps {
     }
     val comps = scala.collection.mutable.ArrayBuffer[Array[Double]]()
     for (t <- 0 until m) {
-      // mirrors topComponents' round-13 fix exactly: axis starts for
+      // mirrors topComponents exactly: axis starts for
       // t > 0 and double Gram–Schmidt (see the batch path's comments)
       var v =
         if (t == 0) Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))

@@ -81,7 +81,7 @@ object Reuse {
     * work (tokenization, shingle hashing, explode fan-out, broadcast
     * probes): cert-scale inputs are single-row-group parquet files, so
     * everything fused above the first exchange otherwise runs on ONE
-    * task (round-13, guide §2.5 input skew). A no-op at scale — a real
+    * task (input skew). A no-op at scale — a real
     * table's scan already yields >= parallelism splits — and a no-op
     * for streaming frames (micro-batch sources partition by file; .rdd
     * is unavailable). Row order is not changed semantically: callers
@@ -97,7 +97,7 @@ object Reuse {
 
   /** Estimated task count of `df`'s scan, from FILE METADATA instead of
     * `df.rdd.getNumPartitions` — the rdd guard forced physical planning
-    * of the subplan a second time per query (round-13 verdict). Every
+    * of the subplan a second time per query. Every
     * call site feeds a scan + narrow projection, so the scan's split
     * count IS the stage's parallelism; parquet packs splits at
     * maxPartitionBytes with openCostInBytes charged per file, hence

@@ -114,8 +114,8 @@ object SimilarityOps {
   /** Hamming-sketch RADIUS prefilter + exact rerank — the recall
     * frontier past bucketing methods on spread-out (near-isotropic)
     * embeddings, where IVF/LSH recall ≈ candidate fraction by
-    * construction (no cell structure to exploit; measured in
-    * ProbeAnn). Every (query, corpus) pair is screened on a
+    * construction (no cell structure to exploit; measured in PERF.md,
+    * ANN quality/cost frontier). Every (query, corpus) pair is screened on a
     * `bits`-bit hyperplane sketch (packed longs, POPCNT distance:
     * ~bits/64 integer ops vs `dim` FMAs per exact dot — 16× less
     * arithmetic at 256 bits / 64 dims); only pairs within
@@ -131,12 +131,12 @@ object SimilarityOps {
     *
     * Choosing `maxHamming`: a pair at cosine s agrees per plane with
     * p = 1 − arccos(s)/π, so its expected distance is bits·(1−p) with
-    * σ = sqrt(bits·p·(1−p)); unrelated pairs sit at bits/2. At 256
-    * bits, threshold 115 passes ≥98% of cos≥0.35 neighbors and ~5% of
-    * noise (recall ≥0.95 at ~0.05× exact-scoring cost, measured in
-    * ProbeAnn). Queries whose true k-th neighbor is weaker than the
-    * radius may return fewer than k rows — the radius is the recall
-    * contract.
+    * σ = sqrt(bits·p·(1−p)); unrelated pairs sit at bits/2. At 256 bits,
+    * threshold 115 passes ≥98% of cos≥0.35 neighbors and ~5% of noise
+    * (recall ≥0.95 at ~0.05× exact-scoring cost, measured in PERF.md, ANN
+    * quality/cost frontier). Queries whose true k-th neighbor is weaker
+    * than the radius may return fewer than k rows — the radius is the
+    * recall contract.
     *
     * Fully deterministic and input-order invariant (sketches are
     * deterministic, final ties break by neighbor id — spec'd); the
@@ -306,7 +306,7 @@ object SimilarityOps {
       // Zero-norm vectors (empty-doc embeddings) carry no hyperplane
       // signal — their sketch is the all-sign-of-zero word — and the
       // search itself excludes them, so the calibration sample must
-      // too (matches the oracle's norm>0 CTE; round-7 ADVICE).
+      // too (matches the oracle's norm>0 CTE).
       .filter(expr("dot_product(sv, sv)") > 0)
       .orderBy(col("sid")).limit(sampleN)
       .select(col("sid"), expr(s"hyperplane_sketch(sv, $bits, $dim)").as("ssk"))
@@ -629,22 +629,21 @@ object SimilarityOps {
         col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
   }
 
-  /** IVF × PQ composition (the FAISS IVFADC shape, round-10 verdict
-    * item 8) — the second large-N serving path next to the wide-LSH
-    * graph kernels: the learned IVF centroids ([[learnedCentroids]])
-    * prune the SEARCH (each query scores only the `nProbe` nearest
-    * cells' members — compute bound), while the PQ codebooks
-    * ([[learnedSubspaceCodebooks]]) compress the STORAGE (each corpus
-    * vector is `subspaces` one-byte codes; ranking runs against the
-    * reconstructed vectors — memory bound). At 100 TB the index is
-    * (cell, id, codes) — ~9 bytes/vector at M=8 vs 512 — plus two
-    * broadcast-sized driver tables (centroids + codebooks); cell
-    * assignment, encoding and reconstruction are all shuffle-free
-    * codegen'd projections ([[graft.functions.NearestCentroids]]), and
-    * the serve is ONE equi-join on cell. Queries stay exact
-    * (asymmetric scoring). Every stage replays CTE-by-CTE in the
-    * DuckDB oracle (q_ann_ivfpq — the composed q_ann_ivf + q_ann_pq
-    * blocks); recall vs both parents is measured in DedupOpsSpec.
+  /** IVF × PQ composition (the FAISS IVFADC shape) — the second large-N
+    * serving path next to the wide-LSH graph kernels: the learned IVF
+    * centroids ([[learnedCentroids]]) prune the SEARCH (each query scores
+    * only the `nProbe` nearest cells' members — compute bound), while the
+    * PQ codebooks ([[learnedSubspaceCodebooks]]) compress the STORAGE (each
+    * corpus vector is `subspaces` one-byte codes; ranking runs against the
+    * reconstructed vectors — memory bound). At 100 TB the index is (cell,
+    * id, codes) — ~9 bytes/vector at M=8 vs 512 — plus two broadcast-sized
+    * driver tables (centroids + codebooks); cell assignment, encoding and
+    * reconstruction are all shuffle-free codegen'd projections
+    * ([[graft.functions.NearestCentroids]]), and the serve is ONE equi-join
+    * on cell. Queries stay exact (asymmetric scoring). Every stage replays
+    * CTE-by-CTE in the DuckDB oracle (q_ann_ivfpq — the composed q_ann_ivf
+    * + q_ann_pq blocks); recall vs both parents is measured in
+    * DedupOpsSpec.
     */
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame,
@@ -683,7 +682,7 @@ object SimilarityOps {
       .withColumn("qn", sqrt(expr("dot_product(qv, qv)")))
     val scored = querySide.join(corpusSide, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      // zero-norm guard (round-11 advice): a zero-norm PQ
+      // zero-norm guard: a zero-norm PQ
       // RECONSTRUCTION (all-zero codeword choice) yields cos = 0/0 =
       // NaN, which sorts FIRST under desc and would become every
       // cell-mate's rank-1 neighbor — same convention as
@@ -987,7 +986,8 @@ object SimilarityOps {
     * contract: pairs between two dropped members of the same bucket are
     * lost in that band — the identical trade the df-cap makes for
     * shingles, bounded by OR-amplification across bands and measured in
-    * ProbeKnn's planted-mega-bucket run. Ids are assumed nonnegative
+    * the planted-mega-bucket run (PERF.md, hyperplane-LSH wall at
+    * large N). Ids are assumed nonnegative
     * (every id column in the engine is), keeping `%` = pmod in both
     * engines. `cap` >= 2 is checked by [[LshConfig]]; the vector payload
     * of a two-phase side rides the occupancy window untouched, so its
@@ -997,7 +997,7 @@ object SimilarityOps {
     val M = 2147483647L
     // bucket reduced mod M BEFORE its multiply: a 32-bit bucket id
     // (bandBits > 31) times the mixing constant overflows Long —
-    // ProbeKnn's 2x32 config found this as an ANSI ARITHMETIC_OVERFLOW
+    // a measured 2x32 config hit this as an ANSI ARITHMETIC_OVERFLOW
     // where DuckDB's HUGEINT would have silently diverged instead.
     // For bucket < M (every certified config: 6-bit buckets) the
     // reduction is the identity, so existing oracles are unchanged.
@@ -1024,15 +1024,16 @@ object SimilarityOps {
 
   /** Planned LSH-graph configuration — (bands, bandBits, cap, probes)
     * derived from corpus size, target recall, and the disk budget
-    * instead of hand-picked per corpus (round-11 verdict item 2). */
+    * instead of hand-picked per corpus. */
   case class LshPlan(bands: Int, bandBits: Int, bucketCap: Int, probes: Int,
       groupBands: Int, estCandidates: Long, estShuffleBytes: Long) {
     def stagedGroups: Int = math.ceil(bands.toDouble / groupBands).toInt
   }
 
-  /** Encode the measured ProbeKnn law as a planner.
+  /** Encode the measured LSH scaling law as a planner.
     *
-    * The law, from the committed probe rows (PERF.md):
+    * The law, from the committed probe rows (PERF.md's hyperplane-LSH
+    * wall and 5M high-recall build sections):
     *  1. BUCKET COUNT SCALES WITH N: candidates per band ≈
     *     N·occupancy with occupancy = N/2^bandBits, so bandBits =
     *     round(log2(N / targetOcc)) with targetOcc ≈ 8 — the measured
@@ -1072,11 +1073,11 @@ object SimilarityOps {
   /** Law #2+#3: modeled recall of (bands × bandBits, probes) for
     * neighbors at `neighborCos` — OR-amplification over
     * bands·(1 + 0.8·(probes−1)) effective bands (the measured ≈0.8-band
-    * lift per 1-flip probe). Pinned against the measured ProbeKnn rows
+    * lift per 1-flip probe). Pinned against the measured PERF.md rows
     * in SimilarityOpsSpec: the neighborCos implied by one 5M row
     * predicts the other within the probe's tolerance.
     */
-  /** Probe value is REGIME-dependent (measured, round 12): at 6-bit
+  /** Probe value is REGIME-dependent (measured): at 6-bit
     * bands the 1-flip probe bought ~0.8 of a band (a missed band is
     * usually one bit off), at 20-bit bands only ~0.15-0.2 (≥2
     * disagreeing bits dominate and one flip can't rescue them; the
@@ -1093,7 +1094,7 @@ object SimilarityOps {
   /** Law #1 with the measured skew: candidate volume of a capped
     * multi-probe graph build ≈ skew · bands · probes · N · min(occ,
     * cap), occ = N/2^bandBits. The 3.5 skew constant is fitted to the
-    * committed ProbeKnn counts (620.7M measured vs 190M uniform-ideal
+    * committed PERF.md probe counts (620.7M measured vs 190M uniform-ideal
     * at 5M 8×20c16; 244.5M vs 61M at 1M 4×16): real bucket occupancy
     * is heavy-tailed, so Σ|b_q|·min(|b_c|, cap) exceeds the uniform
     * estimate by a corpus-shape factor that measured 3.3–4.0× on both
@@ -1127,7 +1128,7 @@ object SimilarityOps {
       if (bandBits <= 8 && needEff >= 3) 3 else if (needEff >= 2) 2 else 1)
     val effPerBand = 1.0 + lshProbeLift(bandBits) * (probes - 1)
     val bands = math.max(1, math.min(1024, math.ceil(needEff / effPerBand).toInt))
-    // law #4 (corrected round 12): real bucket occupancy is heavy-tailed
+    // law #4: real bucket occupancy is heavy-tailed
     // (the same 3.5x skew the candidate law carries), so a cap sized to
     // the MEAN occupancy deletes real neighbors wholesale — measured at
     // 5M/20-bit (occ 4.8): recall 0.590 at cap 16 vs 0.894 at 48 vs

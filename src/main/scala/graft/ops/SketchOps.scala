@@ -93,20 +93,6 @@ object SketchOps {
     df.select(col(groupCol).as("grp"), idx.as("idx"), rank.as("rank"))
   }
 
-  /** Fused register + row/null-count kernel for the sketch profiler:
-    * ONE pass, ONE shuffle of ≤ groups·(m+1) rows — (grp, idx, reg,
-    * cnt) where the idx=NULL bucket carries the null-key count (max
-    * ignores the null ranks there, so `reg` is NULL for it). Row count
-    * per group = Σ cnt; null count = cnt at idx NULL; the register
-    * table = rows with idx NOT NULL. This is the shape that lets the
-    * 100 TB profiler keep constant aggregation state per column AND
-    * avoid a second scan for the exact counts.
-    */
-  def hllRegistersCounted(df: DataFrame, groupCol: String, keyCol: String): DataFrame =
-    hllHashed(df, groupCol, keyCol)
-      .groupBy(col("grp"), col("idx"))
-      .agg(max(col("rank")).as("reg"), count(lit(1)).as("cnt"))
-
   /** Register table → (grp, est) with the UNROUNDED estimate column —
     * the shared read-off both certified shapes (with and without the
     * exact ground truth) round from.
@@ -315,7 +301,7 @@ object SketchOps {
     // tokenize, dominate). The sketch build side explodes primitive
     // hashes (word_hashes), not tokens — only the exact-top-k
     // read-back needs the strings.
-    // spread first (round-13): both tokenize+explode passes (sketch
+    // spread first: both tokenize+explode passes (sketch
     // build + exact read-back) otherwise run on the single-row-group
     // scan's one task
     val spread = Reuse.spreadToCores(docs.select(col(textCol).as("t")))
@@ -342,18 +328,12 @@ object SketchOps {
     * `groupBy().count()` over the per-word cells — integer sums, so
     * micro-batch partials add to the same sketch
     * ([[graft.queries.StreamQueries.q_stream_cms]] certifies this
-    * against the batch oracle). Input: a `w` word column. The base
-    * hash is projected once per word; each of the d cells is a cheap
-    * 3-op remix of it, and the partial aggregation folds the exploded
-    * cells to ≤ d·w rows per partition before any shuffle (or state
-    * store) sees them.
-    */
-  def cmsSketch(words: DataFrame): DataFrame =
-    cmsSketchFromHashes(words.select(TextOps.wordHash(col("w")).as("wh")))
-
-  /** Sketch build from the RAW per-token hashes (`wh` long column —
-    * the [[TextOps.wordHashes]] explode): the form streaming and batch
-    * builds share once tokens stop being materialized.
+    * against the batch oracle). Input: the RAW per-token hashes (`wh`
+    * long column — the [[TextOps.wordHashes]] explode), the form
+    * streaming and batch builds share. The base hash is reduced once
+    * per token; each of the d cells is a cheap 3-op remix of it, and
+    * the partial aggregation folds the exploded cells to ≤ d·w rows
+    * per partition before any shuffle (or state store) sees them.
     */
   def cmsSketchFromHashes(hashes: DataFrame): DataFrame = {
     val withH = hashes.select((col("wh") % Mersenne).as("h0"))

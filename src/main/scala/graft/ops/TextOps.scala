@@ -32,7 +32,7 @@ object TextOps {
       GraftColumnBridge.expression(text)))
   }
 
-  /** The pre-round-3 builtin formulation (spec reference). */
+  /** The builtin-function formulation of [[words]] (spec reference). */
   def wordsBuiltin(text: Column): Column =
     filter(split(lower(text), " "), w => length(w) > 0)
 
@@ -72,17 +72,12 @@ object TextOps {
     * WRAPS mod 2^64 while DuckDB ERRORS on BIGINT overflow (and
     * [[polyHashSql]]'s `math.pow(...).toLong` constants would saturate
     * rather than wrap) — so the oracle computes the EXACT sum in
-    * HUGEINT with exact BigInt power constants, reduces mod 2^64, and
-    * maps the unsigned residue to the signed BIGINT Java produces.
-    * Congruence makes this identical to the rolling wrapped kernel
-    * ([[graft.functions.ShinglePosHashes]]) at any n.
-    */
-  def polyHashWrapSql(s: String, n: Int): String =
-    polyHashWrapFromResidueSql(s"(${polyHashRawHugeSql(s, n)} % $Two64Sql)")
-
-  /** The exact (un-wrapped) HUGEINT polynomial sum — stage this in its
-    * own CTE when the hash feeds several expressions, then finish with
-    * [[polyHashWrapFromResidueSql]] over the mod-2^64 residue.
+    * HUGEINT with exact BigInt power constants, reduces mod 2^64
+    * ([[Two64Sql]]), and maps the unsigned residue to the signed BIGINT
+    * Java produces ([[polyHashWrapFromResidueSql]]). Congruence makes
+    * this identical to the rolling wrapped kernel
+    * ([[graft.functions.ShinglePosHashes]]) at any n. Stage the raw sum
+    * in its own CTE when the hash feeds several expressions.
     */
   def polyHashRawHugeSql(s: String, n: Int): String =
     (0 until n).map { k =>

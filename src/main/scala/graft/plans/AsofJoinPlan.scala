@@ -231,8 +231,9 @@ case class AsofJoinExec(
   // the operator itself is then a single streaming merge pass.
   // AQE interaction: Spark 4.1's result-stage optimization DOES insert
   // coalesced AQEShuffleReads under this exec (observed in JoinOpsSpec;
-  // earlier mid-plan stages don't — ProbeAsofAqe). Alignment of the
-  // zipped partitions still holds: CoalesceShufflePartitions computes
+  // earlier mid-plan stages don't — PERF.md, native as-of join notes).
+  // Alignment of the zipped partitions still holds:
+  // CoalesceShufflePartitions computes
   // ONE partition-spec list for ALL leaf shuffles of a stage and
   // applies it uniformly or not at all — the same invariant
   // SortMergeJoin's zipped children rely on — and zipPartitions fails

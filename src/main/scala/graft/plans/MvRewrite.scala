@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * via `GraftColumnBridge.installRule` or at session build via
   * `GraftExtensions`.
   *
-  * Two provable grains (round-10 extends the exact-grain rule of
-  * round 9 with the re-aggregation half the MvOps scaladoc promised):
+  * Two provable grains (the exact-grain rule plus the re-aggregation
+  * half the MvOps scaladoc promised):
   *   - EXACT grain — grouping keys equal the MV's keys: each output is
   *     answered by a bare MV column (a Project over the MV scan);
   *   - COARSER grain — grouping keys a non-empty STRICT SUBSET of the
@@ -57,7 +57,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *   - the aggregate's child must be the registered base scan (bare, or
   *     under pure column-pruning Projects and/or deterministic
   *     subquery-free Filters);
-  *   - FILTER SUBSUMPTION (round 11): base-side predicates are rebased
+  *   - FILTER SUBSUMPTION: base-side predicates are rebased
   *     onto the MV iff every attribute they reference is an MV KEY
   *     column (identical type) — rows within one MV group share the
   *     key tuple, so a key predicate selects whole groups and
@@ -88,7 +88,7 @@ object MvRewrite {
     * last map is what makes AVG derivable soundly: `AVG(x)` skips NULL
     * x rows, so its divisor is COUNT(x), never COUNT(*) — a measure
     * without a registered count column simply cannot answer AVG and
-    * the rewrite bails (round-10 extension).
+    * the rewrite bails.
     */
   final case class MvDef(
       mvTable: String,
@@ -137,7 +137,7 @@ object MvRewrite {
     * it: overwriting an MV table invalidates every mapping that reads
     * it, not just the one the writer had in mind — a prior SF dir's
     * registration pointing at a table just overwritten with another
-    * dir's data is a silent wrong answer (round-9 advice). Called by
+    * dir's data is a silent wrong answer. Called by
     * the engine's own catalog-table writers ([[graft.sinks.Sinks]]).
     */
   def deregisterTable(mvTable: String): Unit = {
@@ -180,18 +180,16 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     }
 
   /** The registered MvDef of the aggregate's child plus every Filter
-    * condition sitting between the aggregate and the scan, if that
-    * child is the registered single-root base scan under pure
-    * attribute-only Projects (column pruning) and/or deterministic,
-    * subquery-free Filters. The FILTER-SUBSUMPTION half (round-10
-    * verdict item 4): a predicate over the base is answerable from the
-    * MV iff it references ONLY the MV's KEY columns — rows within one
-    * MV group all share the key tuple, so filtering base rows by a key
+    * condition sitting between the aggregate and the scan, if that child is
+    * the registered single-root base scan under pure attribute-only
+    * Projects (column pruning) and/or deterministic, subquery-free Filters.
+    * The FILTER-SUBSUMPTION half: a predicate over the base is answerable
+    * from the MV iff it references ONLY the MV's KEY columns — rows within
+    * one MV group all share the key tuple, so filtering base rows by a key
     * predicate selects exactly the rows whose groups the same predicate
-    * selects over the rollup. Whether the references really are all
-    * keys is proven by the caller; collecting here only establishes
-    * WHERE the conditions sit (between aggregate and scan, nothing
-    * else interleaved).
+    * selects over the rollup. Whether the references really are all keys is
+    * proven by the caller; collecting here only establishes WHERE the
+    * conditions sit (between aggregate and scan, nothing else interleaved).
     */
   private def baseDef(child: LogicalPlan): Option[(MvDef, Seq[Expression])] =
     child match {

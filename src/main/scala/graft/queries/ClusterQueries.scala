@@ -5,10 +5,10 @@ import graft.ops.ClusterOps
 import org.apache.spark.sql.functions._
 
 /** Clustering query surface (M1/M2) over the first two embedding
-  * dimensions as a 2-D point cloud. Algorithmic (iterative/seeded)
-  * operators are not ANSI-SQL-expressible → rows-only driver checks;
-  * DBSCAN is verified against an independent in-memory implementation
-  * in ClusterOpsSpec.
+  * dimensions as a 2-D point cloud. Every query, iterative/seeded ones
+  * included, carries a DuckDB oracle that replays the deterministic
+  * algorithm; DBSCAN is also verified against an independent in-memory
+  * implementation in ClusterOpsSpec.
   */
 object ClusterQueries {
 

@@ -21,8 +21,8 @@ object CurationQueries {
     */
   /** Per-process memo of the resolved near-dup GROUP TABLE at the 0.8
     * threshold, materialized to a work-dir parquet and keyed on the
-    * documents fixture's content fingerprint (round-13, guide §1.2 /
-    * §2.4 — remove repeated passes): [[q_dedup_groups]],
+    * documents fixture's content fingerprint (remove repeated
+    * passes): [[q_dedup_groups]],
     * [[q_canonical_docs]], [[q_dup_cluster_sizes]] and
     * [[q_soft_dedup_sample]] all consume the IDENTICAL
     * `dedupGroups(documents, 0.8)` resolution (shingle → MinHash →
@@ -42,7 +42,7 @@ object CurationQueries {
   graft.ops.Memos.register(() => {
     // the memoized value IS a tmpdir parquet path: delete the tree when
     // the memo clears, or each bench pass / cold probe orphans one dir
-    // for the machine's tmpdir lifetime (round-13 advice)
+    // for the machine's tmpdir lifetime
     val dirs = new java.util.ArrayList(dedupGroupsCache.values())
     dedupGroupsCache.clear() // drop the map first: no reader sees a deleted path
     dirs.forEach(d => graft.streaming.StreamingOps.deleteRecursively(d))
@@ -93,7 +93,7 @@ object CurationQueries {
     * union-find path on every driver run, not just in specs.
     */
   val q_dedup_groups_dist = QueryDef(
-    "q_dedup_groups_dist", q_dedup_groups.oracle.get) { (spark, dir) =>
+    "q_dedup_groups_dist", q_dedup_groups.oracle) { (spark, dir) =>
     DedupOps.dedupGroups(Tables.documents(spark, dir), "doc_id", "text", 0.8,
       localCcMaxEdges = 0L)
       .orderBy(col("doc_id"))
@@ -502,7 +502,7 @@ object CurationQueries {
          |FROM contrib GROUP BY doc_id
          |ORDER BY doc_id""".stripMargin
     }) { (spark, dir) =>
-    // spread first (round-13): tokenize + explode feed BOTH the vocab
+    // spread first: tokenize + explode feed BOTH the vocab
     // build and the contribution join, each otherwise single-task
     val toks = graft.ops.Reuse.spreadToCores(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")))
@@ -511,7 +511,7 @@ object CurationQueries {
     // reference ONE analyzed vocab subplan: exchange reuse computes
     // the explode+partial-count shuffle once, and only the
     // vocabulary-sized final aggregate re-runs per branch — cheaper
-    // than an eager persist job + row copies (round-14)
+    // than an eager persist job + row copies
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     val n = broadcast(vocab.agg(sum(col("cnt")).as("total")))
     toks.join(broadcast(vocab), "w").crossJoin(n)
@@ -746,7 +746,7 @@ object CurationQueries {
          |ORDER BY doc_id""".stripMargin
     }) { (spark, dir) =>
     // spread first: tokenization + the bigram explode otherwise run
-    // twice on one task (c2 build + probe side; round-13)
+    // twice on one task (c2 build + probe side)
     val docsWs = graft.ops.Reuse.spreadToCores(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), TextOps.words(col("text")).as("ws"))
@@ -760,7 +760,7 @@ object CurationQueries {
     // one analyzed c2 subplan feeds c1 and the broadcast build:
     // exchange reuse computes the bigram explode+count shuffle once,
     // only the bigram-vocabulary-sized final aggregate re-runs per
-    // branch (round-14; same pattern as q_tfidf_keywords' vocab)
+    // branch (same pattern as q_tfidf_keywords' vocab)
     val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     bg.join(broadcast(c2), Seq("w1", "w2"))
@@ -1485,8 +1485,8 @@ object CurationQueries {
       .orderBy(col("epoch"), col("pos"))
   }
 
-  /** [[q_epoch_shuffle]] in its DEPLOY-SCALE formulation — round-9
-    * verdict item 6, closing the in-code caveat on T195: the per-epoch
+  /** [[q_epoch_shuffle]] in its DEPLOY-SCALE formulation, closing the
+    * in-code caveat on T195: the per-epoch
     * window rank is replaced by [[graft.ops.EpochOps.epochOrderDistributed]]'s
     * range-partitioned sort + partition-offset splice (sampled
     * boundaries, no single-partition window anywhere; one bounded
@@ -1496,7 +1496,7 @@ object CurationQueries {
     * global permutation — is itself the certified contract.
     */
   val q_epoch_shuffle_dist = QueryDef(
-    "q_epoch_shuffle_dist", q_epoch_shuffle.oracle.get) { (spark, dir) =>
+    "q_epoch_shuffle_dist", q_epoch_shuffle.oracle) { (spark, dir) =>
     graft.ops.EpochOps.epochOrderDistributed(
       spark, Tables.documents(spark, dir).select(col("doc_id")),
       "doc_id", Seq(0L, 1L, 2L), numPartitions = 8)

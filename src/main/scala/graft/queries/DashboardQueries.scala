@@ -48,8 +48,8 @@ object DashboardQueries {
     "dailyNeighborhoodAgg" -> Events.q_daily_by_type,
     // :315-326 — lag features
     "lagFeatures" -> Events.q_event_deltas,
-    // spatial_clustering.py:380-462 — cluster profiles (rows-only)
+    // spatial_clustering.py:380-462 — cluster profiles
     "clusterProfiles" -> ClusterQueries.q_dbscan_profile,
-    // chromadb_client.py:194-306 — filtered semantic search (rows-only)
+    // chromadb_client.py:194-306 — filtered semantic search
     "semanticSearch" -> RelevanceQueries.q_semantic_search)
 }

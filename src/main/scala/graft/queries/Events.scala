@@ -219,7 +219,7 @@ object Events {
     * extraction end to end.
     */
   val q_variant_props = QueryDef(
-    "q_variant_props", q_json_props.oracle.get) { (spark, dir) =>
+    "q_variant_props", q_json_props.oracle) { (spark, dir) =>
     val k = variant_get(parse_json(col("props")), "$.k", "int")
     Tables.events(spark, dir)
       .groupBy((k % 10).cast("long").as("k_bucket"))

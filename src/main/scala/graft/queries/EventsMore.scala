@@ -129,7 +129,7 @@ object EventsMore {
     * plan-asserted in StorageSpec.
     */
   val q_asof_bucketed = QueryDef(
-    "q_asof_bucketed", q_asof_native.oracle.get) { (spark, dir) =>
+    "q_asof_bucketed", q_asof_native.oracle) { (spark, dir) =>
     val ev = Tables.events(spark, dir).withColumn("us", unix_micros(col("ts")))
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), col("us").as("click_us"))
@@ -164,7 +164,7 @@ object EventsMore {
     * JoinOpsSpec.
     */
   val q_asof_bloom: QueryDef = QueryDef(
-    "q_asof_bloom", q_asof_native.oracle.get) { (spark, dir) =>
+    "q_asof_bloom", q_asof_native.oracle) { (spark, dir) =>
     val ev = Tables.events(spark, dir).withColumn("us", unix_micros(col("ts")))
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), col("us").as("click_us"))
@@ -454,14 +454,14 @@ object EventsMore {
   /** [[q_asof_tolerance]] through the NATIVE as-of exec
     * ([[graft.plans.AsofJoinExec]] via [[JoinOps.asofJoinNative]]):
     * the tolerance stays a POST-JOIN mask (per-consumer freshness
-    * without re-running the join — the round-6 design decision), so
+    * without re-running the join), so
     * the exec needs no tolerance parameter; only the join plan under
     * the mask changes from union+window to the streaming merge.
     * Certified against the SAME DuckDB ASOF + CASE oracle, and
     * plan-asserted AsofJoinExec in JoinOpsSpec.
     */
   val q_asof_tolerance_native = QueryDef(
-    "q_asof_tolerance_native", q_asof_tolerance.oracle.get) { (spark, dir) =>
+    "q_asof_tolerance_native", q_asof_tolerance.oracle) { (spark, dir) =>
     val tolUs = 3600000000L
     val ev = Tables.events(spark, dir).withColumn("us", unix_micros(col("ts")))
     val clicks = ev.filter(col("event_type") === "click")
@@ -1379,7 +1379,7 @@ object EventsMore {
     // c feeds t and the join, but both references share one analyzed
     // subplan: exchange reuse computes the window+aggregate shuffles
     // once, and only the 25-row final aggregate re-runs per branch —
-    // cheaper than an eager persist job + row copies (round-14)
+    // cheaper than an eager persist job + row copies
     val c = seq.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
     val t = c.groupBy(col("src")).agg(sum(col("n")).as("tot"))
     c.join(t, "src")
@@ -2185,7 +2185,7 @@ object EventsMore {
         col("user_id")).distinct()
     // every branch references ONE analyzed act subplan: exchange reuse
     // computes the distinct shuffle once, only the (day,user)-sized
-    // final distinct re-runs per branch (round-14)
+    // final distinct re-runs per branch
     val actM = act
     val days = actM.select(col("day")).distinct()
     val wau = broadcast(days.select(col("day").as("d")))
@@ -2263,16 +2263,15 @@ object EventsMore {
 
   /** RFM segmentation: each purchasing user scored 1–5 on Recency,
     * Frequency, Monetary via NTILE quintiles under TOTAL tie orders
-    * (metric, then user_id — deterministic on any engine), composed
-    * into the classic 3-digit segment, then the segment census. The
-    * quintiles order USERS (one row each after the pre-aggregate) —
-    * |users| scales with the data, so a partition-less NTILE window
-    * would serialize every user onto one reducer at 100 TB (round-13
-    * verdict's scale-killer). The engine runs each quintile through
-    * [[graft.ops.RankOps.withNtile]] — range-partitioned sort +
-    * bounded per-partition offsets, exact NTILE allocation — while the
-    * oracle replays the plain window form (same total tie order, so
-    * the assignments are identical by construction).
+    * (metric, then user_id — deterministic on any engine), composed into
+    * the classic 3-digit segment, then the segment census. The quintiles
+    * order USERS (one row each after the pre-aggregate) — |users| scales
+    * with the data, so a partition-less NTILE window would serialize every
+    * user onto one reducer at 100 TB. The engine runs each quintile through
+    * [[graft.ops.RankOps.withNtile]] — range-partitioned sort + bounded
+    * per-partition offsets, exact NTILE allocation — while the oracle
+    * replays the plain window form (same total tie order, so the
+    * assignments are identical by construction).
     */
   val q_rfm = QueryDef(
     "q_rfm",

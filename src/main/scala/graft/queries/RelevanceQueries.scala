@@ -406,8 +406,8 @@ object RelevanceQueries {
     */
   val q_hybrid_search = QueryDef(
     "q_hybrid_search", {
-      val bm25Sql = q_bm25.oracle.get
-      val semSql = q_semantic_search.oracle.get
+      val bm25Sql = q_bm25.oracle
+      val semSql = q_semantic_search.oracle
       s"""WITH b AS (
          |  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id)
          |    AS brank

@@ -155,8 +155,8 @@ object ScaleQueries {
       .map(c => s"'$c', r_$c, coalesce(n_$c, 0L), d_$c").mkString(", ")
     // toy-scale inputs arrive as ONE unsplittable row group, which
     // serializes the 11-replica Expand + partial aggregate on a single
-    // thread (round-13, measured ~4 s of the 5 s bench row; the sketch
-    // sibling has carried the same spread since round 10). Fan the
+    // thread (measured ~4 s of the 5 s bench row; the sketch sibling
+    // carries the same spread). Fan the
     // compact raw columns across the cores first; at scale the scan
     // already yields >= parallelism partitions and this is a no-op.
     // Aggregation is order-free, so results are unchanged.
@@ -275,9 +275,9 @@ object ScaleQueries {
       |FROM urgent u JOIN pts p ON p.d >= u.d0 AND p.d < u.d0 + 3
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (spark, dir) =>
     val epoch = to_date(lit("1970-01-01"))
-    // round-13: the single-row-group lineitem scan ran the broadcast
+    // the single-row-group lineitem scan would run the broadcast
     // probe + partial aggregate of all 600k points on ONE task; spread
-    // the 2-column point rows first (no-op at scale — guide §2.5)
+    // the 2-column point rows first (no-op at scale)
     val pts = graft.ops.Reuse.spreadToCores(
       Tables.lineitem(spark, dir).select(
         datediff(to_date(col("l_shipdate")), epoch).cast("long").as("d"),
@@ -542,7 +542,7 @@ object ScaleQueries {
     * the lineitem rollup (in production written once and incrementally
     * maintained; rebuilt here so the certified surface includes the
     * build). `replaceTable` deregisters EVERY registration served from
-    * the table first (round-9 advice: a prior SF dir's mapping onto the
+    * the table first (a prior SF dir's mapping onto the
     * just-overwritten table is a silent wrong answer — and a surviving
     * same-dir mapping would rewrite the rebuild itself into a read of
     * the MV it is about to overwrite).
@@ -598,7 +598,7 @@ object ScaleQueries {
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
-  /** COARSER-grain MV rewrite ([[graft.plans.MvRewrite]] round-10): the
+  /** COARSER-grain MV rewrite ([[graft.plans.MvRewrite]]): the
     * user aggregate groups by a strict SUBSET of the rollup's keys
     * (l_returnflag alone vs the stored (l_returnflag, l_linestatus)
     * grain), and the rule answers it by RE-AGGREGATING the rollup —
@@ -637,7 +637,7 @@ object ScaleQueries {
       .orderBy(col("l_returnflag"))
   }
 
-  /** AVG over the MV rewrite ([[graft.plans.MvRewrite]] round-10): the
+  /** AVG over the MV rewrite ([[graft.plans.MvRewrite]]): the
     * user asks `AVG(l_quantity), COUNT(l_quantity)` at the coarser
     * flag grain over the BASE table, and the rule derives the average
     * from the rollup's mergeable state — SUM(sum_qty) /
@@ -672,7 +672,7 @@ object ScaleQueries {
       .orderBy(col("l_returnflag"))
   }
 
-  /** FILTER-SUBSUMED MV rewrite ([[graft.plans.MvRewrite]] round-11):
+  /** FILTER-SUBSUMED MV rewrite ([[graft.plans.MvRewrite]]):
     * the user aggregate carries a WHERE over MV KEY columns
     * (`l_returnflag <> 'N' AND l_linestatus IN ('F','O')`) and groups
     * by a coarser subset — the rule rebases the predicate onto the

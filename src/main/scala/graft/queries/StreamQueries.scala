@@ -152,7 +152,8 @@ object StreamQueries {
     * matched rows on match (as the inner join), and purchases with NO
     * same-user click in the preceding 30 minutes emit a null-click row
     * once the watermark proves no matching click can still arrive
-    * (left time < watermark). PROBED, not assumed (ProbeOuterJoin):
+    * (left time < watermark). PROBED, not assumed (PERF.md, cross-engine
+    * float determinism, outer-join emission boundary):
     * each `withWatermark` sits on an already-FILTERED branch, so its
     * node only sees its own event subset and the global watermark is
     * min(max click ts, max purchase ts, ms-floored) - 1h — a branch
@@ -698,7 +699,7 @@ object StreamQueries {
     */
   val q_stream_ann = QueryDef(
     "q_stream_ann",
-    graft.queries.VectorQueries.q_ann_sketch.oracle.get) { (spark, dir) =>
+    graft.queries.VectorQueries.q_ann_sketch.oracle) { (spark, dir) =>
     import graft.ops.SimilarityOps
     val emb = Tables.embeddings(spark, dir)
     val corpus = emb.filter(col("vec_id") >= 50)
@@ -726,21 +727,21 @@ object StreamQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** STREAMING serve over the WIDE multi-probe index (round-11 verdict
-    * item 8) — the online path matched to the batch frontier: where
-    * [[q_stream_ann]] probes the 256-bit Hamming-sketch index, this
-    * serves each query micro-batch through the full-strength wide
-    * kernel ([[graft.ops.SimilarityOps.lshKnn]] at `VectorQueries.MpwLsh`:
-    * 10×8 wide banding, 2 probes/band query-side, occupancy-capped
-    * corpus buckets — the capped bucket table IS the stored index and
-    * never grows with probes). Per-query results depend only on the
-    * static corpus, never on co-batched queries, so the streamed union
-    * is batch-cut invariant and the SAME oracle that certifies the
-    * batch serve (q_ann_mpw) certifies the stream.
+  /** STREAMING serve over the WIDE multi-probe index — the online path
+    * matched to the batch frontier: where [[q_stream_ann]] probes the
+    * 256-bit Hamming-sketch index, this serves each query micro-batch
+    * through the full-strength wide kernel
+    * ([[graft.ops.SimilarityOps.lshKnn]] at `VectorQueries.MpwLsh`: 10×8
+    * wide banding, 2 probes/band query-side, occupancy-capped corpus
+    * buckets — the capped bucket table IS the stored index and never grows
+    * with probes). Per-query results depend only on the static corpus,
+    * never on co-batched queries, so the streamed union is batch-cut
+    * invariant and the SAME oracle that certifies the batch serve
+    * (q_ann_mpw) certifies the stream.
     */
   val q_stream_ann_wide = QueryDef(
     "q_stream_ann_wide",
-    graft.queries.VectorQueries.q_ann_mpw.oracle.get) { (spark, dir) =>
+    graft.queries.VectorQueries.q_ann_mpw.oracle) { (spark, dir) =>
     import graft.ops.SimilarityOps
     val emb = Tables.embeddings(spark, dir)
     val corpus = emb.filter(col("vec_id") >= 50)
@@ -787,7 +788,7 @@ object StreamQueries {
     */
   val q_stream_index_append = QueryDef(
     "q_stream_index_append",
-    graft.queries.VectorQueries.q_ann_sketch.oracle.get) { (spark, dir) =>
+    graft.queries.VectorQueries.q_ann_sketch.oracle) { (spark, dir) =>
     import graft.ops.SimilarityOps
     val emb = Tables.embeddings(spark, dir)
     val tbl = "graft_ann_index_stream"
@@ -846,7 +847,7 @@ object StreamQueries {
     */
   val q_stream_mv = QueryDef(
     "q_stream_mv",
-    graft.queries.ScaleQueries.q_mv_incremental.oracle.get) { (spark, dir) =>
+    graft.queries.ScaleQueries.q_mv_incremental.oracle) { (spark, dir) =>
     import graft.ops.MvOps
     val keys = Seq("day", "event_type")
     val work = StreamingOps.tempSinkDir("graft_stream_mv_")
@@ -888,13 +889,12 @@ object StreamQueries {
       .orderBy(col("day"), col("event_type"))
   }
 
-  /** STREAMING kNN-graph maintenance — the continuous-ingest
-    * composition of q_knn_graph_delta (O(Δ) outgoing edges) and
-    * q_knn_graph_merge (incoming-edge top-k merge), round-9 verdict
-    * item 7: the graph state starts as the full LSH graph over the
-    * BASE corpus (vec_id % 10 ≠ 0), delta vectors (every 10th) arrive
-    * in three genuine micro-batches (`maxFilesPerTrigger=1` over a
-    * 3-file split), and per batch foreachBatch does the O(Δ) upkeep:
+  /** STREAMING kNN-graph maintenance — the continuous-ingest composition of
+    * q_knn_graph_delta (O(Δ) outgoing edges) and q_knn_graph_merge
+    * (incoming-edge top-k merge): the graph state starts as the full LSH
+    * graph over the BASE corpus (vec_id % 10 ≠ 0), delta vectors (every
+    * 10th) arrive in three genuine micro-batches (`maxFilesPerTrigger=1`
+    * over a 3-file split), and per batch foreachBatch does the O(Δ) upkeep:
     *
     *   out = lshKnn(Δ, corpus-so-far)        — Δ's new edges
     *   in  = lshKnn(corpus-so-far ∪ Δ, Δ)    — everyone absorbs Δ
@@ -918,7 +918,7 @@ object StreamQueries {
     */
   val q_stream_knn_graph = QueryDef(
     "q_stream_knn_graph",
-    graft.queries.VectorQueries.q_knn_graph_wide.oracle.get) { (spark, dir) =>
+    graft.queries.VectorQueries.q_knn_graph_wide.oracle) { (spark, dir) =>
     import graft.ops.SimilarityOps
     val k = 5
     val emb = Tables.embeddings(spark, dir)
@@ -989,7 +989,7 @@ object StreamQueries {
     * alert; the grid-bounded distribution is the only state.
     */
   val q_stream_ks = QueryDef(
-    "q_stream_ks", DqQueries.q_ks_test.oracle.get) { (spark, dir) =>
+    "q_stream_ks", DqQueries.q_ks_test.oracle) { (spark, dir) =>
     val stream = StreamingOps.eventsStream(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_type"),
@@ -1015,7 +1015,7 @@ object StreamQueries {
     * an ECDF max.
     */
   val q_stream_conformal = QueryDef(
-    "q_stream_conformal", ForecastQueries.q_forecast_conformal.oracle.get) {
+    "q_stream_conformal", ForecastQueries.q_forecast_conformal.oracle) {
     (spark, dir) =>
       val stream = StreamingOps.eventsStream(spark, dir)
         .select(col("event_type"),
@@ -1039,9 +1039,8 @@ object StreamQueries {
     *    batch b-1 — i.e. max event time through batch b-2
     *    (SPARK-42376's two-watermark protocol; one-batch-late rows
     *    always survive) — with an INCLUSIVE boundary
-    *    (`window.end <= wm` drops; probed empirically in
-    *    tools/ProbeLate, where a window ending exactly AT the filter
-    *    watermark was dropped);
+    *    (`window.end <= wm` drops; probed empirically (SURVEY.md T177):
+    *    a window ending exactly AT the filter watermark was dropped);
     *  - a window EMITS once `window.end <= eviction wm`, and the
     *    trailing AvailableNow no-data batch advances the watermark to
     *    the global max, flushing every closed window.
@@ -1095,7 +1094,7 @@ object StreamQueries {
       .withColumn("arrival", least(col("slice")
         + when(pmod(col("user_id"), lit(11)) === 0, 2)
           .when(pmod(col("user_id"), lit(7)) === 0, 1).otherwise(0), lit(3L)))
-    // ONE partitioned write builds all 4 slices (round-14: the four
+    // ONE partitioned write builds all 4 slices (four
     // sequential coalesce(1) write jobs were ~1 s of pure fixture
     // mechanics per drain). repartition(4, arrival) puts each arrival's
     // rows in exactly one task, so each arrival=<a> directory holds
@@ -1149,7 +1148,7 @@ object StreamQueries {
         col("n_events"), col("sum_cents"))
 
   /** Per-process memo of the 4-batch late-data drain, keyed on the SF
-    * dir (round-8 verdict item 8): [[q_stream_late]] certifies the
+    * dir: [[q_stream_late]] certifies the
     * SURVIVING OUTPUT and [[q_stream_late_audit]] the engine's internal
     * drop counters of the SAME drain, so running it twice per process
     * buys nothing — the first caller drains, the second reads the memo.
@@ -1163,7 +1162,7 @@ object StreamQueries {
 
   /** tmpdir trees created by late-drain fills, deleted when the memo
     * clears (one fixture + one sink tree per fill would otherwise
-    * orphan per bench pass/cold probe — round-13 advice).
+    * orphan per bench pass/cold probe).
     */
   private val lateTempDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()

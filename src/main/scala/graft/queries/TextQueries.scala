@@ -254,7 +254,7 @@ object TextQueries {
     // `CROSS JOIN n` shape) — no driver-side count() action, one job
     val nDocs = broadcast(docs.agg(count(lit(1)).as("n_docs")))
     // spread first: tokenize + explode + partial tf count otherwise run
-    // on the single-row-group scan's one task (round-13)
+    // on the single-row-group scan's one task
     val tf = graft.ops.Reuse.spreadToCores(
         docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(TextOps.words(col("text"))).as("w"))
@@ -429,7 +429,7 @@ object TextQueries {
     * holds one 3-field row — the learned artifact itself. */
   /** Per-process memo of the learned BPE merge table, keyed on the
     * documents fixture's content fingerprint — "fit once, serve every
-    * consumer" (round-13, guide §1.2): [[q_bpe_merges]] publishes the
+    * consumer": [[q_bpe_merges]] publishes the
     * learned artifact and [[q_bpe_fertility]] re-encodes the vocab with
     * it, and each was independently re-running the 10-round distributed
     * learn (~20 jobs). Either query populates the entry; both stay
@@ -506,7 +506,7 @@ object TextQueries {
          |ORDER BY lift DESC, w1, w2 LIMIT 20""".stripMargin
     }) { (spark, dir) =>
     // spread first: tokenization feeds TWO materialized explodes
-    // (unigram + bigram), both otherwise single-task (round-13)
+    // (unigram + bigram), both otherwise single-task
     val docsWs = graft.ops.Reuse.spreadToCores(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), graft.ops.TextOps.words(col("text")).as("ws"))

@@ -80,8 +80,8 @@ object VectorQueries {
       .orderBy(col("label"))
   }
 
-  /** Near-dup banding config — PLANNED, not hand-picked (round-12
-    * verdict item 7): [[SimilarityOps.planLshConfig]] derives the
+  /** Near-dup banding config — PLANNED, not hand-picked:
+    * [[SimilarityOps.planLshConfig]] derives the
     * certified 6×6 grid from the near-dup deployment contract (the
     * ~500-row cert corpus at 8-occupancy buckets, single-probe, the
     * 0.36 candidate-coverage target the toy corpus's weak neighbor
@@ -135,14 +135,15 @@ object VectorQueries {
   }
 
   /** WIDE-signature banding config: 16 bands × 8 bits = 128 planes —
-    * past the retired one-word ceiling (`bands·bandBits ≤ 64`,
-    * round-10's one weak-at-100× component). Per ProbeKnn law #1,
+    * past the retired one-word ceiling (`bands·bandBits ≤ 64`, weak
+    * at 100× scale). Per the measured LSH law #1 (PERF.md,
+    * hyperplane-LSH wall at large N),
     * per-band bucket count must scale with N; the certified grid keeps
     * 2⁸ buckets per band (binding collisions at sf corpus sizes) while
     * the SAME kernel serves 16×16 = 65536-bucket bands at the 1M+
     * probe scale.
     *
-    * Round-12: the grid is PLANNED, not hand-picked —
+    * The grid is PLANNED, not hand-picked —
     * [[SimilarityOps.planLshConfig]] derives it from the cert-corpus
     * deployment contract (n ≈ 2048 vectors at 8-occupancy buckets;
     * single-probe; the 0.45 candidate-coverage target the toy corpus
@@ -150,7 +151,7 @@ object VectorQueries {
     * so full recall there would cost 10× the bands the probe scale
     * needs). The require makes planner drift a LOUD failure (every
     * wide oracle bakes 16×8 hyperplane literals); the spec pins the
-    * planner's laws against the measured ProbeKnn rows.
+    * planner's laws against the measured PERF.md rows.
     */
   private[queries] val WidePlan = SimilarityOps.planLshConfig(
     nVectors = 2048, dim = 64, targetRecall = 0.45, maxProbes = 1)
@@ -214,7 +215,7 @@ object VectorQueries {
     * result-invariance certificate, plus the spec equality assertion.
     */
   val q_embed_neardup_2p = QueryDef(
-    "q_embed_neardup_2p", q_embed_neardup_lsh.oracle.get) { (spark, dir) =>
+    "q_embed_neardup_2p", q_embed_neardup_lsh.oracle) { (spark, dir) =>
     SimilarityOps.lshNearDupPairs(
       Tables.embeddings(spark, dir), "vec_id", "embedding",
       NarrowLsh.copy(twoPhase = true), threshold = 0.4)
@@ -222,19 +223,18 @@ object VectorQueries {
   }
 
   /** Full-corpus kNN graph by LSH-band blocking ([[SimilarityOps.lshKnn]]
-    * over corpus × corpus) — the round-8 verdict's top ask:
-    * the 100 TB kNN-graph story run as ONE certified query over the
-    * WHOLE embeddings table instead of the 300-node query-broadcast
-    * slice [[q_knn_graph]] rides. Candidates are banded hyperplane
-    * buckets (equi-join, both directions), exact cosine reranks, a
-    * per-node window keeps the top-5 — no crossJoin and no corpus
-    * broadcast anywhere in the plan (PlanSpec-asserted). The oracle
-    * replays signatures → banding → candidates → rerank end to end,
-    * so the LSH recall contract itself is certified: nodes keep
-    * exactly the top-k OF THEIR CANDIDATE SET, not of the corpus
-    * (the gap vs exact is measured honestly in DedupOpsSpec for the
-    * shared banding algebra). [[q_knn_mutual]]/[[q_knn_clusters]]
-    * compose on top of this edge list unchanged.
+    * over corpus × corpus) — the 100 TB kNN-graph story run as ONE
+    * certified query over the WHOLE embeddings table instead of the
+    * 300-node query-broadcast slice [[q_knn_graph]] rides. Candidates are
+    * banded hyperplane buckets (equi-join, both directions), exact cosine
+    * reranks, a per-node window keeps the top-5 — no crossJoin and no
+    * corpus broadcast anywhere in the plan (PlanSpec-asserted). The oracle
+    * replays signatures → banding → candidates → rerank end to end, so the
+    * LSH recall contract itself is certified: nodes keep exactly the top-k
+    * OF THEIR CANDIDATE SET, not of the corpus (the gap vs exact is
+    * measured honestly in DedupOpsSpec for the shared banding algebra).
+    * [[q_knn_mutual]]/[[q_knn_clusters]] compose on top of this edge list
+    * unchanged.
     */
   val q_knn_graph_lsh = QueryDef(
     "q_knn_graph_lsh", {
@@ -266,7 +266,7 @@ object VectorQueries {
   private val CappedLsh = NarrowLsh.copy(bucketCap = LshBucketCap)
 
   /** [[q_knn_graph_lsh]] under the per-(band,bucket) occupancy cap
-    * ([[SimilarityOps.capBandBuckets]], round-9 verdict item 1): the
+    * ([[SimilarityOps.capBandBuckets]]): the
     * corpus side of every band bucket keeps only the `cap = 16`
     * members with the smallest scrambled id-hash, so candidate volume
     * per band is Σ|bucket|·min(|bucket|, cap) — LINEAR in the corpus
@@ -275,7 +275,8 @@ object VectorQueries {
     * replays the identical cap rule (same Mersenne-mod hash, same
     * ROW_NUMBER tie-break), so the recall contract "top-k OF THE
     * CAPPED CANDIDATE SET" is itself certified; the recall delta and
-    * the mega-bucket wall numbers are measured in ProbeKnn (PERF.md).
+    * the mega-bucket wall numbers are measured in PERF.md
+    * (hyperplane-LSH wall at large N).
     */
   val q_knn_graph_capped = QueryDef(
     "q_knn_graph_capped", {
@@ -303,13 +304,13 @@ object VectorQueries {
 
   /** [[q_knn_graph_lsh]] at the WIDE 128-plane config (16 bands × 8
     * bits) — the certificate that the banding kernel is no longer
-    * bounded by one 64-bit signature word (round-10 verdict item 1):
+    * bounded by one 64-bit signature word:
     * same oracle family, but band buckets replayed DIRECTLY from the
     * 128-row hyperplane table ([[lshOracleCtesWide]]) instead of a
     * packed BIGINT, exactly as the engine's
     * [[graft.functions.HyperplaneBuckets]] computes them. 16-band
     * OR-amplification over 2⁸-bucket bands: more, finer bands than the
-    * 6×6 grid — the direction ProbeKnn's 1M/5M walls demand (bucket
+    * 6×6 grid — the direction the measured 1M/5M walls demand (bucket
     * count scaling with N needs total bits well past 64).
     */
   val q_knn_graph_wide = QueryDef(
@@ -335,17 +336,16 @@ object VectorQueries {
     }) { (spark, dir) => lshGraph(spark, dir, WideLsh) }
 
   /** [[q_knn_graph_capped]] served by the TWO-PHASE rerank kernel
-    * ([[SimilarityOps.LshConfig]] `twoPhase`, round-10 verdict item
-    * 2): vectors ride the bucket join once per band — bands·|corpus|
-    * vector copies, independent of candidate volume — instead of once
-    * per candidate (~1 KB × 150M candidates ≈ 150 GB projected spill
-    * at the 5M probe). The oracle is VERBATIM q_knn_graph_capped's:
-    * result-invariance of the two-phase plan vs the single-phase
-    * kernel is itself the certificate (plus the DataFrame-level
-    * equality assertion in SimilarityOpsSpec).
+    * ([[SimilarityOps.LshConfig]] `twoPhase`): vectors ride the bucket join
+    * once per band — bands·|corpus| vector copies, independent of candidate
+    * volume — instead of once per candidate (~1 KB × 150M candidates ≈ 150
+    * GB projected spill at the 5M probe). The oracle is VERBATIM
+    * q_knn_graph_capped's: result-invariance of the two-phase plan vs the
+    * single-phase kernel is itself the certificate (plus the
+    * DataFrame-level equality assertion in SimilarityOpsSpec).
     */
   val q_knn_graph_twophase = QueryDef(
-    "q_knn_graph_twophase", q_knn_graph_capped.oracle.get) { (spark, dir) =>
+    "q_knn_graph_twophase", q_knn_graph_capped.oracle) { (spark, dir) =>
     lshGraph(spark, dir, CappedLsh.copy(twoPhase = true))
   }
 
@@ -484,15 +484,14 @@ object VectorQueries {
        |  FROM scored) t WHERE rank <= $k
        |ORDER BY node_id, rank""".stripMargin
 
-  /** The FULL-STRENGTH graph kernel certified (round-11 verdict item
-    * 1): multi-probe (T208) composed INTO the wide capped two-phase
-    * path — 10×8 wide banding, 2 probes/band on the query side only,
-    * occupancy cap 16 on the corpus side, 24 B candidate payload. The
-    * oracle replays margins → buckets → flips → cap survivors →
-    * candidates → rerank end-to-end from the 80-row literal hyperplane
-    * table. This is the exact kernel the 5M ≥0.9-recall build runs
-    * (ProbeKnn); certifying it at cert SF pins every rule the big
-    * build relies on.
+  /** The FULL-STRENGTH graph kernel certified: multi-probe (T208) composed
+    * INTO the wide capped two-phase path — 10×8 wide banding, 2 probes/band
+    * on the query side only, occupancy cap 16 on the corpus side, 24 B
+    * candidate payload. The oracle replays margins → buckets → flips → cap
+    * survivors → candidates → rerank end-to-end from the 80-row literal
+    * hyperplane table. This is the exact kernel the 5M ≥0.9-recall build
+    * runs (PERF.md, 5M high-recall build); certifying it at cert SF pins
+    * every rule the big build relies on.
     */
   val q_knn_graph_mpw = QueryDef(
     "q_knn_graph_mpw", mpwOracleSql("", "", k = 5)) { (spark, dir) =>
@@ -510,7 +509,7 @@ object VectorQueries {
     * build's in-flight shuffle under executor-local disk.
     */
   val q_knn_graph_staged = QueryDef(
-    "q_knn_graph_staged", q_knn_graph_mpw.oracle.get) { (spark, dir) =>
+    "q_knn_graph_staged", q_knn_graph_mpw.oracle) { (spark, dir) =>
     val work = graft.streaming.StreamingOps.tempSinkDir("graft_staged_knn_")
     SimilarityOps.roundCos(SimilarityOps.lshKnnStaged(
         Tables.embeddings(spark, dir), "vec_id", "embedding", 5, MpwLsh,
@@ -521,7 +520,7 @@ object VectorQueries {
 
   /** Query/corpus-split SERVE through the same full-strength kernel —
     * the batch shape [[graft.queries.StreamQueries.q_stream_ann_wide]]
-    * runs per micro-batch (round-11 verdict item 8): the first 50
+    * runs per micro-batch: the first 50
     * vectors are the query batch, the rest the indexed corpus; corpus
     * buckets are capped once (the stored index), each query probes 2
     * buckets per band. Per-query results depend only on the corpus —
@@ -541,13 +540,13 @@ object VectorQueries {
   }
 
   /** One NN-DESCENT refinement round over the certified capped graph
-    * ([[SimilarityOps.knnGraphRefine]], round-11 verdict item 6):
+    * ([[SimilarityOps.knnGraphRefine]]):
     * candidates = the graph's edges ∪ neighbors-of-neighbors, exact
     * cosine reranks, top-5 kept. The oracle UNROLLS the round — the
     * full capped-graph chain, the 2-hop expansion, the set-union, the
     * rerank — so "refinement only ever improves the graph toward
     * exact" is certified, not asserted. The measured recall delta at
-    * probe scale lands in ProbeKnn/PERF.md.
+    * probe scale lands in PERF.md.
     */
   val q_knn_graph_refine = QueryDef(
     "q_knn_graph_refine", {
@@ -718,7 +717,7 @@ object VectorQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  // M=8/K=16 probed as the recall/cost knee on this corpus (ProbePq:
+  // M=8/K=16 probed as the recall/cost knee on this corpus (measured:
   // 4/8 → 0.06, 8/16 → 0.28, 16/32 → 0.48 recall@5 at rising cost) —
   // near-isotropic synthetic vectors are PQ's worst case, so the
   // probe, not a textbook default, picked the config
@@ -799,8 +798,8 @@ object VectorQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** [[q_ann_pq]] with L2-ASSIGNMENT codebooks (round-12 verdict item
-    * 4 — the named follow-up from the measured OPQ rotation negative):
+  /** [[q_ann_pq]] with L2-ASSIGNMENT codebooks (the follow-up to the
+    * measured OPQ rotation negative):
     * sub-space Lloyd's assignment and corpus encoding rank centroids
     * by squared Euclidean distance instead of cosine, via the
     * dot-product identity `(|v|² − 2·v·c) + |c|²` so the oracle
@@ -812,8 +811,9 @@ object VectorQueries {
     * PQ/OPQ (Jégou et al., Ge et al.) assumes. The serve metric is
     * UNCHANGED (cosine against the reconstruction — the engine's
     * output contract); only the quantizer's cell geometry switches.
-    * Measured against the cosine chain in ProbeAnn
-    * ({unrotated, rotated} × {cosine, L2} grid, PERF.md).
+    * Measured against the cosine chain ({unrotated, rotated} ×
+    * {cosine, L2} grid; the cosine half is PERF.md's OPQ rotation
+    * table).
     */
   val q_ann_pq_l2 = QueryDef(
     "q_ann_pq_l2", {
@@ -877,7 +877,7 @@ object VectorQueries {
   }
 
   /** IVF × PQ composition ([[SimilarityOps.ivfPqTopK]], the FAISS
-    * IVFADC shape — round-10 verdict item 8): learned IVF centroids
+    * IVFADC shape): learned IVF centroids
     * prune the search to `nProbe = 4` of 16 cells while PQ codebooks
     * (M=8, K=16) compress the corpus to one-byte codes; ranking is
     * asymmetric (exact query × reconstructed corpus). The oracle is
@@ -974,7 +974,7 @@ object VectorQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** OPQ-style ROTATED product quantization (round-11 verdict item 5):
+  /** OPQ-style ROTATED product quantization:
     * vectors first rotate into the certified deflated-PCA basis
     * (T179's [[graft.ops.PcaOps.topComponents]], m=8 energy-compacted
     * coordinates — the rotation is UNCENTERED, so raw-space cosine is
@@ -993,7 +993,7 @@ object VectorQueries {
     * certified per-sub-space Lloyd's + ADC chain (the q_ann_pq
     * blocks), then the shortlist and the raw-space rerank — the full
     * rotate→learn→encode→shortlist→rerank pipeline replays end-to-end
-    * in DuckDB. HONEST STATUS (PERF.md round-12): measured at equal
+    * in DuckDB. HONEST STATUS (PERF.md, OPQ rotation table): measured at equal
     * bytes, the rotation does NOT lift recall under the engine's
     * spherical (cosine) codebook assignment — textbook OPQ pairs
     * rotation with L2 k-means, and on variance-skewed rotated slices
@@ -1011,7 +1011,7 @@ object VectorQueries {
     * round-robined across the M sub-spaces — sub-space s codes
     * components (s, s+M, …), so each carries comparable energy (a
     * contiguous split would hand sub-space 0 nearly all of it and ADC
-    * collapses — measured in ProbeAnn). 1-based pc column indices,
+    * collapses — PERF.md's OPQ rotation table). 1-based pc column indices,
     * grouped by sub-space: [pc1, pc5, pc2, pc6, pc3, pc7, pc4, pc8]. */
   private val OpqPerm: Seq[Int] =
     (0 until OpqM).flatMap(s => (0 until OpqPcaM / OpqM).map(r => s + r * OpqM + 1))
@@ -1090,7 +1090,7 @@ object VectorQueries {
     // corpus mean is non-zero. Components are round-robined across the
     // M sub-spaces (balanced eigenvalue allocation): PCA orders them
     // by variance, and a contiguous split would give sub-space 0 all
-    // the energy (the OPQ-paper caveat, measured in ProbeAnn).
+    // the energy (the OPQ-paper caveat, measured in PERF.md).
     val proj = graft.ops.PcaOps.transformWith(
       emb, "vec_id", "embedding", 64, Array.fill(64)(0.0), comps)
       .select(col("vec_id"),
@@ -1406,7 +1406,7 @@ object VectorQueries {
 
   /** Hamming-sketch radius-prefiltered ANN
     * ([[SimilarityOps.sketchTopK]]) — the ≥0.9-recall-below-brute-wall
-    * config from the ProbeAnn frontier (256-bit sketch, radius 115:
+    * config from PERF.md's ANN frontier (256-bit sketch, radius 115:
     * recall 0.976 on the bench corpus at ~0.05× exact-scoring cost).
     * Oracle: the ±1 hyperplane table is rendered as literals from the
     * same mix function; DuckDB replays per-plane signs → per-pair
@@ -1442,7 +1442,7 @@ object VectorQueries {
     * re-sketch; no repartition barrier) is asserted in PlanSpec.
     */
   val q_ann_index = QueryDef(
-    "q_ann_index", q_ann_sketch.oracle.get) { (spark, dir) =>
+    "q_ann_index", q_ann_sketch.oracle) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     SimilarityOps.buildSketchIndex(emb.filter(col("vec_id") >= 50),
       "vec_id", "embedding", bits = SketchBits, dim = LshDim,
@@ -1492,7 +1492,7 @@ object VectorQueries {
     * pipeline needs before it can skip rebuilds between compactions.
     */
   val q_ann_index_delta = QueryDef(
-    "q_ann_index_delta", q_ann_sketch.oracle.get) { (spark, dir) =>
+    "q_ann_index_delta", q_ann_sketch.oracle) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val corpus = emb.filter(col("vec_id") >= 50)
     val tbl = "graft_ann_index_delta"
@@ -2004,10 +2004,9 @@ object VectorQueries {
     * single-pass aggregate, exactly as a deployed pipeline materializes
     * one moments table for all downstream transforms.
     *
-    * Round-13 optimization (guide §1.2: remove passes before tuning
-    * anything else): the previous fit ran the power trajectory AS
-    * DISTRIBUTED PASSES — m·iters scans of the cached corpus (24 jobs
-    * for the outlier/transform basis, 16 for OPQ's) — when the
+    * One pass, not m·iters: running the power trajectory AS
+    * DISTRIBUTED PASSES would cost m·iters scans of the cached corpus
+    * (24 jobs for the outlier/transform basis, 16 for OPQ's), while the
     * identical quantized trajectory is derivable from one
     * [[graft.functions.VectorMoments]] pass (d²+d+1 doubles of driver
     * state) followed by O(m·iters·d²) driver flops
@@ -2018,7 +2017,7 @@ object VectorQueries {
     * here (PcaOpsSpec "moments-derived trajectory equals ..."), and the
     * streaming twins (q_stream_pca / q_stream_outliers_pca) have
     * certified the moments-derived basis against the IDENTICAL DuckDB
-    * oracles since round 9. The oracles replay the batch trajectory
+    * oracles. The oracles replay the batch trajectory
     * unchanged.
     */
   private val momentsCache = new java.util.concurrent.ConcurrentHashMap[
@@ -2033,13 +2032,13 @@ object VectorQueries {
       dim: Int): (Long, Array[Double], Array[Array[Double]]) = {
     // key on the fixture's CONTENT fingerprint, not the bare dir path:
     // a rewrite under the same path must be a cache miss, not silently
-    // stale moments (round-9 verdict item 3)
+    // stale moments
     val fp = graft.ops.Memos.dirFingerprint(s"$dir/embeddings.parquet")
     momentsCache.computeIfAbsent(s"$dir#$fp#$dim", { _ =>
       // VectorMoments skips NULL / wrong-dim rows like the PCA scan
       // filter, and ADDITIONALLY drops rows containing any null
       // ELEMENT, where the batch scan's avg/element_at would skip the
-      // null per column (round-13 advice). On this corpus no vector
+      // null per column. On this corpus no vector
       // carries null elements (PcaOpsSpec pins the moments-derived
       // basis bit-equal to the batch trajectory for every config used
       // here), so n matches the batch fit; a corpus with null elements
@@ -2089,7 +2088,8 @@ object VectorQueries {
     * is parallel-Gram–Schmidt-corrected against the found ones every
     * round, so the oracle's per-round correction CTE replays the exact
     * driver arithmetic. The 4× energy-compacted columns are what
-    * PERF.md's ProbePca measures for recall against naive truncation.
+    * PERF.md's PCA truncation section measures for recall against
+    * naive truncation.
     */
   val q_pca_transform = QueryDef(
     "q_pca_transform",
@@ -2372,8 +2372,8 @@ object VectorQueries {
   }
 
   /** Subspace Mahalanobis outlier scoring over the certified deflated
-    * PCA basis ([[graft.ops.PcaOps.subspaceOutliers]]) — the round-8
-    * verdict's item 3: [[q_embed_outliers]]' diagonal z-scores cannot
+    * PCA basis ([[graft.ops.PcaOps.subspaceOutliers]]):
+    * [[q_embed_outliers]]' diagonal z-scores cannot
     * see CORRELATED corruption (the common degenerate-embedding mode);
     * this standardizes the top-4 principal projections by their
     * eigenvalues and adds the off-subspace residual energy. Same basis

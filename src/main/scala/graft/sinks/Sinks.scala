@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** MV-freshness hook (round-9 verdict item 4): every sink that lands
+  /** MV-freshness hook: every sink that lands
     * bytes at a path must drop any [[graft.plans.MvRewrite]]
     * registration covering that path BEFORE writing — otherwise a write
     * through the engine's own sinks leaves a registered stale rollup
@@ -108,8 +108,8 @@ object Sinks {
   def writeBucketed(
       df: DataFrame, table: String, keys: Seq[String], nBuckets: Int): Unit = {
     // overwriting a catalog table invalidates EVERY MV registration
-    // served from it, whichever base dir registered it (round-9 advice:
-    // a prior SF dir's registration over a table rebuilt with another
+    // served from it, whichever base dir registered it (a prior SF
+    // dir's registration over a table rebuilt with another
     // dir's data is a silent wrong answer)
     graft.plans.MvRewrite.deregisterTable(table)
     df.write

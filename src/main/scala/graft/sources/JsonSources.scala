@@ -27,8 +27,6 @@ object JsonSources {
   val DedupTextFields: Seq[String] = Seq("text", "description", "title", "content", "body")
   val LocationTextFields: Seq[String] =
     Seq("text", "description", "title", "summary", "body", "content", "subreddit")
-  /** Back-compat alias for the dedup-stage list. */
-  val TextPrecedence: Seq[String] = DedupTextFields
   val IdPrecedence: Seq[String] = Seq("post_id", "id", "unique_key", "complaint_number")
   val TsPrecedence: Seq[String] =
     Seq("created_at", "created_utc", "timestamp", "scraped_at", "processed_at")

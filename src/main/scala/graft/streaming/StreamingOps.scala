@@ -173,8 +173,8 @@ object StreamingOps {
     * process that wrote them, so at exit they are garbage — without
     * the hook a bench run leaves ~50 orphaned trees (one per
     * dir-creating query per pass) for the machine's tmpdir lifetime
-    * (round-14; memo clearers additionally delete their trees per
-    * pass, see the callers).
+    * (memo clearers additionally delete their trees per pass, see the
+    * callers).
     */
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private lazy val exitCleanup: Unit = {
@@ -203,7 +203,7 @@ object StreamingOps {
     * call this on the dirs their fills created — Bench clears memos at
     * every pass and probes each consumer cold, so a fill that orphans
     * its tmpdir leaks one tree per pass/probe for the machine's tmpdir
-    * lifetime (round-13 advice). Best-effort: a failed delete leaves
+    * lifetime. Best-effort: a failed delete leaves
     * the orphan but never fails the caller.
     */
   def deleteRecursively(path: String): Unit = {

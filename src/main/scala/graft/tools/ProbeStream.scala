@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Repeat-bench of the streaming query family under Bench-identical
   * conditions (local[32], shuffle=32 outside the queries' own scoped
   * override, cache release between queries, same warm-up), printing
-  * per-rep seconds plus median/min/max — the measured noise band the
-  * round-3 verdict demanded for the stateful family.
+  * per-rep seconds plus median/min/max — the measured noise band of
+  * the stateful family (PERF.md, stateful-query noise band).
   *
   * Usage: runMain graft.tools.ProbeStream [sfDir] [reps]
   */

@@ -6,8 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 
 /** Per-query job/stage/task census: how many Spark jobs, stages and
   * tasks one `count()` of a query costs — the direct measurement of
-  * the sub-1s tail's scheduling floor (round-14; ad-hoc, not part of
-  * the driver contract). Optionally prints the AQE-final executed plan
+  * the sub-1s tail's scheduling floor (ad-hoc, not part of the driver
+  * contract). Optionally prints the AQE-final executed plan
   * (`plan` flag) to show post-shuffle coalescing.
   *
   * Usage: runMain graft.tools.ProbeTasks <query...> [sf=DIR] [plan]

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the remaining operator-inventory surface: Kafka payload
-  * shaping (S11), CSV sink (S8), session extensions, streaming
-  * progress listener (ST8), latest-file selection (W6), SQL surface of
-  * the native dot_product expression.
+  * shaping (S11), CSV sink (S8), split JSON sink (S7), session
+  * extensions, streaming progress listener (ST8), latest-file selection
+  * (W6), SQL surface of the native dot_product expression, and the
+  * README headline count against the registry.
   */
 class SurfaceSpec extends AnyFunSuite {
   import TestSpark._
@@ -35,6 +36,35 @@ class SurfaceSpec extends AnyFunSuite {
     val back = spark.read.option("header", "true").csv(s"$out/report")
     assert(back.count() === 20)
     assert(back.columns.toSeq === Seq("event_id", "event_type", "value"))
+  }
+
+  test("split json sink puts every row on exactly one side, NULL predicate rejects, reruns overwrite") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("split").toString
+    val (acc, rej) = (s"$out/accept", s"$out/reject")
+    def side(dir: String): Seq[Long] =
+      spark.read.schema("id BIGINT, v INT").json(dir)
+        .collect().map(_.getLong(0)).toSeq.sorted
+    // v > 0: true for ids 1-2, false for 3-4, NULL for 5-6
+    val df = Seq[(Long, Option[Int])]((1L, Some(5)), (2L, Some(1)),
+      (3L, Some(0)), (4L, Some(-2)), (5L, None), (6L, None)).toDF("id", "v")
+    Sinks.splitJson(df, col("v") > 0, acc, rej)
+    assert(side(acc) === Seq(1L, 2L))
+    assert(side(rej) === Seq(3L, 4L, 5L, 6L))
+    // a second call replaces both sides instead of appending to them
+    val again = Seq[(Long, Option[Int])]((7L, Some(3)), (8L, None)).toDF("id", "v")
+    Sinks.splitJson(again, col("v") > 0, acc, rej)
+    assert(side(acc) === Seq(7L))
+    assert(side(rej) === Seq(8L))
+  }
+
+  test("README's oracle-checked headline matches the query registry") {
+    val readme = Files.readString(java.nio.file.Paths.get("README.md"))
+    val m = """\*\*(\d+) of (\d+) oracle-checked""".r.findFirstMatchIn(readme)
+      .getOrElse(fail("README has no '**N of N oracle-checked' headline"))
+    val n = SparkEntry.queries.size
+    assert((m.group(1).toInt, m.group(2).toInt) === ((n, n)))
+    assert(SparkEntry.oracleSql.size === n)
   }
 
   test("dot_product is callable from SQL after registration") {
