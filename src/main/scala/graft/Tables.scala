@@ -18,28 +18,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-process memo of the ANALYZED base relations — metadata, not
-    * results: `spark.read.parquet` re-lists the path and re-reads the
-    * footer schema on every call, and with ~300 queries × passes that
-    * driver-side setup cost alone was ~0.02-0.05 s per query (measured
-    * with ProbePlanTime: "build" dominated the sub-1s tail). A deployed
-    * engine resolves tables through a catalog once — this memo is that
-    * catalog. Keyed on the session identity + the fixture's CONTENT
-    * fingerprint (a rewrite is a miss, never a stale hit), registered
-    * in [[graft.ops.Memos]] so Bench's per-pass clear re-pays the
-    * resolution honestly. The cached value is a lazy plan over
-    * immutable files — no row is materialized by the memo.
+  /** Memo of the ANALYZED base relations, keyed on the session and the
+    * fixture: `spark.read.parquet` re-lists the path and re-reads the
+    * footer schema on every call, which cost ~0.02-0.05 s of driver
+    * time per query. The value is a lazy plan over immutable files, so
+    * no row is materialized by the memo. No query is named as its
+    * consumer: every query reads through it.
     */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  graft.ops.Memos.register(() => relationCache.clear())
+  private val relations = new ops.Memos.Memo[(SparkSession, ops.Memos.Fixture), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    relationCache.computeIfAbsent(
-      s"${System.identityHashCode(spark)}#$path#${ops.Memos.dirFingerprint(path)}",
-      _ => spark.read.parquet(path))
+    relations.get((spark, ops.Memos.fixture(path)))(_ => spark.read.parquet(path))
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

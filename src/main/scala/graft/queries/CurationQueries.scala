@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.ops.{DedupOps, TextOps, UrlOps}
+import graft.ops.{DedupOps, Memos, TextOps, UrlOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,47 +19,31 @@ object CurationQueries {
     * a~c pair) land in ONE group in both engines, which pairwise
     * checks alone cannot certify.
     */
-  /** Per-process memo of the resolved near-dup GROUP TABLE at the 0.8
-    * threshold, materialized to a work-dir parquet and keyed on the
-    * documents fixture's content fingerprint (remove repeated
-    * passes): [[q_dedup_groups]],
-    * [[q_canonical_docs]], [[q_dup_cluster_sizes]] and
-    * [[q_soft_dedup_sample]] all consume the IDENTICAL
-    * `dedupGroups(documents, 0.8)` resolution (shingle → MinHash →
-    * LSH pairs → connected components), and each was re-running the
-    * full pipeline — exactly as a deployed curation pipeline
-    * materializes ONE group table and serves every downstream
-    * consumer from it. The lateDrains/fittedBasis accounting: Bench
-    * clears the memo per pass, so each pass re-pays the resolution
-    * once at its first consumer; BENCH_COLD probes each consumer's
-    * standalone cold cost. [[q_dedup_groups_dist]] deliberately stays
-    * on a live `dedupGroups` call — its whole purpose is to TIME the
-    * distributed pointer-jumping path against the same oracle.
+  /** Memo of the resolved near-dup GROUP TABLE at the 0.8 threshold,
+    * written to a temp parquet tree the memo owns and keyed on the
+    * documents fixture: [[q_dedup_groups]], [[q_canonical_docs]],
+    * [[q_dup_cluster_sizes]] and [[q_soft_dedup_sample]] all consume
+    * the same `dedupGroups(documents, 0.8)` resolution (shingle →
+    * MinHash → LSH pairs → connected components), the one group table
+    * a curation pipeline serves every downstream consumer from.
+    * [[q_dedup_groups_dist]] stays on a live `dedupGroups` call: it
+    * times the distributed pointer-jumping path against the same
+    * oracle.
     */
-  private val dedupGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  graft.ops.Memos.register(() => {
-    // the memoized value IS a tmpdir parquet path: delete the tree when
-    // the memo clears, or each bench pass / cold probe orphans one dir
-    // for the machine's tmpdir lifetime
-    val dirs = new java.util.ArrayList(dedupGroupsCache.values())
-    dedupGroupsCache.clear() // drop the map first: no reader sees a deleted path
-    dirs.forEach(d => graft.streaming.StreamingOps.deleteRecursively(d))
-  }, "q_dedup_groups", "q_canonical_docs", "q_dup_cluster_sizes",
+  private val dedupGroupTables = new Memos.Memo[(Memos.Fixture, Double), String](
+    "q_dedup_groups", "q_canonical_docs", "q_dup_cluster_sizes",
     "q_soft_dedup_sample")
 
   private def sharedDedupGroups(
       spark: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    val path = dedupGroupsCache.computeIfAbsent(
-      s"$dir#${graft.ops.Memos.dirFingerprint(s"$dir/documents.parquet")}#0.8",
-      { _ =>
-        val out = graft.streaming.StreamingOps.tempSinkDir("graft_dedup_groups_")
-        DedupOps.dedupGroups(Tables.documents(spark, dir), "doc_id", "text", 0.8)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
+    val path = dedupGroupTables.get(
+      (Memos.fixture(s"$dir/documents.parquet"), 0.8)) { fill =>
+      val out = fill.tempDir("graft_dedup_groups_")
+      DedupOps.dedupGroups(Tables.documents(spark, dir), "doc_id", "text", 0.8)
+        .write.mode("overwrite").parquet(out)
+      out
+    }
     spark.read.parquet(path)
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.ops.Memos
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -24,9 +25,7 @@ object StreamQueries {
       |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (spark, dir) =>
     val stream = StreamingOps.eventsStream(spark, dir)
     val agg = StreamingOps.hourlyCounts(stream)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(agg, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(agg, OutputMode.Complete())
       .select(col("hour"), col("event_type"), col("n"),
         round(col("total_value"), 2).as("total_value"))
       .orderBy(col("hour"), col("event_type"))
@@ -61,10 +60,8 @@ object StreamQueries {
       |GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (spark, dir) =>
     val stream = StreamingOps.eventsStream(spark, dir)
     val agg = StreamingOps.hourlyCounts(stream, watermark = "1 hour")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToParquetSink(
-        agg, StreamingOps.tempSinkDir("graft_hourly_append_"))
-    }
+    StreamingOps.drainToParquetSink(
+      agg, StreamingOps.tempSinkDir("graft_hourly_append_"))
       .select(col("hour"), col("event_type"), col("n"),
         round(col("total_value"), 2).as("total_value"))
       .orderBy(col("hour"), col("event_type"))
@@ -78,10 +75,8 @@ object StreamQueries {
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
     val stream = StreamingOps.parquetStream(spark, s"$dir/documents.parquet", schema)
       .select(md5(col("text")).as("hash"), col("doc_id").as("id"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(
-        StreamingOps.streamingDedupFirstSeen(spark, stream))
-    }.orderBy(col("keep_id"))
+    StreamingOps.drainToBatch(StreamingOps.streamingDedupFirstSeen(spark, stream))
+      .orderBy(col("keep_id"))
   }
 
   /** Stream–static enrichment join — the canonical streaming-enrich
@@ -107,9 +102,7 @@ object StreamQueries {
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("value_cents"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(enriched, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(enriched, OutputMode.Complete())
       .select(col("segment"), col("n"), col("value_cents"))
       .orderBy(col("segment"))
   }
@@ -139,11 +132,7 @@ object StreamQueries {
     val joined = StreamingOps.intervalJoin(
       purchases, clicks, "purchase_ts", "click_ts",
       "user_id", "c_user", before = "30 MINUTES", watermark = "1 hour")
-    // stream-stream join keeps 4 state stores per partition — size the
-    // state layout to the drained volume
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(joined, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(joined, OutputMode.Append())
       .select(col("click_id"), col("purchase_id"), col("user_id"))
       .orderBy(col("click_id"), col("purchase_id"))
   }
@@ -204,9 +193,7 @@ object StreamQueries {
       purchases, clicks, "purchase_ts", "click_ts",
       "user_id", "c_user", before = "30 MINUTES", watermark = "1 hour",
       joinType = "leftOuter")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(joined, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(joined, OutputMode.Append())
       .select(coalesce(col("click_id"), lit(-1L)).as("click_id"),
         col("purchase_id"), col("user_id"))
       .orderBy(col("purchase_id"), col("click_id"))
@@ -265,9 +252,7 @@ object StreamQueries {
       purchases, clicks, "purchase_ts", "click_ts",
       "user_id", "c_user", before = "30 MINUTES", watermark = "1 hour",
       joinType = "fullOuter")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(joined, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(joined, OutputMode.Append())
       .select(coalesce(col("click_id"), lit(-1L)).as("click_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(col("user_id"), col("c_user")).as("user_id"))
@@ -309,9 +294,7 @@ object StreamQueries {
     val stream = StreamingOps.eventsStream(spark, dir)
     val throttled = StreamingOps.streamingThrottle(
       spark, stream, ttlUs = 6L * 3600 * 1000000)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(throttled, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(throttled, OutputMode.Append())
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts_us"))
       .orderBy(col("user_id"), col("event_type"), col("ts_us"), col("event_id"))
@@ -356,9 +339,7 @@ object StreamQueries {
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(agg, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(agg, OutputMode.Append())
       .select(col("user_id"),
         unix_micros(col("sw.start")).as("session_start_us"),
         unix_micros(col("sw.end")).as("session_end_us"),
@@ -381,9 +362,7 @@ object StreamQueries {
     val stream = StreamingOps.eventsStream(spark, dir)
       .select(col("event_type"), col("value"))
     val bins = graft.ops.SketchOps.quantileSketchBins(stream)
-    val drained = StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(bins, OutputMode.Complete())
-    }
+    val drained = StreamingOps.drainToBatch(bins, OutputMode.Complete())
     graft.ops.SketchOps.quantileSketchRead(spark, drained)
   }
 
@@ -401,9 +380,7 @@ object StreamQueries {
     (spark, dir) =>
       val regs = graft.ops.SketchOps.hllRegisters(
         StreamingOps.eventsStream(spark, dir), "event_type", "event_id")
-      val drained = StreamingOps.withShufflePartitions(spark, 8) {
-        StreamingOps.drainToBatch(regs, OutputMode.Complete())
-      }
+      val drained = StreamingOps.drainToBatch(regs, OutputMode.Complete())
       val exact = Tables.events(spark, dir)
         .groupBy(col("event_type").as("grp"))
         .agg(count_distinct(col("event_id")).as("n_exact"))
@@ -427,9 +404,7 @@ object StreamQueries {
     val hashStream = docsStream.select(
       explode(graft.ops.TextOps.wordHashes(col("text"))).as("wh"))
     val sketch = graft.ops.SketchOps.cmsSketchFromHashes(hashStream)
-    val drained = StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(sketch, OutputMode.Complete())
-    }
+    val drained = StreamingOps.drainToBatch(sketch, OutputMode.Complete())
     val wordsBatch = Tables.documents(spark, dir)
       .select(explode(graft.ops.TextOps.words(col("text"))).as("w"))
     graft.ops.SketchOps.cmsReadback(drained, wordsBatch, 20)
@@ -462,20 +437,10 @@ object StreamQueries {
       spark, path, spark.read.parquet(path).schema)
       .filter(col("doc_id") % 5 === 4)
     val work = StreamingOps.tempSinkDir("graft_inc_dedup_")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            DedupOps.probeIncremental(index, batch, "doc_id", "text", 0.8),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        DedupOps.probeIncremental(index, batch, "doc_id", "text", 0.8),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out", Some(outSchema))
       .orderBy(col("new_id"))
@@ -506,9 +471,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("win.start").as("win_start"), col("event_type"),
         col("n"), round(col("total_value"), 2).as("total_value"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(stream, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(stream, OutputMode.Complete())
       .orderBy(col("win_start"), col("event_type"))
   }
 
@@ -535,9 +498,7 @@ object StreamQueries {
       .agg(graft.functions.TopKRows.topK(
         struct((-col("value")).as("nv"), col("event_id").as("event_id")), 20)
         .as("top"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(heap, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(heap, OutputMode.Complete())
       .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
         col("t.event_id").as("event_id"), round(-col("t.nv"), 2).as("value"))
@@ -594,31 +555,21 @@ object StreamQueries {
         case StateName(n) => n.toLong
       }
     }
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val prev = versions().filter(_ < id).sorted.lastOption
-          val incoming = prev match {
-            case None => batch
-            case Some(v) =>
-              batch.unionByName(spark.read.parquet(s"$work/state_$v"))
-          }
-          // (us, event_id)-argmax per key: associative, so state ∪
-          // batch compaction equals whole-log compaction
-          incoming
-            .groupBy(col("user_id"))
-            .agg(max_by(struct(stateCols.map(col): _*),
-              struct(col("us"), col("event_id"))).as("w"))
-            .select(col("w.*"))
-            .write.mode("overwrite").parquet(s"$work/state_$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, id) =>
+      val prev = versions().filter(_ < id).sorted.lastOption
+      val incoming = prev match {
+        case None => batch
+        case Some(v) =>
+          batch.unionByName(spark.read.parquet(s"$work/state_$v"))
+      }
+      // (us, event_id)-argmax per key: associative, so state ∪
+      // batch compaction equals whole-log compaction
+      incoming
+        .groupBy(col("user_id"))
+        .agg(max_by(struct(stateCols.map(col): _*),
+          struct(col("us"), col("event_id"))).as("w"))
+        .select(col("w.*"))
+        .write.mode("overwrite").parquet(s"$work/state_$id")
     }
     spark.read.parquet(s"$work/state_${versions().max}")
       .filter(col("op") === "U")
@@ -664,24 +615,14 @@ object StreamQueries {
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         unix_micros(col("ts")).as("purchase_us"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            JoinOps.asofJoinNative(batch, clicks,
-              keyCol = "user_id", leftTsCol = "purchase_us",
-              rightTsCol = "click_us", rightValCols = Seq("click_id"))
-              .select(col("purchase_id"), col("user_id"), col("purchase_us"),
-                col("click_id").as("last_click_id")),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        JoinOps.asofJoinNative(batch, clicks,
+          keyCol = "user_id", leftTsCol = "purchase_us",
+          rightTsCol = "click_us", rightValCols = Seq("click_id"))
+          .select(col("purchase_id"), col("user_id"), col("purchase_us"),
+            col("click_id").as("last_click_id")),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out").orderBy(col("purchase_id"))
   }
@@ -707,21 +648,11 @@ object StreamQueries {
     val stream = StreamingOps
       .parquetStream(spark, s"$dir/embeddings.parquet", emb.schema)
       .filter(col("vec_id") < 50)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            SimilarityOps.sketchTopK(batch, corpus, "vec_id", "embedding", 10,
-              bits = 256, dim = 64, maxHamming = 115),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        SimilarityOps.sketchTopK(batch, corpus, "vec_id", "embedding", 10,
+          bits = 256, dim = 64, maxHamming = 115),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out")
       .orderBy(col("query_id"), col("rank"))
@@ -749,21 +680,11 @@ object StreamQueries {
     val stream = StreamingOps
       .parquetStream(spark, s"$dir/embeddings.parquet", emb.schema)
       .filter(col("vec_id") < 50)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            SimilarityOps.roundCos(SimilarityOps.lshKnn(
-              batch, corpus, "vec_id", "embedding", 10, VectorQueries.MpwLsh)),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        SimilarityOps.roundCos(SimilarityOps.lshKnn(
+          batch, corpus, "vec_id", "embedding", 10, VectorQueries.MpwLsh)),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out")
       .orderBy(col("query_id"), col("rank"))
@@ -801,29 +722,19 @@ object StreamQueries {
     val stream = StreamingOps
       .parquetStream(spark, s"$dir/embeddings.parquet", emb.schema)
       .filter(col("vec_id") >= 50)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // skip-existing anti-join makes the append replay-idempotent.
-          // refreshTable first: the appends run under foreachBatch's
-          // CLONED session, whose insert-refresh invalidates only its
-          // own catalog's relation cache — this session's cached file
-          // listing of the table would otherwise go stale after the
-          // first read and hide every subsequent append
-          spark.catalog.refreshTable(tbl)
-          val fresh = graft.sinks.Sinks.appendNewIds(
-            spark.table(tbl).select(col("neighbor_id").as("vec_id")),
-            batch, "vec_id")
-          SimilarityOps.appendSketchIndex(fresh, "vec_id", "embedding",
-            bits = 256, dim = 64, table = tbl)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, _) =>
+      // skip-existing anti-join makes the append replay-idempotent.
+      // refreshTable first: the appends run under foreachBatch's
+      // CLONED session, whose insert-refresh invalidates only its
+      // own catalog's relation cache — this session's cached file
+      // listing of the table would otherwise go stale after the
+      // first read and hide every subsequent append
+      spark.catalog.refreshTable(tbl)
+      val fresh = graft.sinks.Sinks.appendNewIds(
+        spark.table(tbl).select(col("neighbor_id").as("vec_id")),
+        batch, "vec_id")
+      SimilarityOps.appendSketchIndex(fresh, "vec_id", "embedding",
+        bits = 256, dim = 64, table = tbl)
     }
     spark.catalog.refreshTable(tbl)
     SimilarityOps.sketchTopKIndexed(
@@ -862,22 +773,12 @@ object StreamQueries {
     def prep(df: org.apache.spark.sql.DataFrame) = df
       .withColumn("day", date_trunc("day", col("ts")).cast("date"))
       .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // per-batch overwrite directory, NOT a blind append: a
-          // replayed micro-batch (at-least-once foreachBatch after a
-          // crash) replaces its own state instead of double-counting
-          MvOps.writeBatchState(prep(batch), keys, col("cents"),
-            s"$work/state", batchId)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, batchId) =>
+      // per-batch overwrite directory, NOT a blind append: a
+      // replayed micro-batch (at-least-once foreachBatch after a
+      // crash) replaces its own state instead of double-counting
+      MvOps.writeBatchState(prep(batch), keys, col("cents"),
+        s"$work/state", batchId)
     }
     MvOps.finalizeState(
       MvOps.mergeStates(keys, MvOps.readStateLog(spark, s"$work/state")))
@@ -940,34 +841,24 @@ object StreamQueries {
     val schema = spark.read.parquet(src).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val prevState = spark.read.parquet(
-            if (id == 0L) s"$work/state/seed" else s"$work/state/b${id - 1}")
-          // corpus BEFORE this batch: explicit path list (never "list
-          // the dir" — a replayed batch must not see its own vectors
-          // from the failed attempt)
-          val corpusPrev = spark.read.parquet(
-            (s"$work/corpus/seed" +: (0L until id).map(i => s"$work/corpus/b$i")): _*)
-          val out = graph(batch, corpusPrev).drop("rank")
-          val in = graph(corpusPrev.unionByName(batch), batch).drop("rank")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))
-          prevState.drop("rank").unionByName(out).unionByName(in)
-            .withColumn("rank", row_number().over(w).cast("long"))
-            .filter(col("rank") <= k)
-            .write.mode("overwrite").parquet(s"$work/state/b$id")
-          batch.write.mode("overwrite").parquet(s"$work/corpus/b$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, id) =>
+      val prevState = spark.read.parquet(
+        if (id == 0L) s"$work/state/seed" else s"$work/state/b${id - 1}")
+      // corpus BEFORE this batch: explicit path list (never "list
+      // the dir" — a replayed batch must not see its own vectors
+      // from the failed attempt)
+      val corpusPrev = spark.read.parquet(
+        (s"$work/corpus/seed" +: (0L until id).map(i => s"$work/corpus/b$i")): _*)
+      val out = graph(batch, corpusPrev).drop("rank")
+      val in = graph(corpusPrev.unionByName(batch), batch).drop("rank")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("cos").desc, col("neighbor_id"))
+      prevState.drop("rank").unionByName(out).unionByName(in)
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .write.mode("overwrite").parquet(s"$work/state/b$id")
+      batch.write.mode("overwrite").parquet(s"$work/corpus/b$id")
     }
     val lastBatch = StreamingOps.maxBatchSuffix(spark, s"$work/state", "b")
     require(lastBatch >= 1,
@@ -997,9 +888,7 @@ object StreamQueries {
     val counts = stream.groupBy(col("cents"))
       .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("b"))
-    val drained = StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(counts, OutputMode.Complete())
-    }
+    val drained = StreamingOps.drainToBatch(counts, OutputMode.Complete())
     DqQueries.ksReadoff(drained)
   }
 
@@ -1022,9 +911,7 @@ object StreamQueries {
           date_trunc("day", col("ts")).cast("date").as("day"))
       val counts = stream.groupBy(col("event_type"), col("day"))
         .agg(count(lit(1)).as("cnt"))
-      val drained = StreamingOps.withShufflePartitions(spark, 8) {
-        StreamingOps.drainToBatch(counts, OutputMode.Complete())
-      }
+      val drained = StreamingOps.drainToBatch(counts, OutputMode.Complete())
       ForecastQueries.conformalReadoff(drained)
   }
 
@@ -1072,14 +959,13 @@ object StreamQueries {
   /** Builds the 4-file arrival layout on disk (one partitioned write,
     * files renamed into place with explicitly spaced mtimes so
     * FileStreamSource's modification-time order IS the arrival order)
-    * and returns the source dir. The
+    * under `work` and returns the source dir. The
     * fixture is test scaffolding standing in for an out-of-order
     * transport; the OPERATOR under certification is the watermarked
     * windowed aggregation and its late-drop protocol.
     */
   private def lateFixture(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val work = StreamingOps.tempSinkDir("graft_stream_late_")
+      dir: String, work: String): String = {
     val src = s"$work/src"
     val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"),
       floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -1147,51 +1033,28 @@ object StreamQueries {
       .select(col("window.start").cast("date").as("day"),
         col("n_events"), col("sum_cents"))
 
-  /** Per-process memo of the 4-batch late-data drain, keyed on the SF
-    * dir: [[q_stream_late]] certifies the
-    * SURVIVING OUTPUT and [[q_stream_late_audit]] the engine's internal
-    * drop counters of the SAME drain, so running it twice per process
-    * buys nothing — the first caller drains, the second reads the memo.
-    * Both queries stay independently runnable (either one populates the
-    * entry); the value is plain data (sink path + schema DDL + progress
-    * events), valid for any session in this JVM.
+  /** Memo of the 4-batch late-data drain, keyed on the events fixture:
+    * [[q_stream_late]] certifies the SURVIVING OUTPUT and
+    * [[q_stream_late_audit]] the engine's internal drop counters of the
+    * SAME drain, so the first caller drains and the second reads the
+    * memo. The value is plain data (sink path + schema DDL + progress
+    * events), valid for any session in this JVM; the fixture and sink
+    * trees are the fill's and go when the memo clears.
     */
-  private val lateDrains = new java.util.concurrent.ConcurrentHashMap[
-    String,
-    (String, String, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])]()
-
-  /** tmpdir trees created by late-drain fills, deleted when the memo
-    * clears (one fixture + one sink tree per fill would otherwise
-    * orphan per bench pass/cold probe).
-    */
-  private val lateTempDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  graft.ops.Memos.register(() => {
-    lateDrains.clear() // drop the map first: no reader sees a deleted path
-    var d = lateTempDirs.poll()
-    while (d != null) {
-      StreamingOps.deleteRecursively(d)
-      d = lateTempDirs.poll()
-    }
-  }, "q_stream_late", "q_stream_late_audit")
+  private val lateDrains = new Memos.Memo[Memos.Fixture,
+    (String, String, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])](
+    "q_stream_late", "q_stream_late_audit")
 
   private def drainedLate(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (String, String, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
-    lateDrains.computeIfAbsent(
-      s"$dir#${graft.ops.Memos.dirFingerprint(s"$dir/events.parquet")}", { _ =>
-      val src = lateFixture(spark, dir)
-      // src is $work/src — register the work ROOT for the clearer
-      lateTempDirs.add(new java.io.File(src).getParent)
-      val sink = StreamingOps.tempSinkDir("graft_stream_late_sink_")
-      lateTempDirs.add(sink)
+    lateDrains.get(Memos.fixture(s"$dir/events.parquet")) { fill =>
+      val src = lateFixture(spark, dir, fill.tempDir("graft_stream_late_"))
+      val sink = fill.tempDir("graft_stream_late_sink_")
       val agg = lateAgg(spark, src)
-      val (out, progress) = StreamingOps.withShufflePartitions(spark, 8) {
-        StreamingOps.drainToParquetSinkWithProgress(agg, sink)
-      }
+      val (out, progress) = StreamingOps.drainToParquetSinkWithProgress(agg, sink)
       out.count() // force the read path once so a broken drain fails HERE
       (s"$sink/out", agg.schema.toDDL, progress)
-    })
+    }
 
   /** Late-data accounting, output side: daily counts from an
     * Append-mode watermarked aggregation over a deliberately
@@ -1269,27 +1132,21 @@ object StreamQueries {
     * buffer per map partition), spec-certified equal to the explode +
     * pair-join formulation in VectorMomentsSpec.
     */
-  /** Per-process memo of the streamed raw-moments drain, keyed on
-    * (SF dir, dim): the (n, Σx, Σxxᵀ) monoid is ITERATION-INDEPENDENT —
+  /** Memo of the streamed raw-moments drain, keyed on the embeddings
+    * fixture and dim: the (n, Σx, Σxxᵀ) monoid is ITERATION-INDEPENDENT —
     * [[q_stream_pca]] (1 component, 8 iters) and
     * [[q_stream_outliers_pca]] (4 components, 6 iters) re-derive
     * different bases from the SAME merged state, exactly as a deployed
     * maintenance job would serve every downstream consumer from one
-    * moments table. Either query populates the entry; both stay
-    * independently runnable.
+    * moments table.
     */
-  private val momentDrains = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Array[Double], Array[Array[Double]])]()
-
-  graft.ops.Memos.register(() => momentDrains.clear(),
-    "q_stream_pca", "q_stream_outliers_pca")
+  private val momentDrains = new Memos.Memo[(Memos.Fixture, Int),
+    (Long, Array[Double], Array[Array[Double]])]("q_stream_pca", "q_stream_outliers_pca")
 
   private def streamedMoments(
       spark: org.apache.spark.sql.SparkSession, dir: String, dim: Int)
       : (Long, Array[Double], Array[Array[Double]]) =
-    momentDrains.computeIfAbsent(
-      s"$dir#${graft.ops.Memos.dirFingerprint(s"$dir/embeddings.parquet")}#$dim",
-      { _ =>
+    momentDrains.get((Memos.fixture(s"$dir/embeddings.parquet"), dim)) { _ =>
       val emb = Tables.embeddings(spark, dir)
       val work = StreamingOps.tempSinkDir("graft_stream_pca_")
       val src = s"$work/src"
@@ -1297,30 +1154,20 @@ object StreamQueries {
       val schema = spark.read.parquet(src).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      StreamingOps.withShufflePartitions(spark, 8) {
-        val q = stream.writeStream
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            import ss.implicits._
-            val m = batch
-              .agg(graft.functions.VectorMoments(col("embedding"), dim).as("m"))
-              .head().getSeq[Double](0)
-            // flat buffer -> (j,k,s) state rows: count (-1,-1),
-            // first moments (j,-1), second moments (j,k)
-            val rows = Seq((-1, -1, m(0))) ++
-              (0 until dim).map(j => (j, -1, m(1 + j))) ++
-              (for (j <- 0 until dim; k <- 0 until dim)
-                yield (j, k, m(1 + dim + j * dim + k)))
-            StreamingOps.writeBatchDir(
-              rows.toDF("j", "k", "s"), s"$work/state", batchId)
-            ()
-          }
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
+      StreamingOps.drainForeachBatch(stream, s"$work/ckpt") { (batch, batchId) =>
+        val ss = batch.sparkSession
+        import ss.implicits._
+        val m = batch
+          .agg(graft.functions.VectorMoments(col("embedding"), dim).as("m"))
+          .head().getSeq[Double](0)
+        // flat buffer -> (j,k,s) state rows: count (-1,-1),
+        // first moments (j,-1), second moments (j,k)
+        val rows = Seq((-1, -1, m(0))) ++
+          (0 until dim).map(j => (j, -1, m(1 + j))) ++
+          (for (j <- 0 until dim; k <- 0 until dim)
+            yield (j, k, m(1 + dim + j * dim + k)))
+        StreamingOps.writeBatchDir(
+          rows.toDF("j", "k", "s"), s"$work/state", batchId)
       }
       // key-wise monoid merge of the batch moments, then a bounded
       // (d²+d+1)-value collect feeds the driver-side trajectory
@@ -1335,7 +1182,7 @@ object StreamQueries {
       // than orphan one tmpdir per memo fill
       StreamingOps.deleteRecursively(work)
       (n, sx, sxx)
-    })
+    }
 
   val q_stream_pca = QueryDef(
     "q_stream_pca",

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.ops.TextOps
+import graft.ops.{Memos, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis surface for the training-data pipeline over the
@@ -427,29 +427,21 @@ object TextQueries {
     * same count→argmax→replace round. Per round the cluster does one
     * explode + hash aggregate over DISTINCT words and the driver
     * holds one 3-field row — the learned artifact itself. */
-  /** Per-process memo of the learned BPE merge table, keyed on the
-    * documents fixture's content fingerprint — "fit once, serve every
-    * consumer": [[q_bpe_merges]] publishes the
+  /** Memo of the learned BPE merge table, keyed on the documents
+    * fixture and the round count: [[q_bpe_merges]] publishes the
     * learned artifact and [[q_bpe_fertility]] re-encodes the vocab with
-    * it, and each was independently re-running the 10-round distributed
-    * learn (~20 jobs). Either query populates the entry; both stay
-    * independently runnable; the learn itself is unchanged (Bench
-    * clears the memo per pass, so each pass re-pays the fill once —
-    * the fittedBasis/lateDrains accounting).
+    * it, so the 10-round distributed learn (~20 jobs) runs once per
+    * memo clear.
     */
-  private val bpeMergesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[graft.ops.BpeOps.Merge]]()
-
-  graft.ops.Memos.register(() => bpeMergesCache.clear(),
-    "q_bpe_merges", "q_bpe_fertility")
+  private val bpeMerges =
+    new Memos.Memo[(Memos.Fixture, Int), Seq[graft.ops.BpeOps.Merge]](
+      "q_bpe_merges", "q_bpe_fertility")
 
   private def learnedMerges(
       spark: org.apache.spark.sql.SparkSession, dir: String): Seq[graft.ops.BpeOps.Merge] =
-    bpeMergesCache.computeIfAbsent(
-      s"$dir#${graft.ops.Memos.dirFingerprint(s"$dir/documents.parquet")}#10", { _ =>
-        graft.ops.BpeOps.learnMerges(
-          Tables.documents(spark, dir), "text", rounds = 10)
-      })
+    bpeMerges.get((Memos.fixture(s"$dir/documents.parquet"), 10)) { _ =>
+      graft.ops.BpeOps.learnMerges(Tables.documents(spark, dir), "text", rounds = 10)
+    }
 
   val q_bpe_merges = QueryDef(
     "q_bpe_merges",

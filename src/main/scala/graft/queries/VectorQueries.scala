@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.ops.SimilarityOps
+import graft.ops.{Memos, SimilarityOps}
 import graft.ops.SimilarityOps.LshConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1996,9 +1996,9 @@ object VectorQueries {
     * PageRank bounded-collect class). Oracle replays the identical
     * quantized trajectory as an unrolled CTE chain.
     */
-  /** Per-process memo of the corpus RAW MOMENTS (n, Σx, Σxxᵀ) keyed on
-    * (SF dir, dim) — "scan once, serve every consumer": the moments are
-    * ITERATION-INDEPENDENT, so the project/variance pair (m=1, 8
+  /** Memo of the corpus RAW MOMENTS (n, Σx, Σxxᵀ), keyed on the
+    * embeddings fixture and dim — "scan once, serve every consumer":
+    * the moments are ITERATION-INDEPENDENT, so the project/variance pair (m=1, 8
     * iters), the transform/outlier pair (m=4, 6 iters) and the OPQ
     * rotation (m=8, 2 iters) all derive their bases from the SAME
     * single-pass aggregate, exactly as a deployed pipeline materializes
@@ -2020,21 +2020,15 @@ object VectorQueries {
     * oracles. The oracles replay the batch trajectory
     * unchanged.
     */
-  private val momentsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Array[Double], Array[Array[Double]])]()
-
-  graft.ops.Memos.register(() => momentsCache.clear(),
-    "q_pca_project", "q_pca_variance", "q_pca_transform",
-    "q_embed_outliers_pca", "q_ann_opq")
+  private val moments =
+    new Memos.Memo[(Memos.Fixture, Int), (Long, Array[Double], Array[Array[Double]])](
+      "q_pca_project", "q_pca_variance", "q_pca_transform",
+      "q_embed_outliers_pca", "q_ann_opq")
 
   private def rawMoments(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      dim: Int): (Long, Array[Double], Array[Array[Double]]) = {
-    // key on the fixture's CONTENT fingerprint, not the bare dir path:
-    // a rewrite under the same path must be a cache miss, not silently
-    // stale moments
-    val fp = graft.ops.Memos.dirFingerprint(s"$dir/embeddings.parquet")
-    momentsCache.computeIfAbsent(s"$dir#$fp#$dim", { _ =>
+      dim: Int): (Long, Array[Double], Array[Array[Double]]) =
+    moments.get((Memos.fixture(s"$dir/embeddings.parquet"), dim)) { _ =>
       // VectorMoments skips NULL / wrong-dim rows like the PCA scan
       // filter, and ADDITIONALLY drops rows containing any null
       // ELEMENT, where the batch scan's avg/element_at would skip the
@@ -2051,8 +2045,7 @@ object VectorQueries {
       val sx = Array.tabulate(dim)(j => m(1 + j))
       val sxx = Array.tabulate(dim, dim)((j, k) => m(1 + dim + j * dim + k))
       (n, sx, sxx)
-    })
-  }
+    }
 
   private def fittedBasis(
       spark: org.apache.spark.sql.SparkSession, dir: String,

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (SURVEY.md §2.9).
@@ -63,20 +63,21 @@ object StreamingOps {
       .select(col("win.start").as("hour"), col("event_type"), col("n"),
         col("total_value"))
 
-  /** Scoped shuffle-partition override: stateful streaming queries
-    * create one state store per shuffle partition PER stateful
-    * operator, so a bounded drain over bench-scale data pays fixed
-    * store/commit overhead × partitions. State partition count is
-    * fixed at FIRST query start (it is the state layout!) — size it to
-    * expected state volume, not to the session's batch default.
-    * Restores the previous value after the body.
-    */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
+  /** Scoped shuffle-partition override, restored after the body. */
+  private def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** State partitions of every bounded drain. A stateful query makes
+    * one state store per shuffle partition per stateful operator, and
+    * the count is fixed at the query's FIRST start (it is the state
+    * layout, recorded in the checkpoint), so it is sized to the drained
+    * state volume, not to the session's batch default.
+    */
+  private val StatePartitions = 8
 
   /** RocksDB state store class name (bundled with Spark 4). */
   val RocksDbProvider =
@@ -87,8 +88,7 @@ object StreamingOps {
     * HDFS-backed provider keeps every version of every store IN
     * EXECUTOR HEAP — fine at bench scale, an OOM ceiling at 100 TB
     * drained volume. RocksDB keeps state off-heap and spills to local
-    * disk, so state capacity scales with disk, not heap. State layout
-    * is fixed at FIRST query start, hence the single funnel here.
+    * disk, so state capacity scales with disk, not heap.
     */
   def ensureScaleSafeStateStore(spark: SparkSession): Unit = {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -97,22 +97,31 @@ object StreamingOps {
       spark.conf.set(key, RocksDbProvider)
   }
 
-  /** Drain a streaming DataFrame through a memory sink with
-    * AvailableNow semantics and return the materialized result —
-    * the bounded-drain pattern replacing the reference's
+  /** The one bounded-drain funnel: with [[StatePartitions]] shuffle
+    * partitions for the whole start→stop scope and the RocksDB state
+    * store, run `sink(stream.writeStream)` under `Trigger.AvailableNow`
+    * to completion, stop it, and return its per-batch progress — the
+    * bounded-drain pattern replacing the reference's
     * empty-batch-counting stop loop.
     */
+  private def drain(stream: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row])
+      : Seq[StreamingQueryProgress] = {
+    val spark = stream.sparkSession
+    withShufflePartitions(spark, StatePartitions) {
+      ensureScaleSafeStateStore(spark)
+      val q = sink(stream.writeStream).trigger(Trigger.AvailableNow()).start()
+      try { q.awaitTermination(); q.recentProgress.toSeq }
+      finally q.stop()
+    }
+  }
+
+  /** Drain a streaming DataFrame through a memory sink and return the
+    * materialized result.
+    */
   def drainToBatch(stream: DataFrame, outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    ensureScaleSafeStateStore(stream.sparkSession)
     val name = "drain_" + UUID.randomUUID().toString.replace("-", "")
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+    drain(stream)(_.format("memory").queryName(name).outputMode(outputMode))
     stream.sparkSession.table(name)
   }
 
@@ -128,21 +137,8 @@ object StreamingOps {
     * through this path (same oracle as the memory-sink drain — the
     * sink swap must not change the answer).
     */
-  def drainToParquetSink(stream: DataFrame, dir: String): DataFrame = {
-    ensureScaleSafeStateStore(stream.sparkSession)
-    val q = stream.writeStream
-      .format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    stream.sparkSession.read
-      .schema(stream.schema) // zero-row drains still have a readable schema
-      .parquet(s"$dir/out")
-  }
+  def drainToParquetSink(stream: DataFrame, dir: String): DataFrame =
+    drainToParquetSinkWithProgress(stream, dir)._1
 
   /** [[drainToParquetSink]] that ALSO returns the per-batch progress
     * events — the engine's own accounting (input rows, rows dropped by
@@ -151,30 +147,34 @@ object StreamingOps {
     * against a pure-SQL replay of the watermark protocol.
     */
   def drainToParquetSinkWithProgress(stream: DataFrame, dir: String)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    ensureScaleSafeStateStore(stream.sparkSession)
-    val q = stream.writeStream
-      .format("parquet")
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
+    val progress = drain(stream)(_.format("parquet")
       .option("path", s"$dir/out")
       .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val progress =
-      try { q.awaitTermination(); q.recentProgress.toSeq }
-      finally q.stop()
+      .outputMode(OutputMode.Append))
     (stream.sparkSession.read
-      .schema(stream.schema)
+      .schema(stream.schema) // zero-row drains still have a readable schema
       .parquet(s"$dir/out"), progress)
+  }
+
+  /** Drain a streaming DataFrame through `foreachBatch`, append mode,
+    * checkpointed under `checkpointDir`. `fn` gets each micro-batch
+    * and its id; an exception from it fails the drain and is rethrown.
+    */
+  def drainForeachBatch(stream: DataFrame, checkpointDir: String)(
+      fn: (DataFrame, Long) => Unit): Unit = {
+    drain(stream)(_.outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(fn))
   }
 
   /** Every [[tempSinkDir]] tree this JVM created, deleted best-effort
     * at JVM exit: sink/fixture dirs are only ever read back within the
     * process that wrote them, so at exit they are garbage — without
     * the hook a bench run leaves ~50 orphaned trees (one per
-    * dir-creating query per pass) for the machine's tmpdir lifetime
-    * (memo clearers additionally delete their trees per pass, see the
-    * callers).
+    * dir-creating query per pass) for the machine's tmpdir lifetime.
+    * Trees a memo fill owns ([[graft.ops.Memos.Fill.tempDir]]) also go
+    * when the memo clears.
     */
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private lazy val exitCleanup: Unit = {
@@ -199,12 +199,8 @@ object StreamingOps {
     d
   }
 
-  /** Recursively delete a [[tempSinkDir]] working tree. Memo clearers
-    * call this on the dirs their fills created — Bench clears memos at
-    * every pass and probes each consumer cold, so a fill that orphans
-    * its tmpdir leaks one tree per pass/probe for the machine's tmpdir
-    * lifetime. Best-effort: a failed delete leaves
-    * the orphan but never fails the caller.
+  /** Recursively delete a [[tempSinkDir]] working tree. Best-effort:
+    * a failed delete leaves the orphan but never fails the caller.
     */
   def deleteRecursively(path: String): Unit = {
     def del(f: java.io.File): Unit = {

@@ -441,7 +441,7 @@ class DedupOpsSpec extends AnyFunSuite {
         "(not a failure; check corpus/base-config if unexpected)")
   }
 
-  test("LSH config planner encodes the measured ProbeKnn laws") {
+  test("LSH config planner fits the 1M-5M measurements in PERF.md Rounds 11-12") {
     // the certified wide grid planned back from its deployment contract
     val wide = SimilarityOps.planLshConfig(
       nVectors = 2048, dim = 64, targetRecall = 0.45, maxProbes = 1)

@@ -58,4 +58,47 @@ class RocksDbStateSpec extends AnyFunSuite {
       if (prev.nonEmpty) spark.conf.set(key, prev) else spark.conf.unset(key)
     }
   }
+
+  /** A small parquet source dir of `n` rows (id, v) for the drains below. */
+  private def source(n: Int): String = {
+    val d = StreamingOps.tempSinkDir("graft_drain_src_")
+    spark.range(n).select(col("id"), (col("id") % 3).as("v"))
+      .write.mode("overwrite").parquet(s"$d/src")
+    s"$d/src"
+  }
+
+  private def fileStream(src: String) =
+    spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+
+  test("drainForeachBatch rethrows a failing batch and restores shuffle partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    val ckpt = StreamingOps.tempSinkDir("graft_drain_fail_")
+    val e = intercept[Exception] {
+      StreamingOps.drainForeachBatch(fileStream(source(10)), ckpt) { (_, _) =>
+        throw new IllegalStateException("batch function failed")
+      }
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => Option(c.getMessage).exists(_.contains("batch function failed"))),
+      s"the batch function's error is not in the chain: $e")
+    assert(spark.conf.get(key) === prior)
+  }
+
+  test("a drained query's offset log records 8 shuffle partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    assert(prior !== "8", "the session default must differ from the drain's count")
+    val work = StreamingOps.tempSinkDir("graft_drain_conf_")
+    val agg = fileStream(source(10))
+      .withColumn("ts", timestamp_seconds(col("id")))
+      .withWatermark("ts", "0 seconds")
+      .groupBy(window(col("ts"), "1 second")).count()
+    assert(StreamingOps.drainToParquetSink(agg, work).count() > 0)
+    assert(spark.conf.get(key) === prior)
+    val meta = scala.io.Source.fromFile(s"$work/ckpt/offsets/0")
+    val conf = try meta.getLines().find(_.startsWith("{\"batchWatermarkMs\"")) finally meta.close()
+    assert(conf.exists(_.contains("\"spark.sql.shuffle.partitions\":\"8\"")),
+      s"offset log metadata: $conf")
+  }
 }
