@@ -137,10 +137,10 @@ object ClusterOps {
     * engine quantizes.
     */
   def kmeansLloydOracleSql(k: Int, iters: Int): String = {
-    val q = (e: String) => s"FLOOR(($e)*1000000+0.5)/1000000.0"
+    import Reuse.quantMicroSql
     // same degenerate-input guard as the engine: stddev NULL/0 -> 1.0
     val qs = (e: String) =>
-      s"CASE WHEN COALESCE(${q(e)}, 0) > 0 THEN ${q(e)} ELSE 1.0 END"
+      s"CASE WHEN COALESCE(${quantMicroSql(e)}, 0) > 0 THEN ${quantMicroSql(e)} ELSE 1.0 END"
     val rounds = (1 to iters).map { i =>
       s"""a$i AS (
          |  SELECT pid, zx, zy, j AS cid FROM (
@@ -151,7 +151,7 @@ object ClusterOps {
          |c$i AS (
          |  SELECT c.j, COALESCE(m.nx, c.cx) AS cx, COALESCE(m.ny, c.cy) AS cy
          |  FROM c${i - 1} c LEFT JOIN (
-         |    SELECT cid, ${q("AVG(zx)")} AS nx, ${q("AVG(zy)")} AS ny
+         |    SELECT cid, ${quantMicroSql("AVG(zx)")} AS nx, ${quantMicroSql("AVG(zy)")} AS ny
          |    FROM a$i GROUP BY cid) m ON m.cid = c.j)""".stripMargin
     }.mkString(",\n")
     s"""WITH pts AS (
@@ -159,8 +159,8 @@ object ClusterOps {
        |    CAST(embedding[2] AS DOUBLE) AS y
        |  FROM embeddings),
        |st AS (
-       |  SELECT ${q("AVG(x)")} AS mx, ${qs("STDDEV_SAMP(x)")} AS sx,
-       |         ${q("AVG(y)")} AS my, ${qs("STDDEV_SAMP(y)")} AS sy
+       |  SELECT ${quantMicroSql("AVG(x)")} AS mx, ${qs("STDDEV_SAMP(x)")} AS sx,
+       |         ${quantMicroSql("AVG(y)")} AS my, ${qs("STDDEV_SAMP(y)")} AS sy
        |  FROM pts),
        |z AS (
        |  SELECT pid, (x - mx)/sx AS zx, (y - my)/sy AS zy

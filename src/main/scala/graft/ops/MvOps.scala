@@ -87,7 +87,7 @@ object MvOps {
     */
   def readStateLog(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/batch_*")
+    graft.streaming.StreamingOps.readBatchDirs(spark, stateDir)
 
   /** Derived statistics from state — exact mean and population
     * variance via the moments identity `var = s2/n − (s/n)²`, computed

@@ -27,6 +27,7 @@ import org.apache.spark.sql.functions._
   * with row count except the scans.
   */
 object PcaOps {
+  import Reuse.{quantMicroCol, quantMicroSql}
 
   private def quant(v: Double): Double = Reuse.quantMicro(v)
 
@@ -95,7 +96,7 @@ object PcaOps {
     val proj = withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
       .withColumn("s", expr("dot_product(c, v)"))
     proj.select(col("id").as("vec_id"),
-      (floor(col("s") * 1000000 + 0.5) / 1000000.0).as("pc1"))
+      quantMicroCol(col("s")).as("pc1"))
   }
 
   /** One-row spectrum summary: leading eigenvalue (Rayleigh quotient of
@@ -250,8 +251,7 @@ object PcaOps {
     val c = centered(x, array(mu.map(lit).toIndexedSeq: _*))
     val projCols = comps.zipWithIndex.map { case (v, t) =>
       val vLit = array(v.map(lit).toIndexedSeq: _*)
-      (floor(expr("dot_product(c, v" + t + ")") * 1000000 + 0.5) / 1000000.0)
-        .as(s"pc${t + 1}")
+      quantMicroCol(expr("dot_product(c, v" + t + ")")).as(s"pc${t + 1}")
     }
     val withVs = comps.zipWithIndex.foldLeft(c) { case (df, (v, t)) =>
       df.withColumn("v" + t, array(v.map(lit).toIndexedSeq: _*))
@@ -268,7 +268,6 @@ object PcaOps {
     */
   private def deflatedCtes(dim: Int, iters: Int, m: Int,
       centerProj: Boolean = true): String = {
-    def q(e: String) = s"FLOOR(($e)*1000000+0.5)/1000000.0"
     val v0 = java.lang.Double.toString(quant(1.0 / math.sqrt(dim.toDouble)))
     val chains = (0 until m).map { t =>
       val rounds = (1 to iters).map { k =>
@@ -295,7 +294,7 @@ object PcaOps {
            |  FROM c JOIN s${t}_$k USING (id) GROUP BY c.idx),
            |$ortho,
            |v${t}_$k AS MATERIALIZED (
-           |  SELECT idx, ${q(s"w / sqrt((SELECT SUM(w*w) FROM o${t}_$k))")} AS vv
+           |  SELECT idx, ${quantMicroSql(s"w / sqrt((SELECT SUM(w*w) FROM o${t}_$k))")} AS vv
            |  FROM o${t}_$k)""".stripMargin
       }.mkString(",\n")
       // per-component start (mirrors topComponents): uniform for
@@ -316,18 +315,18 @@ object PcaOps {
        |    unnest(range(1, len(embedding)+1)) AS idx
        |  FROM embeddings
        |  WHERE embedding IS NOT NULL AND len(embedding) = $dim),
-       |mu AS MATERIALIZED (SELECT idx, ${q("AVG(val)")} AS m FROM e GROUP BY idx),
+       |mu AS MATERIALIZED (SELECT idx, ${quantMicroSql("AVG(val)")} AS m FROM e GROUP BY idx),
        |c AS MATERIALIZED (
        |  SELECT id, e.idx, val - m AS cv FROM e JOIN mu USING (idx)),
        |$chains,
        |vfall AS MATERIALIZED ($vfall),
        |p AS MATERIALIZED (
        |  ${if (centerProj)
-            s"""SELECT c.id, v.t, ${q("SUM(c.cv * v.vv)")} AS pc
+            s"""SELECT c.id, v.t, ${quantMicroSql("SUM(c.cv * v.vv)")} AS pc
                |  FROM c JOIN vfall v USING (idx) GROUP BY c.id, v.t"""
                 .stripMargin
           else
-            s"""SELECT e.id, v.t, ${q("SUM(e.val * v.vv)")} AS pc
+            s"""SELECT e.id, v.t, ${quantMicroSql("SUM(e.val * v.vv)")} AS pc
                |  FROM e JOIN vfall v USING (idx) GROUP BY e.id, v.t"""
                 .stripMargin})""".stripMargin
   }
@@ -600,7 +599,7 @@ object PcaOps {
     withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
       .withColumn("s", expr("dot_product(c, v)"))
       .select(col("id").as("vec_id"),
-        (floor(col("s") * 1000000 + 0.5) / 1000000.0).as("pc1"))
+        quantMicroCol(col("s")).as("pc1"))
   }
 
   /** The shared oracle CTE chain: centered values `c(id, idx, cv)` and
@@ -609,7 +608,6 @@ object PcaOps {
     * normalize with the engine's exact quantization points.
     */
   private def trajectoryCtes(dim: Int, iters: Int): String = {
-    def q(e: String) = s"FLOOR(($e)*1000000+0.5)/1000000.0"
     val v0 = java.lang.Double.toString(quant(1.0 / math.sqrt(dim.toDouble)))
     // AS MATERIALIZED: each iterate is referenced twice (w by its own
     // normalizing scalar subquery, v by the next round) — without the
@@ -620,7 +618,7 @@ object PcaOps {
          |w$k AS MATERIALIZED (SELECT c.idx, SUM(cv * s) AS w
          |  FROM c JOIN s$k USING (id) GROUP BY c.idx),
          |v$k AS MATERIALIZED (
-         |  SELECT idx, ${q(s"w / sqrt((SELECT SUM(w*w) FROM w$k))")} AS vv
+         |  SELECT idx, ${quantMicroSql(s"w / sqrt((SELECT SUM(w*w) FROM w$k))")} AS vv
          |  FROM w$k)""".stripMargin
     }.mkString(",\n")
     s"""e AS MATERIALIZED (
@@ -629,7 +627,7 @@ object PcaOps {
        |    unnest(range(1, len(embedding)+1)) AS idx
        |  FROM embeddings
        |  WHERE embedding IS NOT NULL AND len(embedding) = $dim),
-       |mu AS MATERIALIZED (SELECT idx, ${q("AVG(val)")} AS m FROM e GROUP BY idx),
+       |mu AS MATERIALIZED (SELECT idx, ${quantMicroSql("AVG(val)")} AS m FROM e GROUP BY idx),
        |c AS MATERIALIZED (
        |  SELECT id, e.idx, val - m AS cv FROM e JOIN mu USING (idx)),
        |v0 AS MATERIALIZED (SELECT idx, $v0 AS vv FROM mu),
@@ -644,7 +642,8 @@ object PcaOps {
        |GROUP BY id ORDER BY vec_id""".stripMargin
 
   def varianceOracleSql(dim: Int, iters: Int): String = {
-    def q(e: String) = s"FLOOR(($e)*1000000+0.5)/1000000.0"
+    val lambda = quantMicroSql("ss / (n - 1)")
+    val total = quantMicroSql("tt / (n - 1)")
     s"""WITH ${trajectoryCtes(dim, iters)},
        |sf AS MATERIALIZED (SELECT id, SUM(cv * vv) AS s
        |  FROM c JOIN v$iters USING (idx) GROUP BY id),
@@ -654,9 +653,9 @@ object PcaOps {
        |    (SELECT SUM(s*s) FROM sf) AS ss,
        |    (SELECT SUM(cv*cv) FROM c) AS tt)
        |SELECT n AS n_vectors,
-       |  ${q("ss / (n - 1)")} AS lambda1,
-       |  ${q("tt / (n - 1)")} AS total_var,
-       |  ${q(s"(${q("ss / (n - 1)")}) / (${q("tt / (n - 1)")})")} AS var_ratio
+       |  $lambda AS lambda1,
+       |  $total AS total_var,
+       |  ${quantMicroSql(s"($lambda) / ($total)")} AS var_ratio
        |FROM agg""".stripMargin
   }
 }

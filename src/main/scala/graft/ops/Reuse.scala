@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.floor
 import org.apache.spark.storage.StorageLevel
 
 /** Shared-subplan materialization for DataFrames consumed by several
@@ -135,6 +136,12 @@ object Reuse {
     * output (Lloyd's centroids, IVF seeds, PQ codebooks).
     */
   def quantMicro(v: Double): Double = math.floor(v * 1000000 + 0.5) / 1000000.0
+
+  /** [[quantMicro]] as a Column expression. */
+  def quantMicroCol(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000.0
+
+  /** [[quantMicro]] rendered into oracle SQL over the expression `e`. */
+  def quantMicroSql(e: String): String = s"FLOOR(($e)*1000000+0.5)/1000000.0"
 
   /** As [[materialized]], plus a release handle for callers that OWN
     * the cache lifecycle (their last action over the materialized plan

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,6 +23,13 @@ import org.apache.spark.sql.functions._
   * graph, capped, multi-probe, two-phase, staged — is ONE kernel,
   * [[lshKnn]], driven by one validated [[LshConfig]];
   * [[lshNearDupPairs]] shares its bucket builder and occupancy cap.
+  *
+  * Every top-k kernel (brute, sketch, IVF, PQ, JL, IVF-PQ, LSH) ends in
+  * the same tail: [[vecSide]] builds each (id, vector, norm) side,
+  * [[scorePairs]] scores candidate pairs (zero-norm vectors drop),
+  * [[topK]] ranks by (cos desc, neighbor_id) and [[roundCos]] emits the
+  * certified `cos_sim`. One Lloyd loop ([[learnedSubspaceCodebooks]])
+  * learns both the IVF centroids and the PQ codebooks.
   */
 object SimilarityOps {
 
@@ -89,26 +96,10 @@ object SimilarityOps {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("qn", sqrt(expr("dot_product(qv, qv)"))))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("cn", sqrt(expr("dot_product(cv, cv)")))
-      // zero-norm vectors have no cosine: 0/0 = NaN sorts FIRST under
-      // desc and would be every query's rank-1 neighbor (same guard
-      // semanticTopK applies; an empty doc embeds to the zero vector)
-      .filter(col("cn") > 0)
-    val scored = c.crossJoin(q)
-      .filter(col("query_id") =!= col("neighbor_id") && col("qn") > 0)
-      .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    val q = broadcast(vecSide(queries, idCol, vecCol, "query_id", "qv", "qn"))
+    val c = vecSide(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
+    roundCos(topK(scorePairs(
+      c.crossJoin(q).filter(col("query_id") =!= col("neighbor_id"))), k))
   }
 
   /** Hamming-sketch RADIUS prefilter + exact rerank — the recall
@@ -148,46 +139,29 @@ object SimilarityOps {
   def sketchTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      bits: Int, dim: Int, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= bits,
-      s"maxHamming must be in [0, $bits], got $maxHamming")
-    // the two inputs can belong to DIFFERENT sessions (a foreachBatch
-    // micro-batch frame is analyzed under a cloned session whose
-    // function registry snapshot may predate ours; the static corpus
-    // keeps the main session) — the final plan resolves under the
-    // CORPUS side's session, so register on both
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    // one broadcast row per query: id, sketch, vector, norm
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("qn", sqrt(expr("dot_product(qv, qv)")))
-      .filter(col("qn") > 0)
-      .withColumn("qsk", expr(s"hyperplane_sketch(qv, $bits, $dim)")))
+      bits: Int, dim: Int, maxHamming: Int): DataFrame =
     // the corpus-side index tuple, materialized BEHIND an exchange:
     // whole-stage codegen defers a stream-side projection to first
     // use, which for a nested-loop join is INSIDE the per-broadcast-
     // row loop — without the barrier the sketch is recomputed per
     // (corpus, query) PAIR (measured 0.5 s → 12 s at 97.5k pairs;
     // thread-dump pinned in computeWide).
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("cn", sqrt(expr("dot_product(cv, cv)")))
+    sketchTopKIndexed(queries,
+      sketchTuple(corpus, idCol, vecCol, bits, dim)
+        .repartition(corpus.sparkSession.sessionState.conf.numShufflePartitions),
+      idCol, vecCol, k, bits, dim, maxHamming)
+
+  /** The stored-index tuple: (neighbor_id, vector, norm, sketch) with
+    * zero-norm rows dropped (they can never match — same filter as the
+    * search path and the oracle's norm>0 CTE).
+    */
+  private def sketchTuple(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      bits: Int, dim: Int, metaCols: Seq[String] = Nil): DataFrame = {
+    graft.functions.GraftFunctions.register(corpus.sparkSession)
+    vecSide(corpus, idCol, vecCol, "neighbor_id", "cv", "cn", metaCols)
       .filter(col("cn") > 0)
       .withColumn("csk", expr(s"hyperplane_sketch(cv, $bits, $dim)"))
-      .repartition(corpus.sparkSession.sessionState.conf.numShufflePartitions)
-    val scored = c.crossJoin(q)
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        expr("hamming_dist(qsk, csk)") <= maxHamming)
-      .select(col("query_id"), col("neighbor_id"),
-        (expr("dot_product(qv, cv)") / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
   }
 
   /** [[sketchTopK]]'s corpus tuple as a STORED index: the
@@ -199,22 +173,6 @@ object SimilarityOps {
     * by id (the StorageSpec layout contract) so downstream id-keyed
     * joins (recall eval, metadata enrich) run exchange-free.
     */
-  /** The stored-index tuple: (neighbor_id, vector, norm, sketch) with
-    * zero-norm rows dropped (they can never match — same filter as the
-    * search path and the oracle's norm>0 CTE).
-    */
-  private def sketchTuple(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      bits: Int, dim: Int, metaCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col(idCol).as("neighbor_id") +:
-        col(vecCol).cast("array<double>").as("cv") +:
-        metaCols.map(col): _*)
-      .withColumn("cn", sqrt(expr("dot_product(cv, cv)")))
-      .filter(col("cn") > 0)
-      .withColumn("csk", expr(s"hyperplane_sketch(cv, $bits, $dim)"))
-  }
-
   def buildSketchIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       bits: Int, dim: Int, table: String, nBuckets: Int = 8,
@@ -256,26 +214,22 @@ object SimilarityOps {
       k: Int, bits: Int, dim: Int, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= bits,
       s"maxHamming must be in [0, $bits], got $maxHamming")
+    // the two inputs can belong to DIFFERENT sessions (a foreachBatch
+    // micro-batch frame is analyzed under a cloned session whose
+    // function registry snapshot may predate ours; the static corpus
+    // keeps the main session) — the final plan resolves under the
+    // CORPUS side's session, so register on both
     graft.functions.GraftFunctions.register(queries.sparkSession)
     graft.functions.GraftFunctions.register(index.sparkSession)
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("qn", sqrt(expr("dot_product(qv, qv)")))
+    // one broadcast row per query: id, sketch, vector, norm
+    val q = broadcast(vecSide(queries, idCol, vecCol, "query_id", "qv", "qn")
       .filter(col("qn") > 0)
       .withColumn("qsk", expr(s"hyperplane_sketch(qv, $bits, $dim)")))
-    val scored = index.select(col("neighbor_id"), col("cv"), col("cn"), col("csk"))
-      .crossJoin(q)
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        expr("hamming_dist(qsk, csk)") <= maxHamming)
-      .select(col("query_id"), col("neighbor_id"),
-        (expr("dot_product(qv, cv)") / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    roundCos(topK(scorePairs(
+      index.select(col("neighbor_id"), col("cv"), col("cn"), col("csk"))
+        .crossJoin(q)
+        .filter(col("query_id") =!= col("neighbor_id") &&
+          expr("hamming_dist(qsk, csk)") <= maxHamming)), k))
   }
 
   /** Data-driven calibration of [[sketchTopK]]'s Hamming radius: the
@@ -332,9 +286,7 @@ object SimilarityOps {
       vectors: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     graft.functions.GraftFunctions.register(vectors.sparkSession)
-    val v = vectors.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+    val v = vecSide(vectors, idCol, vecCol, "id", "vd", "nrm")
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .withColumn("cos",
         expr("dot_product(a.vd, b.vd)") / (col("a.nrm") * col("b.nrm")))
@@ -343,114 +295,134 @@ object SimilarityOps {
         round(col("cos"), 6).as("cos_sim"))
   }
 
+  /** Deterministic Lloyd's refinement of `subspaces` codebooks of `k`
+    * centroids each, sub-space s owning components [s·d, (s+1)·d) with
+    * d = dim / subspaces — the IVF centroid table is the one-sub-space
+    * case ([[learnedCentroids]]), the PQ codebooks the M-sub-space one.
+    * The collected state is bounded: k × dim doubles, exactly the
+    * broadcast-sized table. Seeds = the k lowest-id corpus vectors
+    * micro-quantized to the 1e-6 grid; each round assigns map-side (via
+    * the codegen'd [[graft.functions.NearestCentroids]], probes = 1)
+    * and recomputes each cell's element-wise mean with the repo's
+    * float-determinism policy (per-term integer micro-units before the
+    * order-free SUM, floor-quantized mean) so a DuckDB oracle replays
+    * every round CTE-by-CTE (q_ann_ivf, q_ann_pq). All sub-spaces are learned
+    * JOINTLY — one job per round over the corpus instead of M (measured
+    * 3.0 → ~1 s on q_ann_pq at bench scale), semantically identical to
+    * M independent runs on the slices. Empty cells keep their previous
+    * centroid; a zero-norm slice has an empty (cosine) assignment, which
+    * explodes to no row, so it never pulls a centroid.
+    */
+  private def learnedSubspaceCodebooks(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      subspaces: Int, k: Int, iters: Int,
+      metric: String = "cosine"): Array[Array[Array[Double]]] = {
+    val vd = col(vecCol).cast("array<double>")
+    val seedRows = corpus.orderBy(col(idCol)).limit(k).select(vd).collect()
+      .map(_.getSeq[Double](0).toArray)
+    val subDim = seedRows.headOption.fold(0)(_.length) / subspaces
+    var books: Array[Array[Array[Double]]] = Array.tabulate(subspaces)(s =>
+      seedRows.map(v => v.slice(s * subDim, (s + 1) * subDim).map(Reuse.quantMicro)))
+    for (_ <- 1 to iters) {
+      val codes = array((0 until subspaces).map(s =>
+        nearestCells(slice(vd, s * subDim + 1, subDim), books(s), 1, metric)): _*)
+      // bounded collect: at most subspaces × k × subDim = M·k·(dim/M)
+      // = k·dim rows — the same driver state a broadcast would hold
+      val upd = corpus.select(codes.as("codes"), posexplode(vd).as(Seq("di", "v")))
+        .select((col("di") / subDim).cast("int").as("s"),
+          (col("di") % subDim).as("idx"), col("v"), col("codes"))
+        .select(col("s"), col("idx"), col("v"),
+          explode(element_at(col("codes"), col("s") + 1)).as("cell"))
+        .groupBy(col("s"), col("cell"), col("idx"))
+        .agg(sum(floor(col("v") * 1000000 + 0.5).cast("long")).as("su"),
+          count(lit(1)).as("n"))
+        .collect()
+      val bySub = upd.groupBy(_.getInt(0))
+      books = books.zipWithIndex.map { case (book, s) =>
+        val cells = bySub.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
+          .groupBy(_.getLong(1))
+        book.zipWithIndex.map { case (old, j) =>
+          cells.get(j.toLong).fold(old) { rs =>
+            val next = old.clone()
+            rs.foreach { r =>
+              next(r.getInt(2)) =
+                math.floor(r.getLong(3).toDouble / r.getLong(4) + 0.5) / 1000000.0
+            }
+            next
+          }
+        }
+      }
+    }
+    books
+  }
+
+  /** The IVF centroid table: [[learnedSubspaceCodebooks]] over the
+    * whole vector (one sub-space). */
+  private def learnedCentroids(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      k: Int, iters: Int): Array[Array[Double]] =
+    learnedSubspaceCodebooks(corpus, idCol, vecCol, 1, k, iters).head
+
+  /** The `probes` cells nearest to `v` among `cents` (cell id = index
+    * into `cents`), nearest first — the codegen'd
+    * [[graft.functions.NearestCentroids]]; empty for a zero vector
+    * under cosine. */
+  private def nearestCells(v: Column, cents: Array[Array[Double]],
+      probes: Int, metric: String = "cosine"): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.functions.NearestCentroids(
+      GraftColumnBridge.expression(v), Array.tabulate(cents.length)(_.toLong),
+      cents, probes, metric))
+  }
+
+  /** PQ reconstruction of `vd`: each sub-space slice replaced by its
+    * nearest codeword. An unassigned (zero-norm) slice yields a null
+    * vector, whose null norm drops it at [[scorePairs]]. */
+  private def pqRecon(vd: Column, codebooks: Array[Array[Array[Double]]],
+      metric: String = "cosine"): Column = {
+    val subDim = codebooks.head.headOption.fold(0)(_.length)
+    concat(codebooks.indices.map { s =>
+      val cents = codebooks(s)
+      // try_element_at, twice: under ANSI a plain element_at throws on an
+      // unassigned slice's empty code array, and is declared non-null
+      val code = try_element_at(
+        nearestCells(slice(vd, s * subDim + 1, subDim), cents, 1, metric), lit(1))
+      try_element_at(array(cents.map(c => array(c.map(lit): _*)): _*), code.cast("int") + 1)
+    }: _*)
+  }
+
   /** IVF (inverted-file) approximate top-k: partition the corpus into
     * Voronoi cells around `nCentroids` seed vectors (the lowest-id
-    * vectors — deterministic; a KMeans fit is the quality upgrade),
-    * then search each query only inside the `nProbe` cells whose
-    * centroids are nearest to it. Cell assignment is MAP-SIDE: the
-    * centroid table (nCentroids × dim doubles, broadcast-sized by
-    * construction) rides inside a codegen'd expression
-    * ([[graft.functions.NearestCentroids]]), so assigning the corpus
-    * is a shuffle-free projection — the algebraic crossJoin + window
+    * vectors — deterministic; `learnIters` > 0 refines them with
+    * [[learnedCentroids]]), then search each query only inside the
+    * `nProbe` cells whose centroids are nearest to it. Cell assignment
+    * is MAP-SIDE: the centroid table (nCentroids × dim doubles,
+    * broadcast-sized by construction) rides inside a codegen'd
+    * expression ([[nearestCells]]), so assigning the corpus is a
+    * shuffle-free projection — the algebraic crossJoin + window
     * formulation shuffles the corpus twice for the same answer.
     * Per-query candidate count drops from |corpus| to
     * ~|corpus|·nProbe/nCentroids. Recall < 1 by construction —
     * measured against [[bruteForceTopK]] in the test suite.
     */
-  /** Deterministic d-dim Lloyd's refinement of the IVF centroid table —
-    * the quality upgrade over first-k-by-id seeds, same bounded driver
-    * state (k × dim doubles = exactly the broadcast-sized centroid
-    * table). Seeds = the k lowest-id corpus vectors micro-quantized to
-    * the 1e-6 grid; each round assigns map-side (cosine, via the
-    * codegen'd [[graft.functions.NearestCentroids]], probes = 1) and
-    * recomputes each cell's element-wise mean with the repo's
-    * float-determinism policy (per-term integer micro-units before the
-    * order-free SUM, floor-quantized mean) so a DuckDB oracle replays
-    * every round CTE-by-CTE ([[graft.queries.VectorQueries]]
-    * q_ann_ivf). Empty cells keep their previous centroid; zero-norm
-    * vectors are unassigned and never pull a centroid.
-    */
-  def learnedCentroids(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): Array[Array[Double]] = {
-    import org.apache.spark.sql.GraftColumnBridge
-    def quant(v: Double): Double = Reuse.quantMicro(v)
-    val vd = col(vecCol).cast("array<double>")
-    var cents: Array[Array[Double]] = corpus.orderBy(col(idCol)).limit(k)
-      .select(vd).collect()
-      .map(_.getSeq[Double](0).toArray.map(quant))
-    val ids = Array.tabulate(cents.length)(_.toLong)
-    for (_ <- 1 to iters) {
-      val assigned = corpus.select(vd.as("vd"),
-        explode(GraftColumnBridge.column(graft.functions.NearestCentroids(
-          GraftColumnBridge.expression(vd), ids, cents, 1))).as("cell"))
-      // k×dim bounded collect: per-(cell, dim) integer micro-unit sums
-      val upd = assigned
-        .select(col("cell"), posexplode(col("vd")).as(Seq("idx", "v")))
-        .groupBy(col("cell"), col("idx"))
-        .agg(sum(floor(col("v") * 1000000 + 0.5).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getLong(0))
-      cents = cents.zipWithIndex.map { case (old, j) =>
-        upd.get(j.toLong) match {
-          case Some(rows) =>
-            val next = old.clone()
-            rows.foreach { r =>
-              next(r.getInt(1)) =
-                math.floor(r.getLong(2).toDouble / r.getLong(3) + 0.5) / 1000000.0
-            }
-            next
-          case None => old
-        }
-      }
-    }
-    cents
-  }
-
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCentroids: Int, nProbe: Int, learnIters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     graft.functions.GraftFunctions.register(queries.sparkSession)
     // bounded driver materialization: exactly the rows any broadcast
     // would collect (nCentroids vectors)
-    val (centIds, centVecs) =
-      if (learnIters > 0) {
-        val learned = learnedCentroids(corpus, idCol, vecCol, nCentroids, learnIters)
-        (Array.tabulate(learned.length)(_.toLong), learned)
-      } else {
-        val centRows = corpus.orderBy(col(idCol)).limit(nCentroids)
-          .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-          .collect()
-        (centRows.map(_.getLong(0)), centRows.map(_.getSeq[Double](1).toArray))
-      }
-
-    def assign(df: DataFrame, id: String, probes: Int): DataFrame = {
-      val vd = col(vecCol).cast("array<double>")
-      df.select(col(id), vd.as("vd"),
-        explode(GraftColumnBridge.column(graft.functions.NearestCentroids(
-          GraftColumnBridge.expression(vd), centIds, centVecs, probes))).as("cell"))
-    }
-
-    val corpusCells = assign(corpus, idCol, probes = 1)
-      .withColumnRenamed(idCol, "neighbor_id").withColumnRenamed("vd", "cv2")
-      .withColumn("cn", sqrt(expr("dot_product(cv2, cv2)")))
-    val queryCells = assign(queries, idCol, probes = nProbe)
-      .withColumnRenamed(idCol, "query_id").withColumnRenamed("vd", "qv")
-      .withColumn("qn", sqrt(expr("dot_product(qv, qv)")))
-
-    val scored = queryCells.join(corpusCells, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", expr("dot_product(qv, cv2)") / (col("qn") * col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    val cents =
+      if (learnIters > 0) learnedCentroids(corpus, idCol, vecCol, nCentroids, learnIters)
+      else corpus.orderBy(col(idCol)).limit(nCentroids)
+        .select(col(vecCol).cast("array<double>")).collect()
+        .map(_.getSeq[Double](0).toArray)
+    def side(df: DataFrame, id: String, v: String, n: String, probes: Int) =
+      vecSide(df, idCol, vecCol, id, v, n)
+        .withColumn("cell", explode(nearestCells(col(v), cents, probes)))
+    roundCos(topK(scorePairs(side(queries, "query_id", "qv", "qn", nProbe)
+      .join(side(corpus, "neighbor_id", "cv", "cn", 1), "cell")
+      .filter(col("query_id") =!= col("neighbor_id"))), k))
   }
 
   /** Product-quantization ANN with asymmetric scoring (ADC) — the
@@ -470,94 +442,21 @@ object SimilarityOps {
     * repo's deterministic assignment kernel), not classical L2 —
     * appropriate here because the end metric is cosine similarity and
     * it keeps every stage replayable CTE-by-CTE in the DuckDB oracle
-    * (codebooks are learned per sub-space with the same micro-
-    * quantized deterministic Lloyd's as IVF, [[learnedCentroids]] on
-    * the slice). Recall vs [[bruteForceTopK]] is asserted in the spec.
+    * (codebooks are learned per sub-space by the same micro-quantized
+    * deterministic Lloyd's as IVF, [[learnedSubspaceCodebooks]]).
+    * Recall vs [[bruteForceTopK]] is asserted in the spec.
     */
-  /** All M sub-space codebooks learned JOINTLY — semantically identical
-    * to M independent [[learnedCentroids]] runs on the slices (same
-    * seeds, same assignment kernel, same micro-quantized means, so the
-    * per-sub-space oracle CTEs replay it unchanged), but each Lloyd
-    * round is ONE job over the corpus instead of M: the codes for all
-    * sub-spaces are computed in a single projection and the update
-    * aggregates by (sub-space, cell, component) in one shuffle. Cuts
-    * the fixed per-job cost M-fold — the difference measured 3.0 →
-    * ~1 s on q_ann_pq at bench scale.
-    */
-  private def learnedSubspaceCodebooks(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      subspaces: Int, subDim: Int, k: Int, iters: Int,
-      metric: String = "cosine"): Array[Array[Array[Double]]] = {
-    import org.apache.spark.sql.GraftColumnBridge
-    def quant(v: Double): Double = Reuse.quantMicro(v)
-    val vd = col(vecCol).cast("array<double>")
-    val seedRows = corpus.orderBy(col(idCol)).limit(k).select(vd).collect()
-      .map(_.getSeq[Double](0).toArray)
-    var books: Array[Array[Array[Double]]] = Array.tabulate(subspaces)(s =>
-      seedRows.map(v => v.slice(s * subDim, (s + 1) * subDim).map(quant)))
-    val ids = Array.tabulate(seedRows.length)(_.toLong)
-    for (_ <- 1 to iters) {
-      val codeCols = (0 until subspaces).map { s =>
-        element_at(GraftColumnBridge.column(graft.functions.NearestCentroids(
-          GraftColumnBridge.expression(slice(vd, s * subDim + 1, subDim)),
-          ids, books(s), 1, metric)), 1)
-      }
-      // bounded collect: at most subspaces × k × subDim = M·k·(dim/M)
-      // = k·dim rows — the same driver state a broadcast would hold
-      val upd = corpus.select(vd.as("vd"), array(codeCols: _*).as("codes"))
-        .select(col("codes"), posexplode(col("vd")).as(Seq("di", "v")))
-        .select((col("di") / subDim).cast("int").as("s"),
-          element_at(col("codes"), (col("di") / subDim).cast("int") + 1).as("cell"),
-          (col("di") % subDim).as("idx"), col("v"))
-        .filter(col("cell").isNotNull) // zero-norm slice: unassigned
-        .groupBy(col("s"), col("cell"), col("idx"))
-        .agg(sum(floor(col("v") * 1000000 + 0.5).cast("long")).as("su"),
-          count(lit(1)).as("n"))
-        .collect()
-      val bySub = upd.groupBy(_.getInt(0))
-      books = books.zipWithIndex.map { case (book, s) =>
-        val cells = bySub.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-          .groupBy(_.getLong(1))
-        book.zipWithIndex.map { case (old, j) =>
-          cells.get(j.toLong) match {
-            case Some(rs) =>
-              val next = old.clone()
-              rs.foreach { r =>
-                next(r.getInt(2)) =
-                  math.floor(r.getLong(3).toDouble / r.getLong(4) + 0.5) / 1000000.0
-              }
-              next
-            case None => old
-          }
-        }
-      }
-    }
-    books
-  }
-
   def pqTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       subspaces: Int, codebookSize: Int, learnIters: Int, dim: Int,
       metric: String = "cosine"): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    val subDim = dim / subspaces
-    require(subDim * subspaces == dim, "dim must split evenly into subspaces")
+    require(dim % subspaces == 0, "dim must split evenly into subspaces")
     val vd = col(vecCol).cast("array<double>")
-    val codebooks: Seq[Array[Array[Double]]] = learnedSubspaceCodebooks(
-      corpus, idCol, vecCol, subspaces, subDim, codebookSize, learnIters,
-      metric).toSeq
-    val reconCol = concat((0 until subspaces).map { s =>
-      val cents = codebooks(s)
-      val ids = Array.tabulate(cents.length)(_.toLong)
-      val code = element_at(GraftColumnBridge.column(graft.functions.NearestCentroids(
-        GraftColumnBridge.expression(slice(vd, s * subDim + 1, subDim)),
-        ids, cents, 1, metric)), 1)
-      val centLits = array(cents.map(c => array(c.map(lit): _*)): _*)
-      element_at(centLits, code.cast("int") + 1)
-    }: _*)
-    val recon = corpus.select(col(idCol), reconCol.as("recon"))
+    val codebooks = learnedSubspaceCodebooks(
+      corpus, idCol, vecCol, subspaces, codebookSize, learnIters, metric)
+    val recon = corpus.select(col(idCol), pqRecon(vd, codebooks, metric).as("recon"))
     val q = queries.select(col(idCol), vd.as("recon"))
     bruteForceTopK(q, recon, idCol, "recon", k)
   }
@@ -586,47 +485,28 @@ object SimilarityOps {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     graft.functions.GraftFunctions.register(queries.sparkSession)
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    def proj(df: DataFrame, outId: String): DataFrame =
-      df.select(col(idCol).as(outId), col(vecCol).cast("array<double>").as("vd"))
-        .select(col(outId), col("vd"),
-          expr(s"random_project(vd, $outDim, $dim)").as("pv"))
-        .withColumn("vn", sqrt(expr("dot_product(vd, vd)")))
-        .withColumn("pn", sqrt(expr("dot_product(pv, pv)")))
-        .filter(col("vn") > 0 && col("pn") > 0)
-    val q = broadcast(proj(queries, "query_id")
-      .select(col("query_id"), col("vd").as("qv"), col("pv").as("qp"),
-        col("vn").as("qn"), col("pn").as("qpn")))
-    val c = proj(corpus, "neighbor_id")
-      .select(col("neighbor_id"), col("vd").as("cv"), col("pv").as("cp"),
-        col("vn").as("cn"), col("pn").as("cpn"))
+    def proj(df: DataFrame, id: String, v: String, n: String, p: String, pn: String) =
+      vecSide(df, idCol, vecCol, id, v, n)
+        .withColumn(p, expr(s"random_project($v, $outDim, $dim)"))
+        .withColumn(pn, sqrt(expr(s"dot_product($p, $p)")))
+        .filter(col(n) > 0 && col(pn) > 0)
+    val q = broadcast(proj(queries, "query_id", "qv", "qn", "qp", "qpn"))
+    val c = proj(corpus, "neighbor_id", "cv", "cn", "cp", "cpn")
       // materialization barrier: same WSCG deferred-projection trap as
       // sketchTopK — without it the projection recomputes per PAIR
       // inside the broadcast-nested-loop stream side
       .repartition(corpus.sparkSession.sessionState.conf.numShufflePartitions)
-    // stage 1 ships ONLY (query_id, neighbor_id, pcos) into the rank
-    // shuffle (the two-phase payload discipline — original vectors
+    // stage 1 ranks the PROJECTED cosine and keeps only (query_id,
+    // neighbor_id) (the two-phase payload discipline — original vectors
     // re-join AFTER the shortlist, touching <= shortlist·|queries| rows)
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id"))
-    val short = c.select(col("neighbor_id"), col("cp"), col("cpn")).crossJoin(
-        broadcast(q.select(col("query_id"), col("qp"), col("qpn"))))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (expr("dot_product(qp, cp)") / (col("qpn") * col("cpn"))).as("pcos"))
-      .withColumn("srank", row_number().over(w1))
-      .filter(col("srank") <= shortlist)
+    val short = topK(scorePairs(
+      c.select(col("neighbor_id"), col("cp").as("cv"), col("cpn").as("cn")).crossJoin(
+        broadcast(q.select(col("query_id"), col("qp").as("qv"), col("qpn").as("qn"))))
+        .filter(col("query_id") =!= col("neighbor_id"))), shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short
+    roundCos(topK(scorePairs(short
       .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))), "query_id")
-      .join(c.select(col("neighbor_id"), col("cv"), col("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (expr("dot_product(qv, cv)") / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+      .join(c.select(col("neighbor_id"), col("cv"), col("cn")), "neighbor_id")), k))
   }
 
   /** IVF × PQ composition (the FAISS IVFADC shape) — the second large-N
@@ -650,52 +530,24 @@ object SimilarityOps {
       idCol: String, vecCol: String, k: Int,
       nCentroids: Int, nProbe: Int, ivfIters: Int,
       subspaces: Int, codebookSize: Int, pqIters: Int, dim: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    val subDim = dim / subspaces
-    require(subDim * subspaces == dim, "dim must split evenly into subspaces")
+    require(dim % subspaces == 0, "dim must split evenly into subspaces")
     val vd = col(vecCol).cast("array<double>")
     // the two bounded driver tables a deployed index would broadcast
     val coarse = learnedCentroids(corpus, idCol, vecCol, nCentroids, ivfIters)
-    val coarseIds = Array.tabulate(coarse.length)(_.toLong)
-    val codebooks: Seq[Array[Array[Double]]] = learnedSubspaceCodebooks(
-      corpus, idCol, vecCol, subspaces, subDim, codebookSize, pqIters).toSeq
-    val reconCol = concat((0 until subspaces).map { s =>
-      val cents = codebooks(s)
-      val ids = Array.tabulate(cents.length)(_.toLong)
-      val code = element_at(GraftColumnBridge.column(graft.functions.NearestCentroids(
-        GraftColumnBridge.expression(slice(vd, s * subDim + 1, subDim)),
-        ids, cents, 1)), 1)
-      val centLits = array(cents.map(c => array(c.map(lit): _*)): _*)
-      element_at(centLits, code.cast("int") + 1)
-    }: _*)
-    def cells(probes: Int) =
-      explode(GraftColumnBridge.column(graft.functions.NearestCentroids(
-        GraftColumnBridge.expression(vd), coarseIds, coarse, probes)))
+    val codebooks = learnedSubspaceCodebooks(
+      corpus, idCol, vecCol, subspaces, codebookSize, pqIters)
+    def cells(probes: Int) = explode(nearestCells(vd, coarse, probes)).as("cell")
     // encode + assign in ONE map-side projection over the corpus —
-    // this projection IS the stored index at deploy scale
-    val corpusSide = corpus.select(col(idCol).as("neighbor_id"),
-        reconCol.as("rv"), cells(1).as("cell"))
-      .withColumn("rn", sqrt(expr("dot_product(rv, rv)")))
-    val querySide = queries.select(col(idCol).as("query_id"),
-        vd.as("qv"), cells(nProbe).as("cell"))
-      .withColumn("qn", sqrt(expr("dot_product(qv, qv)")))
-    val scored = querySide.join(corpusSide, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      // zero-norm guard: a zero-norm PQ
-      // RECONSTRUCTION (all-zero codeword choice) yields cos = 0/0 =
-      // NaN, which sorts FIRST under desc and would become every
-      // cell-mate's rank-1 neighbor — same convention as
-      // bruteForceTopK; mirrored in the q_ann_ivfpq oracle
-      .filter(col("qn") > 0 && col("rn") > 0)
-      .withColumn("cos", expr("dot_product(qv, rv)") / (col("qn") * col("rn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    // this projection IS the stored index at deploy scale; a zero-norm
+    // RECONSTRUCTION drops at scoring, as in the q_ann_ivfpq oracle
+    val corpusSide = vecSide(
+      corpus.select(col(idCol), pqRecon(vd, codebooks).as("recon"), cells(1)),
+      idCol, "recon", "neighbor_id", "cv", "cn", Seq("cell"))
+    val querySide = vecSide(queries.select(col(idCol), col(vecCol), cells(nProbe)),
+      idCol, vecCol, "query_id", "qv", "qn", Seq("cell"))
+    roundCos(topK(scorePairs(querySide.join(corpusSide, "cell")
+      .filter(col("query_id") =!= col("neighbor_id"))), k))
   }
 
   /** Semantic top-k over a TEXT corpus through a pluggable [[Embedder]]
@@ -796,8 +648,7 @@ object SimilarityOps {
     val payload = if (withVec) Seq(col("vd"), col("nrm")) else Nil
     val kernel = s"multiprobe_buckets_n(vd, ${cfg.bands}, ${cfg.bandBits}, " +
       s"${cfg.dim}, $probes, ${cfg.bandOffset})"
-    df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+    vecSide(df, idCol, vecCol, "id", "vd", "nrm")
       .select((col("id") +: payload) :+
         posexplode(expr(kernel)).as(Seq("pos", "bucket")): _*)
       .select((col("id") +: payload) ++ Seq(
@@ -814,24 +665,33 @@ object SimilarityOps {
     if (cfg.bucketCap > 0) capBandBuckets(side, cfg.bucketCap) else side
   }
 
-  /** Exact cosine of candidate (query_id, neighbor_id) pairs: both
-    * vectors join by id; zero-norm vectors have no cosine (0/0 = NaN
-    * would sort first under desc) and drop. */
-  private def scorePairs(cand: DataFrame, queries: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    def v(df: DataFrame, id: String, vec: String, nrm: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as(vec))
-        .withColumn(nrm, sqrt(expr(s"dot_product($vec, $vec)")))
-    cand
-      .join(v(queries, "query_id", "qv", "qn"), "query_id")
-      .join(v(corpus, "neighbor_id", "cv", "cn"), "neighbor_id")
-      .filter(col("qn") > 0 && col("cn") > 0)
+  /** One side of a scoring join: (`id`, `vec`, `nrm`, `keep`…) with
+    * `vecCol` cast to array<double> as `vec` and its L2 norm as `nrm`. */
+  private def vecSide(df: DataFrame, idCol: String, vecCol: String,
+      id: String, vec: String, nrm: String, keep: Seq[String] = Nil): DataFrame =
+    df.select(col(idCol).as(id) +: col(vecCol).cast("array<double>").as(vec) +:
+        keep.map(col): _*)
+      .withColumn(nrm, sqrt(expr(s"dot_product($vec, $vec)")))
+
+  /** Exact cosine `cos` of candidate pairs that carry both sides'
+    * (qv, qn) and (cv, cn). Zero-norm vectors have no cosine — 0/0 =
+    * NaN sorts FIRST under desc and would be every query's rank-1
+    * neighbor (an empty doc embeds to the zero vector) — so they drop. */
+  private[graft] def scorePairs(pairs: DataFrame): DataFrame =
+    pairs.filter(col("qn") > 0 && col("cn") > 0)
       .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
-  }
+
+  /** [[scorePairs]] of candidate (query_id, neighbor_id) pairs: both
+    * vectors join by id. */
+  private[graft] def scorePairs(cand: DataFrame, queries: DataFrame,
+      corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    scorePairs(cand
+      .join(vecSide(queries, idCol, vecCol, "query_id", "qv", "qn"), "query_id")
+      .join(vecSide(corpus, idCol, vecCol, "neighbor_id", "cv", "cn"), "neighbor_id"))
 
   /** Per-query top-k of scored pairs: rank by (cos desc, neighbor_id),
     * keep k. Returns (query_id, rank, neighbor_id, cos). */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
+  private[graft] def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored
@@ -873,9 +733,9 @@ object SimilarityOps {
           col("x.id") =!= col("y.id"))
     val scored =
       if (cfg.twoPhase)
-        pairs.filter(col("x.nrm") > 0 && col("y.nrm") > 0)
-          .select(col("x.id").as("query_id"), col("y.id").as("neighbor_id"),
-            (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
+        scorePairs(pairs.select(col("x.id").as("query_id"), col("x.vd").as("qv"),
+            col("x.nrm").as("qn"), col("y.id").as("neighbor_id"),
+            col("y.vd").as("cv"), col("y.nrm").as("cn")))
           .groupBy(col("query_id"), col("neighbor_id"))
           .agg(max(col("cos")).as("cos"))
       else
@@ -1180,9 +1040,7 @@ object SimilarityOps {
           .groupBy(col("vec_a"), col("vec_b"))
           .agg(max(col("cos")).as("cos"))
       else {
-        val v = vectors.select(col(idCol).as("id"),
-            col(vecCol).cast("array<double>").as("vd"))
-          .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+        val v = vecSide(vectors, idCol, vecCol, "id", "vd", "nrm")
         pairs.select(col("x.id").as("ida"), col("y.id").as("idb")).distinct()
           .join(v.select(col("id").as("ida"), col("vd").as("va"), col("nrm").as("na")), "ida")
           .join(v.select(col("id").as("idb"), col("vd").as("vb"), col("nrm").as("nb")), "idb")

@@ -851,12 +851,7 @@ object StreamQueries {
         (s"$work/corpus/seed" +: (0L until id).map(i => s"$work/corpus/b$i")): _*)
       val out = graph(batch, corpusPrev).drop("rank")
       val in = graph(corpusPrev.unionByName(batch), batch).drop("rank")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      prevState.drop("rank").unionByName(out).unionByName(in)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+      SimilarityOps.topK(prevState.drop("rank").unionByName(out).unionByName(in), k)
         .write.mode("overwrite").parquet(s"$work/state/b$id")
       batch.write.mode("overwrite").parquet(s"$work/corpus/b$id")
     }

@@ -1101,22 +1101,8 @@ object VectorQueries {
       subspaces = OpqM, codebookSize = OpqK, learnIters = OpqIters,
       dim = OpqPcaM)
       .select(col("query_id"), col("neighbor_id"))
-    val raw = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short
-      .join(raw.select(col("vec_id").as("query_id"), col("vd").as("qv"),
-        col("nrm").as("qn")), "query_id")
-      .join(raw.select(col("vec_id").as("neighbor_id"), col("vd").as("cv"),
-        col("nrm").as("cn")), "neighbor_id")
-      .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos_sim"))
+    SimilarityOps.roundCos(SimilarityOps.topK(SimilarityOps.scorePairs(
+      short, emb, emb, "vec_id", "embedding"), 5))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2238,14 +2224,8 @@ object VectorQueries {
       .drop("rank")
     val fresh = SimilarityOps.lshKnn(base, delta, "vec_id", "embedding", 5, WideLsh)
       .drop("rank")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    old.unionByName(fresh)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id").as("node_id"), col("rank"),
-        col("neighbor_id"), round(col("cos"), 6).as("cos_sim"))
+    SimilarityOps.roundCos(SimilarityOps.topK(old.unionByName(fresh), 5))
+      .withColumnRenamed("query_id", "node_id")
       .orderBy(col("node_id"), col("rank"))
   }
 

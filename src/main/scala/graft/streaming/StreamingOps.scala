@@ -227,25 +227,42 @@ object StreamingOps {
 
   /** All batches written by [[writeBatchDir]] as one frame. Pass the
     * schema when the first batches can be empty (schema inference
-    * fails on a directory of empty files).
+    * fails on a directory of empty files). The `batch_<n>` children
+    * are listed and passed explicitly: a glob path makes the reader's
+    * streaming-metadata probe log a WARN with a stack trace on every
+    * read. With no batch dir the glob stays, and so does the reader's
+    * path-not-found error.
     */
   def readBatchDirs(spark: SparkSession, outDir: String,
-      schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$outDir/batch_*")
+      schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
+    val batches = batchSuffixes(spark, outDir, "batch_").sorted
+    if (batches.isEmpty) reader.parquet(s"$outDir/batch_*")
+    else reader.parquet(batches.map(n => s"$outDir/batch_$n"): _*)
+  }
 
-  /** Largest numeric suffix among `<dir>/<prefix><n>` children, via
-    * the Hadoop FileSystem API — the portable readoff for per-batch
-    * state directories (`java.io.File` listing couples the reader to
-    * the local FS; on a cluster the state dir is HDFS/object storage).
+  /** Largest numeric suffix among `<dir>/<prefix><n>` children — the
+    * portable readoff for per-batch state directories.
     */
   def maxBatchSuffix(spark: SparkSession, dir: String, prefix: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = fs.listStatus(path).map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && n.drop(prefix.length).forall(_.isDigit))
-      .map(_.drop(prefix.length).toLong)
+    val ids = batchSuffixes(spark, dir, prefix)
     require(ids.nonEmpty, s"no $prefix<n> children under $dir")
     ids.max
+  }
+
+  /** Numeric suffixes of the `<dir>/<prefix><n>` children (none when
+    * `dir` is missing), via the Hadoop FileSystem API (`java.io.File`
+    * listing couples the reader to the local FS; on a cluster the dir
+    * is HDFS/object storage).
+    */
+  private def batchSuffixes(spark: SparkSession, dir: String, prefix: String): Seq[Long] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Nil
+    else fs.listStatus(path).toSeq.map(_.getPath.getName)
+      .filter(n => n.startsWith(prefix) && n.length > prefix.length &&
+        n.drop(prefix.length).forall(_.isDigit))
+      .map(_.drop(prefix.length).toLong)
   }
 
   /** Cross-batch streaming exact-dedup state: key = content hash,

@@ -8,7 +8,9 @@ corresponding oracle SQL in DuckDB over the same testdata parquet
 tables, sorts columns by name and rows by value, and compares cell by
 cell (exact for non-floats; floats must match to 1e-9 relative — the
 engine rounds all float outputs so anything looser signals a real
-mismatch).
+mismatch). An oracle DuckDB cannot run (out of memory, say) is reported
+and counted as not compared; the run goes on, and exits non-zero, so a
+query the oracle could not check never reads as green.
 """
 import json
 import math
@@ -41,7 +43,7 @@ def cells_eq(a, b):
         return a == b or abs(a - b) <= 1e-9 * max(1.0, abs(a), abs(b))
     return str(a) == str(b)
 
-n_pass = n_fail = 0
+n_pass = n_fail = n_skip = 0
 for name in sorted(p.name for p in vdir.iterdir() if p.is_dir()):
     got_rel = con.execute(f"SELECT * FROM '{vdir}/{name}/*.parquet'")
     gcols = [d[0] for d in got_rel.description]
@@ -49,11 +51,16 @@ for name in sorted(p.name for p in vdir.iterdir() if p.is_dir()):
     if name not in oracles:
         print(f"  [rows-only] {name}: {len(grows)} rows")
         continue
-    exp_rel = con.execute(oracles[name])
+    try:
+        exp_rel = con.execute(oracles[name])
+        erows = exp_rel.fetchall()
+    except duckdb.Error as e:
+        print(f"ERROR {name}: oracle did not run: {e}")
+        n_skip += 1
+        continue
     ecols = [d[0] for d in exp_rel.description]
     etypes = dict(zip(ecols, [str(d[1]) for d in exp_rel.description]))
     gtypes = dict(zip(gcols, [str(d[1]) for d in got_rel.description]))
-    erows = exp_rel.fetchall()
     gc, gr = norm(grows, gcols)
     ec, er = norm(erows, ecols)
     ok = True
@@ -89,5 +96,5 @@ if errp.exists():
         print(f"FAIL {name}: did not run: {msg}")
         n_fail += 1
 
-print(f"\n{n_pass} pass, {n_fail} fail")
-sys.exit(1 if n_fail else 0)
+print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} not compared")
+sys.exit(1 if n_fail + n_skip else 0)
