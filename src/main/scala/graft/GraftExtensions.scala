@@ -4,81 +4,33 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{ByteStats, DotProduct, HammingDist, HashedEmbed, HyperplaneSig, HyperplaneSketch, Md5Poly8, ShingleHashes, SimHashFp, TokenizeWs, WordHashes}
+import graft.functions.GraftFunctions
 
-/** Session-extension entry point: registers the engine's native
-  * Catalyst expressions at session build time, so a cluster deploy can
-  * enable them with `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (the in-process path `GraftFunctions.register(spark)` does the same
-  * for an already-built session).
+/** Graft's whole SQL surface, installed at session build: every native
+  * function in [[GraftFunctions.table]], the as-of join planner
+  * strategy, and three optimizer rules. [[GraftSession.builder]] adds
+  * it to every session it builds; a cluster deploy sets
+  * `spark.sql.extensions=graft.GraftExtensions` plus
+  * [[GraftSession.pinned]]. Nothing installs it at run time.
+  *
+  * The injected rules run inside Catalyst's Operator Optimization
+  * fixpoint, next to its own `ColumnPruning` and `CollapseProject`, so
+  * the projections [[plans.AsofJoinPruning]] inserts keep propagating
+  * through aggregate and join children down to the scans.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      exprs => DotProduct(exprs.head, exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      exprs => ShingleHashes(exprs.head,
-        functions.GraftFunctions.constInt(exprs(1), "shingle_hashes", 1))))
-    e.injectFunction((
-      new FunctionIdentifier("hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSig].getName, "hyperplane_sig"),
-      exprs => HyperplaneSig(exprs.head,
-        functions.GraftFunctions.constInt(exprs(1), "hyperplane_sig", 1),
-        functions.GraftFunctions.constInt(exprs(2), "hyperplane_sig", 2))))
-    e.injectFunction((
-      new FunctionIdentifier("hyperplane_sketch"),
-      new ExpressionInfo(classOf[HyperplaneSketch].getName, "hyperplane_sketch"),
-      exprs => HyperplaneSketch(exprs.head,
-        functions.GraftFunctions.constInt(exprs(1), "hyperplane_sketch", 1),
-        functions.GraftFunctions.constInt(exprs(2), "hyperplane_sketch", 2))))
-    e.injectFunction((
-      new FunctionIdentifier("hamming_dist"),
-      new ExpressionInfo(classOf[HammingDist].getName, "hamming_dist"),
-      exprs => HammingDist(exprs.head, exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("byte_stats"),
-      new ExpressionInfo(classOf[ByteStats].getName, "byte_stats"),
-      exprs => ByteStats(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("simhash_fp"),
-      new ExpressionInfo(classOf[SimHashFp].getName, "simhash_fp"),
-      exprs => SimHashFp(exprs.head,
-        functions.GraftFunctions.constInt(exprs(1), "simhash_fp", 1))))
-    e.injectFunction((
-      new FunctionIdentifier("tokenize_ws"),
-      new ExpressionInfo(classOf[TokenizeWs].getName, "tokenize_ws"),
-      exprs => TokenizeWs(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("hashed_embed"),
-      new ExpressionInfo(classOf[HashedEmbed].getName, "hashed_embed"),
-      exprs => HashedEmbed(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("word_hashes"),
-      new ExpressionInfo(classOf[WordHashes].getName, "word_hashes"),
-      exprs => WordHashes(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("md5_poly8"),
-      new ExpressionInfo(classOf[Md5Poly8].getName, "md5_poly8"),
-      exprs => Md5Poly8(exprs.head)))
-    // whole-operator extension (§7.3 ladder step (c)): the native
-    // as-of join planner strategy + the pushdown rule that lets
-    // Catalyst carry left-side predicates through the custom node
+    GraftFunctions.table.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.className, f.name), f.builder))
+    }
+    // the native as-of join (custom node + strategy + exec) and the
+    // pushdown/pruning rules Catalyst cannot apply through the node
     e.injectPlannerStrategy(_ => plans.AsofJoinStrategy)
     e.injectOptimizerRule(_ => plans.AsofJoinPushdown)
-    // transparent aggregate-over-MV rewrite (no-op until a view is
-    // registered via graft.plans.MvRewrite.register)
-    e.injectOptimizerRule(_ => plans.MvRewriteRule)
     e.injectOptimizerRule(_ => plans.AsofJoinPruning)
-    // re-run Catalyst's own pruning after ours so projections inserted
-    // by AsofJoinPruning keep propagating through aggregate/join
-    // children down to the scans (see JoinOps.asofJoinNativeKeys)
-    e.injectOptimizerRule(_ =>
-      org.apache.spark.sql.catalyst.optimizer.ColumnPruning)
-    e.injectOptimizerRule(_ =>
-      org.apache.spark.sql.catalyst.optimizer.CollapseProject)
+    // aggregate-over-MV rewrite (a no-op until a view is registered via
+    // graft.plans.MvRewrite.register)
+    e.injectOptimizerRule(_ => plans.MvRewriteRule)
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -63,106 +62,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session-level registration of the engine's native functions so they
-  * are usable from `expr(...)` / `spark.sql(...)`.
-  */
-object GraftFunctions {
-
-  /** Constant-argument extraction with a real error instead of an
-    * opaque eval crash when a column sneaks into a parameter slot. */
-  private[graft] def constInt(e: org.apache.spark.sql.catalyst.expressions.Expression,
-      fn: String, pos: Int): Int = {
-    require(e.foldable, s"$fn: argument $pos must be a constant literal, got: $e")
-    e.eval().asInstanceOf[Number].intValue
-  }
-
-  private def arity(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      fn: String, n: Int): Unit =
-    require(exprs.length == n,
-      s"$fn expects $n argument(s), got ${exprs.length}")
-
-  /** The ExpressionInfo className used to tag graft's own registry
-    * entries, so idempotence can distinguish "ours already bound"
-    * (skip — no WARN spam) from "a foreign binding squats the name"
-    * (replace — graft's semantics must win; inheriting an alien
-    * `dot_product` silently would corrupt every certified query).
-    */
-  private val OwnerTag = "graft.functions.GraftFunctions"
-
-  /** Idempotent per session: re-registering over graft's own binding
-    * is a no-op (guarded on the [[OwnerTag]] ExpressionInfo), so the
-    * hot ops that call `register` defensively on every invocation
-    * don't spam `SimpleFunctionRegistry ... replaced` WARNs — and the
-    * bench/driver stdout stays machine-parseable. A binding under the
-    * name that is NOT graft's is replaced, with Spark's one replace
-    * WARN as the audit trail. A concurrent first call can at worst
-    * race two threads into `registerFunction`, which is itself
-    * thread-safe (same binding either way).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String,
-        builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit = {
-      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      val ownedAlready =
-        registry.lookupFunction(ident).exists(_.getClassName == OwnerTag)
-      if (!ownedAlready)
-        registry.registerFunction(ident,
-          new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-            OwnerTag, name), builder)
-    }
-    reg("dot_product", exprs => { arity(exprs, "dot_product", 2)
-        DotProduct(exprs(0), exprs(1)) })
-    reg("shingle_hashes", exprs => { arity(exprs, "shingle_hashes", 2)
-        ShingleHashes(exprs(0), constInt(exprs(1), "shingle_hashes", 1)) })
-    reg("hyperplane_sig", exprs => { arity(exprs, "hyperplane_sig", 3)
-        HyperplaneSig(exprs(0),
-          constInt(exprs(1), "hyperplane_sig", 1),
-          constInt(exprs(2), "hyperplane_sig", 2)) })
-    reg("hyperplane_sketch", exprs => { arity(exprs, "hyperplane_sketch", 3)
-        HyperplaneSketch(exprs(0),
-          constInt(exprs(1), "hyperplane_sketch", 1),
-          constInt(exprs(2), "hyperplane_sketch", 2)) })
-    reg("hyperplane_buckets", exprs => { arity(exprs, "hyperplane_buckets", 4)
-        HyperplaneBuckets(exprs(0),
-          constInt(exprs(1), "hyperplane_buckets", 1),
-          constInt(exprs(2), "hyperplane_buckets", 2),
-          constInt(exprs(3), "hyperplane_buckets", 3)) })
-    reg("multiprobe_buckets", exprs => { arity(exprs, "multiprobe_buckets", 4)
-        MultiProbeBuckets(exprs(0),
-          constInt(exprs(1), "multiprobe_buckets", 1),
-          constInt(exprs(2), "multiprobe_buckets", 2),
-          constInt(exprs(3), "multiprobe_buckets", 3)) })
-    reg("multiprobe_buckets_n", exprs => { arity(exprs, "multiprobe_buckets_n", 6)
-        MultiProbeBucketsN(exprs(0),
-          constInt(exprs(1), "multiprobe_buckets_n", 1),
-          constInt(exprs(2), "multiprobe_buckets_n", 2),
-          constInt(exprs(3), "multiprobe_buckets_n", 3),
-          constInt(exprs(4), "multiprobe_buckets_n", 4),
-          constInt(exprs(5), "multiprobe_buckets_n", 5)) })
-    reg("random_project", exprs => { arity(exprs, "random_project", 3)
-        RandomProject(exprs(0),
-          constInt(exprs(1), "random_project", 1),
-          constInt(exprs(2), "random_project", 2)) })
-    reg("hamming_dist", exprs => { arity(exprs, "hamming_dist", 2)
-        HammingDist(exprs(0), exprs(1)) })
-    reg("byte_stats", exprs => { arity(exprs, "byte_stats", 1)
-        ByteStats(exprs(0)) })
-    reg("simhash_fp", exprs => { arity(exprs, "simhash_fp", 2)
-        SimHashFp(exprs(0), constInt(exprs(1), "simhash_fp", 1)) })
-    reg("tokenize_ws", exprs => { arity(exprs, "tokenize_ws", 1)
-        TokenizeWs(exprs(0)) })
-    reg("hashed_embed", exprs => { arity(exprs, "hashed_embed", 1)
-        HashedEmbed(exprs(0)) })
-    reg("word_hashes", exprs => { arity(exprs, "word_hashes", 1)
-        WordHashes(exprs(0)) })
-    reg("md5_poly8", exprs => { arity(exprs, "md5_poly8", 1)
-        Md5Poly8(exprs(0)) })
-    reg("shingle_pos_hashes", exprs => { arity(exprs, "shingle_pos_hashes", 2)
-        ShinglePosHashes(exprs(0),
-          constInt(exprs(1), "shingle_pos_hashes", 1)) })
-  }
 }

@@ -80,7 +80,6 @@ object DedupOps {
     // of the interpreted transform(substr)+array_distinct chain — the
     // hash values are identical (TextOps.polyHash algebra), only the
     // evaluation strategy changes
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // input skew: cert-scale documents arrive as
     // ONE unsplittable row group, so the rolling-hash + explode + the
     // df-count partial aggregate fused above them all ran on a single
@@ -91,7 +90,7 @@ object DedupOps {
     val spread = Reuse.spreadToCores(
       docs.select(col(idCol).as("id"), col(textCol).as("t")))
     spread.select(col("id"),
-      explode(expr(s"shingle_hashes(t, $ShingleN)")).as("h"))
+      explode(TextOps.shingleHashes(col("t"), ShingleN)).as("h"))
   }
 
   def shingleTableSql(table: String, idCol: String, textCol: String): String = {
@@ -169,9 +168,8 @@ object DedupOps {
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = SpanN): DataFrame = {
     require(n >= 1, s"span window must be >= 1, got $n")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val pos = docs.select(col(idCol).as("id"),
-      posexplode(expr(s"shingle_pos_hashes($textCol, $n)")))
+      posexplode(TextOps.shinglePosHashes(col(textCol), n)))
       .select(col("id"), (col("pos") + 1).as("pos"), col("col").as("h"))
     val dupH = pos.groupBy(col("h"))
       .agg(count_distinct(col("id")).as("ndocs"))

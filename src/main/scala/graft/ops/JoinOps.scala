@@ -69,9 +69,10 @@ object JoinOps {
     * same semantics and same certified oracle, but the physical plan
     * is two co-partitioned exchanges + per-partition sorts feeding a
     * single streaming merge — no union blow-up, no window pass, no
-    * right-row filter. The strategy installs idempotently on the
-    * session (cluster deploys can use
-    * `spark.sql.extensions=graft.GraftExtensions` instead).
+    * right-row filter. The strategy and the pushdown/pruning rules come
+    * with the session ([[graft.GraftSession.builder]], or
+    * `spark.sql.extensions=graft.GraftExtensions` on a cluster deploy);
+    * a session without them is refused with that guidance.
     *
     * Keys: one or more columns of any orderable atomic type (long,
     * string, date, …); ts: LongType epoch-micros, TIMESTAMP, or
@@ -103,19 +104,7 @@ object JoinOps {
       rightValCols: Seq[String], direction: String = "backward"): DataFrame = {
     import org.apache.spark.sql.{GraftPlanBridge => B}
     val spark = left.sparkSession
-    B.installStrategy(spark, graft.plans.AsofJoinStrategy)
-    B.installRule(spark, graft.plans.AsofJoinPushdown)
-    B.installRule(spark, graft.plans.AsofJoinPruning)
-    // AsofJoinPruning runs in the LAST optimizer batch (user rules) —
-    // after Catalyst's own ColumnPruning already ran. The projections
-    // it inserts collapse into scans via PhysicalOperation when the
-    // child is a project/filter chain, but pruning THROUGH an
-    // aggregate/join child needs ColumnPruning to run again after us:
-    // chain Catalyst's own rules into the same fixpoint batch.
-    B.installRule(spark,
-      org.apache.spark.sql.catalyst.optimizer.ColumnPruning)
-    B.installRule(spark,
-      org.apache.spark.sql.catalyst.optimizer.CollapseProject)
+    graft.GraftSession.requireContract(spark)
     val r = right.select(right.columns.map(c => col(c).as(c)).toSeq: _*)
     val lPlan = B.analyzed(left)
     val rPlan = B.analyzed(r)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing for the training-data pipeline: media
@@ -34,6 +34,14 @@ object MultimodalOps {
       height: Int,
       mean_byte: Double,
       entropy_proxy: Double)
+
+  /** [[decodeStub]]'s statistics of a `binary` column as one struct,
+    * in whole-stage codegen ([[graft.functions.ByteStats]]). */
+  def byteStats(payload: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.functions.ByteStats(
+      GraftColumnBridge.expression(payload)))
+  }
 
   /** STUB decode: deterministic pseudo-metadata + byte statistics.
     * Replace the body with a real codec at deploy time.

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.VectorOps.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -38,7 +39,6 @@ object PcaOps {
   def topComponent(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, iters: Int): (Array[Double], Array[Double]) = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val x = emb
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).cast("long").as("id"),
@@ -54,7 +54,7 @@ object PcaOps {
       var v = Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
       for (_ <- 1 to iters) {
         val scored = withV(centered(xc, muLit), v)
-          .withColumn("s", expr("dot_product(c, v)"))
+          .withColumn("s", dot(col("c"), col("v")))
         val wRow = scored.agg(
           sum(col("s") * element_at(col("c"), 1)),
           (2 to dim).map(j => sum(col("s") * element_at(col("c"), j))): _*)
@@ -71,7 +71,7 @@ object PcaOps {
   }
 
   /** Centered vectors with the CURRENT iterate attached as a literal
-    * array column `v` (so `dot_product(c, v)` stays a codegen'd
+    * array column `v` (so `dot(c, v)` stays a codegen'd
     * left-to-right fold — the exact summation order the oracle's
     * per-id SUM replays up to sub-grid noise).
     */
@@ -94,7 +94,7 @@ object PcaOps {
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("x"))
     val proj = withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
-      .withColumn("s", expr("dot_product(c, v)"))
+      .withColumn("s", dot(col("c"), col("v")))
     proj.select(col("id").as("vec_id"),
       quantMicroCol(col("s")).as("pc1"))
   }
@@ -119,16 +119,15 @@ object PcaOps {
       mu: Array[Double], v: Array[Double]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val x = emb
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("x"))
     val c = withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
-      .withColumn("s", expr("dot_product(c, v)"))
+      .withColumn("s", dot(col("c"), col("v")))
     val row = c.agg(
       sum(col("s") * col("s")),
-      sum(expr("dot_product(c, c)")),
+      sum(dot(col("c"), col("c"))),
       count(lit(1))).head()
     val n = row.getLong(2)
     require(n > 1,
@@ -159,7 +158,6 @@ object PcaOps {
   def topComponents(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, iters: Int, m: Int): (Array[Double], Array[Array[Double]]) = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val x = emb
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).cast("long").as("id"),
@@ -189,7 +187,7 @@ object PcaOps {
           else Array.tabulate(dim)(j => if (j == t % dim) 1.0 else 0.0)
         for (_ <- 1 to iters) {
           val scored = withV(centered(xc, muLit), v)
-            .withColumn("s", expr("dot_product(c, v)"))
+            .withColumn("s", dot(col("c"), col("v")))
           val wRow = scored.agg(
             sum(col("s") * element_at(col("c"), 1)),
             (2 to dim).map(j => sum(col("s") * element_at(col("c"), j))): _*)
@@ -243,7 +241,6 @@ object PcaOps {
   def transformWith(
       emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       mu: Array[Double], comps: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val x = emb
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).cast("long").as("id"),
@@ -251,7 +248,7 @@ object PcaOps {
     val c = centered(x, array(mu.map(lit).toIndexedSeq: _*))
     val projCols = comps.zipWithIndex.map { case (v, t) =>
       val vLit = array(v.map(lit).toIndexedSeq: _*)
-      quantMicroCol(expr("dot_product(c, v" + t + ")")).as(s"pc${t + 1}")
+      quantMicroCol(dot(col("c"), col("v" + t))).as(s"pc${t + 1}")
     }
     val withVs = comps.zipWithIndex.foldLeft(c) { case (df, (v, t)) =>
       df.withColumn("v" + t, array(v.map(lit).toIndexedSeq: _*))
@@ -424,7 +421,6 @@ object PcaOps {
   def scoreSubspace(
       emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       mu: Array[Double], comps: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val x = emb
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).cast("long").as("id"),
@@ -435,10 +431,10 @@ object PcaOps {
     }
     val pcm = withVs.select(
       col("id") +:
-        floor(expr("dot_product(c, c)") * 1000000 + 0.5)
+        floor(dot(col("c"), col("c")) * 1000000 + 0.5)
           .cast("long").as("e2m") +:
         comps.indices.map(t =>
-          floor(expr(s"dot_product(c, v$t)") * 1000000 + 0.5)
+          floor(dot(col("c"), col(s"v$t")) * 1000000 + 0.5)
             .cast("long").as(s"pcm$t")).toIndexedSeq: _*)
     // two consumers (eigenvalue aggregate + scoring pass) — materialize
     // once; released by the engine's between-queries cache sweep
@@ -591,13 +587,12 @@ object PcaOps {
   def projectWith(
       emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       mu: Array[Double], v: Array[Double]): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val x = emb
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("x"))
     withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
-      .withColumn("s", expr("dot_product(c, v)"))
+      .withColumn("s", dot(col("c"), col("v")))
       .select(col("id").as("vec_id"),
         quantMicroCol(col("s")).as("pc1"))
   }

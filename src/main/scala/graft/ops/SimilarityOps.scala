@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.VectorOps
+import graft.functions.VectorOps.{asDouble, dot, hammingDist, hyperplaneSig, hyperplaneSketch, multiprobeBucketsN, norm, randomProject}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,14 +52,13 @@ object SimilarityOps {
   def mipsTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = broadcast(queries.select(
       col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("cv"))
     c.crossJoin(q)
       .select(col("query_id"), col("neighbor_id"),
-        expr("dot_product(qv, cv)").as("ip"))
+        dot(col("qv"), col("cv")).as("ip"))
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKRows.topK(
         struct((-col("ip")).as("nip"), col("neighbor_id").as("nid")), k)
@@ -78,12 +77,11 @@ object SimilarityOps {
     * that lets any cosine-ANN index serve MIPS. */
   def mipsAugment(df: DataFrame, vecCol: String, maxNorm: Double,
       isQuery: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val vd = col(vecCol).cast("array<double>")
     val extra =
       if (isQuery) lit(0.0)
       else sqrt(greatest(lit(0.0),
-        lit(maxNorm * maxNorm) - expr(s"dot_product(aug_vd, aug_vd)")))
+        lit(maxNorm * maxNorm) - dot(col("aug_vd"), col("aug_vd"))))
     df.withColumn("aug_vd", vd)
       .withColumn(vecCol, concat(col("aug_vd"), array(extra)))
       .drop("aug_vd")
@@ -95,7 +93,6 @@ object SimilarityOps {
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = broadcast(vecSide(queries, idCol, vecCol, "query_id", "qv", "qn"))
     val c = vecSide(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
     roundCos(topK(scorePairs(
@@ -158,10 +155,9 @@ object SimilarityOps {
   private def sketchTuple(
       corpus: DataFrame, idCol: String, vecCol: String,
       bits: Int, dim: Int, metaCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     vecSide(corpus, idCol, vecCol, "neighbor_id", "cv", "cn", metaCols)
       .filter(col("cn") > 0)
-      .withColumn("csk", expr(s"hyperplane_sketch(cv, $bits, $dim)"))
+      .withColumn("csk", hyperplaneSketch(col("cv"), bits, dim))
   }
 
   /** [[sketchTopK]]'s corpus tuple as a STORED index: the
@@ -177,7 +173,6 @@ object SimilarityOps {
       corpus: DataFrame, idCol: String, vecCol: String,
       bits: Int, dim: Int, table: String, nBuckets: Int = 8,
       metaCols: Seq[String] = Nil): Unit = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     graft.sinks.Sinks.replaceBucketedTable(
       sketchTuple(corpus, idCol, vecCol, bits, dim, metaCols),
       table, Seq("neighbor_id"), nBuckets)
@@ -214,22 +209,15 @@ object SimilarityOps {
       k: Int, bits: Int, dim: Int, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= bits,
       s"maxHamming must be in [0, $bits], got $maxHamming")
-    // the two inputs can belong to DIFFERENT sessions (a foreachBatch
-    // micro-batch frame is analyzed under a cloned session whose
-    // function registry snapshot may predate ours; the static corpus
-    // keeps the main session) — the final plan resolves under the
-    // CORPUS side's session, so register on both
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    graft.functions.GraftFunctions.register(index.sparkSession)
     // one broadcast row per query: id, sketch, vector, norm
     val q = broadcast(vecSide(queries, idCol, vecCol, "query_id", "qv", "qn")
       .filter(col("qn") > 0)
-      .withColumn("qsk", expr(s"hyperplane_sketch(qv, $bits, $dim)")))
+      .withColumn("qsk", hyperplaneSketch(col("qv"), bits, dim)))
     roundCos(topK(scorePairs(
       index.select(col("neighbor_id"), col("cv"), col("cn"), col("csk"))
         .crossJoin(q)
         .filter(col("query_id") =!= col("neighbor_id") &&
-          expr("hamming_dist(qsk, csk)") <= maxHamming)), k))
+          hammingDist(col("qsk"), col("csk")) <= maxHamming)), k))
   }
 
   /** Data-driven calibration of [[sketchTopK]]'s Hamming radius: the
@@ -254,20 +242,19 @@ object SimilarityOps {
       corpus: DataFrame, idCol: String, vecCol: String,
       bits: Int, dim: Int, sampleN: Int, targetFrac: Double): Int = {
     require(targetFrac > 0 && targetFrac < 1, s"targetFrac in (0,1): $targetFrac")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val sample = corpus
       .select(col(idCol).as("sid"), col(vecCol).cast("array<double>").as("sv"))
       // Zero-norm vectors (empty-doc embeddings) carry no hyperplane
       // signal — their sketch is the all-sign-of-zero word — and the
       // search itself excludes them, so the calibration sample must
       // too (matches the oracle's norm>0 CTE).
-      .filter(expr("dot_product(sv, sv)") > 0)
+      .filter(dot(col("sv"), col("sv")) > 0)
       .orderBy(col("sid")).limit(sampleN)
-      .select(col("sid"), expr(s"hyperplane_sketch(sv, $bits, $dim)").as("ssk"))
+      .select(col("sid"), hyperplaneSketch(col("sv"), bits, dim).as("ssk"))
     val a = sample.select(col("sid").as("ia"), col("ssk").as("ska"))
     val b = sample.select(col("sid").as("ib"), col("ssk").as("skb"))
     val hams = a.join(b, col("ia") < col("ib"))
-      .select(expr("hamming_dist(ska, skb)").as("ham"))
+      .select(hammingDist(col("ska"), col("skb")).as("ham"))
     val n = hams.count()
     require(n > 0, "calibrateHammingRadius: need >= 2 sample vectors")
     val k = math.max(1L, math.ceil(targetFrac * n).toLong)
@@ -285,11 +272,10 @@ object SimilarityOps {
   def cosineNearDupPairs(
       vectors: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val v = vecSide(vectors, idCol, vecCol, "id", "vd", "nrm")
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .withColumn("cos",
-        expr("dot_product(a.vd, b.vd)") / (col("a.nrm") * col("b.nrm")))
+        dot(col("a.vd"), col("b.vd")) / (col("a.nrm") * col("b.nrm")))
       .filter(col("cos") >= threshold)
       .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
         round(col("cos"), 6).as("cos_sim"))
@@ -409,7 +395,6 @@ object SimilarityOps {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCentroids: Int, nProbe: Int, learnIters: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // bounded driver materialization: exactly the rows any broadcast
     // would collect (nCentroids vectors)
     val cents =
@@ -451,7 +436,6 @@ object SimilarityOps {
       idCol: String, vecCol: String, k: Int,
       subspaces: Int, codebookSize: Int, learnIters: Int, dim: Int,
       metric: String = "cosine"): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     require(dim % subspaces == 0, "dim must split evenly into subspaces")
     val vd = col(vecCol).cast("array<double>")
     val codebooks = learnedSubspaceCodebooks(
@@ -483,12 +467,10 @@ object SimilarityOps {
       idCol: String, vecCol: String, k: Int,
       shortlist: Int, outDim: Int, dim: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def proj(df: DataFrame, id: String, v: String, n: String, p: String, pn: String) =
       vecSide(df, idCol, vecCol, id, v, n)
-        .withColumn(p, expr(s"random_project($v, $outDim, $dim)"))
-        .withColumn(pn, sqrt(expr(s"dot_product($p, $p)")))
+        .withColumn(p, randomProject(col(v), outDim, dim))
+        .withColumn(pn, norm(col(p)))
         .filter(col(n) > 0 && col(pn) > 0)
     val q = broadcast(proj(queries, "query_id", "qv", "qn", "qp", "qpn"))
     val c = proj(corpus, "neighbor_id", "cv", "cn", "cp", "cpn")
@@ -530,7 +512,6 @@ object SimilarityOps {
       idCol: String, vecCol: String, k: Int,
       nCentroids: Int, nProbe: Int, ivfIters: Int,
       subspaces: Int, codebookSize: Int, pqIters: Int, dim: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     require(dim % subspaces == 0, "dim must split evenly into subspaces")
     val vd = col(vecCol).cast("array<double>")
     // the two bounded driver tables a deployed index would broadcast
@@ -590,10 +571,9 @@ object SimilarityOps {
     // one codegen'd two-level loop per row (HyperplaneSig) — the
     // algebraic bits×dim element_at expansion grows a 2000+-node
     // expression tree at useful sizes; signatures are bit-identical
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     vectors
-      .select(col(idCol).as("id"), VectorOps.asDouble(col(vecCol)).as("vd"))
-      .select(col("id"), expr(s"hyperplane_sig(vd, $bits, $dim)").as("sig"))
+      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("vd"))
+      .select(col("id"), hyperplaneSig(col("vd"), bits, dim).as("sig"))
   }
 
   /** Validated configuration of the hyperplane-LSH kNN kernel
@@ -644,13 +624,12 @@ object SimilarityOps {
     */
   private def bucketSide(df: DataFrame, idCol: String, vecCol: String,
       cfg: LshConfig, probes: Int, withVec: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val payload = if (withVec) Seq(col("vd"), col("nrm")) else Nil
-    val kernel = s"multiprobe_buckets_n(vd, ${cfg.bands}, ${cfg.bandBits}, " +
-      s"${cfg.dim}, $probes, ${cfg.bandOffset})"
+    val buckets = multiprobeBucketsN(col("vd"), cfg.bands, cfg.bandBits,
+      cfg.dim, probes, cfg.bandOffset)
     vecSide(df, idCol, vecCol, "id", "vd", "nrm")
       .select((col("id") +: payload) :+
-        posexplode(expr(kernel)).as(Seq("pos", "bucket")): _*)
+        posexplode(buckets).as(Seq("pos", "bucket")): _*)
       .select((col("id") +: payload) ++ Seq(
         ((col("pos") / lit(probes)).cast("int") + lit(cfg.bandOffset)).as("band"),
         col("bucket")): _*)
@@ -671,7 +650,7 @@ object SimilarityOps {
       id: String, vec: String, nrm: String, keep: Seq[String] = Nil): DataFrame =
     df.select(col(idCol).as(id) +: col(vecCol).cast("array<double>").as(vec) +:
         keep.map(col): _*)
-      .withColumn(nrm, sqrt(expr(s"dot_product($vec, $vec)")))
+      .withColumn(nrm, norm(col(vec)))
 
   /** Exact cosine `cos` of candidate pairs that carry both sides'
     * (qv, qn) and (cv, cn). Zero-norm vectors have no cosine — 0/0 =
@@ -679,7 +658,7 @@ object SimilarityOps {
     * neighbor (an empty doc embeds to the zero vector) — so they drop. */
   private[graft] def scorePairs(pairs: DataFrame): DataFrame =
     pairs.filter(col("qn") > 0 && col("cn") > 0)
-      .withColumn("cos", expr("dot_product(qv, cv)") / (col("qn") * col("cn")))
+      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
 
   /** [[scorePairs]] of candidate (query_id, neighbor_id) pairs: both
     * vectors join by id. */
@@ -815,7 +794,6 @@ object SimilarityOps {
   def knnGraphRefine(
       vectors: DataFrame, idCol: String, vecCol: String, k: Int,
       graph: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val edges = graph.select(col("query_id"), col("neighbor_id"))
     val hops = edges.as("e1").join(edges.as("e2"),
         col("e1.neighbor_id") === col("e2.query_id") &&
@@ -1036,7 +1014,7 @@ object SimilarityOps {
       if (cfg.twoPhase)
         pairs
           .select(col("x.id").as("vec_a"), col("y.id").as("vec_b"),
-            (expr("dot_product(x.vd, y.vd)") / (col("x.nrm") * col("y.nrm"))).as("cos"))
+            (dot(col("x.vd"), col("y.vd")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
           .groupBy(col("vec_a"), col("vec_b"))
           .agg(max(col("cos")).as("cos"))
       else {
@@ -1045,7 +1023,7 @@ object SimilarityOps {
           .join(v.select(col("id").as("ida"), col("vd").as("va"), col("nrm").as("na")), "ida")
           .join(v.select(col("id").as("idb"), col("vd").as("vb"), col("nrm").as("nb")), "idb")
           .select(col("ida").as("vec_a"), col("idb").as("vec_b"),
-            (expr("dot_product(va, vb)") / (col("na") * col("nb"))).as("cos"))
+            (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
       }
     scored
       .filter(col("cos") >= threshold)

@@ -115,6 +115,23 @@ object TextOps {
       GraftColumnBridge.expression(text)))
   }
 
+  /** Distinct polynomial hashes of the `n`-char shingles, in
+    * first-occurrence order, in one codegen'd pass
+    * ([[graft.functions.ShingleHashes]]). */
+  def shingleHashes(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.functions.ShingleHashes(
+      GraftColumnBridge.expression(text), n))
+  }
+
+  /** Every `n`-char shingle's hash in text order, duplicates kept
+    * ([[graft.functions.ShinglePosHashes]]). */
+  def shinglePosHashes(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.functions.ShinglePosHashes(
+      GraftColumnBridge.expression(text), n))
+  }
+
   /** Shared stopword list (subset of English function words that appear
     * in the synthetic corpus).
     */

@@ -9,9 +9,10 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Native whole-operator as-of join — SURVEY §7.3 ladder step (c):
-  * a custom logical node, planner strategy, and physical exec,
-  * registered per-session (`GraftPlanBridge.installStrategy`) or via
-  * `spark.sql.extensions=graft.GraftExtensions` on a cluster deploy.
+  * a custom logical node, planner strategy, and physical exec. The
+  * strategy and the two rules below are injected at session build by
+  * `graft.GraftExtensions` (`GraftSession.builder`, or
+  * `spark.sql.extensions=graft.GraftExtensions` on a cluster deploy).
   *
   * Semantics (identical to [[graft.ops.JoinOps.asofJoin]], certified
   * against DuckDB's native ASOF LEFT JOIN): every left row picks the

@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * difference between a full base scan per dashboard refresh and a
   * bounded rollup read. This is SURVEY §7.3 ladder step (c) applied to
   * the OPTIMIZER surface: a `Rule[LogicalPlan]` injected next to the
-  * as-of pushdown rules ([[AsofJoinPushdown]]), installed in-process
-  * via `GraftColumnBridge.installRule` or at session build via
-  * `GraftExtensions`.
+  * as-of pushdown rules ([[AsofJoinPushdown]]) by `GraftExtensions` at
+  * session build (`GraftSession.builder`, or
+  * `spark.sql.extensions=graft.GraftExtensions` on a cluster deploy).
   *
   * Two provable grains (the exact-grain rule plus the re-aggregation
   * half the MvOps scaladoc promised):
@@ -164,10 +164,6 @@ object MvRewrite {
       if (covers(reg, p) || covers(p, reg)) it.remove()
     }
   }
-
-  /** Idempotently install [[MvRewriteRule]] on an existing session. */
-  def install(spark: SparkSession): Unit =
-    org.apache.spark.sql.GraftPlanBridge.installRule(spark, MvRewriteRule)
 }
 
 object MvRewriteRule extends Rule[LogicalPlan] {

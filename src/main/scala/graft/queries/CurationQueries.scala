@@ -1033,7 +1033,6 @@ object CurationQueries {
   /** The CDC chunk table (shared by q_cdc_chunks and q_cdc_dedup). */
   private[graft] def cdcChunkRows(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // Materialize the bounds stage: the downstream `chunks` transform
     // reads `bounds` once per sequence element, and CollapseProject
     // would otherwise inline the whole hash→transform→filter chain
@@ -1044,7 +1043,7 @@ object CurationQueries {
       docs.select(col("doc_id"), col("text"))
         .withColumn("ln", length(col("text")).cast("long"))
         .withColumn("cuts", filter(
-          transform(expr("shingle_pos_hashes(text, 8)"),
+          transform(TextOps.shinglePosHashes(col("text"), 8),
             (h, i) => when(pmod(h, lit(64L)) === 0, i.cast("long") + 8L)
               .otherwise(-1L)),
           x => x > 0 && x < col("ln")))

@@ -55,10 +55,9 @@ object MultimodalQueries {
     // mapPartitions decodeStub, which MultimodalOpsSpec asserts): the
     // stats loop runs inside whole-stage codegen instead of paying a
     // Dataset-encoder round trip per payload
-    graft.functions.GraftFunctions.register(spark)
     MultimodalOps.mediaFromDocuments(Tables.documents(spark, dir))
       .select(col("media_id"), col("kind"),
-        expr("byte_stats(payload)").as("bs"))
+        MultimodalOps.byteStats(col("payload")).as("bs"))
       .select(col("media_id"), col("kind"),
         col("bs.n_bytes").cast("long").as("n_bytes"),
         col("bs.width").cast("long").as("width"),

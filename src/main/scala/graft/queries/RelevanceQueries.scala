@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.functions.VectorOps.{dot, norm}
 import graft.ops.{EmbeddingOps, RelevanceOps, SimilarityOps, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -97,14 +98,13 @@ object RelevanceQueries {
       |  FLOOR(CAST(SUM(ci) AS DOUBLE) / (COUNT(*) * 1000000.0) * 10000 + 0.5)
       |    / 10000.0 AS avg_cos
       |FROM p GROUP BY label ORDER BY label""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("label"), col("embedding").cast("array<double>").as("vd"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+      .withColumn("nrm", norm(col("vd")))
     v.as("a").join(v.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.label").cast("long").as("label"),
-        floor(expr("dot_product(a.vd, b.vd)") / (col("a.nrm") * col("b.nrm"))
+        floor(dot(col("a.vd"), col("b.vd")) / (col("a.nrm") * col("b.nrm"))
           * 1000000 + 0.5).cast("long").as("ci"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -145,18 +145,17 @@ object RelevanceQueries {
          |    / 10000.0 AS avg_cos
          |FROM p GROUP BY label ORDER BY label""".stripMargin
     }) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val byLabel = org.apache.spark.sql.expressions.Window
       .partitionBy(col("label")).orderBy(col("vec_id"))
     val v = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("label"), col("embedding").cast("array<double>").as("vd"))
       .withColumn("rn", row_number().over(byLabel))
       .filter(col("rn") <= CoherenceCap).drop("rn")
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+      .withColumn("nrm", norm(col("vd")))
     v.as("a").join(v.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.label").cast("long").as("label"),
-        floor(expr("dot_product(a.vd, b.vd)") / (col("a.nrm") * col("b.nrm"))
+        floor(dot(col("a.vd"), col("b.vd")) / (col("a.nrm") * col("b.nrm"))
           * 1000000 + 0.5).cast("long").as("ci"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_pairs"),

@@ -570,7 +570,6 @@ object ScaleQueries {
         Some("cnt"),
         avgCounts = Map("l_quantity" -> "cnt_qty",
           "l_extendedprice" -> "cnt_price")))
-    MvRewrite.install(spark)
     rollup
   }
 

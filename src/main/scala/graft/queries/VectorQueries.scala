@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.functions.VectorOps.{dot, norm, randomProject}
 import graft.ops.{Memos, SimilarityOps}
 import graft.ops.SimilarityOps.LshConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -71,12 +72,11 @@ object VectorQueries {
     s"""SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n,
        |  ROUND(AVG(sqrt(list_dot_product($vd, $vd))), 6) AS avg_norm
        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .withColumn("vd", col("embedding").cast("array<double>"))
       .groupBy(col("label").cast("long").as("label"))
       .agg(count(lit(1)).as("n"),
-        round(avg(sqrt(expr("dot_product(vd, vd)"))), 6).as("avg_norm"))
+        round(avg(norm(col("vd"))), 6).as("avg_norm"))
       .orderBy(col("label"))
   }
 
@@ -1141,21 +1141,20 @@ object VectorQueries {
        |    AS ratio_q
        |FROM j WHERE d2 > 0
        |ORDER BY vec_a""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
-      .withColumn("pv", expr(s"random_project(vd, $JlDim, $LshDim)"))
+      .withColumn("pv", randomProject(col("vd"), JlDim, LshDim))
     val a = v.select(col("vec_id").as("vec_a"), col("vd").as("va"),
       col("pv").as("pa"))
     val b = v.select(col("vec_id").as("vec_b"), col("vd").as("vb"),
       col("pv").as("pb"))
     a.join(b, col("vec_b") === col("vec_a") + 1)
       .withColumn("d2",
-        expr("dot_product(va, va)") - lit(2.0) * expr("dot_product(va, vb)")
-          + expr("dot_product(vb, vb)"))
+        dot(col("va"), col("va")) - lit(2.0) * dot(col("va"), col("vb"))
+          + dot(col("vb"), col("vb")))
       .withColumn("d2p",
-        expr("dot_product(pa, pa)") - lit(2.0) * expr("dot_product(pa, pb)")
-          + expr("dot_product(pb, pb)"))
+        dot(col("pa"), col("pa")) - lit(2.0) * dot(col("pa"), col("pb"))
+          + dot(col("pb"), col("pb")))
       .filter(col("d2") > 0)
       .select(col("vec_a"), col("vec_b"),
         (floor(col("d2p") / (lit(JlDim.toDouble) * col("d2")) * 10000 + 0.5)
@@ -1325,10 +1324,9 @@ object VectorQueries {
        |    ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM negs) t WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .withColumn("vd", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(expr("dot_product(vd, vd)")))
+      .withColumn("nrm", norm(col("vd")))
     val q = broadcast(emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("vd").as("qv"),
         col("nrm").as("qn")))
@@ -1338,7 +1336,7 @@ object VectorQueries {
       .filter(col("cn") > 0)
     c.crossJoin(q).filter(col("qn") > 0)
       .select(col("query_id"), col("neighbor_id"),
-        (expr("dot_product(qv, cv)") / (col("qn") * col("cn"))).as("cos"))
+        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
       .filter(col("cos") < 0.4)
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKRows.topK(
@@ -2109,7 +2107,6 @@ object VectorQueries {
        |    AS m2
        |FROM e JOIN st USING (idx)
        |GROUP BY id ORDER BY vec_id""".stripMargin) { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     val dim = 64
     def quant(v: Double): Double = graft.ops.Reuse.quantMicro(v)
     val x = Tables.embeddings(spark, dir)
@@ -2128,7 +2125,7 @@ object VectorQueries {
     x.withColumn("z", zip_with(
         zip_with(col("x"), array(mu.map(lit).toIndexedSeq: _*), (a, b) => a - b),
         array(sd.map(lit).toIndexedSeq: _*), (c, s) => c / s))
-      .withColumn("m2raw", expr("dot_product(z, z)"))
+      .withColumn("m2raw", dot(col("z"), col("z")))
       .select(col("id").as("vec_id"),
         (floor(col("m2raw") * 1000000 + 0.5) / 1000000.0).as("m2"))
       .orderBy(col("vec_id"))

@@ -79,28 +79,20 @@ object StreamingOps {
     */
   private val StatePartitions = 8
 
-  /** RocksDB state store class name (bundled with Spark 4). */
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Upgrade the streaming state store to the scale-safe RocksDB
-    * provider unless the caller explicitly chose one. The default
-    * HDFS-backed provider keeps every version of every store IN
+  /** RocksDB state store class name (bundled with Spark 4), which
+    * [[graft.GraftSession.builder]] sets as the session's provider. The
+    * default HDFS-backed provider keeps every version of every store IN
     * EXECUTOR HEAP — fine at bench scale, an OOM ceiling at 100 TB
     * drained volume. RocksDB keeps state off-heap and spills to local
     * disk, so state capacity scales with disk, not heap.
     */
-  def ensureScaleSafeStateStore(spark: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val cur = spark.conf.get(key, "")
-    if (cur.isEmpty || cur.endsWith("HDFSBackedStateStoreProvider"))
-      spark.conf.set(key, RocksDbProvider)
-  }
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The one bounded-drain funnel: with [[StatePartitions]] shuffle
-    * partitions for the whole start→stop scope and the RocksDB state
-    * store, run `sink(stream.writeStream)` under `Trigger.AvailableNow`
-    * to completion, stop it, and return its per-batch progress — the
+    * partitions for the whole start→stop scope, run
+    * `sink(stream.writeStream)` under `Trigger.AvailableNow` to
+    * completion, stop it, and return its per-batch progress — the
     * bounded-drain pattern replacing the reference's
     * empty-batch-counting stop loop.
     */
@@ -109,7 +101,6 @@ object StreamingOps {
       : Seq[StreamingQueryProgress] = {
     val spark = stream.sparkSession
     withShufflePartitions(spark, StatePartitions) {
-      ensureScaleSafeStateStore(spark)
       val q = sink(stream.writeStream).trigger(Trigger.AvailableNow()).start()
       try { q.awaitTermination(); q.recentProgress.toSeq }
       finally q.stop()

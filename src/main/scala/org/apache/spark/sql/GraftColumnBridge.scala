@@ -7,8 +7,10 @@ import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` Column↔Expression converters — the
   * one sanctioned way for a library shipping custom Catalyst
-  * expressions (that carry non-SQL-encodable state, e.g. a centroid
-  * table) to lift them into the public Column API on Spark 4.
+  * expressions to lift them into the public Column API on Spark 4.
+  * Graft's typed builders (`VectorOps.dot`, `TextOps.words`, …) build
+  * every native expression through it, so no kernel resolves one by
+  * its SQL name.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -34,7 +36,9 @@ object GraftColumnBridge {
 /** Bridge to the `private[sql]` plan-level constructors — what a
   * library shipping a CUSTOM WHOLE-OPERATOR (logical node + strategy +
   * physical exec, SURVEY §7.3 ladder step (c)) needs to lift its node
-  * into the public DataFrame API on Spark 4.
+  * into the public DataFrame API on Spark 4. The strategy and rules
+  * that plan the node are not installed here: `graft.GraftExtensions`
+  * injects them at session build.
   */
 object GraftPlanBridge {
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -49,36 +53,4 @@ object GraftPlanBridge {
     * custom node untouched. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Idempotently install an extra planner strategy on the session —
-    * the in-process equivalent of
-    * `spark.sql.extensions=graft.GraftExtensions` for deploys that
-    * build their session first. The check-and-append is synchronized
-    * on the session's experimental-methods object: concurrent first
-    * use from parallel query threads (a parallel bench harness) would
-    * otherwise double-register (strategy consulted twice per plan) or
-    * drop one of two different strategies racing on the var.
-    */
-  def installStrategy(spark: SparkSession,
-      s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    exp.synchronized {
-      if (!exp.extraStrategies.contains(s))
-        exp.extraStrategies = exp.extraStrategies :+ s
-    }
-  }
-
-  /** Idempotently install an extra optimizer rule on the session (the
-    * in-process counterpart of `injectOptimizerRule`); synchronized
-    * like [[installStrategy]] — a double-registered rule RUNS twice
-    * per optimizer batch. */
-  def installRule(spark: SparkSession,
-      r: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    exp.synchronized {
-      if (!exp.extraOptimizations.contains(r))
-        exp.extraOptimizations = exp.extraOptimizations :+ r
-    }
-  }
 }

@@ -197,7 +197,6 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("ShingleHashes expression matches the builtin transform+polyHash formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val builtin = docs.select(col("doc_id"),
       array_distinct(transform(
         TextOps.charShingles(col("text"), DedupOps.ShingleN),
@@ -270,7 +269,6 @@ class DedupOpsSpec extends AnyFunSuite {
     // the round-11 wide kernel replaces `(sig >> j*bandBits) & mask`
     // extraction everywhere; at <= 64 total bits the buckets must be
     // bit-identical or every certified <= 64-bit oracle silently breaks
-    graft.functions.GraftFunctions.register(spark)
     val bands = 6; val bandBits = 6
     val fromSig = SimilarityOps.hyperplaneSignature(
         emb, "vec_id", "embedding", bands * bandBits, 64)
@@ -287,7 +285,6 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("wide banding (> 64 total bits) matches a reference bucket computation") {
-    graft.functions.GraftFunctions.register(spark)
     val bands = 16; val bandBits = 8 // 128 planes, past the one-word ceiling
     val got = emb.limit(50)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
@@ -311,7 +308,6 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("multi-probe LSH graph: probing lifts recall at the same band budget") {
-    graft.functions.GraftFunctions.register(spark)
     // ground truth: full-corpus exact top-5 restricted to a query slice
     val slice = emb.filter(col("vec_id") % 7 === 0)
     val brute = SimilarityOps.bruteForceTopK(slice, emb, "vec_id", "embedding", 5)
@@ -345,7 +341,6 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("N-probe kernel reduces exactly to the certified narrower kernels") {
-    graft.functions.GraftFunctions.register(spark)
     val v = emb.limit(40)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
     // probes=1, offset=0: bit-identical to hyperplane_buckets
@@ -606,7 +601,6 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("JL projection: distortion concentrates near 1, shortlist recall above floor") {
-    graft.functions.GraftFunctions.register(spark)
     // distortion: mean normalized squared-distance ratio over the
     // consecutive-pair sample must sit near 1 (E = 1 exactly for ±1
     // entries; sd per pair ≈ sqrt(2/16) ≈ 0.35, mean over hundreds of

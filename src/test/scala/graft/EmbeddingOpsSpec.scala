@@ -162,7 +162,6 @@ class EmbeddingOpsSpec extends AnyFunSuite {
       .select("query_id", "rank", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // augmented-cosine ranking: M = max corpus norm
-    graft.functions.GraftFunctions.register(spark)
     val maxNorm = corpus
       .select(sqrt(expr(
         "dot_product(cast(embedding as array<double>), cast(embedding as array<double>))"))

@@ -1,49 +1,34 @@
 package graft
 
+import graft.ops.SimilarityOps
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registration-ownership contract for graft's SQL function surface
-  * (round-8 verdict item 6): a FOREIGN binding squatting one of graft's
-  * names must be REPLACED on register() — silently inheriting an alien
-  * `dot_product` would corrupt every certified similarity query — while
-  * re-registering over graft's own binding stays a no-op (no WARN spam
-  * in bench/driver stdout).
+/** Kernels build graft's native expressions through typed `Column`
+  * builders, never by SQL name: a FOREIGN binding squatting one of
+  * graft's names (silently inheriting an alien `dot_product` would
+  * corrupt every certified similarity query) changes what `spark.sql`
+  * resolves, but cannot reach a kernel.
   */
 class FunctionRegistrySpec extends AnyFunSuite {
   import TestSpark._
 
-  private val OwnerTag = "graft.functions.GraftFunctions"
-
-  test("a poisoned foreign dot_product binding is replaced by graft's") {
+  test("a squatted dot_product binding cannot reach a kernel built on the typed dot") {
     // isolated session state so the poison cannot leak into other specs
     val s = spark.newSession()
-    val registry = s.sessionState.functionRegistry
-    val ident = FunctionIdentifier("dot_product")
-    registry.registerFunction(ident,
+    s.sessionState.functionRegistry.registerFunction(FunctionIdentifier("dot_product"),
       new ExpressionInfo("alien.Squatter", "dot_product"),
       _ => Literal(-1.0))
     assert(s.sql("SELECT dot_product(array(2.0d), array(4.0d)) AS v")
       .head().getDouble(0) === -1.0, "poison binding not in effect")
 
-    graft.functions.GraftFunctions.register(s)
-    assert(s.sql("SELECT dot_product(array(2.0d, 3.0d), array(4.0d, 5.0d)) AS v")
-      .head().getDouble(0) === 23.0, "graft's semantics must win over a squatter")
-    assert(registry.lookupFunction(ident).exists(_.getClassName == OwnerTag),
-      "replaced binding must carry graft's owner tag")
-  }
-
-  test("re-register over graft's own binding keeps the same builder (idempotent)") {
-    val s = spark.newSession()
-    graft.functions.GraftFunctions.register(s)
-    val registry = s.sessionState.functionRegistry
-    val ident = FunctionIdentifier("dot_product")
-    val info1 = registry.lookupFunction(ident).get
-    graft.functions.GraftFunctions.register(s)
-    val info2 = registry.lookupFunction(ident).get
-    assert(info1.getClassName === OwnerTag && info2.getClassName === OwnerTag)
-    assert(s.sql("SELECT dot_product(array(1.0d, 1.0d), array(1.0d, 1.0d)) AS v")
-      .head().getDouble(0) === 2.0)
+    import s.implicits._
+    val queries = Seq(1L -> Array(1f, 0f)).toDF("vec_id", "embedding")
+    val corpus = Seq(2L -> Array(1f, 0f), 3L -> Array(3f, 4f), 4L -> Array(0f, 1f))
+      .toDF("vec_id", "embedding")
+    val got = SimilarityOps.bruteForceTopK(queries, corpus, "vec_id", "embedding", 3)
+      .orderBy("rank").collect().map(r => (r.getLong(2), r.getDouble(3))).toSeq
+    assert(got === Seq(2L -> 1.0, 3L -> 0.6, 4L -> 0.0))
   }
 }

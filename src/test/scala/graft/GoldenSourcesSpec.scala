@@ -184,6 +184,30 @@ class GoldenSourcesSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
   }
 
+  test("the native as-of join refuses a session built without GraftSession.builder") {
+    // a sibling session over the same context that never got graft's
+    // extensions: the join checks the session and mutates nothing
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val bare = org.apache.spark.sql.SparkSession.builder().master("local[2]").getOrCreate()
+    try {
+      import bare.implicits._
+      val left = Seq((1L, 10L, "p")).toDF("k", "ts", "pid")
+      val right = Seq((1L, 5L, "r")).toDF("k", "rts", "rid")
+      val err = intercept[IllegalArgumentException] {
+        graft.ops.JoinOps.asofJoinNative(left, right, "k", "ts", "rts", Seq("rid"))
+      }
+      assert(err.getMessage.contains("GraftSession.builder") &&
+        err.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"),
+        err.getMessage)
+      assert(bare.experimental.extraStrategies.isEmpty &&
+        bare.experimental.extraOptimizations.isEmpty)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("CSV source: corrupt rows audited in PERMISSIVE, dropped in DROPMALFORMED") {
     // ingestion-robustness contract: a malformed feed never kills the
     // job — PERMISSIVE quarantines bad rows into _corrupt_record for

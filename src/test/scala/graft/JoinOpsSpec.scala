@@ -388,22 +388,28 @@ class JoinOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val left = Seq((1L, 10L, "p")).toDF("k", "ts", "pid")
     val right = Seq((1L, 5L, "r")).toDF("k", "rts", "rid")
-    // 8 threads race through installStrategy/installRule on first use —
-    // the synchronized check-and-append must neither drop nor duplicate
-    // a registration (a doubled rule runs twice per optimizer batch)
+    // the session build installed the strategy and rules once; 8
+    // threads planning native as-of joins at once must all succeed and
+    // append nothing to the session's experimental lists
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Seq[org.apache.spark.sql.Row]]()
     val threads = (1 to 8).map { _ =>
       new Thread(() =>
-        try JoinOps.asofJoinNative(left, right, "k", "ts", "rts", Seq("rid")).count()
+        try rows.add(JoinOps.asofJoinNative(left, right, "k", "ts", "rts", Seq("rid"))
+          .collect().toSeq)
         catch { case t: Throwable => errs.add(t); () })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(errs.isEmpty, s"concurrent asof failed: ${errs.peek()}")
+    import scala.jdk.CollectionConverters._
+    assert(rows.asScala.toSeq.map(_.map(_.toSeq)) ===
+      Seq.fill(8)(Seq(Seq(1L, 10L, "p", "r"))))
+    assert(spark.sessionState.planner.strategies
+      .count(_ eq graft.plans.AsofJoinStrategy) === 1)
     val exp = spark.experimental
-    assert(exp.extraStrategies.count(_ eq graft.plans.AsofJoinStrategy) === 1)
-    assert(exp.extraOptimizations.count(_ eq graft.plans.AsofJoinPushdown) === 1)
-    assert(exp.extraOptimizations.count(_ eq graft.plans.AsofJoinPruning) === 1)
+    assert(exp.extraStrategies.isEmpty && exp.extraOptimizations.isEmpty,
+      s"library code mutated the session: ${exp.extraStrategies} ${exp.extraOptimizations}")
   }
 
   test("native asof rejects mismatched/unsupported key and ts types loudly") {

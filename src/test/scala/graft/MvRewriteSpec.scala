@@ -35,7 +35,6 @@ class MvRewriteSpec extends AnyFunSuite {
       mv, Seq("l_returnflag", "l_linestatus"),
       Map("l_quantity" -> "sum_qty", "l_extendedprice" -> "sum_price"),
       Some("cnt")))
-    MvRewrite.install(spark)
     try f(mv) finally MvRewrite.deregister(basePath)
   }
 
@@ -202,7 +201,6 @@ class MvRewriteSpec extends AnyFunSuite {
       mv, Seq("l_returnflag", "l_linestatus"),
       Map("l_quantity" -> "sum_qty"), Some("cnt"),
       avgCounts = Map("l_quantity" -> "cnt_qty")))
-    MvRewrite.install(spark)
     try {
       val pe = exactQ.queryExecution.executedPlan.toString
       assert(pe.contains(mv) && !pe.contains("lineitem.parquet"),

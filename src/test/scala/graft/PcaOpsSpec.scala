@@ -126,7 +126,6 @@ class PcaOpsSpec extends AnyFunSuite {
 
     // diagonal scorer (the q_embed_outliers construction, inline)
     def quant(v: Double): Double = graft.ops.Reuse.quantMicro(v)
-    graft.functions.GraftFunctions.register(spark)
     val x = corpus.select(col("vec_id").cast("long").as("id"),
       col("embedding").cast("array<double>").as("x"))
     val st = x.agg(avg(element_at(col("x"), 1)),

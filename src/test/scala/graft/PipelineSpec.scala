@@ -351,7 +351,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("codegen'd byte_stats is bit-identical to the decodeStub loop") {
-    graft.functions.GraftFunctions.register(spark)
     val media = MultimodalOps.mediaFromDocuments(Tables.documents(spark, sf))
     val viaStub = MultimodalOps.extractFeatures(media).collect()
       .map(f => f.media_id -> ((f.n_bytes, f.width, f.height, f.mean_byte, f.entropy_proxy)))

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The streaming state store must be the scale-safe RocksDB provider:
-  * the default HDFS-backed provider holds all state in executor heap,
-  * which caps drained volume; RocksDB keeps it off-heap with disk
-  * spill. Asserts the provider is ACTIVE (RocksDB custom metrics in the
-  * query progress), not merely configured.
+/** The streaming state store must be the scale-safe RocksDB provider,
+  * set at session build by GraftSession.builder: the default
+  * HDFS-backed provider holds all state in executor heap, which caps
+  * drained volume; RocksDB keeps it off-heap with disk spill. Asserts
+  * the provider is ACTIVE (RocksDB custom metrics in the query
+  * progress), not merely configured.
   */
 class RocksDbStateSpec extends AnyFunSuite {
   import TestSpark._
@@ -44,18 +45,17 @@ class RocksDbStateSpec extends AnyFunSuite {
   }
 
   test("an explicit caller-chosen provider is respected, HDFS default is upgraded") {
+    // GraftSession.builder replaces Spark's HDFS-backed default with
+    // RocksDB at session build; a caller's later .config still wins
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key, "")
+    assert(spark.conf.get(key) === StreamingOps.RocksDbProvider)
     try {
-      spark.conf.set(key, "com.example.CustomProvider")
-      StreamingOps.ensureScaleSafeStateStore(spark)
-      assert(spark.conf.get(key) === "com.example.CustomProvider")
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      StreamingOps.ensureScaleSafeStateStore(spark)
-      assert(spark.conf.get(key) === StreamingOps.RocksDbProvider)
+      val custom = GraftSession.builder("local[2]", "2")
+        .config(key, "com.example.CustomProvider").create()
+      assert(custom.conf.get(key) === "com.example.CustomProvider")
     } finally {
-      if (prev.nonEmpty) spark.conf.set(key, prev) else spark.conf.unset(key)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
     }
   }
 

@@ -145,7 +145,6 @@ class SketchOpsSpec extends AnyFunSuite {
   test("HyperplaneSketch word 0 is bit-identical to HyperplaneSig(64); partial words pack low bits") {
     import TestSpark._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
     // the wide sketch uses the SAME global plane indices, so its first

@@ -68,7 +68,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("dot_product is callable from SQL after registration") {
-    graft.functions.GraftFunctions.register(spark)
+    // registered at session build by GraftSession.builder
     val v = spark.sql("SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .head.getDouble(0)
     assert(v === 11.0)
@@ -79,28 +79,49 @@ class SurfaceSpec extends AnyFunSuite {
     new GraftExtensions().apply(e)
   }
 
+  /** One SQL call per entry of GraftFunctions.table. */
+  private val sampleCalls: Map[String, String] = Map(
+    "dot_product" -> "dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D))",
+    "shingle_hashes" -> "shingle_hashes('abcdef', 5)",
+    "shingle_pos_hashes" -> "shingle_pos_hashes('abcabc', 3)",
+    "hyperplane_sig" -> "hyperplane_sig(array(1.0D, -1.0D), 8, 2)",
+    "hyperplane_sketch" -> "hyperplane_sketch(array(1.0D, -1.0D), 8, 2)",
+    "hyperplane_buckets" -> "hyperplane_buckets(array(1.0D, -1.0D), 2, 4, 2)",
+    "multiprobe_buckets" -> "multiprobe_buckets(array(1.0D, -1.0D), 2, 4, 2)",
+    "multiprobe_buckets_n" -> "multiprobe_buckets_n(array(1.0D, -1.0D), 2, 4, 2, 2, 0)",
+    "random_project" -> "random_project(array(1.0D, -1.0D), 3, 2)",
+    "hamming_dist" -> "hamming_dist(array(1L, 3L), array(0L, 3L))",
+    "byte_stats" -> "byte_stats(cast('ab' as binary))",
+    "simhash_fp" -> "simhash_fp('a b', 40)",
+    "tokenize_ws" -> "tokenize_ws('A b  C')",
+    "hashed_embed" -> "hashed_embed('hello world')",
+    "word_hashes" -> "word_hashes('a b')",
+    "md5_poly8" -> "md5_poly8('abc')")
+
   test("a session built with GraftExtensions resolves every native function from SQL") {
-    // a sibling session over the same context, built the way a cluster
-    // deploy would (--conf spark.sql.extensions=graft.GraftExtensions)
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(e => new GraftExtensions().apply(e))
-      .getOrCreate()
-    try {
-      assert(s2.sql("SELECT dot_product(array(1.0D,2.0D), array(3.0D,4.0D))")
-        .head().getDouble(0) === 11.0)
-      assert(s2.sql("SELECT size(tokenize_ws('A b  C'))").head().getInt(0) === 3)
-      assert(s2.sql("SELECT size(shingle_hashes('abcdef', 5))").head().getInt(0) === 2)
-      assert(s2.sql("SELECT simhash_fp('a b', 40)").head().getLong(0) !== 0L)
-      assert(s2.sql("SELECT byte_stats(cast('ab' as binary)).n_bytes")
-        .head().getInt(0) === 2)
-      assert(s2.sql("SELECT hyperplane_sig(array(1.0D, -1.0D), 8, 2)").count() === 1)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    // TestSpark's session comes from GraftSession.builder, which adds
+    // GraftExtensions (a cluster deploy sets spark.sql.extensions)
+    val table = graft.functions.GraftFunctions.table
+    assert(table.size === 16)
+    assert(table.map(_.name).toSet === sampleCalls.keySet)
+    table.foreach { f =>
+      val row = spark.sql(s"SELECT ${sampleCalls(f.name)} AS v").head()
+      assert(!row.isNullAt(0), s"${f.name} returned NULL")
     }
+    assert(spark.sql("SELECT size(tokenize_ws('A b  C'))").head().getInt(0) === 3)
+    assert(spark.sql("SELECT size(shingle_hashes('abcdef', 5))").head().getInt(0) === 2)
+    assert(spark.sql("SELECT hamming_dist(array(1L, 3L), array(0L, 3L))")
+      .head().getInt(0) === 1)
+    assert(spark.sql("SELECT byte_stats(cast('ab' as binary)).n_bytes")
+      .head().getInt(0) === 2)
+  }
+
+  test("a native function called with the wrong arity fails with the table's message") {
+    val err = intercept[Exception](spark.sql("SELECT dot_product(array(1.0D))").collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("dot_product expects 2 argument(s), got 1")),
+      s"unexpected error: $msgs")
   }
 
   test("streaming progress listener observes all input rows") {
