@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Single-pass raw-moment accumulator for a `array<double>` vector
   * column: buffer = [n, Σx (d), Σxxᵀ (d², row-major)] — the bounded
   * mergeable state behind PCA/whitening/covariance maintenance
-  * ([[graft.ops.PcaOps.componentFromMoments]]). This is the
+  * ([[graft.ops.PcaOps.componentsFromMoments]]). This is the
   * deploy-scale replacement for the explode + self-join + hash-agg
   * moment accumulation (which blows each row up into d² join rows):
   * here each input row folds into the buffer in-place (d² FMAs, no row
@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * serialize/merge partials — the MultiHllSketch/TopKRows pattern.
   *
   * Rows that are NULL, of the wrong dimension, or containing ANY null
-  * element are skipped (the same contract as the PCA scan filter —
-  * `ArrayData.getDouble` on a null slot would silently read 0.0 and
-  * the streaming mu would drift from the batch path's). Evaluates to
+  * element are skipped (the one PCA input contract: PcaOps' apply side
+  * filters the same rows — `ArrayData.getDouble` on a null slot would
+  * silently read 0.0). Evaluates to
   * the flat `array<double>` buffer; callers slice (n, Σx, Σxxᵀ) out.
   */
 case class VectorMoments(

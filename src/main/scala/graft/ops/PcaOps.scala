@@ -13,90 +13,170 @@ import org.apache.spark.sql.functions._
   *
   * Determinism contract (the repo's float policy, same as
   * [[ClusterOps.kmeansLloyd]]): the mean vector and every iterate are
-  * floor-quantized to the 1e-6 grid, the start vector is the constant
-  * `quant(1/sqrt(dim))`, and exactly `iters` multiply-normalize rounds
-  * run — so the DuckDB oracle replays the identical trajectory as an
-  * unrolled CTE chain and the certified outputs (per-vector PC1 score,
-  * eigenvalue, variance-explained) compare exactly.
+  * floor-quantized to the 1e-6 grid, component 0 starts from the
+  * constant `quant(1/sqrt(dim))`, and exactly `iters`
+  * multiply-orthogonalize-normalize rounds run per component — so the
+  * DuckDB oracle replays the identical trajectory as an unrolled CTE
+  * chain and the certified outputs (per-vector projections,
+  * eigenvalue, variance-explained, outlier scores) compare exactly.
   *
-  * Scale posture: per iteration ONE map-only pass over the cached
-  * centered vectors feeding a single-row aggregate of `dim` partial
-  * sums (map-side combine; no shuffle of row data, the exchange carries
-  * one row per partition). Driver state is O(dim) per iteration — the
-  * same bounded-collect class as PageRank's scalar mass fold. The final
-  * projection is a map-only codegen dot product. Nothing here grows
-  * with row count except the scans.
+  * One driver loop ([[powerBasis]]) runs every fit; only the
+  * matrix-vector product differs. The SERVED fit is
+  * [[componentsFromMoments]]: one [[graft.functions.VectorMoments]]
+  * pass, then `C'·v` on the driver. [[topComponents]] is the data-pass
+  * reference the moments path is pinned against (PcaOpsSpec): per
+  * iteration one map-only pass over the cached centered vectors feeding
+  * a single-row aggregate of `dim` partial sums. Either way driver state
+  * is O(dim²) at most, and the apply side ([[transformWith]],
+  * [[varianceWith]], [[scoreSubspace]]) is a map-only codegen dot
+  * product over fitted literals.
+  *
+  * Input contract, on fit and on apply: a vector counts when it is not
+  * null, has exactly `dim` elements and none of them is null — the
+  * [[graft.functions.VectorMoments]] contract ([[vectors]]; the oracle
+  * mirrors it in [[validSql]]).
   */
 object PcaOps {
   import Reuse.{quantMicroCol, quantMicroSql}
 
   private def quant(v: Double): Double = Reuse.quantMicro(v)
 
-  /** (mean, component) for the top PC — both 1e-6-quantized, `dim`
-    * doubles each. `iters` fixed multiply-normalize rounds from the
-    * constant start vector.
-    */
-  def topComponent(
-      emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, iters: Int): (Array[Double], Array[Double]) = {
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
+  private def litArray(v: Array[Double]): Column = array(v.map(lit).toIndexedSeq: _*)
+
+  /** The valid vectors as `(id: long, x: array<double>)`. A null
+    * element would otherwise read as 0.0 in the dot product
+    * (DotProduct leaves null elements to be filtered upstream). */
+  private def vectors(
+      emb: DataFrame, idCol: String, vecCol: String, dim: Int): DataFrame =
+    emb
+      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim &&
+        forall(col(vecCol), _.isNotNull))
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("x"))
-    val (xc, cache) = Reuse.materializedHandle(x)
-    try {
-      val muRow = xc.agg(
-        avg(element_at(col("x"), 1)),
-        (2 to dim).map(j => avg(element_at(col("x"), j))): _*).head()
-      val mu = Array.tabulate(dim)(j => quant(muRow.getDouble(j)))
-      val muLit = array(mu.map(lit).toIndexedSeq: _*)
 
-      var v = Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
+  /** Vectors centered on `mu` as column `c` (`zip_with`, so `dot(c, v)`
+    * stays a left-to-right fold — the summation order the oracle's
+    * per-id SUM replays up to sub-grid noise). */
+  private def centered(x: DataFrame, mu: Array[Double]): DataFrame =
+    x.select(col("id"), zip_with(col("x"), litArray(mu), (a, b) => a - b).as("c"))
+
+  /** Each basis vector attached as a literal array column `v{t}`. */
+  private def withBasis(c: DataFrame, comps: Array[Array[Double]]): DataFrame =
+    comps.zipWithIndex.foldLeft(c) { case (df, (v, t)) =>
+      df.withColumn("v" + t, litArray(v))
+    }
+
+  /** One single-row aggregate of `dim` per-coordinate values (`f` takes
+    * the 1-based coordinate). */
+  private def perCoord(df: DataFrame, dim: Int)(f: Int => Column): Array[Double] = {
+    val row = df.agg(f(1), (2 to dim).map(f): _*).head()
+    Array.tabulate(dim)(row.getDouble)
+  }
+
+  /** The one deflated power iteration: `m` components, `iters` rounds
+    * each, `mul` the centered covariance product `v ↦ Σ_rows c·(c·v)`
+    * (however the caller computes it).
+    *
+    * Per-component start: component 0 starts uniform; later components
+    * start from the axis vector e_{t mod dim}. The uniform start's mass
+    * inside the residual subspace VANISHES as t grows — measured at
+    * m=64: the true residual of the iterate fell below the ~t·1e-6
+    * Gram–Schmidt leakage floor (from the quantized basis) and all late
+    * components collapsed onto span(earlier) with |<vi,vj>| ≈ 1 (a 0.064
+    * rotation-sanity recall row at m=64). Axis starts keep the residual
+    * mass O(1) at every t.
+    *
+    * Gram–Schmidt, applied TWICE (Kahan/Parlett "twice is enough"):
+    * within a pass all projections are taken against the pass's
+    * incoming iterate, then subtracted left-to-right in component order
+    * (the oracle's `w - d0*v0 - d1*v1 - …` replays the exact
+    * arithmetic). One pass against a 1e-6-quantized basis leaves ~t·1e-6
+    * of span(comps) leakage — fatal when the true residual is smaller
+    * (the m=64 collapse above); the second pass knocks the leakage down
+    * to second order regardless of conditioning. Component 0 skips it.
+    */
+  private def powerBasis(dim: Int, iters: Int, m: Int)(
+      mul: Array[Double] => Array[Double]): Array[Array[Double]] = {
+    val comps = scala.collection.mutable.ArrayBuffer[Array[Double]]()
+    for (t <- 0 until m) {
+      var v =
+        if (t == 0) Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
+        else Array.tabulate(dim)(j => if (j == t % dim) 1.0 else 0.0)
       for (_ <- 1 to iters) {
-        val scored = withV(centered(xc, muLit), v)
-          .withColumn("s", dot(col("c"), col("v")))
-        val wRow = scored.agg(
-          sum(col("s") * element_at(col("c"), 1)),
-          (2 to dim).map(j => sum(col("s") * element_at(col("c"), j))): _*)
-          .head()
-        val w = Array.tabulate(dim)(wRow.getDouble)
-        val norm = math.sqrt(w.map(wj => wj * wj).sum)
+        var wo = mul(v)
+        val gsPasses = if (comps.isEmpty) 0 else 2
+        for (_ <- 1 to gsPasses) {
+          val cur = wo
+          val dots = comps.map(p => (0 until dim).map(j => cur(j) * p(j)).sum)
+          wo = Array.tabulate(dim) { j =>
+            comps.zip(dots).foldLeft(cur(j)) { case (acc, (p, d)) => acc - d * p(j) }
+          }
+        }
+        val norm = math.sqrt(wo.map(wj => wj * wj).sum)
         require(norm > 0,
-          "power iterate collapsed to zero norm — the centered corpus is " +
-            "all-zero/constant (no principal direction exists)")
-        v = w.map(wj => quant(wj / norm))
+          s"power iterate collapsed to zero norm at component ${t + 1} — " +
+            "the centered corpus has rank below the requested m " +
+            "(all-zero/constant when m = 1)")
+        v = wo.map(wj => quant(wj / norm))
       }
-      (mu, v)
+      comps += v
+    }
+    comps.toArray
+  }
+
+  /** (mean, top-m basis) by data passes: the quantized column means,
+    * then [[powerBasis]] with each product one map-only pass over the
+    * cached centered vectors into a dim-bounded single-row aggregate
+    * (m·iters passes). No query serves this fit — PcaOpsSpec pins
+    * [[componentsFromMoments]] bit-equal to it.
+    */
+  def topComponents(
+      emb: DataFrame, idCol: String, vecCol: String,
+      dim: Int, iters: Int, m: Int): (Array[Double], Array[Array[Double]]) = {
+    val (xc, cache) = Reuse.materializedHandle(vectors(emb, idCol, vecCol, dim))
+    try {
+      val mu = perCoord(xc, dim)(j => avg(element_at(col("x"), j))).map(quant)
+      val c = centered(xc, mu)
+      (mu, powerBasis(dim, iters, m) { v =>
+        val scored = withBasis(c, Array(v)).withColumn("s", dot(col("c"), col("v0")))
+        perCoord(scored, dim)(j => sum(col("s") * element_at(col("c"), j)))
+      })
     } finally cache.close()
   }
 
-  /** Centered vectors with the CURRENT iterate attached as a literal
-    * array column `v` (so `dot(c, v)` stays a codegen'd
-    * left-to-right fold — the exact summation order the oracle's
-    * per-id SUM replays up to sub-grid noise).
+  /** Top-m basis re-derived from MERGED RAW MOMENTS (n, Σx, Σxxᵀ)
+    * instead of data passes — the continuous-ingest form: each
+    * micro-batch contributes its moments (a d²+d+1-value MONOID), and
+    * the centered product the data-pass fit computes as
+    * `Σ_rows c·(c·v)` is algebraically `C'·v` with
+    * `C'_jk = S_jk − mu_j·Sx_k − mu_k·Sx_j + n·mu_j·mu_k` (mu the
+    * 1e-6-quantized mean, exactly as [[topComponents]] quantizes it).
+    * The two associations differ only in float summation grouping
+    * (~1e-13 relative), which the per-round 1e-6 quantization absorbs —
+    * so the moments-derived basis certifies against the identical
+    * DuckDB oracle.
+    *
+    * BOUNDARY-PROXIMITY ASSUMPTION (probabilistic, not structural): the
+    * absorption above holds unless an iterate component lands within
+    * ~1e-13 of a round-half-up 1e-6 grid boundary, where the two
+    * associations could quantize to ADJACENT grid points and the
+    * trajectories diverge. PcaOpsSpec pins this basis exactly equal to
+    * [[topComponents]]' on the bench corpus for every (iters, m) config
+    * a query uses (the certified fixture is known-safe); arbitrary
+    * corpora carry the measure-zero caveat.
     */
-  private def centered(x: DataFrame, muLit: Column): DataFrame =
-    x.select(col("id"),
-      zip_with(col("x"), muLit, (a, b) => a - b).as("c"))
-
-  private def withV(c: DataFrame, v: Array[Double]): DataFrame =
-    c.withColumn("v", array(v.map(lit).toIndexedSeq: _*))
-
-  /** Per-vector PC1 score (the projection onto the top component),
-    * 1e-6-quantized. Map-only once (mean, component) are known.
-    */
-  def project(
-      emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, iters: Int): DataFrame = {
-    val (mu, v) = topComponent(emb, idCol, vecCol, dim, iters)
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("x"))
-    val proj = withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
-      .withColumn("s", dot(col("c"), col("v")))
-    proj.select(col("id").as("vec_id"),
-      quantMicroCol(col("s")).as("pc1"))
+  def componentsFromMoments(
+      n: Long, sx: Array[Double], sxx: Array[Array[Double]],
+      dim: Int, iters: Int, m: Int): (Array[Double], Array[Array[Double]]) = {
+    require(n > 1, s"moments-derived basis needs n > 1 vectors, got $n")
+    val mu = sx.map(s => quant(s / n.toDouble))
+    val cp = Array.tabulate(dim, dim) { (j, k) =>
+      sxx(j)(k) - mu(j) * sx(k) - mu(k) * sx(j) + n.toDouble * mu(j) * mu(k)
+    }
+    (mu, powerBasis(dim, iters, m) { v =>
+      Array.tabulate(dim)(j =>
+        (0 until dim).foldLeft(0.0)((acc, k) => acc + cp(j)(k) * v(k)))
+    })
   }
 
   /** One-row spectrum summary: leading eigenvalue (Rayleigh quotient of
@@ -108,27 +188,21 @@ object PcaOps {
   def varianceSummary(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, iters: Int): DataFrame = {
-    val (mu, v) = topComponent(emb, idCol, vecCol, dim, iters)
-    varianceWith(emb, idCol, vecCol, dim, mu, v)
+    val (mu, comps) = topComponents(emb, idCol, vecCol, dim, iters, 1)
+    varianceWith(emb, idCol, vecCol, dim, mu, comps(0))
   }
 
   /** The one-pass tail of [[varianceSummary]] against a KNOWN
-    * (mean, component) — shares a memoized fit with [[projectWith]]. */
+    * (mean, component). */
   def varianceWith(
       emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       mu: Array[Double], v: Array[Double]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("x"))
-    val c = withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
-      .withColumn("s", dot(col("c"), col("v")))
-    val row = c.agg(
-      sum(col("s") * col("s")),
-      sum(dot(col("c"), col("c"))),
-      count(lit(1))).head()
+    val row = withBasis(centered(vectors(emb, idCol, vecCol, dim), mu), Array(v))
+      .withColumn("s", dot(col("c"), col("v0")))
+      .agg(sum(col("s") * col("s")), sum(dot(col("c"), col("c"))), count(lit(1)))
+      .head()
     val n = row.getLong(2)
     require(n > 1,
       s"variance needs at least 2 vectors after the dim filter, got $n")
@@ -137,90 +211,6 @@ object PcaOps {
     val ratio = quant(lambda / total)
     Seq((n, lambda, total, ratio))
       .toDF("n_vectors", "lambda1", "total_var", "var_ratio")
-  }
-
-  /** Top-m components by deflated power iteration: each component runs
-    * the same quantized multiply-normalize trajectory, with the
-    * iterate PARALLEL-orthogonalized against every already-found
-    * component each round — classical Gram–Schmidt on the O(dim)
-    * driver state, applied TWICE per round with per-component axis
-    * starts (a single pass against the 1e-6-quantized basis
-    * plus the shared uniform start collapsed all late components at
-    * m=64 — see the in-loop comments; subtractions fold left-to-right
-    * so the oracle's `w - d0*v0 - d1*v1 - …` expression replays the
-    * exact arithmetic).
-    * Scale posture is unchanged from [[topComponent]]: m·iters map-only
-    * passes, each feeding a dim-bounded single-row aggregate; at deploy
-    * scale the basis is fitted on a bounded sample and applied to the
-    * full corpus — fitting IS a sampling-tolerant estimation step,
-    * the transform is the exact map-only pass.
-    */
-  def topComponents(
-      emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, iters: Int, m: Int): (Array[Double], Array[Array[Double]]) = {
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("x"))
-    val (xc, cache) = Reuse.materializedHandle(x)
-    try {
-      val muRow = xc.agg(
-        avg(element_at(col("x"), 1)),
-        (2 to dim).map(j => avg(element_at(col("x"), j))): _*).head()
-      val mu = Array.tabulate(dim)(j => quant(muRow.getDouble(j)))
-      val muLit = array(mu.map(lit).toIndexedSeq: _*)
-
-      val comps = scala.collection.mutable.ArrayBuffer[Array[Double]]()
-      for (t <- 0 until m) {
-        // Per-component start: component 0 keeps the uniform
-        // start (preserving every single-component trajectory); later
-        // components start from the axis vector e_{t mod dim}. The
-        // shared uniform start's mass inside the residual subspace
-        // VANISHES as t grows — measured at m=64: the true residual of
-        // the iterate fell below the ~t·1e-6 Gram–Schmidt leakage floor
-        // (from the quantized basis) and all late components collapsed
-        // onto span(earlier) with |<vi,vj>| ≈ 1 (a 0.064 rotation-sanity
-        // recall row at m=64). Axis starts keep the
-        // residual mass O(1) at every t.
-        var v =
-          if (t == 0) Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
-          else Array.tabulate(dim)(j => if (j == t % dim) 1.0 else 0.0)
-        for (_ <- 1 to iters) {
-          val scored = withV(centered(xc, muLit), v)
-            .withColumn("s", dot(col("c"), col("v")))
-          val wRow = scored.agg(
-            sum(col("s") * element_at(col("c"), 1)),
-            (2 to dim).map(j => sum(col("s") * element_at(col("c"), j))): _*)
-            .head()
-          val w = Array.tabulate(dim)(wRow.getDouble)
-          // Gram–Schmidt, applied TWICE (Kahan/Parlett "twice is
-          // enough"): within a pass all projections are
-          // taken against the pass's incoming iterate, then subtracted
-          // left-to-right in component order (the oracle's
-          // `w - d0*v0 - d1*v1 - …` replays the exact arithmetic). One
-          // pass against a 1e-6-quantized basis leaves ~t·1e-6 of
-          // span(comps) leakage — fatal when the true residual is
-          // smaller (the m=64 collapse above); the second pass knocks
-          // the leakage down to second order regardless of conditioning.
-          var wo = w
-          val gsPasses = if (comps.isEmpty) 0 else 2
-          for (_ <- 1 to gsPasses) {
-            val cur = wo
-            val dots = comps.map(p => (0 until dim).map(j => cur(j) * p(j)).sum)
-            wo = Array.tabulate(dim) { j =>
-              comps.zip(dots).foldLeft(cur(j)) { case (acc, (p, d)) => acc - d * p(j) }
-            }
-          }
-          val norm = math.sqrt(wo.map(wj => wj * wj).sum)
-          require(norm > 0,
-            s"deflated power iterate collapsed to zero norm at component " +
-              s"${comps.size + 1} — corpus rank is below the requested m")
-          v = wo.map(wj => quant(wj / norm))
-        }
-        comps += v
-      }
-      (mu, comps.toArray)
-    } finally cache.close()
   }
 
   /** Per-vector projections onto the top-m basis — the
@@ -236,159 +226,14 @@ object PcaOps {
 
   /** The map-only tail of [[transform]] against a KNOWN (mean, basis) —
     * lets one fitted basis serve every downstream consumer (the
-    * transform, the outlier scorer, a whitening pass) without refitting.
+    * projection, the OPQ rotation, a whitening pass) without refitting.
     */
   def transformWith(
       emb: DataFrame, idCol: String, vecCol: String, dim: Int,
-      mu: Array[Double], comps: Array[Array[Double]]): DataFrame = {
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("x"))
-    val c = centered(x, array(mu.map(lit).toIndexedSeq: _*))
-    val projCols = comps.zipWithIndex.map { case (v, t) =>
-      val vLit = array(v.map(lit).toIndexedSeq: _*)
-      quantMicroCol(dot(col("c"), col("v" + t))).as(s"pc${t + 1}")
-    }
-    val withVs = comps.zipWithIndex.foldLeft(c) { case (df, (v, t)) =>
-      df.withColumn("v" + t, array(v.map(lit).toIndexedSeq: _*))
-    }
-    withVs.select(col("id").as("vec_id") +: projCols.toIndexedSeq: _*)
-  }
-
-  /** Shared deflated-trajectory CTE block (everything up to the
-    * per-(id, component) quantized projections `p(id, t, pc)`): the
-    * single-component trajectory chain repeated per component with the
-    * parallel Gram–Schmidt correction CTE (`o{t}_{k}`) between multiply
-    * and normalize. Used by [[transformOracleSql]] and
-    * [[outlierOracleSql]].
-    */
-  private def deflatedCtes(dim: Int, iters: Int, m: Int,
-      centerProj: Boolean = true): String = {
-    val v0 = java.lang.Double.toString(quant(1.0 / math.sqrt(dim.toDouble)))
-    val chains = (0 until m).map { t =>
-      val rounds = (1 to iters).map { k =>
-        // Gram–Schmidt TWICE (mirrors topComponents):
-        // pass a takes all projections against the raw iterate w and
-        // subtracts left-to-right; pass b repeats against pass a's
-        // output. Both passes read the same `- (Σ src·vfp)·vfp` shape
-        // so the engine's foldLeft arithmetic replays exactly.
-        def gsPass(src: String, out: String): String = {
-          val subs = (0 until t).map { p =>
-            s"- (SELECT SUM(w2.w * v.vv) FROM $src w2 JOIN vf$p v USING (idx)) * a$p.vv"
-          }.mkString(" ")
-          val joins = (0 until t).map(p => s"JOIN vf$p a$p USING (idx)").mkString(" ")
-          s"""$out AS MATERIALIZED (
-             |  SELECT w.idx, w.w $subs AS w FROM $src w $joins)""".stripMargin
-        }
-        val ortho =
-          if (t == 0) s"o${t}_$k AS MATERIALIZED (SELECT idx, w FROM w${t}_$k)"
-          else gsPass(s"w${t}_$k", s"oa${t}_$k") + ",\n" +
-            gsPass(s"oa${t}_$k", s"o${t}_$k")
-        s"""s${t}_$k AS MATERIALIZED (SELECT id, SUM(cv * vv) AS s
-           |  FROM c JOIN v${t}_${k - 1} USING (idx) GROUP BY id),
-           |w${t}_$k AS MATERIALIZED (SELECT c.idx, SUM(cv * s) AS w
-           |  FROM c JOIN s${t}_$k USING (id) GROUP BY c.idx),
-           |$ortho,
-           |v${t}_$k AS MATERIALIZED (
-           |  SELECT idx, ${quantMicroSql(s"w / sqrt((SELECT SUM(w*w) FROM o${t}_$k))")} AS vv
-           |  FROM o${t}_$k)""".stripMargin
-      }.mkString(",\n")
-      // per-component start (mirrors topComponents): uniform for
-      // component 0, axis vector e_{t mod dim} after — 1-based idx
-      val startExpr =
-        if (t == 0) v0
-        else s"CASE WHEN idx = ${(t % dim) + 1} THEN 1.0 ELSE 0.0 END"
-      s"""v${t}_0 AS MATERIALIZED (SELECT idx, $startExpr AS vv FROM mu),
-         |$rounds,
-         |vf$t AS MATERIALIZED (SELECT idx, vv FROM v${t}_$iters)""".stripMargin
-    }.mkString(",\n")
-    val vfall = (0 until m)
-      .map(t => s"SELECT $t AS t, idx, vv FROM vf$t")
-      .mkString(" UNION ALL ")
-    s"""e AS MATERIALIZED (
-       |  SELECT vec_id AS id,
-       |    unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS val,
-       |    unnest(range(1, len(embedding)+1)) AS idx
-       |  FROM embeddings
-       |  WHERE embedding IS NOT NULL AND len(embedding) = $dim),
-       |mu AS MATERIALIZED (SELECT idx, ${quantMicroSql("AVG(val)")} AS m FROM e GROUP BY idx),
-       |c AS MATERIALIZED (
-       |  SELECT id, e.idx, val - m AS cv FROM e JOIN mu USING (idx)),
-       |$chains,
-       |vfall AS MATERIALIZED ($vfall),
-       |p AS MATERIALIZED (
-       |  ${if (centerProj)
-            s"""SELECT c.id, v.t, ${quantMicroSql("SUM(c.cv * v.vv)")} AS pc
-               |  FROM c JOIN vfall v USING (idx) GROUP BY c.id, v.t"""
-                .stripMargin
-          else
-            s"""SELECT e.id, v.t, ${quantMicroSql("SUM(e.val * v.vv)")} AS pc
-               |  FROM e JOIN vfall v USING (idx) GROUP BY e.id, v.t"""
-                .stripMargin})""".stripMargin
-  }
-
-  /** Oracle for the UNCENTERED rotation ([[transformWith]] with a zero
-    * mean): projections of the RAW vectors onto the deflated basis —
-    * the basis itself is still fitted on centered data (that is what
-    * decorrelation wants), but a pure orthonormal rotation preserves
-    * raw-space cosine exactly, which a centered projection does not
-    * when the corpus mean is non-zero (the OPQ serving contract). */
-  def rotateOracleSql(dim: Int, iters: Int, m: Int): String = {
-    val outCols = (0 until m).map { t =>
-      s"MAX(CASE WHEN t = $t THEN pc END) AS pc${t + 1}"
-    }.mkString(",\n  ")
-    s"""WITH ${deflatedCtes(dim, iters, m, centerProj = false)}
-       |SELECT id AS vec_id,
-       |  $outCols
-       |FROM p GROUP BY id ORDER BY vec_id""".stripMargin
-  }
-
-  /** Oracle for [[transform]]: pivot the shared deflated projections
-    * into pc1..pcm columns. */
-  def transformOracleSql(dim: Int, iters: Int, m: Int): String = {
-    val outCols = (0 until m).map { t =>
-      s"MAX(CASE WHEN t = $t THEN pc END) AS pc${t + 1}"
-    }.mkString(",\n  ")
-    s"""WITH ${deflatedCtes(dim, iters, m)}
-       |SELECT id AS vec_id,
-       |  $outCols
-       |FROM p GROUP BY id ORDER BY vec_id""".stripMargin
-  }
-
-  /** Oracle for the SUBSPACE Mahalanobis outlier score
-    * (q_embed_outliers_pca): projections from the shared deflated
-    * trajectory move onto the integer micro lattice
-    * (`pcm = FLOOR(pc·1e6+0.5)`), per-component eigenvalues in micro
-    * units by exact integer arithmetic
-    * (`lam_micro = Σpcm² // ((n−1)·1e6)`), and the score decomposes as
-    * z2_micro = Σ_t pcm_t²//lam_t (standardized in-subspace energy) +
-    * resid_micro = e2m − Σ_t pcm_t²//1e6 (off-subspace residual) —
-    * every division on nonnegative integers, so DuckDB `//` and Spark
-    * `div` agree exactly.
-    */
-  def outlierOracleSql(dim: Int, iters: Int, m: Int): String =
-    s"""WITH ${deflatedCtes(dim, iters, m)},
-       |pm AS MATERIALIZED (
-       |  SELECT id, t, CAST(FLOOR(pc*1000000+0.5) AS BIGINT) AS pcm FROM p),
-       |nn AS (SELECT COUNT(*) AS n FROM embeddings
-       |  WHERE embedding IS NOT NULL AND len(embedding) = $dim),
-       |lam AS (
-       |  SELECT t, CAST(SUM(pcm*pcm)
-       |    // (((SELECT n FROM nn) - 1) * 1000000) AS BIGINT) AS lam_micro
-       |  FROM pm GROUP BY t),
-       |e2 AS (
-       |  SELECT id, CAST(FLOOR(SUM(cv*cv)*1000000+0.5) AS BIGINT) AS e2m
-       |  FROM c GROUP BY id),
-       |z AS (
-       |  SELECT pm.id,
-       |    CAST(SUM((pcm*pcm) // lam_micro) AS BIGINT) AS z2_micro,
-       |    CAST(SUM((pcm*pcm) // 1000000) AS BIGINT) AS spent
-       |  FROM pm JOIN lam USING (t) GROUP BY pm.id)
-       |SELECT z.id AS vec_id, z2_micro,
-       |  e2m - spent AS resid_micro,
-       |  z2_micro + e2m - spent AS score_micro
-       |FROM z JOIN e2 ON e2.id = z.id ORDER BY vec_id""".stripMargin
+      mu: Array[Double], comps: Array[Array[Double]]): DataFrame =
+    withBasis(centered(vectors(emb, idCol, vecCol, dim), mu), comps)
+      .select(col("id").as("vec_id") +: comps.indices.map(t =>
+        quantMicroCol(dot(col("c"), col(s"v$t"))).as(s"pc${t + 1}")): _*)
 
   /** SUBSPACE Mahalanobis outlier scoring:
     * T185's diagonal z-scores are blind to CORRELATED corruption — a
@@ -402,9 +247,8 @@ object PcaOps {
     * the integer micro lattice (`FLOOR(x·1e6+0.5)` as long) BEFORE any
     * aggregation, eigenvalues are exact integer `Σpcm² div ((n−1)·1e6)`,
     * and all divisions are nonnegative-integer `div` — bit-identical to
-    * the oracle's `//`. Scale: the fit is m·iters map-only passes
-    * (the [[topComponents]] posture); scoring is ONE map-only pass plus
-    * one m-value single-row aggregate for the eigenvalues.
+    * the oracle's `//`. Scoring is ONE map-only pass plus one m-value
+    * single-row aggregate for the eigenvalues.
     */
   def subspaceOutliers(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -414,28 +258,20 @@ object PcaOps {
   }
 
   /** The scoring tail of [[subspaceOutliers]] against a KNOWN
-    * (mean, basis) — shared with the streaming-moments path
-    * (q_stream_outliers_pca), which derives the identical quantized
-    * basis from merged micro-batch moments instead of data passes.
+    * (mean, basis) — what q_embed_outliers_pca and
+    * q_stream_outliers_pca serve from their moments-derived bases.
     */
   def scoreSubspace(
       emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       mu: Array[Double], comps: Array[Array[Double]]): DataFrame = {
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("x"))
-    val c = centered(x, array(mu.map(lit).toIndexedSeq: _*))
-    val withVs = comps.zipWithIndex.foldLeft(c) { case (df, (v, t)) =>
-      df.withColumn("v" + t, array(v.map(lit).toIndexedSeq: _*))
-    }
-    val pcm = withVs.select(
-      col("id") +:
-        floor(dot(col("c"), col("c")) * 1000000 + 0.5)
-          .cast("long").as("e2m") +:
-        comps.indices.map(t =>
-          floor(dot(col("c"), col(s"v$t")) * 1000000 + 0.5)
-            .cast("long").as(s"pcm$t")).toIndexedSeq: _*)
+    val pcm = withBasis(centered(vectors(emb, idCol, vecCol, dim), mu), comps)
+      .select(
+        col("id") +:
+          floor(dot(col("c"), col("c")) * 1000000 + 0.5)
+            .cast("long").as("e2m") +:
+          comps.indices.map(t =>
+            floor(dot(col("c"), col(s"v$t")) * 1000000 + 0.5)
+              .cast("long").as(s"pcm$t")): _*)
     // two consumers (eigenvalue aggregate + scoring pass) — materialize
     // once; released by the engine's between-queries cache sweep
     val pcmC = Reuse.materialized(pcm)
@@ -486,165 +322,154 @@ object PcaOps {
       (z2 + col("e2m") - spent).as("score_micro"))
   }
 
-  /** Top-m deflated basis re-derived from MERGED RAW MOMENTS — the
-    * multi-component generalization of [[componentFromMoments]]: the
-    * same centered second-moment regrouping `C'·v`, with the parallel
-    * Gram–Schmidt correction applied to the RAW iterate each round in
-    * EXACTLY [[topComponents]]' driver arithmetic (projections against
-    * all found components first, subtractions folded left-to-right in
-    * component order) — so the moments-derived basis matches the batch
-    * basis under the same 1e-6 absorption class, and the streaming
-    * outlier scorer certifies against the identical oracle as the
-    * batch one. Same boundary-proximity caveat as
-    * [[componentFromMoments]]; PcaOpsSpec pins equality on the bench
-    * corpus.
-    */
-  def componentsFromMoments(
-      n: Long, sx: Array[Double], sxx: Array[Array[Double]],
-      dim: Int, iters: Int, m: Int): (Array[Double], Array[Array[Double]]) = {
-    require(n > 1, s"moments-derived basis needs n > 1 vectors, got $n")
-    val mu = sx.map(s => quant(s / n.toDouble))
-    val cp = Array.tabulate(dim, dim) { (j, k) =>
-      sxx(j)(k) - mu(j) * sx(k) - mu(k) * sx(j) + n.toDouble * mu(j) * mu(k)
-    }
-    val comps = scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    for (t <- 0 until m) {
-      // mirrors topComponents exactly: axis starts for
-      // t > 0 and double Gram–Schmidt (see the batch path's comments)
-      var v =
-        if (t == 0) Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
-        else Array.tabulate(dim)(j => if (j == t % dim) 1.0 else 0.0)
-      for (_ <- 1 to iters) {
-        val w = Array.tabulate(dim)(j =>
-          (0 until dim).foldLeft(0.0)((acc, k) => acc + cp(j)(k) * v(k)))
-        var wo = w
-        val gsPasses = if (comps.isEmpty) 0 else 2
-        for (_ <- 1 to gsPasses) {
-          val cur = wo
-          val dots = comps.map(p => (0 until dim).map(j => cur(j) * p(j)).sum)
-          wo = Array.tabulate(dim) { j =>
-            comps.zip(dots).foldLeft(cur(j)) { case (acc, (p, d)) => acc - d * p(j) }
-          }
-        }
-        val norm = math.sqrt(wo.map(wj => wj * wj).sum)
-        require(norm > 0,
-          s"moments-derived deflated iterate collapsed to zero norm at " +
-            s"component ${comps.size + 1} — moments describe a corpus of " +
-            s"rank below the requested m")
-        v = wo.map(wj => quant(wj / norm))
-      }
-      comps += v
-    }
-    (mu, comps.toArray)
-  }
+  /** The oracle's form of the [[vectors]] input contract over the
+    * `embeddings` table (`list_count` counts the non-null elements). */
+  private def validSql(dim: Int): String =
+    s"embedding IS NOT NULL AND len(embedding) = $dim AND list_count(embedding) = $dim"
 
-  /** The power trajectory re-derived from MERGED RAW MOMENTS
-    * (n, Σx, Σxxᵀ) instead of data passes — the continuous-ingest form:
-    * each micro-batch contributes its moments (a d²+d+1-value MONOID),
-    * and the centered matrix-vector product the batch path computes as
-    * `Σ_rows c·(c·v)` is algebraically `C'·v` with
-    * `C'_jk = S_jk − mu_j·Sx_k − mu_k·Sx_j + n·mu_j·mu_k` (mu the
-    * 1e-6-quantized mean, exactly as the batch path quantizes it). The
-    * two associations differ only in float summation grouping
-    * (~1e-13 relative), which the per-round 1e-6 quantization absorbs —
-    * the SAME determinism class the engine/oracle pair already rides —
-    * so the moments-derived component certifies against the identical
-    * DuckDB oracle as the batch trajectory.
-    *
-    * BOUNDARY-PROXIMITY ASSUMPTION (probabilistic, not structural): the
-    * absorption above holds unless an iterate component lands within
-    * ~1e-13 of a round-half-up 1e-6 grid boundary, where the two
-    * associations could quantize to ADJACENT grid points and the
-    * trajectories diverge. PcaOpsSpec pins the merged-moments
-    * trajectory exactly equal to the batch trajectory on the bench
-    * corpus (the certified fixture is known-safe); arbitrary corpora
-    * carry the measure-zero caveat.
+  /** The oracle's [[powerBasis]]: centered values `c(id, idx, cv)`, each
+    * component's unrolled iterates `v{t}_0..v{t}_{iters}` (score,
+    * multiply, the Gram–Schmidt CTEs `oa{t}_{k}`/`o{t}_{k}` for t > 0,
+    * normalize — DuckDB zips parallel `unnest`s for (val, idx)), the
+    * final components `vf{t}`, and the per-(id, component) quantized
+    * projections `p(id, t, pc)`. AS MATERIALIZED throughout: each
+    * iterate is read twice, and DuckDB would otherwise inline the chain
+    * into a 2^iters expression tree.
     */
-  def componentFromMoments(
-      n: Long, sx: Array[Double], sxx: Array[Array[Double]],
-      dim: Int, iters: Int): (Array[Double], Array[Double]) = {
-    require(n > 1, s"moments-derived component needs n > 1 vectors, got $n")
-    val mu = sx.map(s => quant(s / n.toDouble))
-    val cp = Array.tabulate(dim, dim) { (j, k) =>
-      sxx(j)(k) - mu(j) * sx(k) - mu(k) * sx(j) + n.toDouble * mu(j) * mu(k)
-    }
-    var v = Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
-    for (_ <- 1 to iters) {
-      val w = Array.tabulate(dim)(j =>
-        (0 until dim).foldLeft(0.0)((acc, k) => acc + cp(j)(k) * v(k)))
-      val norm = math.sqrt(w.map(wj => wj * wj).sum)
-      require(norm > 0,
-        "moments-derived power iterate collapsed to zero norm — the " +
-          "merged moments describe an all-zero/constant corpus")
-      v = w.map(wj => quant(wj / norm))
-    }
-    (mu, v)
-  }
-
-  /** Map-only projection of `emb` onto a KNOWN (mean, component) —
-    * the tail of [[project]], shared with the streaming-moments path.
-    */
-  def projectWith(
-      emb: DataFrame, idCol: String, vecCol: String, dim: Int,
-      mu: Array[Double], v: Array[Double]): DataFrame = {
-    val x = emb
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("x"))
-    withV(centered(x, array(mu.map(lit).toIndexedSeq: _*)), v)
-      .withColumn("s", dot(col("c"), col("v")))
-      .select(col("id").as("vec_id"),
-        quantMicroCol(col("s")).as("pc1"))
-  }
-
-  /** The shared oracle CTE chain: centered values `c(id, idx, cv)` and
-    * the unrolled iterates `v0..v{iters}` — DuckDB zips parallel
-    * `unnest`s for (val, idx), and each round is score/multiply/
-    * normalize with the engine's exact quantization points.
-    */
-  private def trajectoryCtes(dim: Int, iters: Int): String = {
+  private def deflatedCtes(dim: Int, iters: Int, m: Int,
+      centerProj: Boolean = true): String = {
     val v0 = java.lang.Double.toString(quant(1.0 / math.sqrt(dim.toDouble)))
-    // AS MATERIALIZED: each iterate is referenced twice (w by its own
-    // normalizing scalar subquery, v by the next round) — without the
-    // hint DuckDB inlines the chain into a 2^iters expression tree
-    val rounds = (1 to iters).map { k =>
-      s"""s$k AS MATERIALIZED (SELECT id, SUM(cv * vv) AS s
-         |  FROM c JOIN v${k - 1} USING (idx) GROUP BY id),
-         |w$k AS MATERIALIZED (SELECT c.idx, SUM(cv * s) AS w
-         |  FROM c JOIN s$k USING (id) GROUP BY c.idx),
-         |v$k AS MATERIALIZED (
-         |  SELECT idx, ${quantMicroSql(s"w / sqrt((SELECT SUM(w*w) FROM w$k))")} AS vv
-         |  FROM w$k)""".stripMargin
+    val chains = (0 until m).map { t =>
+      val rounds = (1 to iters).map { k =>
+        // Gram–Schmidt TWICE (mirrors powerBasis):
+        // pass a takes all projections against the raw iterate w and
+        // subtracts left-to-right; pass b repeats against pass a's
+        // output. Both passes read the same `- (Σ src·vfp)·vfp` shape
+        // so the engine's foldLeft arithmetic replays exactly.
+        def gsPass(src: String, out: String): String = {
+          val subs = (0 until t).map { p =>
+            s"- (SELECT SUM(w2.w * v.vv) FROM $src w2 JOIN vf$p v USING (idx)) * a$p.vv"
+          }.mkString(" ")
+          val joins = (0 until t).map(p => s"JOIN vf$p a$p USING (idx)").mkString(" ")
+          s"""$out AS MATERIALIZED (
+             |  SELECT w.idx, w.w $subs AS w FROM $src w $joins)""".stripMargin
+        }
+        val ortho =
+          if (t == 0) s"o${t}_$k AS MATERIALIZED (SELECT idx, w FROM w${t}_$k)"
+          else gsPass(s"w${t}_$k", s"oa${t}_$k") + ",\n" +
+            gsPass(s"oa${t}_$k", s"o${t}_$k")
+        s"""s${t}_$k AS MATERIALIZED (SELECT id, SUM(cv * vv) AS s
+           |  FROM c JOIN v${t}_${k - 1} USING (idx) GROUP BY id),
+           |w${t}_$k AS MATERIALIZED (SELECT c.idx, SUM(cv * s) AS w
+           |  FROM c JOIN s${t}_$k USING (id) GROUP BY c.idx),
+           |$ortho,
+           |v${t}_$k AS MATERIALIZED (
+           |  SELECT idx, ${quantMicroSql(s"w / sqrt((SELECT SUM(w*w) FROM o${t}_$k))")} AS vv
+           |  FROM o${t}_$k)""".stripMargin
+      }.mkString(",\n")
+      // per-component start (mirrors powerBasis): uniform for
+      // component 0, axis vector e_{t mod dim} after — 1-based idx
+      val startExpr =
+        if (t == 0) v0
+        else s"CASE WHEN idx = ${(t % dim) + 1} THEN 1.0 ELSE 0.0 END"
+      s"""v${t}_0 AS MATERIALIZED (SELECT idx, $startExpr AS vv FROM mu),
+         |$rounds,
+         |vf$t AS MATERIALIZED (SELECT idx, vv FROM v${t}_$iters)""".stripMargin
     }.mkString(",\n")
+    val vfall = (0 until m)
+      .map(t => s"SELECT $t AS t, idx, vv FROM vf$t")
+      .mkString(" UNION ALL ")
     s"""e AS MATERIALIZED (
        |  SELECT vec_id AS id,
        |    unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS val,
        |    unnest(range(1, len(embedding)+1)) AS idx
        |  FROM embeddings
-       |  WHERE embedding IS NOT NULL AND len(embedding) = $dim),
+       |  WHERE ${validSql(dim)}),
        |mu AS MATERIALIZED (SELECT idx, ${quantMicroSql("AVG(val)")} AS m FROM e GROUP BY idx),
        |c AS MATERIALIZED (
        |  SELECT id, e.idx, val - m AS cv FROM e JOIN mu USING (idx)),
-       |v0 AS MATERIALIZED (SELECT idx, $v0 AS vv FROM mu),
-       |$rounds""".stripMargin
+       |$chains,
+       |vfall AS MATERIALIZED ($vfall),
+       |p AS MATERIALIZED (
+       |  ${if (centerProj)
+            s"""SELECT c.id, v.t, ${quantMicroSql("SUM(c.cv * v.vv)")} AS pc
+               |  FROM c JOIN vfall v USING (idx) GROUP BY c.id, v.t"""
+                .stripMargin
+          else
+            s"""SELECT e.id, v.t, ${quantMicroSql("SUM(e.val * v.vv)")} AS pc
+               |  FROM e JOIN vfall v USING (idx) GROUP BY e.id, v.t"""
+                .stripMargin})""".stripMargin
   }
 
-  def projectOracleSql(dim: Int, iters: Int): String =
-    s"""WITH ${trajectoryCtes(dim, iters)}
+  /** The shared projections pivoted into pc1..pcm columns. */
+  private def pivotOracleSql(dim: Int, iters: Int, m: Int,
+      centerProj: Boolean): String = {
+    val outCols = (0 until m).map { t =>
+      s"MAX(CASE WHEN t = $t THEN pc END) AS pc${t + 1}"
+    }.mkString(",\n  ")
+    s"""WITH ${deflatedCtes(dim, iters, m, centerProj)}
        |SELECT id AS vec_id,
-       |  FLOOR(SUM(cv * vv)*1000000+0.5)/1000000.0 AS pc1
-       |FROM c JOIN v$iters USING (idx)
-       |GROUP BY id ORDER BY vec_id""".stripMargin
+       |  $outCols
+       |FROM p GROUP BY id ORDER BY vec_id""".stripMargin
+  }
 
+  /** Oracle for [[transformWith]] (pc1..pcm; m = 1 is the PC1 score). */
+  def transformOracleSql(dim: Int, iters: Int, m: Int): String =
+    pivotOracleSql(dim, iters, m, centerProj = true)
+
+  /** Oracle for the UNCENTERED rotation ([[transformWith]] with a zero
+    * mean): projections of the RAW vectors onto the deflated basis —
+    * the basis itself is still fitted on centered data (that is what
+    * decorrelation wants), but a pure orthonormal rotation preserves
+    * raw-space cosine exactly, which a centered projection does not
+    * when the corpus mean is non-zero (the OPQ serving contract). */
+  def rotateOracleSql(dim: Int, iters: Int, m: Int): String =
+    pivotOracleSql(dim, iters, m, centerProj = false)
+
+  /** Oracle for the SUBSPACE Mahalanobis outlier score
+    * (q_embed_outliers_pca): projections from the shared deflated
+    * trajectory move onto the integer micro lattice
+    * (`pcm = FLOOR(pc·1e6+0.5)`), per-component eigenvalues in micro
+    * units by exact integer arithmetic
+    * (`lam_micro = Σpcm² // ((n−1)·1e6)`), and the score decomposes as
+    * z2_micro = Σ_t pcm_t²//lam_t (standardized in-subspace energy) +
+    * resid_micro = e2m − Σ_t pcm_t²//1e6 (off-subspace residual) —
+    * every division on nonnegative integers, so DuckDB `//` and Spark
+    * `div` agree exactly.
+    */
+  def outlierOracleSql(dim: Int, iters: Int, m: Int): String =
+    s"""WITH ${deflatedCtes(dim, iters, m)},
+       |pm AS MATERIALIZED (
+       |  SELECT id, t, CAST(FLOOR(pc*1000000+0.5) AS BIGINT) AS pcm FROM p),
+       |nn AS (SELECT COUNT(*) AS n FROM embeddings
+       |  WHERE ${validSql(dim)}),
+       |lam AS (
+       |  SELECT t, CAST(SUM(pcm*pcm)
+       |    // (((SELECT n FROM nn) - 1) * 1000000) AS BIGINT) AS lam_micro
+       |  FROM pm GROUP BY t),
+       |e2 AS (
+       |  SELECT id, CAST(FLOOR(SUM(cv*cv)*1000000+0.5) AS BIGINT) AS e2m
+       |  FROM c GROUP BY id),
+       |z AS (
+       |  SELECT pm.id,
+       |    CAST(SUM((pcm*pcm) // lam_micro) AS BIGINT) AS z2_micro,
+       |    CAST(SUM((pcm*pcm) // 1000000) AS BIGINT) AS spent
+       |  FROM pm JOIN lam USING (t) GROUP BY pm.id)
+       |SELECT z.id AS vec_id, z2_micro,
+       |  e2m - spent AS resid_micro,
+       |  z2_micro + e2m - spent AS score_micro
+       |FROM z JOIN e2 ON e2.id = z.id ORDER BY vec_id""".stripMargin
+
+  /** Oracle for [[varianceWith]] over the one-component trajectory. */
   def varianceOracleSql(dim: Int, iters: Int): String = {
     val lambda = quantMicroSql("ss / (n - 1)")
     val total = quantMicroSql("tt / (n - 1)")
-    s"""WITH ${trajectoryCtes(dim, iters)},
+    s"""WITH ${deflatedCtes(dim, iters, 1)},
        |sf AS MATERIALIZED (SELECT id, SUM(cv * vv) AS s
-       |  FROM c JOIN v$iters USING (idx) GROUP BY id),
+       |  FROM c JOIN vf0 USING (idx) GROUP BY id),
        |agg AS (SELECT
        |    (SELECT COUNT(*) FROM embeddings
-       |      WHERE embedding IS NOT NULL AND len(embedding) = $dim) AS n,
+       |      WHERE ${validSql(dim)}) AS n,
        |    (SELECT SUM(s*s) FROM sf) AS ss,
        |    (SELECT SUM(cv*cv) FROM c) AS tt)
        |SELECT n AS n_vectors,

@@ -1108,28 +1108,18 @@ object StreamQueries {
       .orderBy(col("batch_id"))
   }
 
-  /** STREAMING PCA maintenance — the continuous-ingest half of the
-    * q_pca_project trajectory ([[graft.ops.PcaOps]]): each micro-batch
-    * contributes its raw moments (n, Σx, Σxxᵀ) — a d²+d+1-value MONOID,
-    * the bounded mergeable state that makes a basis maintainable under
-    * ingest without re-scanning history — written replay-idempotently
-    * per batch, merged key-wise at read time, and the SAME quantized
-    * power trajectory re-derived from the merged moments
-    * ([[graft.ops.PcaOps.componentFromMoments]]: the batch path's
-    * `Σ_rows c·(c·v)` regrouped as `C'·v`, a float-association change
-    * the per-round 1e-6 quantization absorbs). Certified against the
-    * IDENTICAL DuckDB oracle as batch q_pca_project — no batch
-    * boundary, and no data-vs-moments association change, may leak
-    * into the certified projections. Per batch the accumulation is ONE
+  /** Memo of the streamed raw-moments drain, keyed on the embeddings
+    * fixture and dim: each micro-batch contributes its raw moments
+    * (n, Σx, Σxxᵀ) — a d²+d+1-value MONOID, the bounded mergeable state
+    * that makes a basis maintainable under ingest without re-scanning
+    * history — written replay-idempotently per batch and merged
+    * key-wise at read time. Per batch the accumulation is ONE
     * [[graft.functions.VectorMoments]] TypedImperativeAggregate pass
     * (each row folds d² FMAs into a (1+d+d²)-double buffer in place —
     * no explode, no row amplification; the shuffle carries one partial
     * buffer per map partition), spec-certified equal to the explode +
-    * pair-join formulation in VectorMomentsSpec.
-    */
-  /** Memo of the streamed raw-moments drain, keyed on the embeddings
-    * fixture and dim: the (n, Σx, Σxxᵀ) monoid is ITERATION-INDEPENDENT —
-    * [[q_stream_pca]] (1 component, 8 iters) and
+    * pair-join formulation in VectorMomentsSpec. The monoid is
+    * ITERATION-INDEPENDENT: [[q_stream_pca]] (1 component, 8 iters) and
     * [[q_stream_outliers_pca]] (4 components, 6 iters) re-derive
     * different bases from the SAME merged state, exactly as a deployed
     * maintenance job would serve every downstream consumer from one
@@ -1179,14 +1169,25 @@ object StreamQueries {
       (n, sx, sxx)
     }
 
+  /** STREAMING PCA maintenance — the continuous-ingest half of
+    * q_pca_project: the one-component basis (8 iters) re-derived from
+    * the merged micro-batch moments ([[streamedMoments]];
+    * [[graft.ops.PcaOps.componentsFromMoments]] with m=1: the data-pass
+    * `Σ_rows c·(c·v)` regrouped as `C'·v`, a float-association change
+    * the per-round 1e-6 quantization absorbs), then the map-only PC1
+    * projection ([[graft.ops.PcaOps.transformWith]]). Certified against
+    * the IDENTICAL DuckDB oracle as batch q_pca_project — no batch
+    * boundary may leak into the certified projections.
+    */
   val q_stream_pca = QueryDef(
     "q_stream_pca",
-    graft.ops.PcaOps.projectOracleSql(64, 8)) { (spark, dir) =>
+    graft.ops.PcaOps.transformOracleSql(64, 8, 1)) { (spark, dir) =>
     val dim = 64
     val (n, sx, sxx) = streamedMoments(spark, dir, dim)
-    val (mu, v) = graft.ops.PcaOps.componentFromMoments(n, sx, sxx, dim, iters = 8)
-    graft.ops.PcaOps.projectWith(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", dim, mu, v)
+    val (mu, comps) = graft.ops.PcaOps.componentsFromMoments(
+      n, sx, sxx, dim, iters = 8, m = 1)
+    graft.ops.PcaOps.transformWith(
+      Tables.embeddings(spark, dir), "vec_id", "embedding", dim, mu, comps)
       .orderBy(col("vec_id"))
   }
 
@@ -1194,8 +1195,8 @@ object StreamQueries {
     * of q_embed_outliers_pca: the top-4 deflated basis is re-derived
     * from the SAME merged micro-batch moments as [[q_stream_pca]]
     * ([[graft.ops.PcaOps.componentsFromMoments]] — `C'·v` per round
-    * with the parallel Gram–Schmidt correction in the batch path's
-    * exact driver arithmetic), then the shared integer-lattice scorer
+    * with the parallel Gram–Schmidt correction of the one power
+    * kernel), then the shared integer-lattice scorer
     * ([[graft.ops.PcaOps.scoreSubspace]]) runs map-only. Certified
     * against the IDENTICAL DuckDB oracle as the batch query — the
     * whole outlier surface (basis + eigenvalues + scores) is

@@ -976,7 +976,7 @@ object VectorQueries {
 
   /** OPQ-style ROTATED product quantization:
     * vectors first rotate into the certified deflated-PCA basis
-    * (T179's [[graft.ops.PcaOps.topComponents]], m=8 energy-compacted
+    * (the memoized moments fit, [[graft.ops.PcaOps.componentsFromMoments]], m=8 energy-compacted
     * coordinates — the rotation is UNCENTERED, so raw-space cosine is
     * preserved up to the truncation; the basis is still fitted on
     * centered data, which is what decorrelation wants) and PQ
@@ -993,7 +993,10 @@ object VectorQueries {
     * certified per-sub-space Lloyd's + ADC chain (the q_ann_pq
     * blocks), then the shortlist and the raw-space rerank — the full
     * rotate→learn→encode→shortlist→rerank pipeline replays end-to-end
-    * in DuckDB. HONEST STATUS (PERF.md, OPQ rotation table): measured at equal
+    * in DuckDB. The query's own CTEs are MATERIALIZED: DuckDB otherwise
+    * inlines each at every reference and recomputes the rotation and
+    * the codebooks many times over (the oracle then does not finish
+    * under a 4 GB cap). HONEST STATUS (PERF.md, OPQ rotation table): measured at equal
     * bytes, the rotation does NOT lift recall under the engine's
     * spherical (cosine) codebook assignment — textbook OPQ pairs
     * rotation with L2 k-means, and on variance-skewed rotated slices
@@ -1021,7 +1024,7 @@ object VectorQueries {
       val subDim = OpqPcaM / OpqM
       val pcs = OpqPerm.map(i => s"pc$i").mkString("[", ", ", "]")
       val subs = (0 until OpqM).map { s =>
-        s"""sub$s AS (
+        s"""sub$s AS MATERIALIZED (
            |  SELECT vec_id, vd[${s * subDim + 1}:${(s + 1) * subDim}] AS vd
            |  FROM c)""".stripMargin
       }.mkString(",\n")
@@ -1029,10 +1032,10 @@ object VectorQueries {
         .map(s => lloydCentroidCtes(OpqK, OpqIters, src = s"sub$s", tag = s"o$s"))
         .mkString(",\n")
       val encs = (0 until OpqM).map { s =>
-        s"""cb$s AS (
+        s"""cb$s AS MATERIALIZED (
            |  SELECT j, cv, sqrt(list_dot_product(cv, cv)) AS cn
            |  FROM o${s}c$OpqIters),
-           |enc$s AS (
+           |enc$s AS MATERIALIZED (
            |  SELECT vec_id, j AS code FROM (
            |    SELECT v.vec_id, b.j,
            |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
@@ -1046,32 +1049,32 @@ object VectorQueries {
           s"JOIN o${s}c$OpqIters r$s ON r$s.j = e$s.code").mkString("\n  ")
       val reconList = (1 until OpqM).foldLeft("r0.cv")((acc, s) =>
         s"list_concat($acc, r$s.cv)")
-      s"""WITH projv AS (
+      s"""WITH projv AS MATERIALIZED (
          |  SELECT vec_id, $pcs AS vd
          |  FROM (${graft.ops.PcaOps.rotateOracleSql(64, OpqPcaIters, OpqPcaM)}) tp),
-         |q AS (SELECT * FROM projv WHERE vec_id < 10),
-         |c AS (SELECT * FROM projv WHERE vec_id >= 10),
+         |q AS MATERIALIZED (SELECT * FROM projv WHERE vec_id < 10),
+         |c AS MATERIALIZED (SELECT * FROM projv WHERE vec_id >= 10),
          |$subs,
          |$lloyds,
          |$encs,
-         |recon AS (
+         |recon AS MATERIALIZED (
          |  SELECT c.vec_id, $reconList AS rv
          |  FROM c
          |  $reconJoin),
-         |nq AS (SELECT vec_id, vd, sqrt(list_dot_product(vd, vd)) AS nrm FROM q),
-         |nc AS (SELECT vec_id, rv, sqrt(list_dot_product(rv, rv)) AS nrm
+         |nq AS MATERIALIZED (SELECT vec_id, vd, sqrt(list_dot_product(vd, vd)) AS nrm FROM q),
+         |nc AS MATERIALIZED (SELECT vec_id, rv, sqrt(list_dot_product(rv, rv)) AS nrm
          |       FROM recon),
-         |short AS (
+         |short AS MATERIALIZED (
          |  SELECT query_id, neighbor_id FROM (
          |    SELECT nq.vec_id AS query_id, nc.vec_id AS neighbor_id,
          |      ROW_NUMBER() OVER (PARTITION BY nq.vec_id ORDER BY
          |        list_dot_product(nq.vd, nc.rv) / (nq.nrm * nc.nrm) DESC,
          |        nc.vec_id) AS srank
          |    FROM nq JOIN nc ON nq.vec_id <> nc.vec_id) t WHERE srank <= 50),
-         |raw AS (
+         |raw AS MATERIALIZED (
          |  SELECT vec_id, vd, sqrt(list_dot_product(vd, vd)) AS nrm
          |  FROM (SELECT vec_id, $vd AS vd FROM embeddings)),
-         |scored AS (
+         |scored AS MATERIALIZED (
          |  SELECT s.query_id, s.neighbor_id,
          |    list_dot_product(a.vd, b.vd) / (a.nrm * b.nrm) AS cos
          |  FROM short s JOIN raw a ON a.vec_id = s.query_id
@@ -1972,14 +1975,6 @@ object VectorQueries {
       .orderBy(col("vec_id"))
   }
 
-  /** Top principal component by the fixed-iteration power method
-    * ([[graft.ops.PcaOps]]) — per-vector PC1 score. The energy-
-    * compacting preprocessing step for OPQ/whitening/dim-truncation
-    * over a stored vector corpus; per iteration one map-only pass +
-    * a dim-bounded single-row aggregate, driver state O(dim) (the
-    * PageRank bounded-collect class). Oracle replays the identical
-    * quantized trajectory as an unrolled CTE chain.
-    */
   /** Memo of the corpus RAW MOMENTS (n, Σx, Σxxᵀ), keyed on the
     * embeddings fixture and dim — "scan once, serve every consumer":
     * the moments are ITERATION-INDEPENDENT, so the project/variance pair (m=1, 8
@@ -1994,15 +1989,13 @@ object VectorQueries {
     * identical quantized trajectory is derivable from one
     * [[graft.functions.VectorMoments]] pass (d²+d+1 doubles of driver
     * state) followed by O(m·iters·d²) driver flops
-    * ([[graft.ops.PcaOps.componentsFromMoments]]: the batch path's
+    * ([[graft.ops.PcaOps.componentsFromMoments]]: the data-pass fit's
     * `Σ_rows c·(c·v)` regrouped as `C'·v`, a float-association change
-    * the per-round 1e-6 quantization absorbs). Equality with the batch
-    * trajectory is pinned bit-exact for every (iters, m) config used
-    * here (PcaOpsSpec "moments-derived trajectory equals ..."), and the
-    * streaming twins (q_stream_pca / q_stream_outliers_pca) have
-    * certified the moments-derived basis against the IDENTICAL DuckDB
-    * oracles. The oracles replay the batch trajectory
-    * unchanged.
+    * the per-round 1e-6 quantization absorbs). Equality with the
+    * data-pass trajectory ([[graft.ops.PcaOps.topComponents]]) is
+    * pinned bit-exact for every (iters, m) config used here (PcaOpsSpec
+    * "moments-derived trajectory equals ..."), and the oracles replay
+    * that trajectory as unrolled CTEs.
     */
   private val moments =
     new Memos.Memo[(Memos.Fixture, Int), (Long, Array[Double], Array[Array[Double]])](
@@ -2013,15 +2006,8 @@ object VectorQueries {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       dim: Int): (Long, Array[Double], Array[Array[Double]]) =
     moments.get((Memos.fixture(s"$dir/embeddings.parquet"), dim)) { _ =>
-      // VectorMoments skips NULL / wrong-dim rows like the PCA scan
-      // filter, and ADDITIONALLY drops rows containing any null
-      // ELEMENT, where the batch scan's avg/element_at would skip the
-      // null per column. On this corpus no vector
-      // carries null elements (PcaOpsSpec pins the moments-derived
-      // basis bit-equal to the batch trajectory for every config used
-      // here), so n matches the batch fit; a corpus with null elements
-      // would need the batch filter and the oracle to adopt the same
-      // any-null-element drop before trusting the moments path.
+      // VectorMoments skips NULL, wrong-dim and null-element rows —
+      // the one PCA input contract the apply side and the oracle share
       val m = Tables.embeddings(spark, dir)
         .agg(graft.functions.VectorMoments(col("embedding"), dim).as("m"))
         .head().getSeq[Double](0)
@@ -2038,11 +2024,20 @@ object VectorQueries {
     graft.ops.PcaOps.componentsFromMoments(n, sx, sxx, dim, iters, m)
   }
 
+  /** Top principal component by the fixed-iteration power method
+    * ([[graft.ops.PcaOps]]) — per-vector PC1 score, the one-component
+    * [[graft.ops.PcaOps.transformWith]]. The energy-compacting
+    * preprocessing step for OPQ/whitening/dim-truncation over a stored
+    * vector corpus. The basis comes from the memoized moments (8
+    * iters, m=1); the served plan is one map-only projection. Oracle:
+    * the same one-component trajectory unrolled as a CTE chain
+    * ([[graft.ops.PcaOps.transformOracleSql]] with m=1).
+    */
   val q_pca_project = QueryDef(
-    "q_pca_project", graft.ops.PcaOps.projectOracleSql(64, 8)) { (spark, dir) =>
+    "q_pca_project", graft.ops.PcaOps.transformOracleSql(64, 8, 1)) { (spark, dir) =>
     val (mu, comps) = fittedBasis(spark, dir, 64, 8, 1)
-    graft.ops.PcaOps.projectWith(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", 64, mu, comps(0))
+    graft.ops.PcaOps.transformWith(
+      Tables.embeddings(spark, dir), "vec_id", "embedding", 64, mu, comps)
       .orderBy(col("vec_id"))
   }
 
@@ -2059,7 +2054,7 @@ object VectorQueries {
   }
 
   /** Top-4 basis transform by deflated power iteration
-    * ([[graft.ops.PcaOps.topComponents]]): per-vector (pc1..pc4)
+    * ([[graft.ops.PcaOps.componentsFromMoments]]): per-vector (pc1..pc4)
     * projections — the dimensionality-reduction map an index build
     * applies corpus-wide after fitting the basis. Each later component
     * is parallel-Gram–Schmidt-corrected against the found ones every
@@ -2342,7 +2337,7 @@ object VectorQueries {
   }
 
   /** Subspace Mahalanobis outlier scoring over the certified deflated
-    * PCA basis ([[graft.ops.PcaOps.subspaceOutliers]]):
+    * PCA basis ([[graft.ops.PcaOps.scoreSubspace]]):
     * [[q_embed_outliers]]' diagonal z-scores cannot
     * see CORRELATED corruption (the common degenerate-embedding mode);
     * this standardizes the top-4 principal projections by their

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.PcaOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,8 +28,21 @@ class PcaOpsSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
   }
 
+  /** (n, Σx, Σxxᵀ) of `df`'s `embedding` column by one VectorMoments
+    * pass — the input of [[PcaOps.componentsFromMoments]]. */
+  private def momentsOf(df: DataFrame, d: Int)
+      : (Long, Array[Double], Array[Array[Double]]) = {
+    val m = df
+      .agg(graft.functions.VectorMoments(
+        col("embedding").cast("array<double>"), d).as("m"))
+      .head().getSeq[Double](0)
+    (m(0).toLong, Array.tabulate(d)(j => m(1 + j)),
+      Array.tabulate(d, d)((j, k) => m(1 + d + j * d + k)))
+  }
+
   test("planted dominant axis is recovered up to sign") {
-    val (_, v) = PcaOps.topComponent(planted, "vec_id", "embedding", dim, 8)
+    val (_, comps) = PcaOps.topComponents(planted, "vec_id", "embedding", dim, 8, 1)
+    val v = comps(0)
     val dot = v(0) * 0.6 + v(1) * 0.8
     assert(math.abs(math.abs(dot) - 1.0) < 1e-3,
       s"component ${v.mkString(",")} not aligned with planted axis (|dot|=${math.abs(dot)})")
@@ -47,9 +61,9 @@ class PcaOpsSpec extends AnyFunSuite {
   }
 
   test("projection scores are centered and trajectory is rerun-stable") {
-    val p1 = PcaOps.project(planted, "vec_id", "embedding", dim, 8)
+    val p1 = PcaOps.transform(planted, "vec_id", "embedding", dim, 8, 1)
       .orderBy(col("vec_id")).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val p2 = PcaOps.project(planted, "vec_id", "embedding", dim, 8)
+    val p2 = PcaOps.transform(planted, "vec_id", "embedding", dim, 8, 1)
       .orderBy(col("vec_id")).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(p1.sameElements(p2), "power iteration must be bit-stable across runs")
     val mean = p1.map(_._2).sum / p1.length
@@ -60,11 +74,34 @@ class PcaOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val ragged = planted.union(
       Seq((999L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding"))
-    val n = PcaOps.project(ragged, "vec_id", "embedding", dim, 2).count()
+    val n = PcaOps.transform(ragged, "vec_id", "embedding", dim, 2, 1).count()
     assert(n === 200L)
   }
 
-  /** ADVICE round-8: componentFromMoments' float re-association vs the
+  /** One input contract on fit and on apply: a vector with a null
+    * element counts nowhere. The data-pass fit must agree with the
+    * moments fit (VectorMoments drops such rows), and the projection
+    * must not emit the row — a null element read per column would pull
+    * the mean toward the far vector, and read as 0.0 in the dot product.
+    */
+  test("a vector with a null element is dropped on fit and on apply") {
+    val far = spark.range(1).select(lit(999L).as("vec_id"),
+      array((0 until dim).map(j =>
+        if (j == 3) lit(null).cast("float") else lit(100.0f)): _*).as("embedding"))
+    val corpus = planted.union(far)
+    val (muB, compsB) = PcaOps.topComponents(corpus, "vec_id", "embedding", dim, 8, 1)
+    val (n, sx, sxx) = momentsOf(corpus, dim)
+    val (muM, compsM) = PcaOps.componentsFromMoments(n, sx, sxx, dim, 8, 1)
+    assert(muB.sameElements(muM),
+      s"data-pass mean ${muB.mkString(",")} vs moments mean ${muM.mkString(",")}")
+    assert(compsB(0).sameElements(compsM(0)))
+    val ids = PcaOps.transformWith(corpus, "vec_id", "embedding", dim, muB, compsB)
+      .select(col("vec_id")).collect().map(_.getLong(0))
+    assert(ids.length === 200)
+    assert(!ids.contains(999L))
+  }
+
+  /** ADVICE round-8: componentsFromMoments' float re-association vs the
     * batch per-row fold is absorbed by the 1e-6 quantization only while
     * no iterate component lands within ~1e-13 of a .5 grid boundary —
     * a probabilistic, not structural, guarantee. This pins the merged-
@@ -75,18 +112,11 @@ class PcaOpsSpec extends AnyFunSuite {
   test("moments-derived trajectory equals the batch trajectory on the bench corpus") {
     val d = 64
     val emb = Tables.embeddings(spark, sf)
-    val (muB, vB) = PcaOps.topComponent(emb, "vec_id", "embedding", d, 8)
-    val m = emb
-      .filter(col("embedding").isNotNull && size(col("embedding")) === d)
-      .select(col("embedding").cast("array<double>").as("x"))
-      .agg(graft.functions.VectorMoments(col("x"), d).as("m"))
-      .head().getSeq[Double](0)
-    val n = m(0).toLong
-    val sx = Array.tabulate(d)(j => m(1 + j))
-    val sxx = Array.tabulate(d, d)((j, k) => m(1 + d + j * d + k))
-    val (muM, vM) = PcaOps.componentFromMoments(n, sx, sxx, d, 8)
+    val (muB, compsB1) = PcaOps.topComponents(emb, "vec_id", "embedding", d, 8, 1)
+    val (n, sx, sxx) = momentsOf(emb, d)
+    val (muM, compsM1) = PcaOps.componentsFromMoments(n, sx, sxx, d, 8, 1)
     assert(muM.sameElements(muB), "quantized means diverge between paths")
-    assert(vM.sameElements(vB),
+    assert(compsM1(0).sameElements(compsB1(0)),
       "merged-moments trajectory diverged from the batch trajectory — " +
         "an iterate landed on a 1e-6 grid boundary (see PcaOps scaladoc)")
     // the deflated multi-component basis rides the same absorption
@@ -157,7 +187,7 @@ class PcaOpsSpec extends AnyFunSuite {
     val constant = (0 until 10).map(i =>
       (i.toLong, Array.fill(dim)(0.5f))).toDF("vec_id", "embedding")
     val e1 = intercept[IllegalArgumentException] {
-      PcaOps.topComponent(constant, "vec_id", "embedding", dim, 2)
+      PcaOps.topComponents(constant, "vec_id", "embedding", dim, 2, 1)
     }
     assert(e1.getMessage.contains("zero norm"))
     // a single vector centers to zero, so the trajectory guard fires
@@ -169,8 +199,8 @@ class PcaOpsSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("zero norm") ||
       e2.getMessage.contains("at least 2"))
     val e3 = intercept[IllegalArgumentException] {
-      PcaOps.componentFromMoments(1L, Array.fill(dim)(0.0),
-        Array.fill(dim, dim)(0.0), dim, 1)
+      PcaOps.componentsFromMoments(1L, Array.fill(dim)(0.0),
+        Array.fill(dim, dim)(0.0), dim, 1, 1)
     }
     assert(e3.getMessage.contains("n > 1"))
   }
